@@ -174,6 +174,51 @@ def _drop_hot_buckets(
     return df.join(hot, keys, "left_anti")
 
 
+def _bucket_pairs(
+    sigs: DataFrame,
+    keys: list[str],
+    payload: list[str],
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """The candidate kernel every similarity-join family shares (MinHash
+    bands, SimHash blocks, FastSS deletion signatures, hyperplane
+    buckets — ClusterJoin's sign / bucket / local pair join / verify
+    shape): self-join ``sigs`` (one row per (id, bucket)) on ``keys``
+    with ``id_a < id_b``. Returns ``(id_a, id_b, <p>_a..., <p>_b...)``
+    for each column ``p`` in ``payload``, BEFORE any ``distinct`` — a
+    pair sharing k buckets appears k times, and where to deduplicate
+    (before or after verify) is the caller's cost call.
+
+    Consume-once barrier: ``sigs`` fans out into up to FOUR plan
+    branches (hot-bucket counts, the cap join, both pair-join sides),
+    and Catalyst does not share subtrees across join branches — without
+    materialization the signature computation (the corpus-wide part of
+    the plan: tokenize + hash, or an Arrow UDF) re-executes once per
+    branch (measured: 4 parquet scans / 4 signature aggregates in the
+    executed sf0.1 plan). The barrier is O(buckets per doc x N) narrow
+    rows — proportional to the document COUNT, never its text — spills
+    to disk, and is ContextCleaner-reclaimed on GC.
+
+    ``max_bucket_size`` drops over-full buckets (``_drop_hot_buckets``)
+    before the join; None keeps every bucket. The join condition and
+    output projection are each ONE parsed expression (no per-column
+    py4j Column construction on the plan-build path)."""
+    sigs = sigs.localCheckpoint(eager=False)
+    if max_bucket_size is not None:
+        sigs = _drop_hot_buckets(sigs, keys, max_bucket_size)
+    on = " AND ".join([f"l.{k} = r.{k}" for k in keys] + ["l.id < r.id"])
+    return (
+        sigs.alias("l")
+        .join(sigs.alias("r"), F.expr(on))
+        .selectExpr(
+            "l.id AS id_a",
+            "r.id AS id_b",
+            *[f"l.{p} AS {p}_a" for p in payload],
+            *[f"r.{p} AS {p}_b" for p in payload],
+        )
+    )
+
+
 def lsh_banded(
     signatures: DataFrame, num_perm: int = 64, bands: int = 16
 ) -> DataFrame:
@@ -227,37 +272,15 @@ def lsh_candidates(
     (their members are template clusters better handled by exact dedup).
     Default None keeps every bucket — required for oracle parity.
     """
-    carry_n = "n" in signatures.columns
-    n_cols = [F.col("n")] if carry_n else []
-    # Consume-once barrier: the banded frame fans out into up to FOUR plan
-    # branches below (hot-bucket counts, the cap join, and both sides of
-    # the pair join), and Catalyst does not share subtrees across join
-    # branches — without materialization the shingle+minhash aggregation
-    # (the expensive, corpus-wide part of the plan) re-executes once per
-    # branch (measured: 4 parquet scans / 4 signature aggregates in the
-    # executed sf0.1 plan). The barrier is O(bands*N) rows of ~32 B —
-    # proportional to the corpus's document COUNT, never its text — and
-    # spills to disk; recomputing the tokenize+hash of the raw text 3
-    # extra times is the cost it replaces. Blocks are ContextCleaner-
-    # reclaimed on GC (same lifecycle note as jaccard_verify).
-    banded = lsh_banded(signatures, num_perm, bands).localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, ["band", "bh"], max_bucket_size)
-    other_cols = [F.col("id").alias("id_b")] + (
-        [F.col("n").alias("nb")] if carry_n else []
-    ) + [F.col("band").alias("band_b"), F.col("bh").alias("bh_b")]
-    other = banded.select(*other_cols)
-    out_cols = [F.col("id").alias("id_a"), F.col("id_b")] + (
-        [F.col("n").alias("na"), F.col("nb")] if carry_n else []
-    )
+    payload = ["n"] if "n" in signatures.columns else []
     return (
-        banded.join(
-            other,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bh") == F.col("bh_b"))
-            & (F.col("id") < F.col("id_b")),
+        _bucket_pairs(
+            lsh_banded(signatures, num_perm, bands),
+            ["band", "bh"],
+            payload,
+            max_bucket_size,
         )
-        .select(*out_cols)
+        .withColumnsRenamed({"n_a": "na", "n_b": "nb"})
         .distinct()
     )
 
@@ -716,25 +739,7 @@ def hamming_pairs(
         "simhash",
         F.expr(f"explode(array({parts}))").alias("e"),
     ).select("id", "simhash", F.col("e.b").alias("b"), F.col("e.v").alias("v"))
-    # Consume-once barrier, same rationale as lsh_candidates: the block
-    # frame feeds the hot-bucket count, the cap join, and both pair-join
-    # sides, so without it the SimHash aggregation (explode + xxhash over
-    # every token of the corpus) re-executes once per branch (measured: 4
-    # scans / 4 signature aggregates in the executed sf0.1 plan). 4N rows
-    # of ~32 B, disk-spilling, ContextCleaner-reclaimed.
-    exploded = exploded.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        exploded = _drop_hot_buckets(exploded, ["b", "v"], max_bucket_size)
-    other = exploded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("simhash_b"),
-        F.col("b").alias("b_b"), F.col("v").alias("v_b"),
-    )
-    cand = exploded.join(
-        other,
-        (F.col("b") == F.col("b_b"))
-        & (F.col("v") == F.col("v_b"))
-        & (F.col("id") < F.col("id_b")),
-    ).select("id", "id_b", "simhash", "simhash_b")
+    cand = _bucket_pairs(exploded, ["b", "v"], ["simhash"], max_bucket_size)
     # Dedup AFTER the popcount filter, not before (r12): a pair matching
     # in k blocks appears k times, and the old pre-verify distinct
     # shuffled the ENTIRE candidate stream (mostly false positives — a
@@ -746,10 +751,10 @@ def hamming_pairs(
     # verify is an expensive per-candidate intersection join.
     return (
         cand.withColumn(
-            "dist", F.bit_count(F.col("simhash").bitwiseXOR(F.col("simhash_b")))
+            "dist", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
         .filter(F.col("dist") <= max_dist)
-        .select(F.col("id").alias("id_a"), "id_b", "dist")
+        .select("id_a", "id_b", "dist")
         .distinct()
     )
 
@@ -807,13 +812,37 @@ def _uf_min_labels(edge_rows, node_filter=None):
 def _probe_local(df: DataFrame, limit: int):
     """LIMIT-bounded collect: the row list if the frame holds at most
     ``limit`` rows, else None (having read only limit+1 rows)."""
-    if limit <= 0:
-        return None
     rows = df.limit(limit + 1).collect()
     return rows if len(rows) <= limit else None
 
 
 _CC_LOCAL_TYPES = ("int", "bigint", "smallint")
+
+
+def _probe_pairs_local(pairs: DataFrame, limit: int, *more_types):
+    """The local gate both connected-components variants share: when
+    ``limit`` > 0 and the pair ids (plus any ``more_types``) are integer
+    types, barrier the pair stream and probe it. Returns ``(pairs,
+    rows)`` — ``rows`` is the probed edge list, or None when the gate is
+    closed or the graph is over ``limit`` (fall through to the
+    distributed loop with the returned ``pairs``).
+
+    Barrier BEFORE probing (r18): the probe's LIMIT-bounded collect
+    truncates RESULT rows, not upstream work — unbarriered, an
+    over-gate graph paid the candidate pipeline's shuffle map stages in
+    the probe and then re-paid the WHOLE pipeline in the distributed
+    loop (twice, via the union's two branches). The lazy
+    localCheckpoint materializes pairs exactly once at the probe's
+    first action; the probe and the distributed loop both read the
+    checkpoint. Evaluate-once pinned by
+    tests/test_operators.py::test_cc_over_gate_single_evaluation."""
+    types = (pairs.schema["id_a"].dataType, pairs.schema["id_b"].dataType)
+    if limit <= 0 or any(
+        t.simpleString() not in _CC_LOCAL_TYPES for t in types + more_types
+    ):
+        return pairs, None
+    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    return pairs, _probe_local(pairs, limit)
 
 
 def connected_components(
@@ -844,30 +873,12 @@ def connected_components(
     ``_CC_LOCAL_MAX``), which ``local_max_edges=0`` disables.
     """
     id_col = nodes.columns[0]
-    if (
-        local_max_edges > 0
-        and pairs.schema["id_a"].dataType.simpleString() in _CC_LOCAL_TYPES
-        and pairs.schema["id_b"].dataType.simpleString() in _CC_LOCAL_TYPES
-        and nodes.schema[0].dataType.simpleString() in _CC_LOCAL_TYPES
-    ):
-        # Barrier the pair stream BEFORE probing (r18): the probe's
-        # LIMIT-bounded collect truncates RESULT rows, not upstream
-        # work — unbarriered, an over-gate graph paid the candidate
-        # pipeline's shuffle map stages in the probe and then re-paid
-        # the WHOLE pipeline in the distributed loop (twice, via the
-        # union's two branches). The lazy localCheckpoint materializes
-        # pairs exactly once at the probe's first action; the probe,
-        # the loop's union, and the per-round joins all read the
-        # checkpoint. Evaluate-once pinned by
-        # tests/test_operators.py::test_cc_over_gate_single_evaluation.
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
-        p_rows = _probe_local(pairs, local_max_edges)
-        n_rows = (
-            _probe_local(nodes.select(id_col).distinct(), local_max_edges)
-            if p_rows is not None
-            else None
-        )
-        if p_rows is not None and n_rows is not None:
+    pairs, p_rows = _probe_pairs_local(
+        pairs, local_max_edges, nodes.schema[0].dataType
+    )
+    if p_rows is not None:
+        n_rows = _probe_local(nodes.select(id_col).distinct(), local_max_edges)
+        if n_rows is not None:
             node_ids = {r[0] for r in n_rows}
             labels = _uf_min_labels(
                 ((r[0], r[1]) for r in p_rows), node_filter=node_ids
@@ -886,7 +897,6 @@ def connected_components(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     edges = edges.persist()
-    id_col = nodes.columns[0]
     labels = (
         nodes.select(F.col(id_col).alias("id")).distinct().withColumn("label", F.col("id"))
     )
@@ -1024,45 +1034,35 @@ def connected_components_star(
     exercises the distributed loop; rounds == 0 means the driver-local
     union-find twin answered, see ``_CC_LOCAL_MAX``).
     """
-    id_col0 = nodes.columns[0]
-    if (
-        local_max_edges > 0
-        and pairs.schema["id_a"].dataType.simpleString() in _CC_LOCAL_TYPES
-        and pairs.schema["id_b"].dataType.simpleString() in _CC_LOCAL_TYPES
-    ):
-        # Same probe barrier as connected_components (r18): materialize
-        # the pair stream once; an over-gate fall-through feeds
-        # _star_canon from the checkpoint instead of re-running the
-        # candidate pipeline.
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
-        p_rows = _probe_local(pairs, local_max_edges)
-        if p_rows is not None:
-            # star contraction spans ALL edge endpoints (contrast the
-            # label-propagation variant, which only relays through ids
-            # present in ``nodes``) — no node filter here, and the
-            # converged star edges are reproduced as (member -> root)
-            # rows feeding the SAME left-join + coalesce attach the
-            # distributed loop ends with.
-            labels = _uf_min_labels((r[0], r[1]) for r in p_rows)
-            if stats is not None:
-                stats["rounds"] = 0
-            sess = nodes.sparkSession
-            dt = pairs.schema["id_a"].dataType.simpleString()
-            roots = sess.createDataFrame(
-                sess.sparkContext.parallelize(
-                    sorted((n, r) for n, r in labels.items() if n != r),
-                    4,
-                ),
-                schema=f"id {dt}, cluster_id {dt}",
+    id_col = nodes.columns[0]
+    pairs, p_rows = _probe_pairs_local(pairs, local_max_edges)
+    if p_rows is not None:
+        # star contraction spans ALL edge endpoints (contrast the
+        # label-propagation variant, which only relays through ids
+        # present in ``nodes``) — no node filter here, and the
+        # converged star edges are reproduced as (member -> root)
+        # rows feeding the SAME left-join + coalesce attach the
+        # distributed loop ends with.
+        labels = _uf_min_labels((r[0], r[1]) for r in p_rows)
+        if stats is not None:
+            stats["rounds"] = 0
+        sess = nodes.sparkSession
+        dt = pairs.schema["id_a"].dataType.simpleString()
+        roots = sess.createDataFrame(
+            sess.sparkContext.parallelize(
+                sorted((n, r) for n, r in labels.items() if n != r),
+                4,
+            ),
+            schema=f"id {dt}, cluster_id {dt}",
+        )
+        return (
+            nodes.select(F.col(id_col).alias("id"))
+            .distinct()
+            .join(roots, "id", "left")
+            .select(
+                "id", F.coalesce("cluster_id", "id").alias("cluster_id")
             )
-            return (
-                nodes.select(F.col(id_col0).alias("id"))
-                .distinct()
-                .join(roots, "id", "left")
-                .select(
-                    "id", F.coalesce("cluster_id", "id").alias("cluster_id")
-                )
-            )
+        )
 
     edges = _star_canon(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -1103,7 +1103,6 @@ def connected_components_star(
         # the loop reports what it actually did
         stats["rounds"] = rounds
 
-    id_col = nodes.columns[0]
     # converged canonical edges are (component-min root, member)
     roots = edges.select(F.col("dst").alias("id"), F.col("src").alias("cluster_id"))
     return (
@@ -1147,23 +1146,16 @@ def edit_distance_pairs(
             f"deletion-signature candidates are complete only for "
             f"max_dist=1 (got {max_dist})"
         )
-    # Consume-once barrier (the embedding_near_dup / lsh_candidates
-    # pattern): both self-join sides consume the deletion-neighborhood
-    # explode — O(len) signature strings per row — and Catalyst does not
-    # share subtrees across join branches, so without materialization the
-    # neighborhood generation runs twice over the corpus. Measured
-    # wall-NEUTRAL at bench scale (short keys, idle host overlaps the two
-    # branches); kept for the halved resource term, which grows with key
-    # length (the neighborhood is O(len^2) bytes per string).
-    s = deletion_signatures(df, text_col, id_col).localCheckpoint(eager=False)
-    a = s.select(F.col("id").alias("id_a"), F.col("txt").alias("ta"), "sig")
-    b = s.select(F.col("id").alias("id_b"), F.col("txt").alias("tb"), "sig")
+    # The kernel's barrier keeps the deletion-neighborhood explode (O(len^2)
+    # bytes per string) out of the two join sides. Measured wall-NEUTRAL
+    # at bench scale (short keys, idle host overlaps the two branches);
+    # kept for the halved resource term, which grows with key length.
     return (
-        a.join(b, "sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ta", "tb")
+        _bucket_pairs(
+            deletion_signatures(df, text_col, id_col), ["sig"], ["txt"], None
+        )
         .distinct()
-        .withColumn("dist", F.levenshtein("ta", "tb"))
+        .withColumn("dist", F.levenshtein("txt_a", "txt_b"))
         .filter(F.col("dist") <= max_dist)
         .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
     )

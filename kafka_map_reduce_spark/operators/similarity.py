@@ -1751,6 +1751,11 @@ def attach_hash_embed_with_buckets(
     def both(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
 
+        if len(texts) == 0:
+            return pd.DataFrame(
+                {"emb": pd.Series([], dtype=object),
+                 "bkts": pd.Series([], dtype=object)}
+            )
         V, null = _hash_embed_batch(texts, dim)
         # strict > 0, matching hyperplane_buckets_all / the JVM face
         b = (V @ H) > 0
@@ -1829,66 +1834,41 @@ def embedding_near_dup(
     signatures as an array<long> column (one bucket per table, the
     :func:`attach_hash_embed_with_buckets` /
     :func:`hyperplane_buckets_all` layout — the caller's bits/n_tables
-    must match the args here). The operator then skips its own Arrow
-    signature stage AND the separate signature materialization: the
-    single base checkpoint carries (id, vector, buckets), and the
-    signature table is a cheap JVM posexplode over it. Same
-    candidates, same pairs (fused-vs-unfused parity pinned)."""
-    if buckets_col is not None:
-        # One materialization carries vectors AND signatures: the cap
-        # count + both self-join sides re-read the checkpoint and pay
-        # only a posexplode each (JVM, no Python round trip), so the
-        # separate sigs checkpoint below is unnecessary here.
-        base = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__v"),
-            F.col(buckets_col).alias("__b"),
-        ).localCheckpoint(eager=False)
-        sigs = base.select("id", F.posexplode("__b").alias("tbl", "bkt"))
-    else:
-        # Materialize the (id, vector) projection once: three consumers
-        # (signatures + both verify-side vector fetches) would otherwise
-        # each re-evaluate the upstream — expensive when the input is a
-        # computed embedding like attach_hash_embed. At corpus scale this
-        # is the persisted embedding table.
-        base = corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("__v")
-        ).localCheckpoint(eager=False)
-        # All T signatures in ONE Arrow batch per row (numpy matmul) — the
-        # per-table JVM fold explode this replaced was the operator's
-        # dominant cost (see hyperplane_buckets_all's measured numbers).
-        all_b = hyperplane_buckets_all(dim, bits, n_tables)
-        sigs = base.select(
-            "id",
-            F.posexplode(all_b(_as_double(F.col("__v")))).alias("tbl", "bkt"),
+    must match the args here; an array of another length fails the
+    query rather than silently changing candidate generation). Without
+    it the operator attaches the column itself with
+    :func:`hyperplane_buckets_all`. Either way ONE base checkpoint
+    carries (id, vector, buckets) — the Arrow stage runs once, before
+    it — and the signature table is a cheap JVM posexplode over it,
+    candidates from the shared ``dedup._bucket_pairs`` kernel."""
+    from kafka_map_reduce_spark.operators.dedup import _bucket_pairs
+
+    if buckets_col is None:
+        buckets_col = "__buckets"
+        corpus = corpus.withColumn(
+            buckets_col,
+            hyperplane_buckets_all(dim, bits, n_tables)(
+                _as_double(F.col(vec_col))
+            ),
         )
-        # Materialize the signatures once: three consumers (bucket-count
-        # cap, both sides of the candidate self-join) would otherwise each
-        # re-run the Arrow signature stage. At corpus scale this is the
-        # table you PERSIST anyway (the LSH band-index pattern of the
-        # text pipeline).
-        sigs = sigs.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        # Anti-join the HOT buckets (the dedup._drop_hot_buckets r12
-        # form): the small-bucket list is nearly the whole bucket table
-        # at corpus scale, the hot list is tiny — AQE broadcasts it and
-        # the cap costs a map-side anti probe, not an O(rows) shuffle.
-        # Keys are (tbl, bkt) hash values — never null, so the anti/inner
-        # equivalence holds.
-        counts = sigs.groupBy("tbl", "bkt").agg(F.count(F.lit(1)).alias("__n"))
-        sigs = sigs.join(
-            counts.filter(F.col("__n") > max_bucket_size).select("tbl", "bkt"),
-            ["tbl", "bkt"],
-            "left_anti",
-        )
-    left = sigs.select("tbl", "bkt", F.col("id").alias("id_a"))
-    right = sigs.select("tbl", "bkt", F.col("id").alias("id_b"))
-    cands = (
-        left.join(right, ["tbl", "bkt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    # Materialize (id, vector, buckets) once: the signature table and
+    # both verify-side vector fetches would otherwise each re-evaluate
+    # the upstream embedding + signature Arrow stage. At corpus scale
+    # this is the persisted embedding table.
+    base = corpus.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("__v"),
+        F.col(buckets_col).alias("__b"),
+    ).localCheckpoint(eager=False)
+    # in-plan layout guard (raise_error: no extra job); null vectors
+    # carry null buckets, which explode to no rows
+    checked = F.expr(
+        f"IF(__b IS NULL OR size(__b) = {n_tables}, __b, raise_error("
+        f"'embedding_near_dup: bucket array length differs from "
+        f"n_tables={n_tables}; build buckets with the same bits/n_tables'))"
     )
+    sigs = base.select("id", F.posexplode(checked).alias("tbl", "bkt"))
+    cands = _bucket_pairs(sigs, ["tbl", "bkt"], [], max_bucket_size).distinct()
     va = base.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
     vb = base.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
     # Arrow verify (see cosine_pairs_arrow: 3.3x over the interpreted
@@ -1961,6 +1941,11 @@ def attach_hash_embed_with_unit(
     def both(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
 
+        if len(texts) == 0:
+            return pd.DataFrame(
+                {"emb": pd.Series([], dtype=object),
+                 "unit": pd.Series([], dtype=object)}
+            )
         V, null = _hash_embed_batch(texts, dim)
         # the exact _normalize_arrow ops, applied to the same matrix
         n = np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)

@@ -356,9 +356,7 @@ def bigram_logprob(
     )
 
 
-def hash_embed(
-    text_col: Column, dim: int = 32, hasher: str = "xxhash64"
-) -> Column:
+def hash_embed(text_col: Column, dim: int = 32) -> Column:
     """Feature-hashing document embedding (the hashing trick,
     Weinberger et al. ICML'09): each token hashes to a bucket in [0,
     dim) with a ±1 sign from an independent hash bit, signed counts are
@@ -375,37 +373,29 @@ def hash_embed(
     cancel in expectation instead of accumulating (the standard
     signed-hashing variance fix).
 
-    ``hasher="md5"`` derives bucket and sign from md5 hex nibbles so a
-    DuckDB oracle replays the embedding bit-for-bit (same caveat as
-    repeated_spans); production default stays xxhash64."""
-    raw = _hash_embed_raw(text_col, dim, hasher)
+    Bucket and sign come from md5 hex nibbles so a DuckDB oracle
+    replays the embedding bit-for-bit; :func:`attach_hash_embed_arrow`
+    is the fast face of the same vectors."""
+    raw = _hash_embed_raw(text_col, dim)
     norm = F.sqrt(
         F.aggregate(raw, F.lit(0.0), lambda acc, x: acc + x * x)
     )
     return F.transform(raw, lambda x: x / F.greatest(norm, F.lit(1e-12)))
 
 
-def _hash_embed_raw(text_col: Column, dim: int, hasher: str) -> Column:
+def _hash_embed_raw(text_col: Column, dim: int) -> Column:
     """Unnormalized signed bucket counts (the expensive fold)."""
     toks = tokens(text_col)
-    if hasher == "xxhash64":
-        bucket = lambda t: F.pmod(F.xxhash64(t), F.lit(dim))  # noqa: E731
-        sign = lambda t: F.when(  # noqa: E731
-            F.pmod(F.xxhash64(t, F.lit(1)), F.lit(2)) == 0, F.lit(1.0)
-        ).otherwise(F.lit(-1.0))
-    elif hasher == "md5":
-        bucket = lambda t: F.pmod(  # noqa: E731
-            F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long"), F.lit(dim)
+    bucket = lambda t: F.pmod(  # noqa: E731
+        F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long"), F.lit(dim)
+    )
+    sign = lambda t: F.when(  # noqa: E731
+        F.pmod(
+            F.conv(F.substring(F.md5(t), 5, 1), 16, 10).cast("long"), F.lit(2)
         )
-        sign = lambda t: F.when(  # noqa: E731
-            F.pmod(
-                F.conv(F.substring(F.md5(t), 5, 1), 16, 10).cast("long"), F.lit(2)
-            )
-            == 0,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0))
-    else:
-        raise ValueError(f"unknown hasher {hasher!r}")
+        == 0,
+        F.lit(1.0),
+    ).otherwise(F.lit(-1.0))
     hashed = F.transform(
         toks, lambda t: F.struct(bucket(t).alias("b"), sign(t).alias("s"))
     )
@@ -429,7 +419,6 @@ def attach_hash_embed(
     text_col: str,
     out_col: str = "embedding",
     dim: int = 32,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """:func:`hash_embed` as a staged DataFrame transform — use THIS on
     any real table. The single-Column form is one Project, so Catalyst
@@ -442,7 +431,7 @@ def attach_hash_embed(
     each step an attribute reference: CollapseProject refuses to merge
     projections when it would duplicate a non-cheap expression, so the
     fold and the norm are computed exactly once per row."""
-    raw_col = _hash_embed_raw(F.col(text_col), dim, hasher)
+    raw_col = _hash_embed_raw(F.col(text_col), dim)
     staged = df.withColumn("__he_raw", raw_col).withColumn(
         "__he_norm",
         F.greatest(
@@ -548,17 +537,17 @@ def attach_hash_embed_arrow(
     dim: int = 32,
 ) -> DataFrame:
     """Arrow production face of the md5 hash-embed: BIT-IDENTICAL
-    vectors to ``attach_hash_embed(..., hasher="md5")`` (exact-equality
+    vectors to :func:`attach_hash_embed` (exact-equality
     pytest pin, tests/test_operators.py) from ONE vectorized pandas_udf
     instead of the JVM's O(tokens × dim) interpreted HOF fold.
 
     Why it exists (r9 verdict item #6, the embed wall): at 5M docs the
     fold — not the hash — is the semantic family's linear ceiling.
-    Measured sf100 embed pass: md5 face 243.4 s, xxhash64 face 210.5 s
-    (swapping hashers buys 14%, killing the "xxhash64 is ~10× faster"
-    remedy); this face attacks the fold itself — per-batch the tokens
-    FACTORIZE (Zipf vocab: millions of occurrences, thousands of
-    distincts), md5 runs once per distinct token through an
+    Measured sf100 embed pass: md5 face 243.4 s, an xxhash64 JVM face
+    (since removed) 210.5 s — swapping hashers bought 14%, killing the
+    "xxhash64 is ~10× faster" remedy; this face attacks the fold
+    itself — per-batch the tokens FACTORIZE (Zipf vocab: millions of
+    occurrences, thousands of distincts), md5 runs once per distinct token through an
     executor-lifetime cache, and the signed counts land in one
     ``np.add.at`` scatter. SCALE_SPOT_r10 carries the measured win.
 

@@ -123,12 +123,15 @@ def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame
 # and every query pays it once per table it touches (q_join_multiway:
 # five tables, ~0.4 s/rep). The memo holds METADATA only (StructType by
 # resolved path) — every run still scans the parquet data; nothing
-# result-shaped is cached. Keyed by (full path, mtime) — ADVICE r17:
-# a path-only key would serve a stale schema to a process that
-# rewrites a table in place; the mtime component (one stat per read,
-# ~µs) invalidates the entry whenever the file or directory changes.
-# The testdata tables are read-only and the bench's sf1 replicas are
-# built before any read, so within the bench the key never churns.
+# result-shaped is cached. Keyed by resolved path, storing (mtime,
+# schema): one stat per read (~µs) compares the table's mtime, and a
+# changed mtime REPLACES the path's entry, so the memo holds at most one
+# schema per table. The mtime catches file add, remove and overwrite
+# (Spark's overwrite recreates the files, bumping the directory); it
+# does NOT catch an in-place rewrite of a data file that leaves the
+# directory mtime unchanged. The testdata tables are read-only and
+# the bench's sf1 replicas are built before any read, so within the
+# bench the entry never churns.
 _SCHEMA_MEMO: dict = {}
 
 
@@ -143,15 +146,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        key = (path, os.path.getmtime(path))
+        mtime = os.path.getmtime(path)
     except OSError:
-        key = (path, None)  # let spark.read raise its own error
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
+        mtime = None  # let spark.read raise its own error
+    memo = _SCHEMA_MEMO.get(path)
+    if memo is None or memo[0] != mtime:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
+        _SCHEMA_MEMO[path] = (mtime, df.schema)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.schema(memo[1]).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")

@@ -1527,9 +1527,7 @@ def test_hash_embed_contract(spark):
     """Feature-hashing embeddings: unit-norm for non-empty docs, zero
     vector for empty text, identical docs -> identical vectors, and a
     shared-vocabulary pair scores a higher cosine than a disjoint one
-    (the property the downstream embedding-dedup/ANN queries rely on).
-    Both hashers must satisfy the same contract; xxhash64 vs md5 only
-    changes WHICH buckets tokens land in."""
+    (the property the downstream embedding-dedup/ANN queries rely on)."""
     import math
 
     from pyspark.sql import functions as F
@@ -1545,31 +1543,28 @@ def test_hash_embed_contract(spark):
         (4, ""),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    for hasher in ("xxhash64", "md5"):
-        out = df.select(
-            "id", hash_embed(F.col("text"), dim=32, hasher=hasher).alias("e")
+    out = df.select("id", hash_embed(F.col("text"), dim=32).alias("e"))
+    vecs = {r.id: list(r.e) for r in out.collect()}
+    assert all(len(v) == 32 for v in vecs.values())
+    for i in (0, 1, 2, 3):
+        assert math.isclose(
+            sum(x * x for x in vecs[i]), 1.0, abs_tol=1e-9
+        ), f"doc {i} not unit-norm"
+    assert vecs[4] == [0.0] * 32
+    assert vecs[0] == vecs[1], "identical docs must embed identically"
+    sims = {
+        pair: spark.createDataFrame(
+            [(vecs[pair[0]], vecs[pair[1]])], "a array<double>, b array<double>"
         )
-        vecs = {r.id: list(r.e) for r in out.collect()}
-        assert all(len(v) == 32 for v in vecs.values())
-        for i in (0, 1, 2, 3):
-            assert math.isclose(
-                sum(x * x for x in vecs[i]), 1.0, abs_tol=1e-9
-            ), f"doc {i} not unit-norm ({hasher})"
-        assert vecs[4] == [0.0] * 32
-        assert vecs[0] == vecs[1], "identical docs must embed identically"
-        sims = {
-            pair: spark.createDataFrame(
-                [(vecs[pair[0]], vecs[pair[1]])], "a array<double>, b array<double>"
-            )
-            .select(cosine(F.col("a"), F.col("b")).alias("s"))
-            .collect()[0]
-            .s
-            for pair in [(0, 2), (0, 3)]
-        }
-        assert sims[(0, 2)] > sims[(0, 3)] + 0.3, (
-            f"near-dup must outscore disjoint ({hasher}): {sims}"
-        )
-        assert sims[(0, 2)] > 0.8, f"near-dup cosine too low ({hasher}): {sims}"
+        .select(cosine(F.col("a"), F.col("b")).alias("s"))
+        .collect()[0]
+        .s
+        for pair in [(0, 2), (0, 3)]
+    }
+    assert sims[(0, 2)] > sims[(0, 3)] + 0.3, (
+        f"near-dup must outscore disjoint: {sims}"
+    )
+    assert sims[(0, 2)] > 0.8, f"near-dup cosine too low: {sims}"
 
 
 def test_remove_contaminated_spans_exact_surgery(spark):
@@ -1699,7 +1694,7 @@ def test_compression_ratio_orders_junk_prose_noise(spark):
 
 
 def test_hash_embed_arrow_face_bit_parity(spark):
-    """attach_hash_embed_arrow must equal attach_hash_embed(hasher="md5")
+    """attach_hash_embed_arrow must equal attach_hash_embed
     BIT-FOR-BIT (r10, the embed-wall production face — r9 verdict item
     #6): same tokenizer, same md5 nibbles, integer ±1 sums (exactly
     representable, so summation order is immaterial), same IEEE
@@ -1718,7 +1713,7 @@ def test_hash_embed_arrow_face_bit_parity(spark):
         "doc_id long, text string",
     )
     d = docs.unionByName(edge)
-    jvm = attach_hash_embed(d, "text", "embedding", dim=32, hasher="md5")
+    jvm = attach_hash_embed(d, "text", "embedding", dim=32)
     arrow = attach_hash_embed_arrow(d, "text", "embedding", dim=32)
     j = {r.doc_id: r.embedding for r in jvm.collect()}
     a = {r.doc_id: r.embedding for r in arrow.collect()}
@@ -1772,6 +1767,24 @@ def test_fan_out_scan_gate_and_identity(spark, monkeypatch):
     assert mem.rdd.getNumPartitions() < slots
     assert not mem.inputFiles()
     assert T.fan_out_scan(mem) is mem
+
+
+def test_schema_memo_keeps_one_entry_per_table(spark, tmp_path, monkeypatch):
+    """load_table's schema memo is keyed by path: a newer table mtime
+    replaces the table's entry instead of adding a second one."""
+    import os
+
+    from kafka_map_reduce_spark.sources import tables as T
+
+    monkeypatch.setattr(T, "_SCHEMA_MEMO", {})
+    path = os.path.join(str(tmp_path), "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert T.load_table(spark, str(tmp_path), "t").count() == 3
+    st = os.stat(path)
+    os.utime(path, (st.st_atime + 10, st.st_mtime + 10))
+    assert T.load_table(spark, str(tmp_path), "t").count() == 3
+    assert list(T._SCHEMA_MEMO) == [path]
+    assert T._SCHEMA_MEMO[path][0] == os.path.getmtime(path)
 
 
 def test_fan_out_scan_keyed_path(spark, monkeypatch):
@@ -1873,16 +1886,20 @@ def test_simhash_packed_lanes_match_naive_bit_sums(spark):
 
 
 def test_candidate_generators_compute_signatures_once(spark, tmp_path):
-    """Consume-once pin (r12): the LSH/SimHash/edit-distance candidate
-    generators fan their signature frames into multiple join branches;
-    the localCheckpoint barrier must keep the signature subtree OUT of
-    the executed pair plan (a parquet scan or token explode reappearing
-    there means the corpus is being re-tokenized once per branch — the
-    regression SCALE_SPOT_r12 dedup_onepass_r12 measured at 4 scans / 14
-    aggregates before the fix)."""
+    """Consume-once pin (r12): the LSH/SimHash/edit-distance/embedding-LSH
+    candidate generators fan their signature frames into multiple join
+    branches; the localCheckpoint barrier must keep the signature
+    subtree OUT of the executed pair plan (a parquet scan or token
+    explode reappearing there means the corpus is being re-tokenized
+    once per branch — the regression SCALE_SPOT_r12 dedup_onepass_r12
+    measured at 4 scans / 14 aggregates before the fix)."""
     import re
 
     from kafka_map_reduce_spark.operators import dedup as D
+    from kafka_map_reduce_spark.operators.similarity import (
+        attach_hash_embed_with_buckets,
+        embedding_near_dup,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"token{i} alpha beta gamma delta epsilon zeta") for i in range(40)],
@@ -1909,7 +1926,18 @@ def test_candidate_generators_compute_signatures_once(spark, tmp_path):
         "word",
         "doc_id",
     )
-    for name, frame in (("lsh", lsh), ("simhash", sim), ("editdist", edit)):
+    emb = embedding_near_dup(
+        attach_hash_embed_with_buckets(docs, "text", dim=32).select(
+            F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
+        ),
+        dim=32,
+        threshold=0.5,
+        max_bucket_size=16,
+        buckets_col="__buckets",
+    )
+    for name, frame in (
+        ("lsh", lsh), ("simhash", sim), ("editdist", edit), ("embedding", emb)
+    ):
         plan = executed_plan(frame)
         assert "Scan parquet" not in plan, f"{name}: signature subtree re-entered the pair plan"
         assert not re.search(r"Generate explode", plan), f"{name}: explode re-entered the pair plan"
@@ -1925,13 +1953,18 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
     r12 one-pass probe (retired r17); patching the base class is a silent
     no-op in Spark 4) and pin their executed plans to the corpus-scale
     minimum: ONE parquet scan, ONE exchange for the per-doc signature
-    aggregation (partial+final HashAggregate pair), and a map-only
-    zero-exchange plan for the deletion-signature explode."""
+    aggregation (partial+final HashAggregate pair), a map-only
+    zero-exchange plan for the deletion-signature explode, and ONE Arrow
+    stage under the embedding-LSH base and bucket frames."""
     import re
 
     import pyspark.sql.classic.dataframe as cdf
 
     from kafka_map_reduce_spark.operators import dedup as D
+    from kafka_map_reduce_spark.operators.similarity import (
+        attach_hash_embed_with_buckets,
+        embedding_near_dup,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"token{i} alpha beta gamma delta epsilon zeta") for i in range(40)],
@@ -1965,16 +1998,29 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
             "word",
             "doc_id",
         )
+        embedding_near_dup(
+            attach_hash_embed_with_buckets(docs, "text", dim=32).select(
+                F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
+            ),
+            dim=32,
+            max_bucket_size=16,
+            buckets_col="__buckets",
+        )
     finally:
         cdf.DataFrame.localCheckpoint = orig
 
-    assert len(captured) == 3, "expected one eager=False barrier per generator"
-    budgets = {  # (max scans, max exchanges, max HashAggregates)
-        "lsh_banded": (1, 1, 2),
-        "simhash_blocks": (1, 1, 2),
-        "edit_sigs": (1, 0, 0),
+    # (max scans, max exchanges, max HashAggregates, max Arrow stages);
+    # embedding-LSH barriers its (id, vector, buckets) base for the
+    # verify side, then the kernel barriers the bucket table
+    budgets = {
+        "lsh_banded": (1, 1, 2, 0),
+        "simhash_blocks": (1, 1, 2, 0),
+        "edit_sigs": (1, 0, 0, 0),
+        "embedding_base": (1, 0, 0, 1),
+        "embedding_buckets": (1, 0, 0, 1),
     }
-    for (name, (max_scan, max_exch, max_agg)), frame in zip(
+    assert len(captured) == len(budgets), "unexpected eager=False barriers"
+    for (name, (max_scan, max_exch, max_agg, max_py)), frame in zip(
         budgets.items(), captured
     ):
         frame.count()
@@ -1982,9 +2028,11 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
         scans = len(re.findall(r"Scan parquet", plan))
         exch = len(re.findall(r"Exchange", plan))
         aggs = len(re.findall(r"HashAggregate", plan))
+        py = len(re.findall(r"ArrowEvalPython", plan))
         assert scans == max_scan, f"{name}: {scans} scans (want {max_scan})"
         assert exch <= max_exch, f"{name}: {exch} exchanges (budget {max_exch})"
         assert aggs <= max_agg, f"{name}: {aggs} HashAggregates (budget {max_agg})"
+        assert py <= max_py, f"{name}: {py} Arrow stages (budget {max_py})"
 
 
 def test_drop_hot_buckets_anti_join_equals_small_inner_join(spark):

@@ -355,7 +355,7 @@ def test_keep_best_fixture_pair_set_is_exact(spark):
         F.col("doc_id") < 200
     )
     emb = (
-        attach_hash_embed(d, "text", "embedding", dim=32, hasher="md5")
+        attach_hash_embed(d, "text", "embedding", dim=32)
         .select(F.col("doc_id").alias("vec_id"), "embedding")
         .localCheckpoint(eager=True)
     )
@@ -521,20 +521,13 @@ def test_routed_semantic_dedup_keeps_planted_pairs(spark, planted, monkeypatch):
 
 
 def test_embed_faces_agree_on_planted_pairs(spark):
-    """The embed-face decision (r9 verdict finding #3/item #6), pinned:
-    the registered semantic/LSH rows keep ``hasher="md5"`` (the DuckDB
-    oracle twins replay md5 bit-for-bit, and the cross-modality
-    same-vectors property compares candidate generators on identical
-    inputs), while the PRODUCTION face is the operator default
-    ``hasher="xxhash64"`` — at 5M docs the md5 fold is the family's
-    measured linear wall (257.9 s of q_dedup_semantic's 377.5 s in the
-    r9 sf100 decomposition; the xxhash64 face is measured in
-    SCALE_SPOT_r10). The two faces produce DIFFERENT vectors by
-    construction, so the parity that matters is the operator property:
-    on a planted corpus (300 organic 40-unique-token docs + 30 clones
-    with one word rewritten, cosine ~0.95 >> 0.85 band) BOTH faces
-    recover exactly the planted pair set — same recall, same precision,
-    interchangeable as semantic-dedup inputs."""
+    """The embed-face operator property, pinned: on a planted corpus
+    (300 organic 40-unique-token docs + 30 clones with one word
+    rewritten, cosine ~0.95 >> 0.85 band) the md5 hash-embed face the
+    registered semantic/LSH rows use (the DuckDB oracle twins replay it
+    bit-for-bit; attach_hash_embed_arrow is its bit-identical fast face)
+    recovers exactly the planted pair set as a semantic-dedup input —
+    full recall, full precision."""
     from kafka_map_reduce_spark.operators.text import attach_hash_embed
 
     base = spark.range(300).selectExpr(
@@ -552,17 +545,16 @@ def test_embed_faces_agree_on_planted_pairs(spark):
     )
     docs = base.unionByName(clones)
     want = {(i, i + 100000) for i in range(0, 300, 10)}
-    for hasher in ("md5", "xxhash64"):
-        emb = (
-            attach_hash_embed(docs, "text", "embedding", dim=32, hasher=hasher)
-            .select(F.col("doc_id").alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
-        )
-        got = semantic_dedup(
-            emb, threshold=0.85, n_clusters=8, iters=3, init="spread"
-        )
-        pairs = {(r.id_a, r.id_b) for r in got.collect()}
-        assert pairs == want, f"{hasher}: {len(pairs)} pairs != planted 30"
+    emb = (
+        attach_hash_embed(docs, "text", "embedding", dim=32)
+        .select(F.col("doc_id").alias("vec_id"), "embedding")
+        .localCheckpoint(eager=True)
+    )
+    got = semantic_dedup(
+        emb, threshold=0.85, n_clusters=8, iters=3, init="spread"
+    )
+    pairs = {(r.id_a, r.id_b) for r in got.collect()}
+    assert pairs == want, f"{len(pairs)} pairs != planted 30"
 
 
 # ---- pair-stream governor + sizing policy (r11, verdict items #4/#5) ------
@@ -691,29 +683,48 @@ def test_flat_assign_tiled_regime_matches_full_argmin(spark):
     assert got == {i: int(want[i]) for i in range(len(V))}
 
 
-def test_fused_embed_unit_bit_parity_and_pairs(spark):
+def test_fused_embed_unit_bit_parity_and_pairs(spark, monkeypatch):
     """r18 fusion pin: attach_hash_embed_with_unit (ONE Arrow stage)
     must be bit-identical to attach_hash_embed_arrow + the
     _normalize_arrow stage it replaces, and semantic_dedup fed
     unit_col must return exactly the pairs (and sims) the unfused path
     returns — the hash-oracled q_dedup_semantic_keep_best row depends
-    on this."""
+    on this. The input carries empty partitions, and the fused UDF body
+    answers a zero-row batch with empty object columns."""
+    import pandas as pd
+    import pyspark.sql.functions as PF
+
     from kafka_map_reduce_spark.operators.similarity import (
         _normalize_arrow,
         attach_hash_embed_with_unit,
     )
     from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
-    docs = spark.createDataFrame(
-        [
-            (i, f"alpha beta tok{i} gamma delta tok{i * 7 % 13} end")
-            for i in range(60)
-        ]
-        + [(1000 + i, f"alpha beta tok{i} gamma delta tok{i * 7 % 13} end")
-           for i in range(0, 60, 5)],
+    rows = [
+        (i, f"alpha beta tok{i} gamma delta tok{i * 7 % 13} end")
+        for i in range(60)
+    ] + [
+        (1000 + i, f"alpha beta tok{i} gamma delta tok{i * 7 % 13} end")
+        for i in range(0, 60, 5)
+    ]
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(  # 4 of the 8 partitions are empty
+        sc.parallelize(rows, 4).union(sc.parallelize([], 4)),
         "doc_id long, text string",
     )
-    fused = attach_hash_embed_with_unit(docs, "text", dim=32)
+    bodies: list = []
+    real = PF.pandas_udf
+    with monkeypatch.context() as m:
+        m.setattr(
+            PF,
+            "pandas_udf",
+            lambda *a, **k: lambda fn: bodies.append(fn) or real(*a, **k)(fn),
+        )
+        fused = attach_hash_embed_with_unit(docs, "text", dim=32)
+    (body,) = bodies
+    empty = body(pd.Series([], dtype=object))
+    assert list(empty.columns) == ["emb", "unit"] and len(empty) == 0
+    assert list(empty.dtypes) == [object, object]
     unit = _normalize_arrow()
     two_stage = attach_hash_embed_arrow(docs, "text", "embedding", dim=32)
     two_stage = two_stage.select(

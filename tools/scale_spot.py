@@ -318,7 +318,7 @@ def semantic_k_sweep(spark, data_dir: str, cluster_targets=(100, 500)) -> dict:
 
     d = load_table(spark, data_dir, "documents")
     emb = (
-        attach_hash_embed(d, "text", "embedding", dim=32, hasher="md5")
+        attach_hash_embed(d, "text", "embedding", dim=32)
         .select(F.col("doc_id").alias("vec_id"), "embedding")
         .localCheckpoint(eager=True)
     )
@@ -402,7 +402,7 @@ def keep_best_tail_audit(spark, data_dir: str, n_runs: int) -> dict:
 
     d = load_table(spark, data_dir, "documents").localCheckpoint(eager=True)
     emb = (
-        attach_hash_embed(d, "text", "embedding", dim=32, hasher="md5")
+        attach_hash_embed(d, "text", "embedding", dim=32)
         .select(F.col("doc_id").alias("vec_id"), "embedding")
         .localCheckpoint(eager=True)
     )
