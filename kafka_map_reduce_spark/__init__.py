@@ -14,8 +14,15 @@ studied at /root/reference), re-expressed Spark-first:
   columns, text analysis) designed for 100 TB scale (``operators/``).
 """
 
+from pyspark.taskcontext import TaskContext
+
 from kafka_map_reduce_spark.session import configure, get_session
 from kafka_map_reduce_spark.registry import REGISTRY, query
+
+if TaskContext.get() is not None:  # inside a Python worker task
+    from kafka_map_reduce_spark import _zipcache
+
+    _zipcache.install()
 
 __all__ = ["configure", "get_session", "REGISTRY", "query"]
 __version__ = "0.1.0"

@@ -80,25 +80,40 @@ def _package_zip() -> str:
     return out
 
 
+def _not_modifiable(e: Exception) -> bool:
+    """True when Spark refuses to change a static or core conf at runtime."""
+    getter = getattr(e, "getCondition", None)
+    return getter is not None and getter() in (
+        "CANNOT_MODIFY_CONFIG",
+        "CANNOT_MODIFY_STATIC_CONFIG",
+    )
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an existing session (idempotent).
 
     Also ships the package source to executor Python workers: pandas-UDF
     closures reference this module, and the driver's sys.path does not
-    propagate to workers.
+    propagate to workers. A conf the session refuses as not modifiable at
+    runtime is skipped; any other failure raises and names the conf or
+    the zip, rather than surfacing later as a wrong read or an executor
+    ImportError.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going, reads may still work
-    try:
-        sc = spark.sparkContext
-        if not getattr(sc, "_kmr_pyfiles_added", False):
-            sc.addPyFile(_package_zip())
-            sc._kmr_pyfiles_added = True
-    except Exception:
-        pass  # e.g. Spark Connect session without an accessible SparkContext
+        except Exception as e:
+            if not _not_modifiable(e):
+                raise RuntimeError(f"configure: cannot set {k}={v!r}: {e}") from e
+    # A Spark Connect session has no SparkContext to ship files with.
+    sc = getattr(spark, "sparkContext", None)
+    if sc is not None and not getattr(sc, "_kmr_pyfiles_added", False):
+        path = _package_zip()
+        try:
+            sc.addPyFile(path)
+        except Exception as e:
+            raise RuntimeError(f"configure: cannot ship {path} to workers: {e}") from e
+        sc._kmr_pyfiles_added = True
     return spark
 
 

@@ -44,6 +44,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# A record file's path: its partition directory and its offset claim.
+_RECORD_FILE = r"p(\d+)/(\d+)\.parquet$"
+
+
 class FileTopic:
     """A topic as partition subdirectories of ordered parquet files."""
 
@@ -271,18 +275,21 @@ class GroupConsumer:
         if not paths:
             return None
         src = F.input_file_name()
-        return (
-            self.spark.read.parquet(*paths)
-            .withColumn(
-                "partition",
-                F.regexp_extract(src, r"p(\d+)/\d+\.parquet$", 1).cast(
-                    "int"
-                ),
+
+        def tag(group: int, dtype: str):
+            # A path outside the layout fails the read instead of
+            # yielding a NULL tag (in-plan, no extra job).
+            return F.when(
+                src.rlike(_RECORD_FILE),
+                F.regexp_extract(src, _RECORD_FILE, group).cast(dtype),
+            ).otherwise(
+                F.raise_error(
+                    F.concat(F.lit("record file outside pNNN/OFFSET.parquet: "), src)
+                )
             )
-            .withColumn(
-                "offset",
-                F.regexp_extract(src, r"/(\d+)\.parquet$", 1).cast("long"),
-            )
+
+        return self.spark.read.parquet(*paths).withColumns(
+            {"partition": tag(1, "int"), "offset": tag(2, "long")}
         )
 
     def commit(self) -> dict[int, int]:

@@ -250,111 +250,96 @@ class _Stage:
     apply: Callable[[DataFrame], DataFrame]
 
 
-def _wrap_par_map(fn: Callable[[dict], dict], out_fields: T.StructType):
-    """Per-record transform with per-record error capture. Data moves in
-    Arrow batches (mapInPandas) but ``fn`` itself runs row-at-a-time Python
+def _per_record(pdf: pd.DataFrame, outs: list, out_names: list[str]) -> pd.DataFrame:
+    """The per-record kernel of ``par_map`` and ``par_map_async``: assign
+    each record's outcome (``fn``'s return value, or the exception it
+    raised) to the output columns and ERR_COL. The original record
+    columns are preserved for DLQ provenance (lib.rs:526-540). An
+    exception, or a return that is not a dict (e.g. None on a lookup
+    miss), is that RECORD's error, never a task failure."""
+    cols = {name: [] for name in out_names}
+    errs = []
+    for out in outs:
+        err = out if isinstance(out, BaseException) else None
+        if err is None:
+            try:
+                vals = [out.get(name) for name in out_names]
+            except Exception as e:
+                err = e
+        if err is not None:
+            vals = [None] * len(out_names)
+        for name, v in zip(out_names, vals):
+            cols[name].append(v)
+        errs.append(None if err is None else f"{type(err).__name__}: {err}")
+    for name in out_names:
+        pdf[name] = cols[name]
+    pdf[ERR_COL] = pd.Series(errs, dtype="object")
+    return pdf
+
+
+def _par_map_stage(outcomes: Callable[[list], list], out_fields: T.StructType):
+    """One mapInPandas stage: per Arrow batch, ``outcomes`` maps the
+    batch's records to their outcomes in order, and ``_per_record``
+    assigns them. The kernel is module-level, so the worker imports the
+    engine (and with it ``_zipcache``) to run the stage."""
+    out_names = [f.name for f in out_fields.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _per_record(pdf, outcomes(pdf.to_dict("records")), out_names)
+
+    def apply(df: DataFrame) -> DataFrame:
+        out_schema = T.StructType(
+            list(df.schema.fields)
+            + list(out_fields.fields)
+            + [T.StructField(ERR_COL, T.StringType())]
+        )
+        return df.mapInPandas(run, schema=out_schema)
+
+    return apply
+
+
+def _sync_outcomes(fn: Callable[[dict], dict]):
+    """``fn`` runs row-at-a-time Python while data moves in Arrow batches
     — inherent to the arbitrary-user-function contract, same as the
     reference's per-message par_map (lib.rs:490-547). For parse-shaped
     stages prefer the JVM fast path: ``Pipeline.map_expr`` with
-    ``from_json``/built-ins. Errors land in ERR_COL; the original record
-    columns are preserved for DLQ provenance (lib.rs:526-540)."""
+    ``from_json``/built-ins."""
 
-    def runner(in_schema: T.StructType):
-        out_schema = T.StructType(
-            list(in_schema.fields)
-            + [f for f in out_fields.fields]
-            + [T.StructField(ERR_COL, T.StringType())]
-        )
+    def outcomes(records: list) -> list:
+        outs = []
+        for rec in records:
+            try:
+                outs.append(fn(rec))
+            except Exception as e:  # per-record DLQ capture
+                outs.append(e)
+        return outs
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out_names = [f.name for f in out_fields.fields]
-            for pdf in batches:
-                results = {name: [] for name in out_names}
-                errs = []
-                for rec in pdf.to_dict("records"):
-                    try:
-                        out = fn(rec)
-                        for name in out_names:
-                            results[name].append(out.get(name))
-                        errs.append(None)
-                    except Exception as e:  # per-record DLQ capture
-                        for name in out_names:
-                            results[name].append(None)
-                        errs.append(f"{type(e).__name__}: {e}")
-                for name in out_names:
-                    pdf[name] = results[name]
-                pdf[ERR_COL] = pd.Series(errs, dtype="object")
-                yield pdf
-
-        return run, out_schema
-
-    return runner
+    return outcomes
 
 
-def _wrap_par_map_async(
-    async_fn, out_fields: T.StructType, concurrency: int
-):
-    """Arrow-batch runner for ``Pipeline.par_map_async``: per batch, run
-    every record's coroutine under an asyncio semaphore of ``concurrency``
-    (the FuturesOrdered window, lib.rs:615-616, 660-671); ``gather``
-    returns results in submission order — the ordering guarantee the
-    reference's drain path has (lib.rs:584). Exceptions are captured
-    per-record into ERR_COL (lib.rs:649-656's per-record err routing)."""
+def _async_outcomes(async_fn, concurrency: int):
+    """Run every record's coroutine under an asyncio semaphore of
+    ``concurrency`` (the FuturesOrdered window, lib.rs:615-616, 660-671);
+    ``gather`` keeps submission order (lib.rs:584) and returns exceptions
+    as per-record outcomes (lib.rs:649-656)."""
 
-    def runner(in_schema: T.StructType):
-        out_schema = T.StructType(
-            list(in_schema.fields)
-            + [f for f in out_fields.fields]
-            + [T.StructField(ERR_COL, T.StringType())]
-        )
+    def outcomes(records: list) -> list:
+        import asyncio
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import asyncio
+        async def bounded(sem, rec):
+            async with sem:
+                return await async_fn(rec)
 
-            out_names = [f.name for f in out_fields.fields]
+        async def gather():
+            sem = asyncio.Semaphore(concurrency)
+            return await asyncio.gather(
+                *[bounded(sem, rec) for rec in records], return_exceptions=True
+            )
 
-            async def bounded(sem, rec):
-                async with sem:
-                    return await async_fn(rec)
+        return asyncio.run(gather())
 
-            async def run_batch(records):
-                sem = asyncio.Semaphore(concurrency)
-                return await asyncio.gather(
-                    *[bounded(sem, rec) for rec in records], return_exceptions=True
-                )
-
-            for pdf in batches:
-                records = pdf.to_dict("records")
-                outs = asyncio.run(run_batch(records))
-                results = {name: [] for name in out_names}
-                errs = []
-                for out in outs:
-                    if isinstance(out, BaseException):
-                        for name in out_names:
-                            results[name].append(None)
-                        errs.append(f"{type(out).__name__}: {out}")
-                    else:
-                        # Same per-record capture as the sync par_map: a fn
-                        # returning a non-dict (e.g. None on a lookup miss)
-                        # is that RECORD's error, never a task failure.
-                        try:
-                            vals = [out.get(name) for name in out_names]
-                        except Exception as e:
-                            for name in out_names:
-                                results[name].append(None)
-                            errs.append(f"{type(e).__name__}: {e}")
-                        else:
-                            for name, v in zip(out_names, vals):
-                                results[name].append(v)
-                            errs.append(None)
-                for name in out_names:
-                    pdf[name] = results[name]
-                pdf[ERR_COL] = pd.Series(errs, dtype="object")
-                yield pdf
-
-        return run, out_schema
-
-    return runner
+    return outcomes
 
 
 # --------------------------------------------------------------------------
@@ -389,13 +374,8 @@ class Pipeline:
     def par_map(self, fn: Callable[[dict], dict], out_fields: T.StructType) -> "Pipeline":
         """Arbitrary per-record Python transform with per-record error
         capture (the ``parse`` stage, main.rs:22-34)."""
-        wrapper = _wrap_par_map(fn, out_fields)
-
-        def apply(df: DataFrame) -> DataFrame:
-            run, out_schema = wrapper(df.schema)
-            return df.mapInPandas(run, schema=out_schema)
-
-        self._stages.append(_Stage("par_map", apply))
+        stage = _par_map_stage(_sync_outcomes(fn), out_fields)
+        self._stages.append(_Stage("par_map", stage))
         return self
 
     def par_map_async(
@@ -413,13 +393,8 @@ class Pipeline:
         (HTTP enrichment, external lookups) where overlapping requests
         matters; CPU-bound transforms belong in ``par_map``/``map_expr``.
         """
-        wrapper = _wrap_par_map_async(async_fn, out_fields, concurrency)
-
-        def apply(df: DataFrame) -> DataFrame:
-            run, out_schema = wrapper(df.schema)
-            return df.mapInPandas(run, schema=out_schema)
-
-        self._stages.append(_Stage("par_map_async", apply))
+        stage = _par_map_stage(_async_outcomes(async_fn, concurrency), out_fields)
+        self._stages.append(_Stage("par_map_async", stage))
         return self
 
     def filter(self, cond: Column) -> "Pipeline":

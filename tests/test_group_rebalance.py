@@ -294,3 +294,29 @@ def test_produce_many_matches_sequential_produce(spark, tmp_path):
                 r.event_id for r in spark.read.parquet(fb).collect()
             }
             assert ids_bat == ids_seq, (p, off)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_poll_refuses_a_record_file_outside_the_layout(spark, tmp_path, ansi):
+    """The (partition, offset) tags are recovered from each row's file
+    path; a record file that is not ``pNNN/OFFSET.parquet`` must fail
+    the read and name the file, never deliver NULL tags (what a session
+    with ANSI casts off would otherwise get)."""
+    import os
+    import shutil
+
+    t = FileTopic(str(tmp_path / "topic"), 1)
+    t.produce(spark.range(3).select(F.col("id").alias("event_id")), 0)
+    good = t.files(0)[0]
+    shutil.copy(good, os.path.join(os.path.dirname(good), "retry-a.parquet"))
+    consumer = GroupConsumer(spark, t, GroupCoordinator(str(tmp_path / "group")))
+    consumer.assign({0})
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = consumer.poll(max_files_per_partition=2)
+        with pytest.raises(Exception, match="outside pNNN/OFFSET.parquet.*retry-a"):
+            df.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)

@@ -454,3 +454,110 @@ def test_kafka_writer_options_and_record_serialization(spark):
         keyless.collect()[0].value
         == '{"user_id":1,"name":"alpha","score":2.5}'
     )
+
+
+def test_par_map_tasks_read_each_zip_at_most_once(spark):
+    """pyspark invalidates the import caches at the start of every Python
+    task. In a reused worker running a par_map stage, that must cost at
+    most one directory read per zip archive per task (CPython 3.11 reads
+    pyspark.zip's directory once per cached importer, ~16 per task)."""
+    from kafka_map_reduce_spark.streaming import MemorySink, Pipeline
+
+    def probe(rec):
+        # The most directory reads of one archive in this task so far,
+        # counted by a process-wide wrapper around
+        # zipimport._read_directory; -1 in the task that installed it.
+        import collections
+        import os
+        import zipimport
+
+        from pyspark import TaskContext
+
+        task = TaskContext.get().taskAttemptId()
+        read = zipimport._read_directory
+        if not hasattr(read, "by_task"):
+
+            def counting(archive, _read=read):
+                ctx = TaskContext.get()
+                tid = ctx.taskAttemptId() if ctx is not None else None
+                counting.by_task.setdefault(tid, collections.Counter())[archive] += 1
+                return _read(archive)
+
+            counting.by_task, counting.first_task = {}, task
+            zipimport._read_directory = read = counting
+        reads = read.by_task.get(task, collections.Counter())
+        most = -1 if read.first_task == task else max(reads.values(), default=0)
+        return {"pid": os.getpid(), "task": task, "reads": most}
+
+    out = T.StructType([
+        T.StructField("pid", T.LongType()),
+        T.StructField("task", T.LongType()),
+        T.StructField("reads", T.LongType()),
+    ])
+    sink = MemorySink()
+    for _ in range(4):
+        df = spark.range(0, 64, numPartitions=4)
+        Pipeline(df).par_map(probe, out).run_batch(sink)
+    per_task: dict = {}
+    for r in sink.rows:
+        per_task[r.pid, r.task] = max(r.reads, per_task.get((r.pid, r.task), -1))
+    measured = [n for n in per_task.values() if n >= 0]
+    assert measured, "no task ran in a reused worker"
+    assert max(measured) <= 1, per_task
+
+
+def test_zipcache_install_contract(tmp_path):
+    """After ``_zipcache.install()``: invalidation reads nothing, and the
+    next import after one sees a rewritten archive."""
+    import subprocess
+    import sys
+    import textwrap
+
+    script = textwrap.dedent(
+        """
+        import importlib, sys, zipfile, zipimport
+        from kafka_map_reduce_spark import _zipcache
+
+        path = sys.argv[1]
+
+        def build(*mods):
+            with zipfile.ZipFile(path, "w") as z:
+                z.writestr("zpkg/__init__.py", "")
+                for m in mods:
+                    z.writestr(f"zpkg/{m}.py", f"NAME = {m!r}")
+
+        build("a")
+        sys.path.insert(0, path)
+        import zpkg.a
+        _zipcache.install()
+        _zipcache.install()
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or real(a)
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads == [], reads
+        build("a", "b")
+        importlib.invalidate_caches()
+        import zpkg.b
+        assert zpkg.b.NAME == "b"
+        assert path in reads, reads
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "zpkg.zip")],
+        cwd=repo, check=True, timeout=120,
+    )
+
+
+def test_driver_zipimport_is_untouched():
+    """The engine patches zipimport only inside a worker task: in the
+    driver (this process imported the package) it is the stdlib's."""
+    import zipimport
+
+    import kafka_map_reduce_spark  # noqa: F401
+
+    fn = zipimport.zipimporter.invalidate_caches
+    assert (fn.__module__, fn.__qualname__) == ("zipimport", "zipimporter.invalidate_caches")
+    assert not isinstance(vars(zipimport.zipimporter).get("_files"), property)
