@@ -12,9 +12,13 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -125,6 +129,93 @@ def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
+# ---- Arrow vector stages ----------------------------------------------------
+# Every numpy pandas UDF of the vector operators is built by _vector_udf:
+# the operator writes a plain numpy kernel, the helper owns the Arrow <->
+# numpy format, the empty-batch rule and null rows.
+
+_NUMPY_DTYPES = {"int": "int32", "bigint": "int64", "double": "float64"}
+
+
+def _kernel_input(col: pd.Series):
+    """array<double> column -> float64 (n, dim) matrix; strings pass."""
+    if isinstance(col.iloc[0], str):
+        return col
+    return np.array(col.tolist(), dtype=np.float64)
+
+
+def _udf_output(dt, out, null: np.ndarray):
+    """Kernel result -> the pandas shape Arrow takes for ``dt``: a list
+    column for an array type, a typed column for a scalar, a frame for a
+    struct (``out`` then a dict by field name). ``out`` covers the
+    non-null rows in order (None if there are none); rows flagged in
+    ``null`` come back null."""
+    if isinstance(dt, StructType):
+        return pd.DataFrame(
+            {
+                f.name: _udf_output(
+                    f.dataType, None if out is None else out[f.name], null
+                )
+                for f in dt.fields
+            }
+        )
+    if out is None:
+        out = []
+    elif isinstance(dt, ArrayType):
+        out = list(out)  # one row of the 2-D result per list cell
+    col = pd.Series(out, dtype=_NUMPY_DTYPES.get(dt.simpleString(), object))
+    if not null.any():
+        return col
+    it = iter(col.tolist())
+    return pd.Series([None if n else next(it) for n in null], dtype=object)
+
+
+def _vector_udf(return_type: str, kernel):
+    """Arrow pandas UDF over ``kernel``, a plain numpy function: each
+    array<double> argument arrives as one float64 ``(n, dim)`` matrix
+    (string arguments as the pandas column), and the kernel returns a
+    2-D array for an array type, a 1-D array for a scalar, or a dict of
+    those by field name for a struct. A row with any null argument
+    never reaches the kernel and comes back null; a batch with no other
+    rows (a zero-row batch included) returns the typed empty or null
+    result without calling it.
+
+    The stage stays deterministic: a nondeterministic flag here would
+    stop filters from being pushed below it, and q_sim_text_topk's probe
+    branch then embedded all 120 bounded docs instead of its 10 probes.
+    A caller that needs the flag sets it (:func:`cosine_pairs_arrow`)."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import _parse_datatype_string
+
+    dt = _parse_datatype_string(return_type)
+
+    def stage(*cols: pd.Series) -> pd.Series:
+        null = np.zeros(len(cols[0]), dtype=bool)
+        for c in cols:
+            null |= c.isna().to_numpy()
+        if null.all():
+            return _udf_output(dt, None, null)
+        if null.any():
+            cols = tuple(c[~null] for c in cols)
+        return _udf_output(dt, kernel(*map(_kernel_input, cols)), null)
+
+    return pandas_udf(stage, dt)
+
+
+def _sign_pack(V, H, bits: int):
+    """Hyperplane signatures of the rows of ``V``: bit j of table t is
+    (v . H[:, t*bits + j]) > 0 — strict, matching the JVM
+    :func:`hyperplane_bucket` — packed into one int64 per table."""
+    b = (V @ H) > 0
+    pow2 = 2 ** np.arange(bits, dtype=np.int64)
+    return (b.reshape(len(V), -1, bits) * pow2).sum(axis=2).astype(np.int64)
+
+
+def _unit(V):
+    """Row-wise L2 normalize, zero-norm guard 1e-12 (cosine's)."""
+    return V / np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)[:, None]
+
+
 def _l2sq(a: Column, b: Column) -> Column:
     """Squared L2 distance (JVM zip_with + fold, codegen)."""
     return _fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
@@ -186,7 +277,7 @@ _FLAT_ONE_TILE_MAX_K = 4096
 
 
 def _assign_arrow(cents_rows, sc=None):
-    """pandas_udf factory: nearest-centroid id for array<double> vectors
+    """Arrow UDF factory: nearest-centroid id for array<double> vectors
     via ONE numpy matmul per Arrow batch (||v-c||^2 = |v|^2 - 2 v.C^T +
     |c|^2). ``cents_rows`` is the collected (cluster_id, centroid) list
     — k x dim doubles. With ``sc`` (a SparkContext — every operator call
@@ -236,62 +327,38 @@ def _assign_arrow(cents_rows, sc=None):
     must keep the exact floats it has always produced. The tiled regime
     is reached only by big-k training and 100x witnesses — rows-only
     paths with pinned accuracy floors."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     rows = sorted(cents_rows, key=lambda r: r["cluster_id"])
     cids = np.array([r["cluster_id"] for r in rows], dtype="int64")
     C = np.array([list(r["centroid"]) for r in rows], dtype="float64")
-    cn = (C * C).sum(axis=1)
-
-    def blocked_nearest(V, C_m, cn_m, cids_m):
-        k_m = C_m.shape[0]
-        if k_m <= _FLAT_ONE_TILE_MAX_K:
-            d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C_m.T) + cn_m[None, :]
-            return cids_m[np.argmin(d2, axis=1)]
-        vn = (V * V).sum(axis=1)[:, None]
-        block = max(256, 8_000_000 // max(len(V), 1))  # ~64 MB tile
-        best_d = np.full(len(V), np.inf)
-        best_j = np.zeros(len(V), dtype=np.int64)
-        rows_ix = np.arange(len(V))
-        for s in range(0, k_m, block):
-            d2 = vn - 2.0 * (V @ C_m[s : s + block].T) + cn_m[None, s : s + block]
-            j = np.argmin(d2, axis=1)
-            d = d2[rows_ix, j]
-            upd = d < best_d
-            best_d[upd] = d[upd]
-            best_j[upd] = j[upd] + s
-        return cids_m[best_j]
-
-    if sc is not None:
-        bc = sc.broadcast((cids, C, cn))
-
-        @pandas_udf("int")
-        def assign(v: pd.Series) -> pd.Series:
-            if len(v) == 0:
-                return pd.Series([], dtype="int32")
-            import numpy as np
-
-            cids_b, C_b, cn_b = bc.value
-            V = np.array([list(x) for x in v], dtype="float64")
-            return pd.Series(blocked_nearest(V, C_b, cn_b, cids_b)).astype(
-                "int32"
-            )
-
-        assign._kmr_broadcast = bc
-        return assign
-
-    @pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        import numpy as np
-
-        V = np.array([list(x) for x in v], dtype="float64")
-        return pd.Series(blocked_nearest(V, C, cn, cids)).astype("int32")
-
-    assign._kmr_broadcast = None
+    model = (cids, C, (C * C).sum(axis=1))
+    # one kernel body for both forms: it reads the model through .value
+    held = sc.broadcast(model) if sc is not None else SimpleNamespace(value=model)
+    assign = _vector_udf("int", lambda V: _flat_nearest(V, *held.value))
+    assign._kmr_broadcast = held if sc is not None else None
     return assign
+
+
+def _flat_nearest(V, cids, C, cn):
+    """Nearest-centroid id per row of ``V`` (see :func:`_assign_arrow`):
+    one matmul up to _FLAT_ONE_TILE_MAX_K centroids, ~64 MB blocks with a
+    running argmin above it."""
+    k = C.shape[0]
+    if k <= _FLAT_ONE_TILE_MAX_K:
+        d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + cn[None, :]
+        return cids[np.argmin(d2, axis=1)]
+    vn = (V * V).sum(axis=1)[:, None]
+    block = max(256, 8_000_000 // max(len(V), 1))  # ~64 MB tile
+    best_d = np.full(len(V), np.inf)
+    best_j = np.zeros(len(V), dtype=np.int64)
+    rows_ix = np.arange(len(V))
+    for s in range(0, k, block):
+        d2 = vn - 2.0 * (V @ C[s : s + block].T) + cn[None, s : s + block]
+        j = np.argmin(d2, axis=1)
+        d = d2[rows_ix, j]
+        upd = d < best_d
+        best_d[upd] = d[upd]
+        best_j[upd] = j[upd] + s
+    return cids[best_j]
 
 
 # Above this centroid count the one-level Arrow argmin's O(N*k) matmul
@@ -327,8 +394,6 @@ def _route_structure(C, n_iters=5):
     fixed Lloyd count, empty groups dropped. O(k^1.5 * dim) numpy on a
     matrix that is already driver-resident (the collected model),
     KB-to-MB sized by the k≈N/250 rule."""
-    import numpy as np
-
     k = C.shape[0]
     g = max(2, int(np.ceil(np.sqrt(k))))
     idx = np.minimum(np.arange(g) * max(1, k // g), k - 1)
@@ -353,7 +418,7 @@ def _route_structure(C, n_iters=5):
 
 
 def _assign_arrow_routed(cents_rows, sc, nprobe=2):
-    """Two-level (IVF-routed) nearest-centroid pandas_udf: each vector
+    """Two-level (IVF-routed) nearest-centroid Arrow UDF: each vector
     argmins over the ~sqrt(k) super-centroids first, then over the
     children of its ``nprobe`` nearest groups — O(N * dim * (sqrt(k) +
     nprobe*k/sqrt(k))) instead of the flat kernel's O(N * dim * k).
@@ -370,9 +435,6 @@ def _assign_arrow_routed(cents_rows, sc, nprobe=2):
     structure derives from the cid-sorted centroid matrix with stride
     init and a fixed Lloyd count, so full-build and incremental-ingest
     callers sharing frozen centroids assign identically."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     rows = sorted(cents_rows, key=lambda r: r["cluster_id"])
     cids = np.array([r["cluster_id"] for r in rows], dtype="int64")
     C = np.array([list(r["centroid"]) for r in rows], dtype="float64")
@@ -381,42 +443,38 @@ def _assign_arrow_routed(cents_rows, sc, nprobe=2):
     Gn = (G * G).sum(axis=1)
     p = min(nprobe, len(members))
     bc = sc.broadcast((cids, C, cn, G, Gn, members, p))
-
-    @pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        import numpy as np
-
-        cids_b, C_b, cn_b, G_b, Gn_b, members_b, p_b = bc.value
-        V = np.array([list(x) for x in v], dtype="float64")
-        # |v|^2 is constant per row: drop it from every argmin
-        d1 = Gn_b[None, :] - 2.0 * (V @ G_b.T)
-        if p_b >= d1.shape[1]:
-            probe = np.argsort(d1, axis=1)
-        else:
-            probe = np.argpartition(d1, p_b - 1, axis=1)[:, :p_b]
-        best_d = np.full(len(V), np.inf)
-        best_cid = np.full(len(V), np.iinfo(np.int64).max, dtype="int64")
-        for r in range(probe.shape[1]):
-            col = probe[:, r]
-            for j in np.unique(col):
-                ridx = np.where(col == j)[0]
-                ch = members_b[j]
-                d2 = cn_b[ch][None, :] - 2.0 * (V[ridx] @ C_b[ch].T)
-                loc = np.argmin(d2, axis=1)  # first min = lowest cid
-                dmin = d2[np.arange(len(ridx)), loc]
-                cand = cids_b[ch[loc]]
-                upd = (dmin < best_d[ridx]) | (
-                    (dmin == best_d[ridx]) & (cand < best_cid[ridx])
-                )
-                bi = ridx[upd]
-                best_d[bi] = dmin[upd]
-                best_cid[bi] = cand[upd]
-        return pd.Series(best_cid).astype("int32")
-
+    assign = _vector_udf("int", lambda V: _routed_nearest(V, *bc.value))
     assign._kmr_broadcast = bc
     return assign
+
+
+def _routed_nearest(V, cids, C, cn, G, Gn, members, p):
+    """Nearest-centroid id per row of ``V`` among the children of its
+    ``p`` nearest super-centroids (see :func:`_assign_arrow_routed`)."""
+    # |v|^2 is constant per row: drop it from every argmin
+    d1 = Gn[None, :] - 2.0 * (V @ G.T)
+    if p >= d1.shape[1]:
+        probe = np.argsort(d1, axis=1)
+    else:
+        probe = np.argpartition(d1, p - 1, axis=1)[:, :p]
+    best_d = np.full(len(V), np.inf)
+    best_cid = np.full(len(V), np.iinfo(np.int64).max, dtype="int64")
+    for r in range(probe.shape[1]):
+        col = probe[:, r]
+        for j in np.unique(col):
+            ridx = np.where(col == j)[0]
+            ch = members[j]
+            d2 = cn[ch][None, :] - 2.0 * (V[ridx] @ C[ch].T)
+            loc = np.argmin(d2, axis=1)  # first min = lowest cid
+            dmin = d2[np.arange(len(ridx)), loc]
+            cand = cids[ch[loc]]
+            upd = (dmin < best_d[ridx]) | (
+                (dmin == best_d[ridx]) & (cand < best_cid[ridx])
+            )
+            bi = ridx[upd]
+            best_d[bi] = dmin[upd]
+            best_cid[bi] = cand[upd]
+    return best_cid
 
 
 def _assign_model(cents_rows, sc, route_nprobe=3):
@@ -580,8 +638,6 @@ def _lloyd_local(rows, n_clusters: int, iters: int, init: str):
     uses the gemm form above it, exactly mirroring the Spark path's own
     kernel split (_nearest below _ARROW_ASSIGN_MIN_K, Arrow matmul
     above). Means accumulate members in ascending-id order."""
-    import numpy as np
-
     rows = sorted(rows, key=lambda r: r[0])
     vids = np.array([r[0] for r in rows], dtype="int64")
     V = np.array([list(r[1]) for r in rows], dtype="float64")
@@ -1653,8 +1709,6 @@ def _hyperplane_sign_matrix(dim: int, bits: int, n_tables: int):
     j, so Arrow and JVM signatures are bit-identical by construction."""
     import hashlib
 
-    import numpy as np
-
     H = np.empty((dim, n_tables * bits), dtype=np.float64)
     for t in range(n_tables):
         for j in range(bits):
@@ -1694,89 +1748,8 @@ def hyperplane_buckets_all(
     model-free embedding stage (attach_hash_embed, ~5 s cold
     scan+fold) and the exact-cosine verify over ~209k candidates
     (~2.1 s), not the signatures."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     H = _hyperplane_sign_matrix(dim, bits, n_tables)
-    pow2 = (2 ** np.arange(bits, dtype=np.int64))[None, None, :]
-
-    @pandas_udf("array<long>")
-    def buckets(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        V = np.array(v.tolist(), dtype=np.float64)  # (n, dim)
-        # strict > 0, matching the JVM expression's F.when(dot > 0, ..)
-        b = (V @ H) > 0  # (n, n_tables*bits)
-        packed = (
-            (b.reshape(len(V), n_tables, bits) * pow2)
-            .sum(axis=2)
-            .astype(np.int64)
-        )
-        return pd.Series([row.tolist() for row in packed])
-
-    return buckets
-
-
-def attach_hash_embed_with_buckets(
-    df: DataFrame,
-    text_col: str,
-    dim: int,
-    bits: int = 16,
-    n_tables: int = 8,
-    out_col: str = "embedding",
-    buckets_col: str = "__buckets",
-) -> DataFrame:
-    """Fused embed + all-tables-signature face: ONE Arrow stage (r18,
-    guide §4.1 — every JVM↔Python stage pays the per-task worker
-    round trip the r17 profile quantified at ~130-200 ms/task, so the
-    registered embedding-LSH composition collapses its two Python
-    stages into one). Computes the md5 hash-embedding via the EXACT
-    kernel :func:`operators.text._hash_embed_batch` (the one
-    ``attach_hash_embed_arrow`` runs) and the ``n_tables`` hyperplane
-    bucket signatures via the EXACT matmul+pack
-    :func:`hyperplane_buckets_all` runs — from the same in-memory
-    float64 matrix, so both outputs are bit-identical to the two-stage
-    composition (float64 array values round-trip Arrow exactly;
-    pinned in tests/test_embedding_lsh.py). The per-operator faces
-    stay, individually tested; this is composition-level fusion only."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from kafka_map_reduce_spark.operators.text import _hash_embed_batch
-
-    H = _hyperplane_sign_matrix(dim, bits, n_tables)
-    pow2 = (2 ** np.arange(bits, dtype=np.int64))[None, None, :]
-
-    @pandas_udf("struct<emb: array<double>, bkts: array<long>>")
-    def both(texts: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(texts) == 0:
-            return pd.DataFrame(
-                {"emb": pd.Series([], dtype=object),
-                 "bkts": pd.Series([], dtype=object)}
-            )
-        V, null = _hash_embed_batch(texts, dim)
-        # strict > 0, matching hyperplane_buckets_all / the JVM face
-        b = (V @ H) > 0
-        packed = (
-            (b.reshape(len(V), n_tables, bits) * pow2)
-            .sum(axis=2)
-            .astype(np.int64)
-        )
-        emb = pd.Series([row.tolist() for row in V])
-        bkts = pd.Series([row.tolist() for row in packed])
-        emb[null] = None
-        bkts[null] = None
-        return pd.DataFrame({"emb": emb, "bkts": bkts})
-
-    fused = both(F.col(text_col))
-    return (
-        df.withColumn("__eb", fused)
-        .withColumn(out_col, F.col("__eb").getField("emb"))
-        .withColumn(buckets_col, F.col("__eb").getField("bkts"))
-        .drop("__eb")
-    )
+    return _vector_udf("array<long>", lambda V: _sign_pack(V, H, bits))
 
 
 def cosine_pairs_arrow() -> "object":
@@ -1787,19 +1760,12 @@ def cosine_pairs_arrow() -> "object":
     oracle consumes the values (embedding_near_dup — rows-only): numpy's
     pairwise summation can differ from the sequential fold in the last
     ulp, which the oracle-facing :func:`cosine` cannot afford."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
+    def cos(A, B):
         dot = (A * B).sum(axis=1)
         na = np.sqrt((A * A).sum(axis=1))
         nb = np.sqrt((B * B).sum(axis=1))
-        return pd.Series(dot / np.maximum(na * nb, 1e-12))
+        return dot / np.maximum(na * nb, 1e-12)
 
     # asNondeterministic (r18, guide §4.4): embedding_near_dup filters
     # on the UDF-computed sim and then projects it — the optimizer's
@@ -1807,7 +1773,7 @@ def cosine_pairs_arrow() -> "object":
     # two ArrowEvalPython for one cosine in plans/r18/*_before.txt), so
     # every candidate pair paid the numpy pass twice. The function is
     # pure; the flag only stops the optimizer from cloning it.
-    return cos.asNondeterministic()
+    return _vector_udf("double", cos).asNondeterministic()
 
 
 def embedding_near_dup(
@@ -1832,7 +1798,7 @@ def embedding_near_dup(
 
     ``buckets_col`` (r18): the corpus already carries the hyperplane
     signatures as an array<long> column (one bucket per table, the
-    :func:`attach_hash_embed_with_buckets` /
+    ``operators.text.attach_hash_embed_arrow(buckets_col=...)`` /
     :func:`hyperplane_buckets_all` layout — the caller's bits/n_tables
     must match the args here; an array of another length fails the
     query rather than silently changing candidate generation). Without
@@ -1894,75 +1860,22 @@ def embedding_near_dup(
 
 
 def _normalize_arrow():
-    """pandas_udf: L2-normalize array<double> vectors (zero-norm guard
+    """Arrow UDF: L2-normalize array<double> vectors (zero-norm guard
     1e-12, matching cosine's). One pass per vector so the per-pair
     verify can be a bare dot product — each vector joins ~cluster-size
     pairs, and per-pair norms would redo the same sqrt that many
     times."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def norm(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        V = np.array(v.tolist(), dtype=np.float64)
-        n = np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)
-        return pd.Series(list(V / n[:, None]))
-
-    return norm
+    return _vector_udf("array<double>", _unit)
 
 
-def attach_hash_embed_with_unit(
-    df: DataFrame,
-    text_col: str,
-    dim: int,
-    out_col: str = "embedding",
-    unit_col: str = "__unit",
+def _with_unit(
+    df: DataFrame, vec_col: str, id_col: str, unit_col: str | None
 ) -> DataFrame:
-    """Fused embed + L2-normalize face for the SemDeDup compositions
-    (r18, guide §4.1 — the attach_hash_embed_with_buckets treatment for
-    the semantic family): ONE Arrow stage computes the md5
-    hash-embedding (text.py:_hash_embed_batch, the exact
-    attach_hash_embed_arrow kernel) AND its re-normalized unit vector
-    (the exact arithmetic _normalize_arrow applies downstream) from the
-    same in-memory float64 matrix. Both outputs are bit-identical to
-    the two-stage composition (float64 round-trips Arrow exactly;
-    pinned in tests/test_semantic_dedup.py), so the hash-oracled
-    q_dedup_semantic_keep_best row cannot move. The raw embedding stays
-    in the output because training/assignment consume it; the unit
-    column is what the verify kernel (and the persisted semantic index)
-    carries anyway."""
-    from pyspark.sql.functions import pandas_udf
-
-    from kafka_map_reduce_spark.operators.text import _hash_embed_batch
-
-    @pandas_udf("struct<emb: array<double>, unit: array<double>>")
-    def both(texts: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(texts) == 0:
-            return pd.DataFrame(
-                {"emb": pd.Series([], dtype=object),
-                 "unit": pd.Series([], dtype=object)}
-            )
-        V, null = _hash_embed_batch(texts, dim)
-        # the exact _normalize_arrow ops, applied to the same matrix
-        n = np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)
-        U = V / n[:, None]
-        emb = pd.Series([row.tolist() for row in V])
-        un = pd.Series([row.tolist() for row in U])
-        emb[null] = None
-        un[null] = None
-        return pd.DataFrame({"emb": emb, "unit": un})
-
-    fused = both(F.col(text_col))
-    return (
-        df.withColumn("__eu", fused)
-        .withColumn(out_col, F.col("__eu").getField("emb"))
-        .withColumn(unit_col, F.col("__eu").getField("unit"))
-        .drop("__eu")
-    )
+    """(id, __v, __u): the vector as array<double> and its unit vector,
+    taken from ``unit_col`` or computed by :func:`_normalize_arrow`."""
+    v = _as_double(F.col(vec_col))
+    u = F.col(unit_col) if unit_col is not None else _normalize_arrow()(v)
+    return df.select(F.col(id_col).alias("id"), v.alias("__v"), u.alias("__u"))
 
 
 def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
@@ -2019,7 +1932,6 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
     100x its gemm savings scanning the band: 6% of pairs sit within
     10x-max-err of a decision edge on hash-embed-like vectors. float64
     stays."""
-    import numpy as np
 
     def f(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
@@ -2115,14 +2027,15 @@ def semantic_dedup(
     trained-model operator here.
 
     ``unit_col`` (r18): the corpus already carries the L2-normalized
-    vector (the :func:`attach_hash_embed_with_unit` fused-face layout —
-    must equal ``_normalize_arrow`` of ``vec_col``, which the fused
-    face guarantees bit-exactly). The operator then skips its own
-    Arrow normalize stage; same pairs, same sims (parity-pinned)."""
-    cols = [F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("__v")]
-    if unit_col is not None:
-        cols.append(F.col(unit_col).alias("__u"))
-    base = corpus.select(*cols).localCheckpoint(eager=False)
+    vector (the ``operators.text.attach_hash_embed_arrow(unit_col=...)``
+    layout — must equal ``_normalize_arrow`` of ``vec_col``, which that
+    face guarantees bit-exactly). Without it the operator attaches the
+    column itself with :func:`_normalize_arrow`; either way the base
+    checkpoint carries (id, vector, unit vector) and the verify is a
+    bare dot product — same pairs, same sims (parity-pinned)."""
+    base = _with_unit(corpus, vec_col, id_col, unit_col).localCheckpoint(
+        eager=False
+    )
     train = (
         # salted like _hash_mod_filter (r12): an unsalted filter on the
         # same hash the spread-init seeder buckets with restricts the
@@ -2154,18 +2067,9 @@ def semantic_dedup(
         assigned = base.join(F.broadcast(cent_row)).withColumn(
             "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
         )
-    # unit vectors once per row => verify is dot-only; with unit_col the
-    # caller's fused embed stage already produced them (bit-equal), so
-    # the separate Arrow normalize stage disappears (r18)
-    if unit_col is not None:
-        assigned = assigned.select(
-            "id", "bkt", F.col("__u").alias("__vn")
-        ).localCheckpoint(eager=False)  # cap-count + join sides consume
-    else:
-        unit = _normalize_arrow()
-        assigned = assigned.select(
-            "id", "bkt", unit(F.col("__v")).alias("__vn")
-        ).localCheckpoint(eager=False)  # cap-count + join sides consume
+    assigned = assigned.select(
+        "id", "bkt", F.col("__u").alias("__vn")
+    ).localCheckpoint(eager=False)  # cap-count + join sides consume
     if max_cluster_size is not None:
         counts = assigned.groupBy("bkt").agg(F.count(F.lit(1)).alias("__n"))
         assigned = assigned.join(
@@ -2207,7 +2111,6 @@ def _bucket_pairs_vs_new_fn(threshold: float):
     the batch side is small). Output pairs are (min_id, max_id) with
     new-new duplicates dropped, so appending a batch emits exactly the
     pairs a full rebuild would add."""
-    import numpy as np
 
     def f(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
@@ -2302,13 +2205,8 @@ def semantic_dedup_ingest(
     (3.3x per 3.2x N, linear); the r13 43.3 s carried first-execution
     cost."""
     n_cents = centroids.count()
-    cols = [F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("__v")]
-    if unit_col is not None:
-        # fused-face layout (r18, see semantic_dedup's unit_col): the
-        # batch already carries the bit-exact unit vector — skip the
-        # Arrow normalize stage below
-        cols.append(F.col(unit_col).alias("__u"))
-    base = batch.select(*cols)
+    # unit_col as in semantic_dedup
+    base = _with_unit(batch, vec_col, id_col, unit_col)
     if n_cents > _ARROW_ASSIGN_MIN_K:
         assign = _assign_model(
             centroids.collect(), sc=batch.sparkSession.sparkContext
@@ -2323,15 +2221,9 @@ def semantic_dedup_ingest(
         assigned = base.join(F.broadcast(cent_row)).withColumn(
             "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
         )
-    if unit_col is not None:
-        new_rows = assigned.select(
-            "id", "bkt", F.col("__u").alias("__vn")
-        ).localCheckpoint(eager=False)
-    else:
-        unit = _normalize_arrow()
-        new_rows = assigned.select(
-            "id", "bkt", unit(F.col("__v")).alias("__vn")
-        ).localCheckpoint(eager=False)
+    new_rows = assigned.select(
+        "id", "bkt", F.col("__u").alias("__vn")
+    ).localCheckpoint(eager=False)
     touched = new_rows.select("bkt").distinct()
     old_rows = index.join(F.broadcast(touched), "bkt").select(
         "id", "bkt", "__vn"

@@ -356,33 +356,6 @@ def bigram_logprob(
     )
 
 
-def hash_embed(text_col: Column, dim: int = 32) -> Column:
-    """Feature-hashing document embedding (the hashing trick,
-    Weinberger et al. ICML'09): each token hashes to a bucket in [0,
-    dim) with a ±1 sign from an independent hash bit, signed counts are
-    summed per bucket, and the vector is L2-normalized. Deterministic,
-    model-free text → array<double> — the representation that lets the
-    ANN/dedup operators (cosine, top-k, IVF, embedding near-dup) run on
-    a corpus that ships no external embedding model.
-
-    Pure JVM expression, shuffle-free, O(tokens × dim) per doc inside
-    whole-stage codegen (dim is small by design — this is a locality
-    signature, not a semantic model). On a real table use
-    :func:`attach_hash_embed` — consuming this Column in the same
-    projection re-inlines the fold per reference (26x measured). The ±1 sign makes collisions
-    cancel in expectation instead of accumulating (the standard
-    signed-hashing variance fix).
-
-    Bucket and sign come from md5 hex nibbles so a DuckDB oracle
-    replays the embedding bit-for-bit; :func:`attach_hash_embed_arrow`
-    is the fast face of the same vectors."""
-    raw = _hash_embed_raw(text_col, dim)
-    norm = F.sqrt(
-        F.aggregate(raw, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return F.transform(raw, lambda x: x / F.greatest(norm, F.lit(1e-12)))
-
-
 def _hash_embed_raw(text_col: Column, dim: int) -> Column:
     """Unnormalized signed bucket counts (the expensive fold)."""
     toks = tokens(text_col)
@@ -420,11 +393,24 @@ def attach_hash_embed(
     out_col: str = "embedding",
     dim: int = 32,
 ) -> DataFrame:
-    """:func:`hash_embed` as a staged DataFrame transform — use THIS on
-    any real table. The single-Column form is one Project, so Catalyst
-    inlines the signed-count fold into every place it is referenced: the
-    norm once plus each of the ``dim`` output elements — ~``dim`` + 1
-    evaluations of the whole fold per row (measured 26x at dim=32:
+    """Feature-hashing document embedding (the hashing trick,
+    Weinberger et al. ICML'09), the JVM face and the oracle reference:
+    each token hashes to a bucket in [0, dim) with a ±1 sign from an
+    independent hash bit, signed counts are summed per bucket, and the
+    vector is L2-normalized. Deterministic, model-free text →
+    array<double> — the representation that lets the ANN/dedup
+    operators (cosine, top-k, IVF, embedding near-dup) run on a corpus
+    that ships no external embedding model. The ±1 sign makes
+    collisions cancel in expectation instead of accumulating (the
+    standard signed-hashing variance fix). Bucket and sign come from
+    md5 hex nibbles so a DuckDB oracle replays the embedding
+    bit-for-bit; :func:`attach_hash_embed_arrow` is the fast face of
+    the same vectors.
+
+    Staged across projections on purpose. As one Column, Catalyst
+    inlines the signed-count fold into every place it is referenced:
+    the norm once plus each of the ``dim`` output elements — ~``dim`` +
+    1 evaluations of the whole fold per row (measured 26x at dim=32:
     materializing all 5k sf0.1 embeddings warm takes 25.6 s as a single
     Column vs 0.99 s staged).
     Staging raw → norm → normalize across separate projections keeps
@@ -460,42 +446,28 @@ _EMBED_MD5_CACHE: dict = {}
 
 
 def _hash_embed_batch(texts: pd.Series, dim: int):
-    """Shared vectorized md5 hash-embed kernel: returns ``(V, null)`` —
-    the L2-normalized ``(n, dim)`` float64 matrix and the null-row mask.
-
-    Extracted from :func:`attach_hash_embed_arrow`'s UDF body (r18) so
-    the fused embed+signature face in operators/similarity.py
-    (``attach_hash_embed_with_buckets``) can compute hyperplane
-    signatures from the SAME in-memory matrix instead of paying a
-    second Arrow stage; the bit-parity pins (Arrow == JVM exact
-    equality, tests/test_operators.py) are unchanged — this is the
-    identical arithmetic, relocated. The md5 cache import seam is
-    narrowed to ImportError (ADVICE r17): any other failure inside the
-    kernel should surface, not silently fall back to a cold cache.
-    The 2^18-entry bound is PER DIM (dim is fixed per deployment, so
-    the global footprint matches the per-worker sizing note below)."""
+    """Vectorized md5 hash-embed kernel: the L2-normalized ``(n, dim)``
+    float64 matrix of non-null ``texts`` — the numpy kernel of
+    :func:`attach_hash_embed_arrow`, which computes any signatures or
+    unit vectors from this same in-memory matrix. The bit-parity pins
+    (Arrow == JVM exact equality, tests/test_operators.py) hold on it.
+    The kernel is module-level, so a worker runs it inside the imported
+    module and fills that module's md5 cache. The 2^18-entry bound is
+    PER DIM (dim is fixed per deployment, so the global footprint
+    matches the per-worker sizing note below)."""
     import hashlib
     import re
 
     import numpy as np
 
-    try:  # reused-worker path: the imported module's global cache
-        from kafka_map_reduce_spark.operators.text import _EMBED_MD5_CACHE
+    from kafka_map_reduce_spark.operators.similarity import _unit
 
-        _cache = _EMBED_MD5_CACHE.setdefault(dim, {})
-    except ImportError:  # import seam absent: task-local fallback
-        _cache = {}
-
+    _cache = _EMBED_MD5_CACHE.setdefault(dim, {})
     ws = re.compile(r"\s+", re.ASCII)
-    n = len(texts)
-    V = np.zeros((n, dim), dtype="float64")
-    null = np.zeros(n, dtype=bool)
+    V = np.zeros((len(texts), dim), dtype="float64")
     all_toks: list = []
     doc_idx: list = []
     for i, t in enumerate(texts):
-        if t is None:
-            null[i] = True
-            continue
         for tok in ws.split(t.lower()):
             if tok:
                 all_toks.append(tok)
@@ -526,8 +498,7 @@ def _hash_embed_batch(texts: pd.Series, dim: int):
                     _cache[u] = c
             bucket[j], sign[j] = c
         np.add.at(V, (np.asarray(doc_idx), bucket[codes]), sign[codes])
-    norms = np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)
-    return V / norms[:, None], null
+    return _unit(V)
 
 
 def attach_hash_embed_arrow(
@@ -535,10 +506,14 @@ def attach_hash_embed_arrow(
     text_col: str,
     out_col: str = "embedding",
     dim: int = 32,
+    buckets_col: str | None = None,
+    bits: int = 16,
+    n_tables: int = 8,
+    unit_col: str | None = None,
 ) -> DataFrame:
     """Arrow production face of the md5 hash-embed: BIT-IDENTICAL
     vectors to :func:`attach_hash_embed` (exact-equality
-    pytest pin, tests/test_operators.py) from ONE vectorized pandas_udf
+    pytest pin, tests/test_operators.py) from ONE vectorized Arrow stage
     instead of the JVM's O(tokens × dim) interpreted HOF fold.
 
     Why it exists (r9 verdict item #6, the embed wall): at 5M docs the
@@ -569,17 +544,51 @@ def attach_hash_embed_arrow(
     survives across tasks and queries. Values are pure md5-derived
     (bucket, sign) pairs — deterministic in the token alone, so
     cross-task reuse cannot change any result. The 2^18-entry bound is
-    unchanged (same ~64 MB/worker ceiling the r10 sizing named)."""
-    from pyspark.sql.functions import pandas_udf
+    unchanged (same ~64 MB/worker ceiling the r10 sizing named).
 
-    @pandas_udf("array<double>")
-    def embed(texts: pd.Series) -> pd.Series:
-        V, null = _hash_embed_batch(texts, dim)
-        out = pd.Series([row.tolist() for row in V])
-        out[null] = None
+    Fused outputs (r18, guide §4.1 — every JVM↔Python stage pays the
+    per-task worker round trip the r17 profile quantified at ~130-200
+    ms/task): ``buckets_col`` also emits the ``n_tables`` hyperplane
+    signatures of ``bits`` bits (the :func:`operators.similarity.
+    hyperplane_buckets_all` layout ``embedding_near_dup`` consumes) and
+    ``unit_col`` the re-normalized vector (``_normalize_arrow``'s
+    arithmetic, ``semantic_dedup``'s verify input), both from the same
+    in-memory matrix in the SAME single Arrow stage. They run the exact
+    sign-pack and normalize kernels of the separate stages, so each
+    output is bit-identical to the two-stage composition (float64
+    round-trips Arrow exactly; pinned in tests/test_embedding_lsh.py
+    and tests/test_semantic_dedup.py)."""
+    from kafka_map_reduce_spark.operators.similarity import (
+        _hyperplane_sign_matrix,
+        _sign_pack,
+        _unit,
+        _vector_udf,
+    )
+
+    H = _hyperplane_sign_matrix(dim, bits, n_tables) if buckets_col else None
+
+    def embed(texts):
+        V = _hash_embed_batch(texts, dim)
+        out = {"emb": V}
+        if H is not None:
+            out["bkts"] = _sign_pack(V, H, bits)
+        if unit_col is not None:
+            out["unit"] = _unit(V)
         return out
 
-    return df.withColumn(out_col, embed(F.col(text_col)))
+    fields = {
+        out_col: ("emb", "array<double>"),
+        buckets_col: ("bkts", "array<long>"),
+        unit_col: ("unit", "array<double>"),
+    }
+    fields = {c: ft for c, ft in fields.items() if c is not None}
+    struct = ", ".join(f"{f}: {t}" for f, t in fields.values())
+    stage = _vector_udf(f"struct<{struct}>", embed)
+    return (
+        df.withColumn("__he", stage(F.col(text_col)))
+        .withColumns({c: F.col("__he").getField(f) for c, (f, _) in fields.items()})
+        .drop("__he")
+    )
 
 
 def remove_contaminated_spans(

@@ -623,10 +623,8 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     speed, candidates from bucket equi-joins across 8 tables with the
     shared hot-bucket cap, one candidate-sized cosine verify — never
     all-pairs."""
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
-        embedding_near_dup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     # fanned out (r17): the operator's consume-once checkpoints freeze
     # the scan's partitioning, so the one-row-group bench scan pinned the
@@ -636,12 +634,12 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
     # fused embed+signature (r18, guide §4.1): one Arrow stage computes
     # the embedding AND all 8 hyperplane signatures (bit-identical to
-    # the two-stage attach_hash_embed_arrow -> hyperplane_buckets_all
-    # composition, parity-pinned); embedding_near_dup consumes the
+    # the two-stage embed -> hyperplane_buckets_all composition,
+    # parity-pinned); embedding_near_dup consumes the
     # precomputed buckets and skips its own Python signature stage.
-    emb = attach_hash_embed_with_buckets(d, "text", dim=32).select(
-        F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
-    )
+    emb = attach_hash_embed_arrow(
+        d, "text", dim=32, buckets_col="__buckets"
+    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
     return embedding_near_dup(
         emb, dim=32, threshold=0.95, buckets_col="__buckets"
     ).orderBy("id_a", "id_b")
@@ -659,10 +657,8 @@ def q_dedup_embedding_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2.6x) by routing dense template clusters to exact dedup — the same
     policy the text-LSH hot-band cap implements (SURVEY §6 r6
     scale-spot analysis)."""
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
-        embedding_near_dup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     # fanned out (r17): the operator's consume-once checkpoints freeze
     # the scan's partitioning, so the one-row-group bench scan pinned the
@@ -671,9 +667,9 @@ def q_dedup_embedding_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed fan-out, corpus-scale no-op by the gate
     d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
     # fused embed+signature (r18): see q_dedup_embedding_lsh
-    emb = attach_hash_embed_with_buckets(d, "text", dim=32).select(
-        F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
-    )
+    emb = attach_hash_embed_arrow(
+        d, "text", dim=32, buckets_col="__buckets"
+    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
     return embedding_near_dup(
         emb, dim=32, threshold=0.95, max_bucket_size=16, buckets_col="__buckets"
     ).orderBy("id_a", "id_b")
@@ -710,10 +706,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     when k scales with the corpus (the paper's regime), and over-full
     clusters drop to exact dedup via max_cluster_size — the same
     governor as every other modality's cap."""
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_unit,
-        semantic_dedup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import semantic_dedup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     # fanned out (r17): the eager emb checkpoint below otherwise
     # freezes the one-row-group scan's single partition into every
@@ -729,7 +723,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-exact unit vector in the same Arrow stage, so semantic_dedup
     # skips its separate normalize stage (unit_col below).
     emb = (
-        attach_hash_embed_with_unit(d, "text", dim=32)
+        attach_hash_embed_arrow(d, "text", dim=32, unit_col="__unit")
         .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
         .localCheckpoint(eager=True)
     )
@@ -774,13 +768,13 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     build step materializes with the same frozen model (ingest against
     an empty index IS the build — one code path, no drift)."""
     from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_unit,
         kmeans_fit,
         semantic_dedup_ingest,
     )
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     emb = (
-        attach_hash_embed_with_unit(
+        attach_hash_embed_arrow(
             # fanned out (r17): same single-partition-checkpoint freeze
             # as q_dedup_semantic; no-op at corpus scale. Fused
             # embed+unit face (r18): both ingest calls below skip their
@@ -790,6 +784,7 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "text",
             dim=32,
+            unit_col="__unit",
         )
         .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
         .localCheckpoint(eager=True)
@@ -926,10 +921,8 @@ def q_dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (O(diameter) keyed shuffles); the keep-best argmax is
     one row_number window on cluster_id, and semantic clusters are
     bounded by max_cluster_size so the window key cannot concentrate."""
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_unit,
-        semantic_dedup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import semantic_dedup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
     from kafka_map_reduce_spark.operators.text import quality_score
     from pyspark.sql.window import Window
 
@@ -943,7 +936,7 @@ def q_dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalize stage via unit_col — sims unchanged, the oracle hash
     # row still cannot move, re-proved at sf0.01)
     emb = (
-        attach_hash_embed_with_unit(docs, "text", dim=32)
+        attach_hash_embed_arrow(docs, "text", dim=32, unit_col="__unit")
         .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
         .localCheckpoint(eager=True)
     )

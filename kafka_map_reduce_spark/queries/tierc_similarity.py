@@ -319,12 +319,13 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sim_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END text similarity search with NO external model: raw
-    text -> feature-hashing embeddings (operators/text.py:hash_embed,
-    md5 variant so the whole pipeline has an exact SQL oracle) ->
+    text -> feature-hashing embeddings (operators/text.py:
+    attach_hash_embed_arrow, md5 variant so the whole pipeline has an
+    exact SQL oracle) ->
     broadcast-probe exact cosine top-k. The composition a retrieval-
     augmented corpus audit runs when all it has is the text itself.
 
-    Scale: embedding is shuffle-free scan-speed JVM math; the search is
+    Scale: embedding is one shuffle-free Arrow stage; the search is
     the q_sim_topk shape (one corpus scan, two-stage rank). Bounded to
     doc_id < 120 here only to keep the oracle's all-pairs join small —
     the Spark side has no such need."""

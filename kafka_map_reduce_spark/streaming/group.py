@@ -48,6 +48,14 @@ from pyspark.sql import functions as F
 _RECORD_FILE = r"p(\d+)/(\d+)\.parquet$"
 
 
+def _record_schema(path: str) -> dict:
+    """Column name -> Arrow type of a record file, from its footer."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(path)
+    return {f.name: str(f.type) for f in schema}
+
+
 class FileTopic:
     """A topic as partition subdirectories of ordered parquet files."""
 
@@ -99,14 +107,20 @@ class FileTopic:
             tmp,
             next(f for f in os.listdir(tmp) if f.endswith(".parquet")),
         )
+        offset = self._claim_offset(partition, part_file)
+        shutil.rmtree(tmp, ignore_errors=True)
+        return offset
+
+    def _claim_offset(self, partition: int, part_file: str) -> int:
+        """Place ``part_file`` at the partition's next free offset and
+        return it: exclusive ``os.link``, retrying past offsets a racing
+        producer claimed first (see :meth:`produce`)."""
         offset = self.end_offset(partition)
         while True:
-            dst = os.path.join(
-                self._pdir(partition), f"{offset:06d}.parquet"
-            )
+            dst = os.path.join(self._pdir(partition), f"{offset:06d}.parquet")
             try:
                 os.link(part_file, dst)
-                break
+                return offset
             except FileExistsError:
                 offset += 1
             except OSError:
@@ -115,11 +129,9 @@ class FileTopic:
                 try:
                     with open(part_file, "rb") as src, open(dst, "xb") as out:
                         shutil.copyfileobj(src, out)
-                    break
+                    return offset
                 except FileExistsError:
                     offset += 1
-        shutil.rmtree(tmp, ignore_errors=True)
-        return offset
 
     def produce_many(
         self, df: DataFrame, partition_col: str, batch_col: str
@@ -159,25 +171,7 @@ class FileTopic:
                 groups.setdefault(p, []).append((b, part_file))
         for p, batches in sorted(groups.items()):
             for _b, part_file in sorted(batches):
-                offset = self.end_offset(p)
-                while True:
-                    dst = os.path.join(
-                        self._pdir(p), f"{offset:06d}.parquet"
-                    )
-                    try:
-                        os.link(part_file, dst)
-                        break
-                    except FileExistsError:
-                        offset += 1
-                    except OSError:
-                        try:
-                            with open(part_file, "rb") as src, open(
-                                dst, "xb"
-                            ) as out:
-                                shutil.copyfileobj(src, out)
-                            break
-                        except FileExistsError:
-                            offset += 1
+                self._claim_offset(p, part_file)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -260,7 +254,9 @@ class GroupConsumer:
         tags are byte-equal to the per-file literals they replace
         (equivalence pinned in tests/test_group_rebalance.py). The
         poll/commit/revoke seams — what this simulation exists to
-        demonstrate — are untouched: batching is WITHIN one poll."""
+        demonstrate — are untouched: batching is WITHIN one poll. The
+        polled files must share one schema; the first file that differs
+        fails the poll, named."""
         paths: list[str] = []
         self._pending = {}
         for p in sorted(self.assigned):
@@ -274,6 +270,17 @@ class GroupConsumer:
             self._pending[p] = start + len(files)
         if not paths:
             return None
+        # One multi-path read takes one file's schema and null-fills or
+        # drops the others' columns, so mixed schemas are refused here,
+        # from the parquet footers (driver-side, no Spark job).
+        schema = _record_schema(paths[0])
+        for path in paths[1:]:
+            other = _record_schema(path)
+            if other != schema:
+                raise ValueError(
+                    f"record file {path} has schema {other}, but "
+                    f"{paths[0]} has {schema}: one poll reads one schema"
+                )
         src = F.input_file_name()
 
         def tag(group: int, dtype: str):

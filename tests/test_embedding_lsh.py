@@ -106,19 +106,14 @@ def test_signature_is_deterministic(spark, planted):
     assert sorted(r.b for r in c) != sorted(r.b for r in b)
 
 
-def test_fused_embed_buckets_bit_parity(spark, monkeypatch):
-    """r18 fusion pin: attach_hash_embed_with_buckets (ONE Arrow stage)
-    must be bit-identical to the two-stage composition —
-    attach_hash_embed_arrow for the embedding, hyperplane_buckets_all
-    over that embedding for the signatures — and embedding_near_dup fed
-    the precomputed buckets must return exactly the pairs the unfused
-    path returns. The input carries empty partitions, and the fused
-    UDF body answers a zero-row batch with empty object columns."""
-    import pandas as pd
-    import pyspark.sql.functions as PF
-
+def test_fused_embed_buckets_bit_parity(spark):
+    """r18 fusion pin: attach_hash_embed_arrow with ``buckets_col`` (ONE
+    Arrow stage) must be bit-identical to the two-stage composition —
+    the plain embed face for the embedding, hyperplane_buckets_all over
+    that embedding for the signatures — and embedding_near_dup fed the
+    precomputed buckets must return exactly the pairs the unfused path
+    returns. The input carries empty partitions."""
     from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
         hyperplane_buckets_all,
     )
     from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
@@ -136,21 +131,10 @@ def test_fused_embed_buckets_bit_parity(spark, monkeypatch):
         "doc_id long, text string",
     )
     dim, bits, n_tables = 32, 16, 8
-    bodies: list = []
-    real = PF.pandas_udf
-    with monkeypatch.context() as m:
-        m.setattr(
-            PF,
-            "pandas_udf",
-            lambda *a, **k: lambda fn: bodies.append(fn) or real(*a, **k)(fn),
-        )
-        fused = attach_hash_embed_with_buckets(
-            docs, "text", dim=dim, bits=bits, n_tables=n_tables
-        )
-    (body,) = bodies
-    empty = body(pd.Series([], dtype=object))
-    assert list(empty.columns) == ["emb", "bkts"] and len(empty) == 0
-    assert list(empty.dtypes) == [object, object]
+    fused = attach_hash_embed_arrow(
+        docs, "text", dim=dim, buckets_col="__buckets", bits=bits,
+        n_tables=n_tables,
+    )
     two_stage = attach_hash_embed_arrow(docs, "text", "embedding", dim=dim)
     two_stage = two_stage.select(
         "doc_id",
@@ -215,15 +199,15 @@ def test_bucket_layout_mismatch_raises(spark):
     """Buckets built for n_tables=4 handed to an operator expecting 8
     must fail the query (in-plan raise_error), not silently generate
     candidates from half the tables."""
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
-    )
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta tok{i} gamma") for i in range(20)],
         "doc_id long, text string",
     )
-    emb = attach_hash_embed_with_buckets(docs, "text", dim=32, n_tables=4)
+    emb = attach_hash_embed_arrow(
+        docs, "text", dim=32, buckets_col="__buckets", n_tables=4
+    )
     emb = emb.select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
     with pytest.raises(Exception, match="n_tables=8"):
         embedding_near_dup(

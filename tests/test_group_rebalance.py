@@ -207,14 +207,31 @@ def test_concurrent_producers_never_clobber(spark, tmp_path):
     assert got == {0, 1, 2, 10, 11, 12}  # rival's copy AND ours both live
 
 
+def _produce_one(topic, df, partition):
+    return topic.produce(df, partition)
+
+
+def _produce_many_one(topic, df, partition):
+    """One record file through the batching producer; its offset."""
+    topic.produce_many(
+        df.withColumn("pk", F.lit(partition)).withColumn("fi", F.lit(0)),
+        "pk",
+        "fi",
+    )
+    return topic.end_offset(partition) - 1
+
+
+@pytest.mark.parametrize(
+    "produce", [_produce_one, _produce_many_one], ids=["produce", "produce_many"]
+)
 def test_produce_falls_back_when_hard_links_unsupported(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, produce
 ):
     """Filesystems without hard-link support (EPERM from some
-    FUSE/network mounts) must not abort produce: the exclusive-create
-    copy fallback lands the batch AND keeps the no-clobber offset
-    claim (a pre-claimed slot still forces a retry, never an
-    overwrite)."""
+    FUSE/network mounts) must not abort either producer: the
+    exclusive-create copy fallback lands the batch AND keeps the
+    no-clobber offset claim (a pre-claimed slot still forces a retry,
+    never an overwrite)."""
     import errno
     import os as _os
 
@@ -223,8 +240,8 @@ def test_produce_falls_back_when_hard_links_unsupported(
 
     monkeypatch.setattr(_os, "link", no_links)
     t = FileTopic(str(tmp_path / "topic"), 1)
-    off0 = t.produce(
-        spark.range(0, 3).select(F.col("id").alias("event_id")), 0
+    off0 = produce(
+        t, spark.range(0, 3).select(F.col("id").alias("event_id")), 0
     )
     assert off0 == 0
     # rival pre-claims offset 1: the fallback's O_CREAT|O_EXCL must
@@ -232,12 +249,31 @@ def test_produce_falls_back_when_hard_links_unsupported(
     import shutil as _sh
 
     _sh.copy(t.files(0)[0], t._pdir(0) + "/000001.parquet")
-    off = t.produce(
-        spark.range(10, 13).select(F.col("id").alias("event_id")), 0
+    off = produce(
+        t, spark.range(10, 13).select(F.col("id").alias("event_id")), 0
     )
     assert off == 2
     got = {r.event_id for r in spark.read.parquet(*t.files(0)).collect()}
     assert got == {0, 1, 2, 10, 11, 12}
+
+
+def test_poll_refuses_record_files_with_mixed_schemas(spark, tmp_path):
+    """One poll reads its files with one multi-path read, which takes a
+    single file's schema: a record file whose columns differ must fail
+    the poll and name the file, not arrive null-filled or truncated."""
+    t = FileTopic(str(tmp_path / "topic"), 1)
+    t.produce(spark.range(3).select(F.col("id").alias("event_id")), 0)
+    t.produce(
+        spark.range(3).select(
+            F.col("id").alias("event_id"), F.lit("x").alias("note")
+        ),
+        0,
+    )
+    consumer = GroupConsumer(spark, t, GroupCoordinator(str(tmp_path / "group")))
+    consumer.assign({0})
+    with pytest.raises(ValueError, match="000001.parquet has schema"):
+        consumer.poll(max_files_per_partition=2)
+    assert consumer.poll(max_files_per_partition=1).count() == 3
 
 
 def test_registered_rebalance_query_delivers_each_record_once(spark):

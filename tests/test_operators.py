@@ -1533,7 +1533,7 @@ def test_hash_embed_contract(spark):
     from pyspark.sql import functions as F
 
     from kafka_map_reduce_spark.operators.similarity import cosine
-    from kafka_map_reduce_spark.operators.text import hash_embed
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -1543,7 +1543,7 @@ def test_hash_embed_contract(spark):
         (4, ""),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    out = df.select("id", hash_embed(F.col("text"), dim=32).alias("e"))
+    out = attach_hash_embed(df, "text", "e", dim=32)
     vecs = {r.id: list(r.e) for r in out.collect()}
     assert all(len(v) == 32 for v in vecs.values())
     for i in (0, 1, 2, 3):
@@ -1722,6 +1722,66 @@ def test_hash_embed_arrow_face_bit_parity(spark):
     assert not diff, f"faces differ on {len(diff)} docs, e.g. {diff[:3]}"
 
 
+def _vector_stage(spark, monkeypatch, return_type):
+    """(helper-built Arrow stage, a batch whose second row is null) for
+    one return type in use."""
+    import numpy as np
+    import pandas as pd
+
+    import kafka_map_reduce_spark.operators.similarity as S
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
+
+    vec = pd.Series([np.array([1.0, 2.0]), None], dtype=object)
+    if return_type == "int":
+        cents = [{"cluster_id": 0, "centroid": [0.0, 0.0]},
+                 {"cluster_id": 1, "centroid": [1.0, 2.0]}]
+        return S._assign_arrow(cents), (vec,)
+    if return_type == "double":
+        return S.cosine_pairs_arrow(), (vec, vec)
+    if return_type == "array<long>":
+        return S.hyperplane_buckets_all(2, 4, 2), (vec,)
+    if return_type == "array<double>":
+        return S._normalize_arrow(), (vec,)
+    # the embed struct: capture the stage the embed face builds
+    built = []
+    real = S._vector_udf
+    monkeypatch.setattr(
+        S, "_vector_udf", lambda *a: built.append(real(*a)) or built[-1]
+    )
+    attach_hash_embed_arrow(
+        spark.createDataFrame([("a",)], "text string"), "text",
+        dim=8, buckets_col="b", bits=4, n_tables=2, unit_col="u",
+    )
+    (udf,) = built
+    return udf, (pd.Series(["alpha beta", None], dtype=object),)
+
+
+@pytest.mark.parametrize(
+    "return_type", ["int", "double", "array<long>", "array<double>", "embed"]
+)
+def test_vector_udf_contract(spark, monkeypatch, return_type):
+    """Every Arrow vector stage comes from one helper
+    (similarity._vector_udf): its body answers a zero-row batch with
+    the typed empty result of its return type, and a null input row
+    with a null output row (every struct field null) without reaching
+    the kernel. Only the cosine verify is flagged nondeterministic (so
+    the optimizer cannot clone it); the flag would block filter pushdown
+    below the other stages."""
+    udf, batch = _vector_stage(spark, monkeypatch, return_type)
+    assert udf.deterministic == (return_type != "double")
+    empty = udf.func(*[c.iloc[:0] for c in batch])
+    got = udf.func(*batch)
+    if return_type == "embed":
+        assert list(empty.columns) == ["emb", "bkts", "unit"]
+        assert len(empty) == 0 and list(empty.dtypes) == [object] * 3
+        assert got.iloc[1].isna().all() and got.iloc[0].notna().all()
+        assert len(got.iloc[0]["bkts"]) == 2
+    else:
+        dtype = {"int": "int32", "double": "float64"}.get(return_type, object)
+        assert len(empty) == 0 and empty.dtype == dtype
+        assert got.isna().tolist() == [False, True]
+
+
 def test_fan_out_scan_gate_and_identity(spark, monkeypatch):
     """fan_out_scan (r11): (a) no-op when the scan already has >= slot
     partitions; (b) no-op below the bytes floor (the tiny sf0.001/sf0.01
@@ -1896,10 +1956,8 @@ def test_candidate_generators_compute_signatures_once(spark, tmp_path):
     import re
 
     from kafka_map_reduce_spark.operators import dedup as D
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
-        embedding_near_dup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     docs = spark.createDataFrame(
         [(i, f"token{i} alpha beta gamma delta epsilon zeta") for i in range(40)],
@@ -1927,7 +1985,9 @@ def test_candidate_generators_compute_signatures_once(spark, tmp_path):
         "doc_id",
     )
     emb = embedding_near_dup(
-        attach_hash_embed_with_buckets(docs, "text", dim=32).select(
+        attach_hash_embed_arrow(
+            docs, "text", dim=32, buckets_col="__buckets"
+        ).select(
             F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
         ),
         dim=32,
@@ -1961,10 +2021,8 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
     import pyspark.sql.classic.dataframe as cdf
 
     from kafka_map_reduce_spark.operators import dedup as D
-    from kafka_map_reduce_spark.operators.similarity import (
-        attach_hash_embed_with_buckets,
-        embedding_near_dup,
-    )
+    from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     docs = spark.createDataFrame(
         [(i, f"token{i} alpha beta gamma delta epsilon zeta") for i in range(40)],
@@ -1999,7 +2057,9 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
             "doc_id",
         )
         embedding_near_dup(
-            attach_hash_embed_with_buckets(docs, "text", dim=32).select(
+            attach_hash_embed_arrow(
+                docs, "text", dim=32, buckets_col="__buckets"
+            ).select(
                 F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
             ),
             dim=32,

@@ -683,21 +683,14 @@ def test_flat_assign_tiled_regime_matches_full_argmin(spark):
     assert got == {i: int(want[i]) for i in range(len(V))}
 
 
-def test_fused_embed_unit_bit_parity_and_pairs(spark, monkeypatch):
-    """r18 fusion pin: attach_hash_embed_with_unit (ONE Arrow stage)
-    must be bit-identical to attach_hash_embed_arrow + the
+def test_fused_embed_unit_bit_parity_and_pairs(spark):
+    """r18 fusion pin: attach_hash_embed_arrow with ``unit_col`` (ONE
+    Arrow stage) must be bit-identical to the plain embed face + the
     _normalize_arrow stage it replaces, and semantic_dedup fed
     unit_col must return exactly the pairs (and sims) the unfused path
     returns — the hash-oracled q_dedup_semantic_keep_best row depends
-    on this. The input carries empty partitions, and the fused UDF body
-    answers a zero-row batch with empty object columns."""
-    import pandas as pd
-    import pyspark.sql.functions as PF
-
-    from kafka_map_reduce_spark.operators.similarity import (
-        _normalize_arrow,
-        attach_hash_embed_with_unit,
-    )
+    on this. The input carries empty partitions."""
+    from kafka_map_reduce_spark.operators.similarity import _normalize_arrow
     from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
     rows = [
@@ -712,19 +705,7 @@ def test_fused_embed_unit_bit_parity_and_pairs(spark, monkeypatch):
         sc.parallelize(rows, 4).union(sc.parallelize([], 4)),
         "doc_id long, text string",
     )
-    bodies: list = []
-    real = PF.pandas_udf
-    with monkeypatch.context() as m:
-        m.setattr(
-            PF,
-            "pandas_udf",
-            lambda *a, **k: lambda fn: bodies.append(fn) or real(*a, **k)(fn),
-        )
-        fused = attach_hash_embed_with_unit(docs, "text", dim=32)
-    (body,) = bodies
-    empty = body(pd.Series([], dtype=object))
-    assert list(empty.columns) == ["emb", "unit"] and len(empty) == 0
-    assert list(empty.dtypes) == [object, object]
+    fused = attach_hash_embed_arrow(docs, "text", dim=32, unit_col="__unit")
     unit = _normalize_arrow()
     two_stage = attach_hash_embed_arrow(docs, "text", "embedding", dim=32)
     two_stage = two_stage.select(

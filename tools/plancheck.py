@@ -7,6 +7,8 @@ queries viable at 100 TB.
 - Filter queries push predicates into the scan (PushedFilters non-empty).
 - Shuffle budgets: selected plans must not exceed their designed Exchange
   count (a silent extra shuffle is the costliest regression at 100 TB).
+- Python-stage budgets: the vector/embedding plans must not exceed their
+  count of JVM<->Python Arrow stages.
 
 Usage: python tools/plancheck.py [sf_dir]
 """
@@ -295,6 +297,27 @@ MAX_EXCHANGES = {
     "q_group_rebalance": 1,
 }
 
+# Python-stage budgets: ArrowEvalPython + FlatMapGroupsInPandas +
+# MapInPandas nodes per plan. Each one is a JVM<->Python Arrow round trip
+# in every task; the vector operators build theirs through one helper
+# (operators/similarity.py:_vector_udf), so a new stage in one of these
+# plans is a design change that must move its budget here. Stages behind
+# an eager checkpoint run while the query is built and do not show.
+MAX_PYTHON_STAGES = {
+    "q_text_hash_embed": 1,  # the md5 Arrow embed
+    "q_sim_text_topk": 2,  # the embed, once per probe and corpus branch
+    # the cosine verify; embed + signatures sit behind the checkpoint
+    "q_dedup_embedding_lsh": 1,
+    "q_dedup_embedding_lsh_capped": 1,
+    "q_dedup_semantic": 1,  # the per-cluster matmul (applyInPandas)
+    "q_dedup_semantic_ingest": 1,
+    "q_dedup_semantic_keep_best": 0,
+    "q_sim_ivf_kmeans": 0,
+    "q_sim_pq": 0,
+    "q_sim_ivfpq": 0,
+}
+_PYTHON_STAGE = r"^\(\d+\) (?:ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas)\b"
+
 # Per-round Exchange budgets for the large-star/small-star contraction
 # (operators/dedup.py:star_round) — the registered q_dedup_clusters_star
 # plan is localCheckpoint-truncated, so the shape that actually repeats
@@ -382,6 +405,13 @@ def main() -> int:
             if n_keyed > MAX_EXCHANGES[name]:
                 problems.append(
                     f"{n_keyed} keyed shuffles in plan, budget {MAX_EXCHANGES[name]}"
+                )
+        if name in MAX_PYTHON_STAGES:
+            n_py = len(re.findall(_PYTHON_STAGE, plan, re.M))
+            if n_py > MAX_PYTHON_STAGES[name]:
+                problems.append(
+                    f"{n_py} Python stages in plan, budget "
+                    f"{MAX_PYTHON_STAGES[name]}"
                 )
         if problems:
             print(f"FAIL {name}: {problems}")
