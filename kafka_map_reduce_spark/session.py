@@ -56,6 +56,20 @@ BUILD_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # Whole-stage codegen keeps compiled classes in an LRU cache keyed by
+    # generated source; Spark's default holds 100. One pass over the 18
+    # headline queries generates 302 classes and one pass over all 159
+    # registrations at sf0.001 ~1,800, so at 100 every class is evicted
+    # before the same query shape comes back: each warm pass re-ran
+    # Janino on all of them and restarted them in the bytecode
+    # interpreter. At 2,048 a second headline pass compiles 0 classes
+    # and a second registry pass 57 (2,484 at 100). This caches code,
+    # not results: every query still scans and computes everything. The
+    # cost is the classes' metaspace and code cache: after a registry
+    # pass and GC the JVM's non-heap in use read 394 MB against 366 MB.
+    # The conf is static, so configure() cannot set it: a session a
+    # harness builds keeps Spark's 100 entries.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 

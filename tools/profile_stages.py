@@ -2,10 +2,13 @@
 
 Usage: python tools/profile_stages.py <query> [query ...]
 
-For each query: one warm-up materialization, then a profiled run that
-reports plan-build wall, total wall, and each completed stage's
-executorRunTime / input / shuffle read+write bytes (from the
-AppStatusStore, same introspection as bench.task_seconds).
+For each query: one warm-up materialization, then a profiled run. Both
+report plan-build wall, total wall, and the Janino compiles and compile
+time they caused (whole-stage codegen classes not found in Spark's
+codegen cache), which tells code generation apart from execution. The
+profiled run also lists each completed stage's executorRunTime / input /
+shuffle read+write bytes (from the AppStatusStore, same introspection as
+bench.task_seconds).
 """
 
 from __future__ import annotations
@@ -47,6 +50,30 @@ def stage_rows(spark):
     return rows
 
 
+def compiles(spark) -> tuple[int, float]:
+    """Janino compiles so far in the driver JVM, and their total seconds."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count.getCount(), nanos / 1e9
+
+
+def run(spark, spec, sf_dir: str) -> str:
+    """Build and materialise one query; describe its build and total
+    wall and the compiles the run caused."""
+    n0, s0 = compiles(spark)
+    t0 = time.time()
+    df = spec.fn(spark, sf_dir)
+    t_build = time.time() - t0
+    df.write.mode("overwrite").format("noop").save()
+    t_total = time.time() - t0
+    n1, s1 = compiles(spark)
+    return (
+        f"build {t_build:.3f}s total {t_total:.3f}s "
+        f"compiles {n1 - n0} ({s1 - s0:.3f}s)"
+    )
+
+
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,17 +94,13 @@ def main() -> None:
     materialize(specs["q_udf_scalar"].fn(spark, sf_dir).limit(256))
 
     for name in names:
-        materialize(specs[name].fn(spark, sf_dir))  # warm-up
+        print(f"-- {name} warm-up: {run(spark, specs[name], sf_dir)}")
         before_ids = {r["id"] for r in stage_rows(spark)}
-        t0 = time.time()
-        df = specs[name].fn(spark, sf_dir)
-        t_build = time.time() - t0
-        materialize(df)
-        t_total = time.time() - t0
+        prof = run(spark, specs[name], sf_dir)
         rows = [r for r in stage_rows(spark) if r["id"] not in before_ids]
         rows.sort(key=lambda r: -r["run_ms"])
         print(
-            f"== {name}: build {t_build:.3f}s total {t_total:.3f}s "
+            f"== {name}: {prof} "
             f"stages {len(rows)} task-sec {sum(r['run_ms'] for r in rows)/1000:.2f}"
         )
         for r in rows[:14]:
