@@ -582,47 +582,54 @@ def scan_probe(spark, sf_dir: str, n: int) -> list:
     return [one_scan() for _ in range(n)]
 
 
-def task_seconds(spark) -> float:
-    """Cumulative task run time (core-seconds) over COMPLETED stages,
-    from the AppStatusStore. Deltas around a query give its average busy
-    cores (task-sec / wall-sec), which is what classifies each headline
-    query to its best-predicting calibration axis: a 1-2-core query's
-    wall tracks single-stream JVM throughput (the scan probe), a
-    10-30-core query's wall tracks multi-core capacity (the par probe).
+def stage_list(spark) -> list:
+    """Every stage the AppStatusStore holds, as its JVM StageData
+    objects (executorRunTime, executorCpuTime, input and shuffle bytes,
+    numCompleteTasks, ...) — the one stage reader bench and tools share.
 
     Instrument notes (the first r13 bench run recorded cores == 1.0 for
     every query — two real pitfalls, both verified by experiment):
     - executorList's totalDuration is LIVE accounting: read immediately
       after a query it lags the listener bus, and a stuck live-task
       entry integrates wall time (delta == wall exactly, for every
-      query). stageList over completed stages carries final
-      executorRunTime values instead.
+      query). stageList carries final per-stage executorRunTime values
+      instead.
     - the listener bus drains asynchronously: waitUntilEmpty() first,
       or the just-finished stages are missing from the read.
     stageList's Scala default args are materialized via the $default$N
-    accessors (py4j requires every parameter explicitly).
+    accessors (py4j requires every parameter explicitly)."""
+    sc = spark._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    it = store.stageList(
+        spark._jvm.java.util.ArrayList(),
+        getattr(store, "stageList$default$2")(),
+        getattr(store, "stageList$default$3")(),
+        getattr(store, "stageList$default$4")(),
+        getattr(store, "stageList$default$5")(),
+    ).iterator()
+    stages = []
+    while it.hasNext():
+        stages.append(it.next())
+    return stages
 
-    Fail-open: this reaches into package-private Spark internals
+
+def task_seconds(spark) -> float:
+    """Cumulative task run time (core-seconds) over the stages of
+    ``stage_list``. Deltas around a query give its average busy cores
+    (task-sec / wall-sec), which is what classifies each headline query
+    to its best-predicting calibration axis: a 1-2-core query's wall
+    tracks single-stream JVM throughput (the scan probe), a 10-30-core
+    query's wall tracks multi-core capacity (the par probe).
+
+    Fail-open: the reader reaches into package-private Spark internals
     (listenerBus, the $default$N accessors), so any Spark upgrade that
     moves them must degrade the AXIS CLASSIFICATION, never kill the
     bench — the driver's per-round run is the artifact that matters.
     On failure returns -1.0; the caller maps that to 0 measured cores
     (conservative scan-axis classification) and the bench proceeds."""
     try:
-        sc = spark._jsc.sc()
-        sc.listenerBus().waitUntilEmpty()
-        store = sc.statusStore()
-        it = store.stageList(
-            spark._jvm.java.util.ArrayList(),
-            getattr(store, "stageList$default$2")(),
-            getattr(store, "stageList$default$3")(),
-            getattr(store, "stageList$default$4")(),
-            getattr(store, "stageList$default$5")(),
-        ).iterator()
-        total_ms = 0
-        while it.hasNext():
-            total_ms += it.next().executorRunTime()
-        return total_ms / 1000.0
+        return sum(s.executorRunTime() for s in stage_list(spark)) / 1000.0
     except Exception:
         return -1.0
 

@@ -6,8 +6,8 @@ Designed for the 100 TB training-data pipeline case:
 - exact dedup: one hash shuffle on a 16-byte digest, keep-min-id — the
   cheapest possible global dedup.
 - MinHash+LSH: signatures are computed in ONE pass over exploded shingles
-  (64 mins in a single hash aggregate), banded so candidate generation is
-  an equi-join on (band, band_hash) buckets — never an all-pairs product.
+  (64 mins in a single hash aggregate), banded so candidates are paired
+  inside (band, band_hash) buckets — never an all-pairs product.
   Candidate verification joins shingle sets only for candidate pairs.
   (ClusterJoin VLDB'14 / standard LSH banding; PAPERS.md corpus.)
 - SimHash: 64-bit signature per doc from token hashes, bit-majority.
@@ -147,13 +147,13 @@ def minhash_signatures(shingled: DataFrame, num_perm: int = 64) -> DataFrame:
 def _drop_hot_buckets(
     df: DataFrame, keys: list[str], max_bucket_size: int
 ) -> DataFrame:
-    """Shared skew guard: drop rows whose ``keys`` bucket holds more than
-    ``max_bucket_size`` members. A bucket of N near-identical documents
-    emits ~N^2/2 candidate pairs from one join key — the quadratic
-    pathology of every equi-join candidate scheme (LSH bands, SimHash
-    blocks, index probes). Capped members are template clusters that
-    belong to exact dedup, which finds identical text in one linear
-    shuffle."""
+    """Index-side skew guard of ``lsh_candidates_against``: drop rows
+    whose ``keys`` bucket holds more than ``max_bucket_size`` members. A
+    bucket of N near-identical documents emits O(N) candidates for every
+    probing member from one join key. Capped members are template
+    clusters that belong to exact dedup, which finds identical text in
+    one linear shuffle. (The batch-local generators cap inside
+    ``_bucket_pairs`` with a size predicate instead.)"""
     # Anti-join against the HOT buckets, not inner-join against the small
     # ones (r12): the two forms are exactly equivalent (every bucket is
     # on one side of the threshold), but at corpus scale most buckets are
@@ -163,8 +163,8 @@ def _drop_hot_buckets(
     # (the template clusters), so AQE broadcasts it and the cap costs one
     # map-side anti probe instead of a corpus-sized shuffle. CAVEAT: the
     # equivalence requires non-null keys (an inner join drops a null-key
-    # row, an anti join keeps it); every caller's keys are hash/block
-    # values that cannot be null.
+    # row, an anti join keeps it); the (band, bh) keys are hash values
+    # that cannot be null.
     hot = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__bn"))
@@ -183,38 +183,41 @@ def _bucket_pairs(
     """The candidate kernel every similarity-join family shares (MinHash
     bands, SimHash blocks, FastSS deletion signatures, hyperplane
     buckets — ClusterJoin's sign / bucket / local pair join / verify
-    shape): self-join ``sigs`` (one row per (id, bucket)) on ``keys``
-    with ``id_a < id_b``. Returns ``(id_a, id_b, <p>_a..., <p>_b...)``
-    for each column ``p`` in ``payload``, BEFORE any ``distinct`` — a
-    pair sharing k buckets appears k times, and where to deduplicate
-    (before or after verify) is the caller's cost call.
+    shape): ``sigs`` holds one row per (id, bucket); pairs with
+    ``id_a < id_b`` are built INSIDE each bucket after one shuffle on
+    ``keys``. Returns ``(id_a, id_b, <p>_a..., <p>_b...)`` for each
+    column ``p`` in ``payload``, BEFORE any ``distinct`` — a pair
+    sharing k buckets appears k times, and where to deduplicate (before
+    or after verify) is the caller's cost call.
 
-    Consume-once barrier: ``sigs`` fans out into up to FOUR plan
-    branches (hot-bucket counts, the cap join, both pair-join sides),
-    and Catalyst does not share subtrees across join branches — without
-    materialization the signature computation (the corpus-wide part of
-    the plan: tokenize + hash, or an Arrow UDF) re-executes once per
-    branch (measured: 4 parquet scans / 4 signature aggregates in the
-    executed sf0.1 plan). The barrier is O(buckets per doc x N) narrow
-    rows — proportional to the document COUNT, never its text — spills
-    to disk, and is ContextCleaner-reclaimed on GC.
-
-    ``max_bucket_size`` drops over-full buckets (``_drop_hot_buckets``)
-    before the join; None keeps every bucket. The join condition and
-    output projection are each ONE parsed expression (no per-column
-    py4j Column construction on the plan-build path)."""
-    sigs = sigs.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        sigs = _drop_hot_buckets(sigs, keys, max_bucket_size)
-    on = " AND ".join([f"l.{k} = r.{k}" for k in keys] + ["l.id < r.id"])
+    Bucket-local, not a self-join: ``sigs`` is consumed ONCE (the
+    group-by), so the signature computation — the corpus-wide part of
+    the plan: tokenize + hash, or an Arrow UDF — runs once with no
+    materialization barrier, and plan build starts no Spark job.
+    ``max_bucket_size`` is a size predicate on the collected bucket
+    (over-full buckets are template clusters that belong to exact
+    dedup); None keeps every bucket. Either way the plan has one shape.
+    A bucket's members are held as one in-row array, so the cap also
+    bounds that array. The pairs come from two ``explode``s plus a
+    filter: Generate + Filter ran faster than a higher-order
+    ``filter(__m, b -> a.id < b.id)``. ``keys`` must be non-null (every
+    caller's are hash or signature values): unlike an equi-join, a
+    group-by would pair null-key rows."""
+    size_ok = "size(__m) > 1" + (
+        "" if max_bucket_size is None else f" AND size(__m) <= {max_bucket_size}"
+    )
     return (
-        sigs.alias("l")
-        .join(sigs.alias("r"), F.expr(on))
+        sigs.groupBy(*keys)
+        .agg(F.expr(f"collect_list(struct({', '.join(['id', *payload])})) AS __m"))
+        .filter(size_ok)
+        .select(F.explode("__m").alias("a"), "__m")
+        .select("a", F.explode("__m").alias("b"))
+        .filter("a.id < b.id")
         .selectExpr(
-            "l.id AS id_a",
-            "r.id AS id_b",
-            *[f"l.{p} AS {p}_a" for p in payload],
-            *[f"r.{p} AS {p}_b" for p in payload],
+            "a.id AS id_a",
+            "b.id AS id_b",
+            *[f"a.{p} AS {p}_a" for p in payload],
+            *[f"b.{p} AS {p}_b" for p in payload],
         )
     )
 
@@ -412,18 +415,10 @@ def incremental_near_dedup(
     this call ``persist()``s; after running your actions on the outputs,
     ``unpersist()`` each — in a long-running stream (thousands of ingest
     steps in one session) skipping this leaks executor cache until LRU
-    eviction starts thrashing genuinely hot data. One lifecycle the
-    registry does NOT cover: ``lsh_candidates`` internally
-    ``localCheckpoint(eager=False)``s its banded frame (the consume-once
-    barrier), and a checkpointed RDD cannot be handed back as an
-    unpersistable DataFrame — those blocks are reclaimed by the driver's
-    ContextCleaner when the plan that references them is garbage-
-    collected, not at ``unpersist()`` time. Per ingest step that is one
-    O(bands x batch)-row block set (batch-sized, NOT corpus-sized, since
-    only the new batch's frames are checkpointed here); a thousands-of-
-    batches session should therefore not hold references to returned
-    frames after acting on them, so driver GC can release the lineage
-    promptly.
+    eviction starts thrashing genuinely hot data. The within-batch
+    candidates (``lsh_candidates``) take no checkpoint of their own: the
+    bucket-local kernel reads the persisted batch signatures once, so
+    the registry covers every batch-sized materialization of this call.
     """
     # The batch is the SMALL side by design; its shingles and signatures
     # feed four plan branches (within-batch candidates, the index probe,
@@ -705,7 +700,7 @@ def hamming_pairs(
 
     Candidate generation by the 4-block trick: with 64 bits split into 4
     16-bit blocks, any pair at distance <= 3 must agree exactly on at
-    least one block (pigeonhole), so an equi-join on block values finds
+    least one block (pigeonhole), so pairing within block-value buckets finds
     every candidate, then an exact popcount verifies — never an all-pairs
     product. The guarantee BREAKS at max_dist >= 4 (4 differing bits can
     land one per block), which would silently drop pairs; rejected here
@@ -1119,7 +1114,7 @@ def deletion_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     strings within edit distance 1 necessarily share a signature
     (substitution: delete the differing position from both; indel: the
     shorter string IS a deletion of the longer), so candidate pairs come
-    from a plain equi-join on the signature — the shuffle key spreads over
+    from pairing within signature buckets — the shuffle key spreads over
     the whole signature space and no all-pairs product ever forms."""
     sigs = F.expr(
         f"array_union(array({text_col}), "
@@ -1146,10 +1141,9 @@ def edit_distance_pairs(
             f"deletion-signature candidates are complete only for "
             f"max_dist=1 (got {max_dist})"
         )
-    # The kernel's barrier keeps the deletion-neighborhood explode (O(len^2)
-    # bytes per string) out of the two join sides. Measured wall-NEUTRAL
-    # at bench scale (short keys, idle host overlaps the two branches);
-    # kept for the halved resource term, which grows with key length.
+    # The bucket-local kernel consumes the deletion-neighborhood explode
+    # (O(len^2) bytes per string) once: one shuffle on the signature,
+    # pairs built inside each signature group.
     return (
         _bucket_pairs(
             deletion_signatures(df, text_col, id_col), ["sig"], ["txt"], None

@@ -1788,13 +1788,14 @@ def embedding_near_dup(
     buckets_col: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b, sim) pairs with cosine >= threshold, candidates from
-    T hyperplane-LSH tables — the embedding dedup that scales: per table
-    one bucket equi-self-join (shuffle on (table, bucket), narrow rows),
-    then ONE exact cosine verify over the distinct candidate set. The
-    verify join fetches vectors for candidate ids only (semi-join-sized,
-    like jaccard_verify's pushdown). ``max_bucket_size`` drops over-full
-    buckets before the self-join — over-threshold mega-clusters route to
-    exact dedup, identical policy to the text-LSH/SimHash caps.
+    T hyperplane-LSH tables — the embedding dedup that scales: ONE
+    shuffle on (table, bucket) with pairs built inside each bucket
+    (narrow rows), then ONE exact cosine verify over the distinct
+    candidate set. The verify join fetches vectors for candidate ids
+    only (semi-join-sized, like jaccard_verify's pushdown).
+    ``max_bucket_size`` drops over-full buckets from candidate
+    generation — over-threshold mega-clusters route to exact dedup,
+    identical policy to the text-LSH/SimHash caps.
 
     ``buckets_col`` (r18): the corpus already carries the hyperplane
     signatures as an array<long> column (one bucket per table, the

@@ -102,7 +102,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_dedup_near", oracle=None, tags=("approx",))
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64) + LSH(16 bands) near-dup pairs, exact-Jaccard-verified
-    at 0.5 — the scale path: candidates come from band-bucket equi-joins,
+    at 0.5 — the scale path: candidates are paired inside band buckets,
     never an all-pairs product.
 
     The scan goes through fan_out_scan (r11): a single-row-group
@@ -122,8 +122,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-parity form), so the lazy localCheckpoint strictly replaces
     two full recomputations with one disk-spilling materialization of
     the same rows the verify join already shuffles; blocks are
-    ContextCleaner-reclaimed (same lifecycle as lsh_candidates'
-    banded barrier)."""
+    ContextCleaner-reclaimed on garbage collection."""
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
     shingled = D.word_shingles(docs, "text", "doc_id", k=3).localCheckpoint(
         eager=False
@@ -620,7 +619,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only by declaration (LSH candidate recall is probabilistic —
     the planted floor lives in tests/test_embedding_lsh.py); the
     verify stage makes precision exact. Scale shape: embedding at scan
-    speed, candidates from bucket equi-joins across 8 tables with the
+    speed, candidates paired inside buckets across 8 tables with the
     shared hot-bucket cap, one candidate-sized cosine verify — never
     all-pairs."""
     from kafka_map_reduce_spark.operators.similarity import embedding_near_dup

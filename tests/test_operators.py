@@ -1945,77 +1945,19 @@ def test_simhash_packed_lanes_match_naive_bit_sums(spark):
     assert got == expected
 
 
-def test_candidate_generators_compute_signatures_once(spark, tmp_path):
-    """Consume-once pin (r12): the LSH/SimHash/edit-distance/embedding-LSH
-    candidate generators fan their signature frames into multiple join
-    branches; the localCheckpoint barrier must keep the signature
-    subtree OUT of the executed pair plan (a parquet scan or token
-    explode reappearing there means the corpus is being re-tokenized
-    once per branch — the regression SCALE_SPOT_r12 dedup_onepass_r12
-    measured at 4 scans / 14 aggregates before the fix)."""
-    import re
-
-    from kafka_map_reduce_spark.operators import dedup as D
-    from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
-
-    docs = spark.createDataFrame(
-        [(i, f"token{i} alpha beta gamma delta epsilon zeta") for i in range(40)],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "docs.parquet")
-    docs.write.parquet(path)
-    docs = spark.read.parquet(path)
-
-    def executed_plan(df):
-        df.count()
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    sh = D.word_shingles(docs, "text", "doc_id", k=3)
-    lsh = D.lsh_candidates(
-        D.minhash_signatures(sh, num_perm=64), num_perm=64, bands=16,
-        max_bucket_size=16,
-    )
-    sim = D.hamming_pairs(
-        D.simhash(docs, "text", "doc_id"), max_dist=3, max_bucket_size=16
-    )
-    edit = D.edit_distance_pairs(
-        docs.selectExpr("doc_id", "substr(text, 1, 12) as word"),
-        "word",
-        "doc_id",
-    )
-    emb = embedding_near_dup(
-        attach_hash_embed_arrow(
-            docs, "text", dim=32, buckets_col="__buckets"
-        ).select(
-            F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
-        ),
-        dim=32,
-        threshold=0.5,
-        max_bucket_size=16,
-        buckets_col="__buckets",
-    )
-    for name, frame in (
-        ("lsh", lsh), ("simhash", sim), ("editdist", edit), ("embedding", emb)
-    ):
-        plan = executed_plan(frame)
-        assert "Scan parquet" not in plan, f"{name}: signature subtree re-entered the pair plan"
-        assert not re.search(r"Generate explode", plan), f"{name}: explode re-entered the pair plan"
-
-
-def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_path):
-    """Complement to the consume-once pin above (ADVICE r12): the barrier
-    truncates the EXECUTED pair plans, so a shuffle regression introduced
-    in the signature-aggregation subtree BEHIND it would be invisible to
-    both that pin and tools/plancheck.py's exchange budgets. Capture the
-    exact frames handed to ``localCheckpoint(eager=False)`` (instance-
-    class patch — pyspark.sql.classic.dataframe, same technique as the
-    r12 one-pass probe (retired r17); patching the base class is a silent
-    no-op in Spark 4) and pin their executed plans to the corpus-scale
-    minimum: ONE parquet scan, ONE exchange for the per-doc signature
-    aggregation (partial+final HashAggregate pair), a map-only
-    zero-exchange plan for the deletion-signature explode, and ONE Arrow
-    stage under the embedding-LSH base and bucket frames."""
+def test_candidate_generators_whole_plan_one_scan_one_signature(spark, tmp_path):
+    """Whole-plan pin of the four candidate families (MinHash-LSH,
+    SimHash, FastSS edit distance, embedding-LSH) over one parquet
+    fixture. The bucket-local kernel consumes its signature table once,
+    so no barrier is needed to keep the corpus from being re-tokenized
+    per plan branch: the physical plan — plus the subtree behind any
+    remaining lazy checkpoint (embedding-LSH's (id, vector, buckets)
+    base) — holds ONE parquet scan and ONE signature computation. With
+    broadcast joins off, its keyed exchanges stay at or under the pins
+    below; each pin is at or below the count of the earlier self-join
+    kernel, barrier subtree included (lsh 6, simhash 6, editdist 3,
+    embedding 9), so growth means a corpus-scale shuffle re-entered a
+    candidate path."""
     import re
 
     import pyspark.sql.classic.dataframe as cdf
@@ -2032,67 +1974,128 @@ def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_pat
     docs.write.parquet(path)
     docs = spark.read.parquet(path)
 
-    captured: list = []
-    orig = cdf.DataFrame.localCheckpoint
-
-    def capture(self, eager=True, storageLevel=None):
-        if not eager:
-            captured.append(self)
-            return self  # identity: only the pre-barrier frame matters here
-        return orig(self, eager=eager)
-
-    cdf.DataFrame.localCheckpoint = capture
-    try:
-        sh = D.word_shingles(docs, "text", "doc_id", k=3)
-        D.lsh_candidates(
-            D.minhash_signatures(sh, num_perm=64), num_perm=64, bands=16,
+    families = {
+        "lsh": lambda: D.lsh_candidates(
+            D.minhash_signatures(D.word_shingles(docs, "text", "doc_id", k=3)),
             max_bucket_size=16,
-        )
-        D.hamming_pairs(
+        ),
+        "simhash": lambda: D.hamming_pairs(
             D.simhash(docs, "text", "doc_id"), max_dist=3, max_bucket_size=16
-        )
-        D.edit_distance_pairs(
+        ),
+        "editdist": lambda: D.edit_distance_pairs(
             docs.selectExpr("doc_id", "substr(text, 1, 12) as word"),
             "word",
             "doc_id",
-        )
-        embedding_near_dup(
+        ),
+        "embedding": lambda: embedding_near_dup(
             attach_hash_embed_arrow(
                 docs, "text", dim=32, buckets_col="__buckets"
-            ).select(
-                F.col("doc_id").alias("vec_id"), "embedding", "__buckets"
-            ),
+            ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets"),
             dim=32,
+            threshold=0.5,
             max_bucket_size=16,
             buckets_col="__buckets",
-        )
-    finally:
-        cdf.DataFrame.localCheckpoint = orig
-
-    # (max scans, max exchanges, max HashAggregates, max Arrow stages);
-    # embedding-LSH barriers its (id, vector, buckets) base for the
-    # verify side, then the kernel barriers the bucket table
-    budgets = {
-        "lsh_banded": (1, 1, 2, 0),
-        "simhash_blocks": (1, 1, 2, 0),
-        "edit_sigs": (1, 0, 0, 0),
-        "embedding_base": (1, 0, 0, 1),
-        "embedding_buckets": (1, 0, 0, 1),
+        ),
     }
-    assert len(captured) == len(budgets), "unexpected eager=False barriers"
-    for (name, (max_scan, max_exch, max_agg, max_py)), frame in zip(
-        budgets.items(), captured
-    ):
-        frame.count()
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        scans = len(re.findall(r"Scan parquet", plan))
-        exch = len(re.findall(r"Exchange", plan))
-        aggs = len(re.findall(r"HashAggregate", plan))
-        py = len(re.findall(r"ArrowEvalPython", plan))
-        assert scans == max_scan, f"{name}: {scans} scans (want {max_scan})"
-        assert exch <= max_exch, f"{name}: {exch} exchanges (budget {max_exch})"
-        assert aggs <= max_agg, f"{name}: {aggs} HashAggregates (budget {max_agg})"
-        assert py <= max_py, f"{name}: {py} Arrow stages (budget {max_py})"
+    # (signature-computation node, lazy checkpoints, Arrow stages, keyed
+    # exchanges); the embedding plan's second Arrow stage is its cosine
+    # verify over candidate pairs
+    pins = {
+        "lsh": (r"HashAggregate.*partial_min\(xxhash64\(", 0, 0, 3),
+        "simhash": (r"HashAggregate.*partial_sum\(.*shiftrightunsigned\(h", 0, 0, 3),
+        "editdist": (r"Generate explode\(array_union\(", 0, 0, 2),
+        "embedding": (r"ArrowEvalPython \[stage\(text#", 1, 2, 6),
+    }
+
+    def initial_plan(df):
+        # under AQE a lazy checkpoint executes its frame, whose plan
+        # string then holds the final AND the initial plan: count one
+        return (
+            df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[-1]
+        )
+
+    orig = cdf.DataFrame.localCheckpoint
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, build in families.items():
+            barriers: list = []
+
+            def record(self, eager=True, storageLevel=None):
+                if not eager:
+                    barriers.append(self)
+                return orig(self, eager=eager)
+
+            cdf.DataFrame.localCheckpoint = record
+            try:
+                frame = build()
+            finally:
+                cdf.DataFrame.localCheckpoint = orig
+            sig_node, n_barriers, max_py, max_exch = pins[name]
+            plan = "\n".join(initial_plan(f) for f in [frame, *barriers])
+            scans = len(re.findall(r"Scan parquet", plan))
+            sigs = len(re.findall(sig_node, plan))
+            py = len(re.findall(r"ArrowEvalPython", plan))
+            exch = len(
+                re.findall(r"^\W*Exchange (?:hash|range)partitioning", plan, re.M)
+            )
+            assert len(barriers) == n_barriers, f"{name}: {len(barriers)} lazy barriers"
+            assert scans == 1, f"{name}: {scans} parquet scans"
+            assert sigs == 1, f"{name}: {sigs} signature computations"
+            assert py <= max_py, f"{name}: {py} Arrow stages (budget {max_py})"
+            assert exch <= max_exch, f"{name}: {exch} keyed exchanges (pin {max_exch})"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+
+
+def test_bucket_pairs_matches_bruteforce_at_cap_boundary(spark):
+    """Kernel contract of ``_bucket_pairs``: every ``id_a < id_b`` pair
+    once per shared bucket, payload suffixed ``_a``/``_b``, and — when
+    capped — nothing from a bucket holding more than ``max_bucket_size``
+    rows. Buckets of 1, 2, cap, cap+1 and 60 members pin the size
+    predicate on both sides of the boundary; ids recur across buckets so
+    a pair sharing two buckets must appear twice."""
+    from collections import Counter, defaultdict
+
+    from kafka_map_reduce_spark.operators.dedup import _bucket_pairs
+
+    cap = 5
+    sizes = {("s", 1): 1, ("s", 2): 2, ("c", 0): cap, ("c", 1): cap + 1, ("h", 0): 60}
+    rows = [
+        (i * 7 % 61, k1, k2, f"p{i * 7 % 61}")
+        for (k1, k2), n in sizes.items()
+        for i in range(n)
+    ]
+    sigs = spark.createDataFrame(rows, "id long, k1 string, k2 long, p string")
+
+    def brute(max_bucket_size):
+        buckets = defaultdict(list)
+        for r in rows:
+            buckets[r[1:3]].append(r)
+        out = Counter()
+        for members in buckets.values():
+            if max_bucket_size is not None and len(members) > max_bucket_size:
+                continue
+            for a in members:
+                for b in members:
+                    if a[0] < b[0]:
+                        out[(a[0], b[0], a[3], b[3])] += 1
+        return out
+
+    for max_bucket_size in (None, cap):
+        got = Counter(
+            tuple(r)
+            for r in _bucket_pairs(
+                sigs, ["k1", "k2"], ["p"], max_bucket_size
+            ).collect()
+        )
+        want = brute(max_bucket_size)
+        assert got == want, f"max_bucket_size={max_bucket_size}"
+    assert sum(brute(cap).values()) == cap * (cap - 1) // 2 + 1
+    assert _bucket_pairs(sigs, ["k1", "k2"], ["p"], None).columns == [
+        "id_a", "id_b", "p_a", "p_b"
+    ]
 
 
 def test_drop_hot_buckets_anti_join_equals_small_inner_join(spark):

@@ -169,32 +169,32 @@ MAX_EXCHANGES = {
     # per-partition pre-prune + per-probe rank + presentation sort;
     # probes ride a 1-row-ish broadcast, so only small aggregates move
     "q_sim_topk": 2,
-    # r12 re-pin: the consume-once barrier truncates the candidate plans
-    # at the banded/block checkpoint (the signature aggregation executes
-    # exactly once behind it — SCALE_SPOT_r12 dedup_onepass_r12), and
-    # the hot-bucket cap is a broadcast anti-join, so the VISIBLE keyed
-    # exchanges are only the pair join + distinct + verify/presentation
+    # Bucket-local candidate kernel (dedup._bucket_pairs): no barrier
+    # truncates these plans, so the count covers the whole candidate
+    # path — the per-doc signature aggregate (MinHash/SimHash), ONE
+    # shuffle on the bucket key (pairs are built inside each bucket,
+    # capped or not), the candidate distinct and the verify/presentation
     # stages. Counted at plancheck's own sf/config; growth means a
     # corpus-scale shuffle re-entered the candidate path.
-    "q_dedup_near": 2,
+    "q_dedup_near": 4,
     "q_dedup_near_capped": 4,
-    "q_dedup_simhash": 2,
+    "q_dedup_simhash": 4,
     "q_dedup_simhash_capped": 4,
-    "q_dedup_editdist": 1,
-    "q_dedup_embedding_lsh": 4,
-    "q_dedup_embedding_lsh_capped": 4,
+    "q_dedup_editdist": 2,
+    "q_dedup_embedding_lsh": 3,
+    "q_dedup_embedding_lsh_capped": 3,
     # batch digest canonicalization agg + one digest join pair; the
     # incremental contract is that cost tracks the batch, so any extra
     # corpus-scale Exchange is a design regression
     "q_dedup_exact_incremental": 2,
     # The batch-scaling contract of the probe plan as a budget: batch
-    # signature agg, within-batch band self-join + distinct, index-probe
+    # signature agg, within-batch band grouping + distinct, index-probe
     # band equi-join + distinct, candidate-pruned verification
     # (corpus re-shingle rides a left-semi pushdown; only candidate-sized
     # sides shuffle) + intersection agg + presentation sort. Every one of
-    # the 11 moves batch/candidate-sized data — an Exchange beyond this
+    # the 12 moves batch/candidate-sized data — an Exchange beyond this
     # means a corpus-scale shuffle snuck into the ingest path.
-    "q_dedup_incremental": 11,
+    "q_dedup_incremental": 12,
     "q_text_repetition": 0,  # per-row JVM gram math, scan speed
     # corpus-wide digest count agg + digest join-back + source rollup —
     # the exact-dedup two-shuffle shape plus one; a 4th Exchange means

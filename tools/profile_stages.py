@@ -7,8 +7,8 @@ report plan-build wall, total wall, and the Janino compiles and compile
 time they caused (whole-stage codegen classes not found in Spark's
 codegen cache), which tells code generation apart from execution. The
 profiled run also lists each completed stage's executorRunTime / input /
-shuffle read+write bytes (from the AppStatusStore, same introspection as
-bench.task_seconds).
+shuffle read+write bytes (from the AppStatusStore, read by
+bench.stage_list).
 """
 
 from __future__ import annotations
@@ -22,32 +22,21 @@ sys.path.insert(0, REPO)
 
 
 def stage_rows(spark):
-    sc = spark._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    store = sc.statusStore()
-    it = store.stageList(
-        spark._jvm.java.util.ArrayList(),
-        getattr(store, "stageList$default$2")(),
-        getattr(store, "stageList$default$3")(),
-        getattr(store, "stageList$default$4")(),
-        getattr(store, "stageList$default$5")(),
-    ).iterator()
-    rows = []
-    while it.hasNext():
-        s = it.next()
-        rows.append(
-            {
-                "id": s.stageId(),
-                "name": str(s.name())[:80],
-                "run_ms": s.executorRunTime(),
-                "cpu_ms": s.executorCpuTime() // 1_000_000,
-                "in_mb": round(s.inputBytes() / 1e6, 1),
-                "sh_r_mb": round(s.shuffleReadBytes() / 1e6, 1),
-                "sh_w_mb": round(s.shuffleWriteBytes() / 1e6, 1),
-                "tasks": s.numCompleteTasks(),
-            }
-        )
-    return rows
+    from bench import stage_list
+
+    return [
+        {
+            "id": s.stageId(),
+            "name": str(s.name())[:80],
+            "run_ms": s.executorRunTime(),
+            "cpu_ms": s.executorCpuTime() // 1_000_000,
+            "in_mb": round(s.inputBytes() / 1e6, 1),
+            "sh_r_mb": round(s.shuffleReadBytes() / 1e6, 1),
+            "sh_w_mb": round(s.shuffleWriteBytes() / 1e6, 1),
+            "tasks": s.numCompleteTasks(),
+        }
+        for s in stage_list(spark)
+    ]
 
 
 def compiles(spark) -> tuple[int, float]:
