@@ -1945,21 +1945,15 @@ def test_simhash_packed_lanes_match_naive_bit_sums(spark):
     assert got == expected
 
 
-def test_candidate_generators_whole_plan_one_scan_one_signature(spark, tmp_path):
-    """Whole-plan pin of the four candidate families (MinHash-LSH,
-    SimHash, FastSS edit distance, embedding-LSH) over one parquet
-    fixture. The bucket-local kernel consumes its signature table once,
-    so no barrier is needed to keep the corpus from being re-tokenized
-    per plan branch: the physical plan — plus the subtree behind any
-    remaining lazy checkpoint (embedding-LSH's (id, vector, buckets)
-    base) — holds ONE parquet scan and ONE signature computation. With
-    broadcast joins off, its keyed exchanges stay at or under the pins
-    below; each pin is at or below the count of the earlier self-join
-    kernel, barrier subtree included (lsh 6, simhash 6, editdist 3,
-    embedding 9), so growth means a corpus-scale shuffle re-entered a
-    candidate path."""
-    import re
-
+def _candidate_family_plans(spark, tmp_path):
+    """Physical plans of the four candidate families (MinHash-LSH,
+    SimHash, FastSS edit distance, embedding-LSH) over one 40-doc
+    parquet fixture, with broadcast joins off. Returns ``{family:
+    (plan, barrier_plans)}``: ``plan`` is the candidate frame's plan,
+    ``barrier_plans`` the plans of the frames handed to a lazy
+    ``localCheckpoint(eager=False)`` while it was built (instance-class
+    patch on pyspark.sql.classic.dataframe; patching the base class is a
+    silent no-op in Spark 4)."""
     import pyspark.sql.classic.dataframe as cdf
 
     from kafka_map_reduce_spark.operators import dedup as D
@@ -1997,15 +1991,6 @@ def test_candidate_generators_whole_plan_one_scan_one_signature(spark, tmp_path)
             buckets_col="__buckets",
         ),
     }
-    # (signature-computation node, lazy checkpoints, Arrow stages, keyed
-    # exchanges); the embedding plan's second Arrow stage is its cosine
-    # verify over candidate pairs
-    pins = {
-        "lsh": (r"HashAggregate.*partial_min\(xxhash64\(", 0, 0, 3),
-        "simhash": (r"HashAggregate.*partial_sum\(.*shiftrightunsigned\(h", 0, 0, 3),
-        "editdist": (r"Generate explode\(array_union\(", 0, 0, 2),
-        "embedding": (r"ArrowEvalPython \[stage\(text#", 1, 2, 6),
-    }
 
     def initial_plan(df):
         # under AQE a lazy checkpoint executes its frame, whose plan
@@ -2018,6 +2003,7 @@ def test_candidate_generators_whole_plan_one_scan_one_signature(spark, tmp_path)
     orig = cdf.DataFrame.localCheckpoint
     broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    plans = {}
     try:
         for name, build in families.items():
             barriers: list = []
@@ -2032,21 +2018,77 @@ def test_candidate_generators_whole_plan_one_scan_one_signature(spark, tmp_path)
                 frame = build()
             finally:
                 cdf.DataFrame.localCheckpoint = orig
-            sig_node, n_barriers, max_py, max_exch = pins[name]
-            plan = "\n".join(initial_plan(f) for f in [frame, *barriers])
-            scans = len(re.findall(r"Scan parquet", plan))
-            sigs = len(re.findall(sig_node, plan))
-            py = len(re.findall(r"ArrowEvalPython", plan))
-            exch = len(
-                re.findall(r"^\W*Exchange (?:hash|range)partitioning", plan, re.M)
+            plans[name] = (
+                initial_plan(frame), [initial_plan(f) for f in barriers]
             )
-            assert len(barriers) == n_barriers, f"{name}: {len(barriers)} lazy barriers"
-            assert scans == 1, f"{name}: {scans} parquet scans"
-            assert sigs == 1, f"{name}: {sigs} signature computations"
-            assert py <= max_py, f"{name}: {py} Arrow stages (budget {max_py})"
-            assert exch <= max_exch, f"{name}: {exch} keyed exchanges (pin {max_exch})"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+    return plans
+
+
+def test_candidate_generators_compute_signatures_once(spark, tmp_path):
+    """Consume-once pin: the candidate generators must not re-tokenize
+    the corpus once per plan branch (the regression measured at 4 scans /
+    14 aggregates before the first fix). The bucket-local kernel reads
+    its signature table once, so the whole physical plan — plus the
+    subtree behind embedding-LSH's one remaining lazy checkpoint, its
+    (id, vector, buckets) base — holds ONE parquet scan and ONE
+    signature computation per family."""
+    import re
+
+    # (signature-computation node, lazy checkpoints)
+    pins = {
+        "lsh": (r"HashAggregate.*partial_min\(xxhash64\(", 0),
+        "simhash": (r"HashAggregate.*partial_sum\(.*shiftrightunsigned\(h", 0),
+        "editdist": (r"Generate explode\(array_union\(", 0),
+        "embedding": (r"ArrowEvalPython \[stage\(text#", 1),
+    }
+    for name, (plan, barriers) in _candidate_family_plans(spark, tmp_path).items():
+        sig_node, n_barriers = pins[name]
+        whole = "\n".join([plan, *barriers])
+        scans = len(re.findall(r"Scan parquet", whole))
+        sigs = len(re.findall(sig_node, whole))
+        assert len(barriers) == n_barriers, f"{name}: {len(barriers)} lazy barriers"
+        assert scans == 1, f"{name}: {scans} parquet scans"
+        assert sigs == 1, f"{name}: {sigs} signature computations"
+
+
+def test_pre_barrier_signature_subtrees_stay_one_scan_one_shuffle(spark, tmp_path):
+    """Shuffle and Arrow budgets of the candidate paths. With broadcast
+    joins off, each family's keyed exchanges (its plan plus the subtree
+    behind any lazy checkpoint) stay at or under the pins below; each pin
+    is at or below the count of the earlier self-join kernel, barrier
+    subtree included (lsh 6, simhash 6, editdist 3, embedding 9), so
+    growth means a corpus-scale shuffle re-entered a candidate path.
+    The frame embedding-LSH still barriers — its (id, vector, buckets)
+    base — stays map-only: one scan, no exchange, one Arrow stage."""
+    import re
+
+    # (max Arrow stages, max keyed exchanges); the embedding plan's
+    # second Arrow stage is its cosine verify over candidate pairs
+    pins = {
+        "lsh": (0, 3),
+        "simhash": (0, 3),
+        "editdist": (0, 2),
+        "embedding": (2, 6),
+    }
+
+    def keyed_exchanges(plan):
+        return len(
+            re.findall(r"^\W*Exchange (?:hash|range)partitioning", plan, re.M)
+        )
+
+    for name, (plan, barriers) in _candidate_family_plans(spark, tmp_path).items():
+        max_py, max_exch = pins[name]
+        whole = "\n".join([plan, *barriers])
+        py = len(re.findall(r"ArrowEvalPython", whole))
+        exch = keyed_exchanges(whole)
+        assert py <= max_py, f"{name}: {py} Arrow stages (budget {max_py})"
+        assert exch <= max_exch, f"{name}: {exch} keyed exchanges (pin {max_exch})"
+        for sub in barriers:
+            assert len(re.findall(r"Scan parquet", sub)) == 1, f"{name}: barrier scans"
+            assert len(re.findall(r"Exchange", sub)) == 0, f"{name}: barrier shuffles"
+            assert len(re.findall(r"ArrowEvalPython", sub)) <= 1, f"{name}: barrier Arrow"
 
 
 def test_bucket_pairs_matches_bruteforce_at_cap_boundary(spark):
