@@ -233,7 +233,7 @@ def bench_star_convergence(spark, sf1_dir: str) -> dict:
     n_pairs = pairs.count()
     stats: dict = {}
     t0 = _time.time()
-    comp = D.connected_components_star(
+    comp = D.connected_components(
         # this witness exists to measure the DISTRIBUTED star loop's
         # round count — disable the driver-local union-find gate (r17)
         pairs, docs.select("doc_id"), stats=stats, local_max_edges=0

@@ -754,30 +754,28 @@ def hamming_pairs(
     )
 
 
-# Driver-local union-find gate for the connected-components variants
-# (r17, guide §1.2 "the distributed algorithm" — the same treatment as
-# kmeans_fit's _lloyd_local twin): the registered cluster fixtures are
-# _bounded_subset graphs (<= 1000 nodes), yet the label-propagation /
-# star loops ran O(rounds) join+checkpoint+count SPARK JOBS on KB-sized
-# state — measured 2.2-3.5 s of driver plan-build per query for < 6
-# task-seconds of work. Inputs at or under this gate (probed with a
-# LIMIT-bounded collect, so an over-gate graph costs one truncated probe
-# and falls through to the distributed loop) are solved with a local
-# min-root union-find — the same (id, min reachable id) fixpoint both
-# loops converge to. Callers that exist to WITNESS the distributed loop
-# (the sf1 star-convergence battery, the non-convergence contract test)
-# pass local_max_edges=0 to force it.
+# Driver-local union-find gate for connected_components (r17, guide
+# §1.2 "the distributed algorithm" — the same treatment as kmeans_fit's
+# _lloyd_local twin): the registered cluster fixtures are _bounded_subset
+# graphs (<= 1000 nodes), yet the distributed loop ran O(rounds)
+# join+checkpoint+count SPARK JOBS on KB-sized state — measured 2.2-3.5 s
+# of driver plan-build per query for < 6 task-seconds of work. Inputs at
+# or under this gate (probed with a LIMIT-bounded collect, so an
+# over-gate graph costs one truncated probe and falls through to the
+# distributed loop) are solved with a local min-root union-find — the
+# same (id, min reachable id) fixpoint the star loop converges to.
+# Callers that exist to WITNESS the distributed loop (the sf1
+# star-convergence battery, the non-convergence contract test) pass
+# local_max_edges=0 to force it.
 _CC_LOCAL_MAX = 100_000
+_CC_LOCAL_TYPES = ("int", "bigint", "smallint")
 
 
-def _uf_min_labels(edge_rows, node_filter=None):
+def _uf_min_labels(edge_rows):
     """Union-find with the component-minimum as representative.
 
-    ``edge_rows``: iterable of (a, b); ``node_filter``: optional set —
-    edges with an endpoint outside it are DROPPED, replicating the
-    label-propagation semantics where only ids present in ``nodes``
-    relay labels. Returns {node: min_reachable_id} for every node that
-    appears in a kept edge."""
+    ``edge_rows``: iterable of (a, b). Returns {node: min_reachable_id}
+    for every node that appears in a non-self-loop edge."""
     parent: dict = {}
 
     def find(x):
@@ -790,10 +788,6 @@ def _uf_min_labels(edge_rows, node_filter=None):
 
     for a, b in edge_rows:
         if a == b:
-            continue
-        if node_filter is not None and (
-            a not in node_filter or b not in node_filter
-        ):
             continue
         ra, rb = find(a), find(b)
         if ra == rb:
@@ -809,131 +803,6 @@ def _probe_local(df: DataFrame, limit: int):
     ``limit`` rows, else None (having read only limit+1 rows)."""
     rows = df.limit(limit + 1).collect()
     return rows if len(rows) <= limit else None
-
-
-_CC_LOCAL_TYPES = ("int", "bigint", "smallint")
-
-
-def _probe_pairs_local(pairs: DataFrame, limit: int, *more_types):
-    """The local gate both connected-components variants share: when
-    ``limit`` > 0 and the pair ids (plus any ``more_types``) are integer
-    types, barrier the pair stream and probe it. Returns ``(pairs,
-    rows)`` — ``rows`` is the probed edge list, or None when the gate is
-    closed or the graph is over ``limit`` (fall through to the
-    distributed loop with the returned ``pairs``).
-
-    Barrier BEFORE probing (r18): the probe's LIMIT-bounded collect
-    truncates RESULT rows, not upstream work — unbarriered, an
-    over-gate graph paid the candidate pipeline's shuffle map stages in
-    the probe and then re-paid the WHOLE pipeline in the distributed
-    loop (twice, via the union's two branches). The lazy
-    localCheckpoint materializes pairs exactly once at the probe's
-    first action; the probe and the distributed loop both read the
-    checkpoint. Evaluate-once pinned by
-    tests/test_operators.py::test_cc_over_gate_single_evaluation."""
-    types = (pairs.schema["id_a"].dataType, pairs.schema["id_b"].dataType)
-    if limit <= 0 or any(
-        t.simpleString() not in _CC_LOCAL_TYPES for t in types + more_types
-    ):
-        return pairs, None
-    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
-    return pairs, _probe_local(pairs, limit)
-
-
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 20,
-    stats: dict | None = None,
-    local_max_edges: int = _CC_LOCAL_MAX,
-) -> DataFrame:
-    """Cluster duplicate-pair output into components: every node gets the
-    minimum reachable id as ``cluster_id`` (the canonical document).
-
-    Min-label propagation: each round, every node takes the min of its own
-    label and its neighbors' labels — one keyed shuffle per round,
-    converging in O(component diameter) rounds (near-dup clusters are
-    shallow, so a handful). ``localCheckpoint`` truncates the iterative
-    lineage so the plan doesn't grow per round. At extreme scale the
-    large-star/small-star variant halves round count; the per-round join
-    shape (edges x labels on dst) is the same.
-
-    ``pairs``: columns (id_a, id_b); ``nodes``: one id column (singletons
-    become their own cluster); returns (id, cluster_id).
-
-    ``stats`` (optional dict) records ``rounds`` = label-propagation
-    rounds to convergence — the measured witness of the O(diameter)
-    claim (same convention as ``connected_components_star``); 0 means
-    the graph was solved by the driver-local union-find twin (see
-    ``_CC_LOCAL_MAX``), which ``local_max_edges=0`` disables.
-    """
-    id_col = nodes.columns[0]
-    pairs, p_rows = _probe_pairs_local(
-        pairs, local_max_edges, nodes.schema[0].dataType
-    )
-    if p_rows is not None:
-        n_rows = _probe_local(nodes.select(id_col).distinct(), local_max_edges)
-        if n_rows is not None:
-            node_ids = {r[0] for r in n_rows}
-            labels = _uf_min_labels(
-                ((r[0], r[1]) for r in p_rows), node_filter=node_ids
-            )
-            if stats is not None:
-                stats["rounds"] = 0
-            sess = nodes.sparkSession
-            dt = nodes.schema[0].dataType.simpleString()
-            return sess.createDataFrame(
-                sess.sparkContext.parallelize(
-                    [(n, labels.get(n, n)) for n in sorted(node_ids)], 4
-                ),
-                schema=f"id {dt}, cluster_id {dt}",
-            )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.persist()
-    labels = (
-        nodes.select(F.col(id_col).alias("id")).distinct().withColumn("label", F.col("id"))
-    )
-    if stats is not None:
-        stats["rounds"] = 0
-    for _ in range(max_iter):
-        nmin = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .select(F.col("src").alias("id"), F.col("label").alias("nl"))
-            .groupBy("id")
-            .agg(F.min("nl").alias("nmin"))
-        )
-        new_labels = (
-            labels.withColumnRenamed("label", "old_label")
-            .join(nmin, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("old_label"), F.coalesce(F.col("nmin"), F.col("old_label"))
-                ).alias("label"),
-                "old_label",
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
-        labels = new_labels.drop("old_label")
-        if stats is not None:
-            stats["rounds"] += 1
-        if changed == 0:
-            break
-    else:
-        # Silent non-convergence would split one component into several
-        # cluster_ids with no signal — fail loudly instead (a >max_iter
-        # diameter means the caller should raise max_iter or switch to
-        # the large-star/small-star variant).
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); component diameter exceeds "
-            f"max_iter"
-        )
-    edges.unpersist()
-    return labels.select("id", F.col("label").alias("cluster_id"))
 
 
 def _star_canon(e: DataFrame) -> DataFrame:
@@ -972,47 +841,49 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _star_canon(linked.union(self_link))
 
 
-def star_round(e: DataFrame, materialize: bool = True) -> DataFrame:
+def star_round(e: DataFrame) -> DataFrame:
     """One large-star + small-star contraction round — module-level so
     the per-round plan shape (the thing that repeats O(log n) times at
-    scale) can be budgeted by tools/plancheck.py and tested without
-    running the full fixpoint loop.
+    scale) can be tested without running the full fixpoint loop;
+    tools/plancheck.py budgets the two phases separately.
 
-    ``materialize=True`` (the loop's setting) localCheckpoints the
-    large-star output before the small-star phase: ``_small_star`` reads
-    its input in TWO branches (the neighborhood-min aggregate and the
-    re-attach join), and Catalyst does not share subtrees across join
-    branches, so the unmaterialized composition executes the entire
-    3-Exchange large-star plan twice — 11 Exchanges per round measured
-    vs 3 + 4 with the barrier. Pass ``materialize=False`` only to
-    inspect the fused single-DAG plan."""
-    mid = _large_star(e)
-    if materialize:
-        mid = mid.localCheckpoint(eager=True)
-    return _small_star(mid)
+    The large-star output is localCheckpointed before the small-star
+    phase: ``_small_star`` reads its input in TWO branches (the
+    neighborhood-min aggregate and the re-attach join), and Catalyst
+    does not share subtrees across join branches, so the unmaterialized
+    composition executes the entire 3-Exchange large-star plan twice —
+    11 Exchanges per round measured vs 3 + 4 with the barrier."""
+    return _small_star(_large_star(e).localCheckpoint(eager=True))
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     max_iter: int = 20,
     stats: dict | None = None,
     local_max_edges: int = _CC_LOCAL_MAX,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same contract as ``connected_components`` but converging in
-    O(log n) rounds instead of O(component diameter), the right variant
-    when clusters can be long chains (URL redirect graphs, citation
-    chains) rather than the shallow blobs near-dup clusters form.
+    """Cluster duplicate-pair output into components: every node gets the
+    minimum reachable id as ``cluster_id`` (the canonical document).
+
+    ``pairs``: columns (id_a, id_b); ``nodes``: one id column. Returns
+    (id, cluster_id) with one row per distinct ``nodes`` id; a component
+    spans every pair endpoint (an id only in ``pairs`` still relays),
+    and a node in no pair is its own cluster.
+
+    Graphs with at most ``local_max_edges`` integer-id pairs and nodes
+    are solved on the driver by ``_uf_min_labels`` (see ``_CC_LOCAL_MAX``).
+    Larger ones run alternating large-star / small-star rounds (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    O(log n) rounds instead of min-label propagation's O(component
+    diameter), so long chains (URL redirect graphs, citation chains)
+    converge as fast as the shallow blobs near-dup clusters form.
 
     Both phases are pure DataFrame ops with NO per-node neighbor lists
     (a ``collect_list`` would melt on high-degree hubs): the neighborhood
     minimum is a hash aggregate, re-attached by a keyed join, plus the
     canonical-orientation distinct — 3 (large) + 4 (small) Exchanges per
-    round regardless of skew, budget-enforced in tools/plancheck.py; the
-    large-star output is materialized between phases so the small-star's
-    two consumer branches don't execute the large-star plan twice.
+    round regardless of skew, budget-enforced in tools/plancheck.py.
 
     - large-star: every node u links its LARGER neighbors to
       m(u) = min(N(u) ∪ {u}).
@@ -1021,43 +892,49 @@ def connected_components_star(
 
     Fixpoint detection compares (count, hash-sum) of the edge set between
     rounds — one tiny aggregate, no driver-side edge sets. On
-    convergence the edges form stars rooted at each component's min id;
-    singletons from ``nodes`` label themselves. Returns (id, cluster_id);
-    pass ``stats`` (a dict) to receive ``{"rounds": N}`` — bench.py
-    records it at sf1 to substantiate the O(log n) convergence claim
-    (that caller passes ``local_max_edges=0`` so the witness always
-    exercises the distributed loop; rounds == 0 means the driver-local
-    union-find twin answered, see ``_CC_LOCAL_MAX``).
+    convergence the edges form stars rooted at each component's min id.
+    Not converging in ``max_iter`` rounds raises RuntimeError rather
+    than returning split clusters.
+
+    ``stats`` (optional dict) receives ``rounds`` = star rounds to
+    convergence, the measured witness of the O(log n) claim; 0 means the
+    driver-local union-find answered, which ``local_max_edges=0``
+    disables.
     """
     id_col = nodes.columns[0]
-    pairs, p_rows = _probe_pairs_local(pairs, local_max_edges)
-    if p_rows is not None:
-        # star contraction spans ALL edge endpoints (contrast the
-        # label-propagation variant, which only relays through ids
-        # present in ``nodes``) — no node filter here, and the
-        # converged star edges are reproduced as (member -> root)
-        # rows feeding the SAME left-join + coalesce attach the
-        # distributed loop ends with.
-        labels = _uf_min_labels((r[0], r[1]) for r in p_rows)
-        if stats is not None:
-            stats["rounds"] = 0
-        sess = nodes.sparkSession
-        dt = pairs.schema["id_a"].dataType.simpleString()
-        roots = sess.createDataFrame(
-            sess.sparkContext.parallelize(
-                sorted((n, r) for n, r in labels.items() if n != r),
-                4,
-            ),
-            schema=f"id {dt}, cluster_id {dt}",
+    types = (
+        pairs.schema["id_a"].dataType,
+        pairs.schema["id_b"].dataType,
+        nodes.schema[0].dataType,
+    )
+    if local_max_edges > 0 and all(
+        t.simpleString() in _CC_LOCAL_TYPES for t in types
+    ):
+        # Barrier BEFORE probing (r18): the probe's LIMIT-bounded collect
+        # truncates RESULT rows, not upstream work — unbarriered, an
+        # over-gate graph paid the candidate pipeline's shuffle map
+        # stages in the probe and then re-paid the WHOLE pipeline in the
+        # distributed loop. The lazy localCheckpoint materializes pairs
+        # exactly once at the probe's first action; the probe and the
+        # distributed loop both read the checkpoint. Evaluate-once pinned
+        # by tests/test_operators.py::test_cc_over_gate_single_evaluation.
+        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+        p_rows = _probe_local(pairs, local_max_edges)
+        n_rows = None if p_rows is None else _probe_local(
+            nodes.select(id_col).distinct(), local_max_edges
         )
-        return (
-            nodes.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(roots, "id", "left")
-            .select(
-                "id", F.coalesce("cluster_id", "id").alias("cluster_id")
+        if n_rows is not None:
+            labels = _uf_min_labels((r[0], r[1]) for r in p_rows)
+            if stats is not None:
+                stats["rounds"] = 0
+            sess = nodes.sparkSession
+            dt = types[2].simpleString()
+            return sess.createDataFrame(
+                sess.sparkContext.parallelize(
+                    sorted((r[0], labels.get(r[0], r[0])) for r in n_rows), 4
+                ),
+                schema=f"id {dt}, cluster_id {dt}",
             )
-        )
 
     edges = _star_canon(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -1076,26 +953,18 @@ def connected_components_star(
         return (row["n"], row["h"])
 
     fp = _fingerprint(edges)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        new_edges = star_round(edges, materialize=True).localCheckpoint(
-            eager=True
-        )
-        new_fp = _fingerprint(new_edges)
-        edges, prev_fp, fp = new_edges, fp, new_fp
-        if new_fp == prev_fp:
+    for rounds in range(1, max_iter + 1):
+        edges = star_round(edges).localCheckpoint(eager=True)
+        fp, prev_fp = _fingerprint(edges), fp
+        if fp == prev_fp:
             break
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            f"rounds — raise max_iter (expected rounds ~ log(component size))"
+            f"connected_components did not converge in {max_iter} rounds "
+            f"— raise max_iter (expected rounds ~ log(component size))"
         )
 
     if stats is not None:
-        # observability for scale benchmarks: rounds should track
-        # O(log max-component-size), and the claim is checkable only if
-        # the loop reports what it actually did
         stats["rounds"] = rounds
 
     # converged canonical edges are (component-min root, member)

@@ -288,8 +288,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training corpus. Pairs come from the deterministic n-gram Jaccard
     fixture so the clustering hash-checks against a DuckDB recursive-CTE
     transitive closure; at scale the same operator consumes the
-    MinHash-LSH pair stream (min-label propagation, one keyed shuffle per
-    round — operators/dedup.py:connected_components)."""
+    MinHash-LSH pair stream (large-star/small-star contraction, O(log n)
+    rounds — operators/dedup.py:connected_components; this fixture is
+    small enough for the operator's driver-local union-find gate)."""
     docs = _bounded_subset(
         load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
     )
@@ -433,11 +434,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_dedup_clusters computed by the alternating large-star/small-star
-    contraction (operators/dedup.py:connected_components_star) instead of
-    min-label propagation: O(log n) rounds vs O(component diameter), the
-    variant for long-chain components at extreme scale. Same recursive-CTE
-    transitive-closure oracle — the two algorithms must hash-match."""
+    """q_dedup_clusters with the driver-local union-find gate disabled
+    (``local_max_edges=0``): the same pairs run the distributed
+    large-star/small-star loop of operators/dedup.py:connected_components,
+    so this row's recursive-CTE transitive-closure oracle checks the
+    loop every corpus-scale input takes, not the small-graph shortcut."""
     docs = _bounded_subset(
         load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
     )
@@ -449,7 +450,7 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.jaccard_verify(all_pairs, shingled, min_jaccard=0.2).select(
         "id_a", "id_b"
     )
-    comp = D.connected_components_star(pairs, docs.select("doc_id"))
+    comp = D.connected_components(pairs, docs.select("doc_id"), local_max_edges=0)
     return comp.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
@@ -916,8 +917,9 @@ def q_dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB design: pairs arrive from the cluster-bounded generator
     (never all-pairs — the bounded all-pairs here is oracle-fixture
-    only, _bounded_subset enforces the cap); components are min-label
-    propagation (O(diameter) keyed shuffles); the keep-best argmax is
+    only, _bounded_subset enforces the cap); components are
+    large-star/small-star contraction (O(log n) rounds of keyed
+    shuffles); the keep-best argmax is
     one row_number window on cluster_id, and semantic clusters are
     bounded by max_cluster_size so the window key cannot concentrate."""
     from kafka_map_reduce_spark.operators.similarity import semantic_dedup

@@ -558,8 +558,8 @@ def test_lsh_scale_smoke(spark):
 
 
 def test_connected_components_raises_on_non_convergence(spark):
-    """A component whose diameter exceeds max_iter must fail loudly, not
-    return split clusters."""
+    """A graph the star loop cannot contract within max_iter rounds must
+    fail loudly, not return split clusters."""
     import pytest
 
     from kafka_map_reduce_spark.operators.dedup import connected_components
@@ -569,9 +569,10 @@ def test_connected_components_raises_on_non_convergence(spark):
     )
     nodes = spark.createDataFrame([(i,) for i in range(9)], "id long")
     # non-convergence is a property of the DISTRIBUTED loop; force past
-    # the driver-local union-find gate (which has no iteration bound)
+    # the driver-local union-find gate (which has no iteration bound).
+    # A chain is not a star, so one round cannot reach the fixpoint.
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, nodes, max_iter=2, local_max_edges=0)
+        connected_components(chain, nodes, max_iter=1, local_max_edges=0)
     ok = connected_components(chain, nodes, max_iter=20, local_max_edges=0)
     assert {r.cluster_id for r in ok.collect()} == {0}
 
@@ -645,6 +646,64 @@ class TestKmeansIVF:
         r1 = S.ivf_kmeans_topk(p, c, k=3, n_clusters=3, iters=2).collect()
         r2 = S.ivf_kmeans_topk(p, c, k=3, n_clusters=3, iters=2).collect()
         assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
+
+    def test_distributed_lloyd_equals_local_reference(self, spark, monkeypatch):
+        """With the bounded-sample gate closed (_LOCAL_TRAIN_MAX_CELLS=0)
+        kmeans_fit and kmeans_fit_grouped run their distributed Spark
+        loops; each must return the clusters of the driver-side
+        _lloyd_local reference — farthest and spread init at k=8 (JVM
+        _nearest assignment), spread init at k=100 (Arrow matmul
+        assignment; farthest-first there costs 99 sequential passes,
+        ~80 s on 4 cores, for an init path k=8 already covers), and the
+        grouped trainer with both inits. The means differ from the
+        reference only in summation order (Spark's avg), hence allclose
+        rather than bitwise equality."""
+        import numpy as np
+
+        from kafka_map_reduce_spark.operators import similarity as S
+
+        rng = np.random.default_rng(11)
+        n, dim = 240, 6
+        vecs = rng.normal(size=(n, dim)).tolist()
+        data = spark.createDataFrame(
+            [(i, v, i % 2) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>, subspace int",
+        )
+        hashed = data.select(
+            "vec_id", "embedding", "subspace", F.xxhash64("vec_id").alias("h")
+        ).collect()
+
+        def check(got, want):
+            assert [c for c, _ in got] == [c for c, _ in want]
+            for (c, g), (_, w) in zip(got, want):
+                assert np.allclose(g, w, rtol=0, atol=1e-9), c
+
+        monkeypatch.setattr(S, "_LOCAL_TRAIN_MAX_CELLS", 0)
+        gate = data.select(F.col("embedding").alias("__v"))
+        assert S._collect_bounded_train(gate) is None, "gate still open"
+        rows = [(r.vec_id, r.embedding, r.h) for r in hashed]
+        for init, k in (("farthest", 8), ("spread", 8), ("spread", 100)):
+            got = S.kmeans_fit(data, n_clusters=k, iters=2, init=init)
+            check(
+                sorted((r.cluster_id, r.centroid) for r in got.collect()),
+                S._lloyd_local(rows, k, 2, init),
+            )
+        for init in ("farthest", "spread"):
+            got = S.kmeans_fit_grouped(
+                data, n_clusters=8, iters=2, vec_col="embedding",
+                id_col="vec_id", init=init,
+            ).collect()
+            for g in (0, 1):
+                check(
+                    sorted(
+                        (r.cluster_id, r.centroid) for r in got
+                        if r.subspace == g
+                    ),
+                    S._lloyd_local(
+                        [x for x, r in zip(rows, hashed) if r.subspace == g],
+                        8, 2, init,
+                    ),
+                )
 
 
 class TestMisraGries:
@@ -730,96 +789,93 @@ def test_deletion_signature_completeness_property():
     check()
 
 
+def _uf_reference(pairs, node_ids):
+    """The union-find answer the operator must reproduce: one row per
+    node, labeled by the minimum id reachable over every pair."""
+    from kafka_map_reduce_spark.operators.dedup import _uf_min_labels
+
+    labels = _uf_min_labels(pairs)
+    return {n: labels.get(n, n) for n in node_ids}
+
+
+def _seeded_graphs():
+    """Three deterministic pseudo-random graphs (edges from a hash
+    recurrence — varied density, no RNG): (seed, n_nodes, edge list)."""
+    for seed, n_nodes, n_edges in ((1, 60, 40), (2, 80, 90), (3, 50, 25)):
+        raw = [
+            (
+                (seed * 7919 + e * 104729) % n_nodes,
+                (seed * 15485863 + e * 32452843) % n_nodes,
+            )
+            for e in range(n_edges)
+        ]
+        yield seed, n_nodes, [(a, b) for a, b in raw if a != b]
+
+
 def test_star_cc_equals_label_propagation(spark):
-    """Large-star/small-star must produce exactly the min-label answer on
-    a mixed graph: a chain, a clique, a bridge node, and singletons."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The distributed large-star/small-star loop (forced past the local
+    gate) must produce exactly the min-label answer — the union-find
+    reference — on a mixed graph: a chain, a clique, a bridge node, and
+    singletons."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
     pairs = [(1, 2), (2, 3), (3, 4)]                 # chain -> cluster 1
     pairs += [(10, 11), (10, 12), (11, 12), (12, 13)]  # clique + tail -> 10
     pairs += [(20, 21), (21, 4)]                     # bridge merges into 1
+    node_ids = [1, 2, 3, 4, 10, 11, 12, 13, 20, 21, 99]
     edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 12, 13, 20, 21, 99]], "id long"
-    )
-    want = {
-        r.id: r.cluster_id for r in connected_components(edges, nodes).collect()
-    }
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
     got = {
         r.id: r.cluster_id
-        for r in connected_components_star(edges, nodes).collect()
+        for r in connected_components(
+            edges, nodes, local_max_edges=0
+        ).collect()
     }
-    assert got == want
+    assert got == _uf_reference(pairs, node_ids)
     assert got[99] == 99 and got[21] == 1 and got[13] == 10
 
 
 def test_star_cc_equals_label_propagation_on_seeded_random_graphs(spark):
-    """Equivalence on three deterministic pseudo-random graphs (edges from
-    a hash recurrence — varied density, no RNG)."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The distributed loop equals the union-find reference on the three
+    seeded pseudo-random graphs."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
-    for seed, n_nodes, n_edges in ((1, 60, 40), (2, 80, 90), (3, 50, 25)):
-        raw = [
-            (
-                (seed * 7919 + e * 104729) % n_nodes,
-                (seed * 15485863 + e * 32452843) % n_nodes,
-            )
-            for e in range(n_edges)
-        ]
-        raw = [(a, b) for a, b in raw if a != b]
+    for seed, n_nodes, raw in _seeded_graphs():
         edges = spark.createDataFrame(raw, "id_a long, id_b long")
         nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-        want = {
-            r.id: r.cluster_id
-            for r in connected_components(edges, nodes, max_iter=60).collect()
-        }
         got = {
             r.id: r.cluster_id
-            for r in connected_components_star(edges, nodes).collect()
+            for r in connected_components(
+                edges, nodes, local_max_edges=0
+            ).collect()
         }
-        assert got == want, f"seed {seed}: star != label propagation"
+        assert got == _uf_reference(raw, range(n_nodes)), f"seed {seed}"
 
 
 def test_cc_local_twin_equals_distributed_loops(spark):
     """The r17 driver-local union-find gate must return exactly what the
-    distributed loops (forced via local_max_edges=0) return — for both
-    variants, on the seeded pseudo-random graphs."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    distributed loop (forced via local_max_edges=0) returns, on the
+    seeded pseudo-random graphs."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
-    for seed, n_nodes, n_edges in ((1, 60, 40), (2, 80, 90), (3, 50, 25)):
-        raw = [
-            (
-                (seed * 7919 + e * 104729) % n_nodes,
-                (seed * 15485863 + e * 32452843) % n_nodes,
-            )
-            for e in range(n_edges)
-        ]
-        raw = [(a, b) for a, b in raw if a != b]
+    for seed, n_nodes, raw in _seeded_graphs():
         edges = spark.createDataFrame(raw, "id_a long, id_b long")
         nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-        for fn in (connected_components, connected_components_star):
-            stats_l: dict = {}
-            local = {
-                r.id: r.cluster_id
-                for r in fn(edges, nodes, max_iter=60, stats=stats_l).collect()
-            }
-            dist = {
-                r.id: r.cluster_id
-                for r in fn(
-                    edges, nodes, max_iter=60, local_max_edges=0
-                ).collect()
-            }
-            assert stats_l["rounds"] == 0, "gate did not take the local path"
-            assert local == dist, f"seed {seed}: {fn.__name__} local != dist"
+        stats_l: dict = {}
+        local = {
+            r.id: r.cluster_id
+            for r in connected_components(edges, nodes, stats=stats_l).collect()
+        }
+        stats_d: dict = {}
+        dist = {
+            r.id: r.cluster_id
+            for r in connected_components(
+                edges, nodes, stats=stats_d, local_max_edges=0
+            ).collect()
+        }
+        assert stats_l["rounds"] == 0, "gate did not take the local path"
+        assert stats_d["rounds"] > 0, "local_max_edges=0 did not force the loop"
+        assert local == dist, f"seed {seed}: local != distributed"
 
 
 def test_cc_over_gate_single_evaluation(spark):
@@ -827,93 +883,74 @@ def test_cc_over_gate_single_evaluation(spark):
     double-pay the pair pipeline. The probe's LIMIT-bounded collect
     truncates result rows, not upstream work, so an over-gate graph
     used to execute the candidate pipeline once for the probe and then
-    again (twice, via the union's branches) in the distributed loop.
-    With the entry barrier the pipeline is evaluated EXACTLY once —
-    witnessed by an accumulator-ticking UDF on the pair stream."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    again in the distributed loop. With the entry barrier the pipeline
+    is evaluated EXACTLY once — witnessed by an accumulator-ticking UDF
+    on the pair stream."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
-    n = 40  # path graph 0-1-...-40: one component, diameter > probe gate
+    n = 40  # path graph 0-1-...-40: one component, over the probe gate
     base = spark.createDataFrame([(i, i + 1) for i in range(n)], "a long, b long")
     nodes = spark.createDataFrame([(i,) for i in range(n + 1)], "id long")
-    for fn in (connected_components, connected_components_star):
-        acc = spark.sparkContext.accumulator(0)
+    acc = spark.sparkContext.accumulator(0)
 
-        @F.udf("long")
-        def tick(x, _acc=acc):
-            _acc.add(1)
-            return x
+    @F.udf("long")
+    def tick(x):
+        acc.add(1)
+        return x
 
-        pairs = base.select(tick("a").alias("id_a"), F.col("b").alias("id_b"))
-        got = {
-            r.id: r.cluster_id
-            for r in fn(
-                pairs, nodes, max_iter=60, local_max_edges=5
-            ).collect()
-        }
-        assert got == {i: 0 for i in range(n + 1)}, fn.__name__
-        assert acc.value == n, (
-            f"{fn.__name__}: pair pipeline evaluated {acc.value / n:.1f}x "
-            f"(expected once) on an over-gate graph"
-        )
+    pairs = base.select(tick("a").alias("id_a"), F.col("b").alias("id_b"))
+    got = {
+        r.id: r.cluster_id
+        for r in connected_components(
+            pairs, nodes, max_iter=60, local_max_edges=5
+        ).collect()
+    }
+    assert got == {i: 0 for i in range(n + 1)}
+    assert acc.value == n, (
+        f"pair pipeline evaluated {acc.value / n:.1f}x (expected once) on "
+        f"an over-gate graph"
+    )
 
 
 def test_cc_local_twin_matches_distributed_on_missing_relay_node(spark):
-    """Contract corner pinned: label propagation only relays through ids
-    present in ``nodes`` — an a-b, b-c path with b missing from nodes
-    must NOT merge a and c in the plain variant (local or distributed),
-    while the star variant contracts over all edge endpoints and does.
-    The local twins must reproduce each variant's own semantics."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Contract corner pinned: a component spans every pair endpoint, so
+    an a-b, b-c path with b missing from ``nodes`` still merges a and c;
+    the output holds one row per ``nodes`` id (b gets none). The local
+    union-find and the distributed loop must agree on this."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame([(1, 5), (5, 3)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(1,), (3,)], "id long")  # 5 missing
     for lme in (100_000, 0):
-        plain = {
+        got = {
             r.id: r.cluster_id
             for r in connected_components(
                 edges, nodes, local_max_edges=lme
             ).collect()
         }
-        assert plain == {1: 1, 3: 3}, f"local_max_edges={lme}"
-        star = {
-            r.id: r.cluster_id
-            for r in connected_components_star(
-                edges, nodes, local_max_edges=lme
-            ).collect()
-        }
-        assert star == {1: 1, 3: 1}, f"local_max_edges={lme}"
+        assert got == {1: 1, 3: 1}, f"local_max_edges={lme}"
 
 
 def test_star_cc_converges_on_long_chain_where_label_propagation_cannot(spark):
     """The scale claim itself: a 300-node chain has diameter 300, so
-    min-label propagation cannot converge in 20 rounds (it raises, by
-    contract) while star contraction converges in ~log rounds and labels
-    the whole chain with its minimum."""
-    import pytest as _pytest
-
-    from kafka_map_reduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    min-label propagation would need ~300 rounds, while star contraction
+    converges in ~log rounds and labels the whole chain with its
+    minimum."""
+    from kafka_map_reduce_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(301)], "id long")
-    # both variants forced past the driver-local gate: the claim under
-    # test is the DISTRIBUTED loops' convergence behavior
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, nodes, max_iter=20, local_max_edges=0)
-    got = connected_components_star(
-        chain, nodes, max_iter=20, local_max_edges=0
+    # forced past the driver-local gate: the claim under test is the
+    # DISTRIBUTED loop's convergence behavior
+    stats: dict = {}
+    got = connected_components(
+        chain, nodes, max_iter=20, stats=stats, local_max_edges=0
     ).collect()
     assert {r.cluster_id for r in got} == {0} and len(got) == 301
+    # O(log n): 10 rounds measured, against a diameter of 300
+    assert 0 < stats["rounds"] <= 2 * (300).bit_length()
 
 
 class TestIncrementalDedup:

@@ -183,6 +183,15 @@ MAX_EXCHANGES = {
     "q_dedup_editdist": 2,
     "q_dedup_embedding_lsh": 3,
     "q_dedup_embedding_lsh_capped": 3,
+    # Connected components (dedup.connected_components): the returned
+    # plan is what the rounds leave behind. Under the local union-find
+    # gate it is a driver-built (id, cluster_id) frame — no Exchange,
+    # plus keep_best's cluster_id window; forced through the star loop
+    # (q_dedup_clusters_star) it is the nodes distinct + the roots
+    # re-attach join over the checkpointed converged edges.
+    "q_dedup_clusters": 0,
+    "q_dedup_clusters_star": 2,
+    "q_dedup_keep_best": 1,
     # batch digest canonicalization agg + one digest join pair; the
     # incremental contract is that cost tracks the batch, so any extra
     # corpus-scale Exchange is a design regression

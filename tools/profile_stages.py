@@ -8,7 +8,7 @@ time they caused (whole-stage codegen classes not found in Spark's
 codegen cache), which tells code generation apart from execution. The
 profiled run also lists each completed stage's executorRunTime / input /
 shuffle read+write bytes (from the AppStatusStore, read by
-bench.stage_list).
+bench.stage_list), named by the plan operators it ran (stage_label).
 """
 
 from __future__ import annotations
@@ -21,13 +21,40 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def stage_label(store, stage) -> str:
+    """A stage's plan operators in execution order, e.g. ``AQEShuffleRead
+    > WholeStageCodegen (2) > Exchange``: the top-level clusters of the
+    AppStatusStore's operation graph for the stage, whose ``(n)`` ids are
+    the ``*(n)`` codegen ids of ``explain``. StageData's own name is the
+    call site that submitted the stage, and under adaptive execution
+    every stage is submitted from the same callback
+    (``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``);
+    that name is the fallback when the graph is no longer retained."""
+    from py4j.protocol import Py4JError
+
+    try:
+        it = (
+            store.operationGraphForStage(stage.stageId())
+            .rootCluster()
+            .childClusters()
+            .iterator()
+        )
+    except Py4JError:
+        return str(stage.name())
+    names = []
+    while it.hasNext():
+        names.append(str(it.next().name()).strip())
+    return " > ".join(names) or str(stage.name())
+
+
 def stage_rows(spark):
     from bench import stage_list
 
+    store = spark._jsc.sc().statusStore()
     return [
         {
             "id": s.stageId(),
-            "name": str(s.name())[:80],
+            "name": stage_label(store, s)[:100],
             "run_ms": s.executorRunTime(),
             "cpu_ms": s.executorCpuTime() // 1_000_000,
             "in_mb": round(s.inputBytes() / 1e6, 1),

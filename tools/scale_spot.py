@@ -385,8 +385,8 @@ def keep_best_tail_audit(spark, data_dir: str, n_runs: int) -> dict:
     isolates the tail: pairs are generated once by the production
     semantic path (threshold 0.85, k = N/250, same knobs as
     q_dedup_semantic) and checkpointed; the timed region is ONLY
-    components (min-label propagation, rounds recorded — the
-    O(diameter) witness) + quality join + the cluster_id window +
+    components (large-star/small-star, rounds recorded — the
+    O(log n) witness) + quality join + the cluster_id window +
     keep-best filter. Cluster-size caps bound the window key, so the
     tail should track the pair/node count, not super-linearly."""
     from pyspark.sql import functions as F
@@ -469,7 +469,7 @@ def keep_best_tail_audit(spark, data_dir: str, n_runs: int) -> dict:
         "n_pairs": n_pairs,
         "pair_stage_sec": round(pair_s, 3),
         "tail_sec": round(best, 3),
-        "label_prop_rounds": stats.get("rounds"),
+        "rounds": stats.get("rounds"),
         "n_clusters": int(hist["n_clusters"]),
         "max_cluster": int(hist["max_cluster"]),
     }
