@@ -295,12 +295,14 @@ def _assign_arrow(cents_rows, sc=None):
     the hoist is structural insurance for the regime the sizing rule
     implies (k=2e5 x dim=768 = 1.2 GB model), where per-stage closure
     reshipping is a hard wall. The returned UDF exposes the handle as
-    ``assign._kmr_broadcast``; loop call sites (kmeans_fit) unpersist it
-    after each iteration's materialization barrier, terminal call sites
-    leave it to the closure-held handle + ContextCleaner (unpersist is
-    re-fetchable in Spark, destroy is not — only unpersist is ever
-    called). ``sc=None`` keeps the closure form — the bit-parity twin
-    pytest pins against (tests/test_semantic_dedup.py).
+    ``assign._kmr_broadcast``; terminal call sites leave it to the
+    closure-held handle + ContextCleaner, while the Lloyd loop
+    (kmeans_fit_grouped, whose :func:`_assign_grouped` stage ships the
+    same model per group) unpersists its broadcast after each
+    iteration's materialization barrier (unpersist is re-fetchable in
+    Spark, destroy is not — only unpersist is ever called).
+    ``sc=None`` keeps the closure form — the bit-parity twin pytest
+    pins against (tests/test_semantic_dedup.py).
 
     Centroids sorted by cluster_id so argmin's first-minimum tie-break
     matches the JVM struct-min (lowest cid wins); distances are float64
@@ -327,13 +329,25 @@ def _assign_arrow(cents_rows, sc=None):
     must keep the exact floats it has always produced. The tiled regime
     is reached only by big-k training and 100x witnesses — rows-only
     paths with pinned accuracy floors."""
+    return _model_udf(_flat_nearest, _flat_model(cents_rows), sc)
+
+
+def _flat_model(cents_rows):
+    """(cids, C, |C|^2) of a collected centroid list, sorted by
+    cluster_id — the model :func:`_flat_nearest` reads."""
     rows = sorted(cents_rows, key=lambda r: r["cluster_id"])
     cids = np.array([r["cluster_id"] for r in rows], dtype="int64")
     C = np.array([list(r["centroid"]) for r in rows], dtype="float64")
-    model = (cids, C, (C * C).sum(axis=1))
-    # one kernel body for both forms: it reads the model through .value
+    return cids, C, (C * C).sum(axis=1)
+
+
+def _model_udf(nearest, model, sc):
+    """Arrow UDF vector -> ``nearest(V, *model)``: the model rides an
+    explicit ``sc.broadcast`` (exposed as ``assign._kmr_broadcast``),
+    or the closure when ``sc`` is None. One kernel body for both forms:
+    it reads the model through ``.value``."""
     held = sc.broadcast(model) if sc is not None else SimpleNamespace(value=model)
-    assign = _vector_udf("int", lambda V: _flat_nearest(V, *held.value))
+    assign = _vector_udf("int", lambda V: nearest(V, *held.value))
     assign._kmr_broadcast = held if sc is not None else None
     return assign
 
@@ -435,17 +449,16 @@ def _assign_arrow_routed(cents_rows, sc, nprobe=2):
     structure derives from the cid-sorted centroid matrix with stride
     init and a fixed Lloyd count, so full-build and incremental-ingest
     callers sharing frozen centroids assign identically."""
-    rows = sorted(cents_rows, key=lambda r: r["cluster_id"])
-    cids = np.array([r["cluster_id"] for r in rows], dtype="int64")
-    C = np.array([list(r["centroid"]) for r in rows], dtype="float64")
-    cn = (C * C).sum(axis=1)
+    return _model_udf(_routed_nearest, _routed_model(cents_rows, nprobe), sc)
+
+
+def _routed_model(cents_rows, nprobe: int):
+    """(cids, C, |C|^2, G, |G|^2, members, p) — the model
+    :func:`_routed_nearest` reads."""
+    cids, C, cn = _flat_model(cents_rows)
     G, members = _route_structure(C)
-    Gn = (G * G).sum(axis=1)
     p = min(nprobe, len(members))
-    bc = sc.broadcast((cids, C, cn, G, Gn, members, p))
-    assign = _vector_udf("int", lambda V: _routed_nearest(V, *bc.value))
-    assign._kmr_broadcast = bc
-    return assign
+    return cids, C, cn, G, (G * G).sum(axis=1), members, p
 
 
 def _routed_nearest(V, cids, C, cn, G, Gn, members, p):
@@ -477,21 +490,26 @@ def _routed_nearest(V, cids, C, cn, G, Gn, members, p):
     return best_cid
 
 
-def _assign_model(cents_rows, sc, route_nprobe=3):
+def _assign_model(cents_rows, sc):
     """Pick the assignment kernel for a collected centroid model: the
     flat one-matmul Arrow kernel up to _ROUTED_ASSIGN_MIN_K centroids
     (bit-exact, covers every correctness-gated k), the IVF-routed
     two-level kernel above it (the 100 TB regime where O(N*k) is the
-    family's quadratic wall — r9 verdict item #3). nprobe defaults to
-    3: the sf100 skew table (SCALE_SPOT_r10) measured nprobe=3 at the
+    family's quadratic wall — r9 verdict item #3). nprobe is 3: the
+    sf100 skew table (SCALE_SPOT_r10) measured nprobe=3 at the
     same assign cost as 2 with materially less cluster-size skew
     (sum c_i^2 4.76e9 vs 4.82e9, max cluster 4.9k vs 6.4k) and higher
     flat-agreement (0.9996 vs 0.9977 on separated data) — strictly
     dominant, because the verify stage downstream is quadratic in
     cluster size."""
-    if sc is not None and len(cents_rows) > _ROUTED_ASSIGN_MIN_K:
-        return _assign_arrow_routed(cents_rows, sc, nprobe=route_nprobe)
-    return _assign_arrow(cents_rows, sc=sc)
+    return _model_udf(*_nearest_model(cents_rows), sc)
+
+
+def _nearest_model(cents_rows):
+    """(kernel, model) of :func:`_assign_model`'s choice."""
+    if len(cents_rows) > _ROUTED_ASSIGN_MIN_K:
+        return _routed_nearest, _routed_model(cents_rows, nprobe=3)
+    return _flat_nearest, _flat_model(cents_rows)
 
 
 _SEMANTIC_K_CAP = 32768
@@ -617,8 +635,9 @@ def _collect_bounded_train(vecs: DataFrame):
 
 
 def _lloyd_local(rows, n_clusters: int, iters: int, init: str):
-    """Driver-side twin of the Spark Lloyd loop: same seeds (lowest-id /
-    hash-spread via the collected xxhash64), same lexicographic
+    """Driver-side twin of the Spark Lloyd loop in :func:`_lloyd`, run
+    once per group: same seeds (lowest-id / hash-spread via the
+    collected xxhash64), same lexicographic
     (distance, id) farthest-first tie-breaks, same lowest-cluster-id
     argmin ties (cids ascending, first minimum wins), same drop of
     empty clusters. Distances use the same |v|^2 - 2 v.C^T + |c|^2
@@ -696,185 +715,20 @@ def kmeans_fit(
     vec_col: str = "embedding", id_col: str = "vec_id",
     init: str = "farthest",
 ) -> DataFrame:
-    """Lloyd k-means over an embedding column, pure DataFrame ops — the
-    trained coarse quantizer for IVF ANN (the reference has no ANN; this is
-    the Tier-C scale path the north star mandates).
+    """Lloyd k-means over an embedding column — the trained coarse
+    quantizer for IVF ANN (the reference has no ANN; this is the Tier-C
+    scale path the north star mandates). Returns (cluster_id int,
+    centroid array<double>).
 
-    Deterministic: init = the ``n_clusters`` lowest-id vectors; a fixed
-    iteration count; argmin ties break on cluster_id. Returns
-    (cluster_id int, centroid array<double>).
-
-    Scale shape per iteration: assignment is shuffle-free — for k <=
-    _ARROW_ASSIGN_MIN_K centroids ride along as ONE broadcast row
-    holding an array<struct> and argmin is an inline JVM expression,
-    never touching the driver; for larger k the JVM HOF argmin is
-    interpreted (k x dim interpreted ops per row — the measured wall at
-    k=2000) so the centroid table (k x dim doubles, KBs-to-MBs) is
-    collected into an Arrow matmul UDF closure instead, the standard
-    model-as-broadcast shape. The mean update is posexplode +
-    (cluster, dim) hash aggregate — 2 shuffles whose width is rows x
-    dims, with map-side partial aggregation collapsing it to clusters x
-    dims x partitions.
-    """
-    vecs = corpus.select(
-        F.col(id_col).alias("__vid"), _as_double(F.col(vec_col)).alias("__v")
+    The one-group case of :func:`kmeans_fit_grouped` (seeds,
+    tie-breaks, mean updates and the driver-local fast path are all
+    its): every row joins a literal group 0, which the result leaves
+    out."""
+    one = corpus.select(
+        F.lit(0).alias("__g"), F.col(id_col).alias("__vid"),
+        _as_double(F.col(vec_col)).alias("__v"),
     )
-    # Bounded-sample fast path (r17): train where the sample lives —
-    # see _LOCAL_TRAIN_MAX_CELLS. Over-budget inputs (the semantic
-    # k-cap regime) fall through to the distributed loop below.
-    local = _collect_bounded_train(
-        vecs.select("__vid", "__v", F.xxhash64("__vid").alias("__h"))
-    )
-    if local is not None:
-        fitted = _lloyd_local(
-            [(r["__vid"], r["__v"], r["__h"]) for r in local],
-            n_clusters, iters, init,
-        )
-        # model-sized frame: bound the slice count at the RDD level —
-        # the default 32-way parallelize makes every downstream
-        # checkpoint/broadcast pay 32 near-idle Python tasks (r17
-        # profile on q_sim_ivfpq: four 32-task stages of 6-8
-        # executor-run-sec at ~0.2 cpu-sec). A plan-level coalesce(1)
-        # was measured instead and REJECTED: q_sim_ivfpq 6.5 -> 21.9 s.
-        sess = corpus.sparkSession
-        return sess.createDataFrame(
-            sess.sparkContext.parallelize(fitted, 4),
-            schema="cluster_id int, centroid array<double>",
-        )
-    if init == "spread":
-        # One-pass hash-spread init for LARGE k (PQ codebooks: m x k
-        # trainings, where farthest-first's k-1 sequential passes per
-        # training dominate wall-clock): bucket every vector by
-        # xxhash64(id) % k and seed each bucket with its min-hash member.
-        # ONE shuffle with map-side min_by partial agg; hash spreading
-        # decorrelates seeds from id order (the failure the lowest-k-ids
-        # init has), trading farthest-first's k-center guarantee for a
-        # k-independent cost — Lloyd iterations then do the refinement.
-        # Empty buckets (hash collisions) just yield < k clusters, which
-        # every consumer already tolerates (codes are keyed by
-        # cluster_id, not position — see pq_topk's map lookup).
-        cents = (
-            vecs.withColumn(
-                "__h", F.pmod(F.xxhash64("__vid"), F.lit(n_clusters)).cast("int")
-            )
-            .groupBy("__h")
-            .agg(F.min_by("__v", F.xxhash64("__vid")).alias("centroid"))
-            .select(F.col("__h").alias("cluster_id"), "centroid")
-            .localCheckpoint(eager=True)
-        )
-    elif init != "farthest":
-        raise ValueError(f"unknown init {init!r}")
-    else:
-        # Farthest-first init (deterministic k-center traversal): seed with
-        # the lowest-id vector, then k-1 times add the point farthest from
-        # the chosen set. Guarantees one seed per well-separated cluster —
-        # the lowest-k-ids init degenerates when the id order correlates
-        # with the clustering. Costs k passes — right for coarse
-        # quantizers (small k, quality-critical); use init="spread" when
-        # k is large.
-        cents = vecs.orderBy("__vid").limit(1).select(
-            F.lit(0).cast("int").alias("cluster_id"), F.col("__v").alias("centroid")
-        )
-        for i in range(1, n_clusters):
-            cent_row = cents.agg(
-                F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
-            )
-            far = (
-                vecs.join(F.broadcast(cent_row))
-                .withColumn(
-                    "__dmin",
-                    F.array_min(
-                        F.transform(
-                            F.col("__cents"),
-                            lambda c: _l2sq(F.col("__v"), c["centroid"]),
-                        )
-                    ),
-                )
-                .agg(
-                    F.max_by(
-                        F.col("__v"), F.struct("__dmin", "__vid")
-                    ).alias("centroid")
-                )
-                .select(F.lit(i).cast("int").alias("cluster_id"), "centroid")
-            )
-            # checkpoint per step: far's plan embeds cents twice (scan +
-            # union), so an unbroken lineage doubles every iteration
-            cents = cents.unionByName(far).localCheckpoint(eager=True)
-    use_arrow = n_clusters > _ARROW_ASSIGN_MIN_K
-    for _ in range(iters):
-        iter_bc = None
-        if use_arrow:
-            # large k: interpreted HOF argmin is the wall (see
-            # _ARROW_ASSIGN_MIN_K); one numpy matmul per Arrow batch,
-            # model hoisted into an explicit broadcast (ship-once per
-            # iteration, not per consuming stage).
-            #
-            # Kernel choice by regime (r12 revision of the r11 "routed
-            # trainer tested and killed" verdict — that A/B ran at the
-            # hash-correlation-collapsed sizing, k_eff≈4000, where flat
-            # is ONE fast gemm tile and routing indeed lost 40.8 vs
-            # 29.9 s; with the correlation fixed the above-cap trainer
-            # really runs at k=2^15, where the flat kernel is a tiled
-            # memory-bound scan and the A/B reverses DECISIVELY:
-            # routed 1.4 s vs tiled-flat 59.7 s per assign pass at
-            # k_eff=32768, 1.6 vs 14.7 s at 8192, agreement 1.0 on the
-            # separated synthetic slice — SCALE_SPOT_r12
-            # trainer_routed_r12). The boundary is _FLAT_ONE_TILE_MAX_K,
-            # the same k above which the flat kernel already stops
-            # being the verbatim one-matmul: below it flat is a single
-            # bit-stable gemm and stays (every gated and benched k);
-            # above it training is rows-only by declaration and the
-            # routed kernel's group-boundary approximation is the same
-            # trade the full-corpus assign already makes.
-            fit_rows = cents.collect()
-            assign = (
-                _assign_model(
-                    fit_rows, sc=corpus.sparkSession.sparkContext
-                )
-                if n_clusters > _FLAT_ONE_TILE_MAX_K
-                else _assign_arrow(
-                    fit_rows, sc=corpus.sparkSession.sparkContext
-                )
-            )
-            iter_bc = assign._kmr_broadcast
-            assigned = vecs.withColumn("__cid", assign(F.col("__v"))).select(
-                "__vid", "__v", "__cid"
-            )
-        else:
-            cent_row = cents.agg(
-                F.collect_list(F.struct("cluster_id", "centroid")).alias(
-                    "__cents"
-                )
-            )
-            assigned = (
-                vecs.join(F.broadcast(cent_row))
-                .withColumn(
-                    "__cid", _nearest(F.col("__v"), F.col("__cents"))["cid"]
-                )
-                .select("__vid", "__v", "__cid")
-            )
-        cents = (
-            assigned.select("__cid", F.posexplode("__v").alias("__pos", "__x"))
-            .groupBy("__cid", "__pos")
-            .agg(F.avg("__x").alias("__m"))
-            .groupBy("__cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__m"))),
-                    lambda s: s["__m"],
-                ).alias("centroid")
-            )
-            .select(F.col("__cid").alias("cluster_id"), "centroid")
-        )
-        # truncate the growing iterative lineage (same pattern as the
-        # connected-components loop in operators/dedup.py)
-        cents = cents.localCheckpoint(eager=True)
-        if iter_bc is not None:
-            # the eager checkpoint above is this iteration's
-            # materialization barrier — the stale centroid broadcast is
-            # dead weight on the executors from here on
-            iter_bc.unpersist()
-    return cents
+    return _lloyd(one, n_clusters, iters, init, group_col=None)
 
 
 def ivf_kmeans_topk(
@@ -966,15 +820,20 @@ def kmeans_fit_grouped(
     group_col: str = "subspace", vec_col: str = "__sub",
     id_col: str = "__vid", init: str = "spread",
 ) -> DataFrame:
-    """Lloyd k-means over MANY groups at once — every group trains its
-    own codebook, but each init pass / Lloyd iteration is ONE job over
-    the union instead of one per group. Returns (group, cluster_id,
-    centroid) with numerics IDENTICAL to running :func:`kmeans_fit` per
-    group (same seeds, same tie-breaks, same mean updates —
-    pytest-pinned via the PQ recall floors and codebook tests).
+    """Lloyd k-means over MANY groups at once — the package's one Lloyd
+    trainer (:func:`kmeans_fit` is its one-group case). Every group
+    trains its own model, but each init pass / Lloyd iteration is ONE
+    job over the union instead of one per group. Returns (group,
+    cluster_id, centroid); groups are the ints 0..m-1.
 
-    Why it exists: pq_fit trained its m subspaces sequentially — at
-    m=8, k=16, iters=3 that is 8 x (init + 3) blocking jobs of
+    Deterministic: ``init="farthest"`` seeds each group with its
+    lowest-id vector and adds the farthest point k-1 times (ties on the
+    larger id); ``init="spread"`` seeds bucket xxhash64(id) % k with its
+    min-hash member. A fixed iteration count; argmin ties break on the
+    lowest cluster_id; a cluster that loses every point is dropped.
+
+    Why grouped: pq_fit trained its m subspaces sequentially — at m=8,
+    k=16, iters=3 that is 8 x (init + 3) blocking jobs of
     fixed-overhead-dominated work. Grouped, the job count is
     k-independent in m (one per init pass + one per iteration), and on
     a cluster each pass is one scan of the (group, subvector) table —
@@ -982,18 +841,41 @@ def kmeans_fit_grouped(
     (1980 vecs, dim 64, min-of-3, train+search): q_sim_pq 10.9 s ->
     6.9 s, q_sim_ivfpq 25.0 s -> 12.8 s.
 
-    Assignment stays shuffle-free: ALL codebooks ride one broadcast row
-    as an array indexed by group; the mean update is posexplode +
-    (group, cluster, dim) hash aggregate with map-side combine."""
+    Scale shape per iteration: assignment is shuffle-free — for k <=
+    _ARROW_ASSIGN_MIN_K all models ride ONE broadcast row as an array
+    indexed by group and argmin is an inline JVM expression; for larger
+    k the interpreted HOF argmin is the wall (k x dim interpreted ops
+    per row, measured at k=2000), so the collected models go out in one
+    explicit broadcast to a numpy Arrow stage instead. The mean update
+    is posexplode + (group, cluster, dim) hash aggregate with map-side
+    combine."""
     vecs = sub.select(
         F.col(group_col).alias("__g"),
         F.col(id_col).alias("__vid"),
         _as_double(F.col(vec_col)).alias("__v"),
     )
-    # Bounded-sample fast path (r17): same gate as kmeans_fit — the
-    # whole (group, subvector) table is collected once and each group's
-    # Lloyd runs on the driver; numerics per group replicate the Spark
-    # loop the same way _lloyd_local documents.
+    return _lloyd(vecs, n_clusters, iters, init, group_col)
+
+
+def _lloyd(
+    vecs: DataFrame, n_clusters: int, iters: int, init: str,
+    group_col: str | None,
+) -> DataFrame:
+    """:func:`kmeans_fit_grouped`'s trainer over ``vecs`` = (__g,
+    __vid, __v). Returns (group_col, cluster_id, centroid), or
+    (cluster_id, centroid) for ``group_col=None`` — kmeans_fit's one
+    group. The group is left out of the driver-local model frame
+    before it exists rather than dropped from it afterwards: the frame
+    is an RDD scan whose size Spark does not know, and a dropping
+    Project turns that unknown into a known ~7.7e18 bytes. q_sim_ivfpq
+    then plans two runtime bloom-filter subqueries over its
+    checkpointed coarse quantizer (+0.34-0.45 s warm at sf0.01, 3
+    alternating pairs on 4 cores, local[4])."""
+    # Bounded-sample fast path (r17): train where the sample lives —
+    # see _LOCAL_TRAIN_MAX_CELLS. The whole (group, vector) table is
+    # collected once and each group's Lloyd runs on the driver;
+    # over-budget inputs (the semantic k-cap regime) fall through to
+    # the distributed loop below.
     local = _collect_bounded_train(
         vecs.select("__g", "__vid", "__v", F.xxhash64("__vid").alias("__h"))
     )
@@ -1002,38 +884,34 @@ def kmeans_fit_grouped(
         for r in local:
             by_g.setdefault(r["__g"], []).append((r["__vid"], r["__v"], r["__h"]))
         fitted = [
-            (int(g), cid, cent)
+            (cid, cent) if group_col is None else (int(g), cid, cent)
             for g in sorted(by_g)
             for cid, cent in _lloyd_local(by_g[g], n_clusters, iters, init)
         ]
-        # bounded slices, same rationale as kmeans_fit's local return
-        sess = sub.sparkSession
+        group = "" if group_col is None else f"{group_col} int, "
+        # model-sized frame: bound the slice count at the RDD level —
+        # the default 32-way parallelize makes every downstream
+        # checkpoint/broadcast pay 32 near-idle Python tasks (r17
+        # profile on q_sim_ivfpq: four 32-task stages of 6-8
+        # executor-run-sec at ~0.2 cpu-sec). A plan-level coalesce(1)
+        # was measured instead and REJECTED: q_sim_ivfpq 6.5 -> 21.9 s.
+        sess = vecs.sparkSession
         return sess.createDataFrame(
             sess.sparkContext.parallelize(fitted, 4),
-            schema=f"{group_col} int, cluster_id int, centroid array<double>",
+            schema=f"{group}cluster_id int, centroid array<double>",
         )
 
-    def book_row(cents: DataFrame):
-        """One broadcastable row: array indexed by group of
-        array<struct(cluster_id, centroid)>."""
-        return (
-            cents.groupBy("__g")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cluster_id", "centroid"))
-                ).alias("__cl")
-            )
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__g", "__cl"))),
-                    lambda s: s["__cl"],
-                ).alias("__books")
-            )
-        )
+    def books(cents: DataFrame) -> DataFrame:
+        return _codebook_row(cents.withColumnRenamed("__g", "subspace"))
 
     if init == "spread":
-        # same hash-spread seeding as kmeans_fit(init="spread"), all
-        # groups in ONE aggregate
+        # One-pass hash-spread init for LARGE k (PQ codebooks, semantic
+        # k), where farthest-first's k-1 sequential passes dominate:
+        # ONE shuffle with map-side min_by partial agg; hash spreading
+        # decorrelates seeds from id order, trading farthest-first's
+        # k-center guarantee for a k-independent cost. Empty buckets
+        # just yield < k clusters, which every consumer tolerates
+        # (codes are keyed by cluster_id — see pq_topk's map lookup).
         cents = (
             vecs.withColumn(
                 "__h",
@@ -1045,9 +923,9 @@ def kmeans_fit_grouped(
             .localCheckpoint(eager=True)
         )
     elif init == "farthest":
-        # k-center traversal, one JOINT pass per step: seed with each
-        # group's lowest-id vector, then k-1 times add each group's
-        # farthest point (ties on __vid, matching kmeans_fit)
+        # k-center traversal, one JOINT pass per step: guarantees one
+        # seed per well-separated cluster — right for coarse quantizers
+        # (small k, quality-critical); use init="spread" when k is large
         cents = (
             vecs.groupBy("__g")
             .agg(F.min_by("__v", "__vid").alias("centroid"))
@@ -1058,7 +936,7 @@ def kmeans_fit_grouped(
         )
         for i in range(1, n_clusters):
             far = (
-                vecs.join(F.broadcast(book_row(cents)))
+                vecs.join(F.broadcast(books(cents)))
                 .withColumn(
                     "__cl", F.element_at(F.col("__books"), F.col("__g") + 1)
                 )
@@ -1083,22 +961,30 @@ def kmeans_fit_grouped(
                     "centroid",
                 )
             )
+            # checkpoint per step: far's plan embeds cents twice (scan +
+            # union), so an unbroken lineage doubles every iteration
             cents = cents.unionByName(far).localCheckpoint(eager=True)
     else:
         raise ValueError(f"unknown init {init!r}")
 
     for _ in range(iters):
-        assigned = (
-            vecs.join(F.broadcast(book_row(cents)))
-            .withColumn(
+        iter_bc = None
+        if n_clusters > _ARROW_ASSIGN_MIN_K:
+            assign = _assign_grouped(
+                cents.collect(), n_clusters, vecs.sparkSession.sparkContext
+            )
+            iter_bc = assign._kmr_broadcast
+            assigned = vecs.withColumn(
+                "__cid", assign(F.col("__g"), F.col("__v"))
+            )
+        else:
+            assigned = vecs.join(F.broadcast(books(cents))).withColumn(
                 "__cid",
                 _nearest(
                     F.col("__v"),
                     F.element_at(F.col("__books"), F.col("__g") + 1),
                 )["cid"],
             )
-            .select("__g", "__v", "__cid")
-        )
         cents = (
             assigned.select(
                 "__g", "__cid", F.posexplode("__v").alias("__pos", "__x")
@@ -1113,11 +999,64 @@ def kmeans_fit_grouped(
                 ).alias("centroid")
             )
             .select("__g", F.col("__cid").alias("cluster_id"), "centroid")
+            # truncate the growing iterative lineage
             .localCheckpoint(eager=True)
         )
-    return cents.select(
-        F.col("__g").alias(group_col), "cluster_id", "centroid"
+        if iter_bc is not None:
+            # the eager checkpoint above is this iteration's
+            # materialization barrier — the stale model broadcast is
+            # dead weight on the executors from here on
+            iter_bc.unpersist()
+    if group_col is None:
+        return cents.drop("__g")
+    return cents.withColumnRenamed("__g", group_col)
+
+
+def _assign_grouped(cents_rows, n_clusters: int, sc):
+    """Arrow stage (group, vector) -> nearest cluster id under that
+    group's own model, for the Lloyd loop above _ARROW_ASSIGN_MIN_K.
+    ``cents_rows``: the collected (__g, cluster_id, centroid) rows.
+    Every group's model goes out in ONE broadcast, exposed as
+    ``assign._kmr_broadcast`` for the loop's per-iteration unpersist.
+
+    Kernel choice per group: the flat one-matmul kernel up to
+    _FLAT_ONE_TILE_MAX_K clusters, :func:`_assign_model`'s choice above
+    it (r12 revision of the r11 "routed trainer tested and killed"
+    verdict — that A/B ran at the hash-correlation-collapsed sizing,
+    k_eff≈4000, where flat is ONE fast gemm tile and routing indeed
+    lost 40.8 vs 29.9 s; with the correlation fixed the above-cap
+    trainer really runs at k=2^15, where the flat kernel is a tiled
+    memory-bound scan and the A/B reverses DECISIVELY: routed 1.4 s vs
+    tiled-flat 59.7 s per assign pass at k_eff=32768, 1.6 vs 14.7 s at
+    8192, agreement 1.0 on the separated synthetic slice —
+    SCALE_SPOT_r12 trainer_routed_r12). Below the boundary flat is a
+    single bit-stable gemm (every gated and benched k); above it
+    training is rows-only by declaration and the routed kernel's
+    group-boundary approximation is the same trade the full-corpus
+    assign already makes."""
+    by_g: dict = {}
+    for r in cents_rows:
+        by_g.setdefault(r["__g"], []).append(r)
+    bc = sc.broadcast(
+        {
+            g: _nearest_model(rows)
+            if n_clusters > _FLAT_ONE_TILE_MAX_K
+            else (_flat_nearest, _flat_model(rows))
+            for g, rows in by_g.items()
+        }
     )
+
+    def kernel(G, V):
+        out = np.empty(len(V), dtype="int64")
+        for g in np.unique(G):
+            at = G == g
+            nearest, model = bc.value[int(g)]
+            out[at] = nearest(V[at], *model)
+        return out
+
+    assign = _vector_udf("int", kernel)
+    assign._kmr_broadcast = bc
+    return assign
 
 
 # ---- SQ8: per-dimension scalar quantization -------------------------------
@@ -1285,7 +1224,9 @@ def pq_fit(
 
 def _codebook_row(codebooks: DataFrame) -> DataFrame:
     """One broadcastable row: array indexed by subspace of arrays of
-    (cluster_id, centroid) structs, each sorted by cluster_id."""
+    (cluster_id, centroid) structs, each sorted by cluster_id — the
+    codebook row of PQ encode/search and, per group, of the Lloyd
+    trainer's JVM assignment."""
     return (
         codebooks.groupBy("subspace")
         .agg(
@@ -1490,8 +1431,8 @@ def ivfpq_index(
 
     Scale: coarse assignment and residual computation are shuffle-free
     (one broadcast centroid row, inline argmin, zip_with subtraction);
-    residual codebook training reuses kmeans_fit (grouped across
-    subspaces since r6); encoding is pq_encode over the residual column
+    residual codebook training is pq_fit's kmeans_fit_grouped, one
+    group per subspace; encoding is pq_encode over the residual column
     — the corpus is scanned, never shuffled.
 
     The coarse quantizer KEEPS farthest-first init despite its k-1
@@ -1506,16 +1447,17 @@ def ivfpq_index(
     train-on-sample practice, and the same caller-side idiom
     :func:`semantic_dedup` uses via ``train_sample_mod``): both
     quantizers fit on a deterministic hash-sample of ~that many vectors
-    (mod = corpus_count // train_sample_n, keep xxhash64(id) % mod ==
-    0), eagerly checkpointed so the (k-1) farthest-first passes + Lloyd
-    iterations x 2 trainings re-scan a bounded MB-sized table instead
-    of the corpus — without it, training an 8-centroid quantizer costs
-    ~13 full-corpus scans, the one corpus-dependent training term left
-    in this family. Assignment, residuals, and encoding stay
-    full-corpus single passes, so the returned triple covers every
-    vector regardless. mod rounds DOWN to 1 whenever the corpus is
-    within ~2x of the target (every correctness-gated test SF), where
-    this parameter is numerically a no-op (pytest-pinned)."""
+    (mod = corpus_count // train_sample_n, the salted 1-in-mod slice of
+    :func:`_hash_mod_filter`), eagerly checkpointed so the (k-1)
+    farthest-first passes + Lloyd iterations x 2 trainings re-scan a
+    bounded MB-sized table instead of the corpus — without it,
+    training an 8-centroid quantizer costs ~13 full-corpus scans, the
+    one corpus-dependent training term left in this family.
+    Assignment, residuals, and encoding stay full-corpus single passes,
+    so the returned triple covers every vector regardless. mod rounds
+    DOWN to 1 whenever the corpus is within ~2x of the target (every
+    correctness-gated test SF), where this parameter is numerically a
+    no-op (pytest-pinned)."""
     mod = 1
     if train_sample_n and (centroids is None or codebooks is None):
         mod = max(1, corpus.count() // train_sample_n)
@@ -1974,6 +1916,23 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
     return f
 
 
+def _assign_buckets(base: DataFrame, cents: DataFrame, k: int) -> DataFrame:
+    """``base`` plus ``bkt``, the nearest of the ``k`` centroids to its
+    ``__v``: the JVM inline argmin at or below _ARROW_ASSIGN_MIN_K,
+    :func:`_assign_model`'s Arrow kernel above it."""
+    if k > _ARROW_ASSIGN_MIN_K:
+        assign = _assign_model(
+            cents.collect(), sc=base.sparkSession.sparkContext
+        )
+        return base.withColumn("bkt", assign(F.col("__v")))
+    cent_row = cents.agg(
+        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
+    )
+    return base.join(F.broadcast(cent_row)).withColumn(
+        "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
+    )
+
+
 def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.9,
@@ -2017,8 +1976,9 @@ def semantic_dedup(
     Scale shape (r7 sf10 decomposition: train 26.1 s / assign 2.6 s /
     join+verify 107.1 s at 500k docs, k=2000 — verify dominates, train
     is the emerging quadratic term): k-means TRAINS on a deterministic
-    hash-sample (``train_sample_mod`` > 1 keeps rows with
-    xxhash64(id) % mod == 0 — the faiss train-on-sample practice; Lloyd
+    hash-sample (``train_sample_mod`` > 1 keeps the salted 1-in-mod
+    slice of :func:`_hash_mod_filter` — the faiss train-on-sample
+    practice; Lloyd
     cost becomes O(sample x k) independent of the corpus) and then ONE
     full Arrow-matmul assignment pass covers every vector; vectors are
     L2-normalized in that same pass so the per-pair verify is a bare
@@ -2037,38 +1997,11 @@ def semantic_dedup(
     base = _with_unit(corpus, vec_col, id_col, unit_col).localCheckpoint(
         eager=False
     )
-    train = (
-        # salted like _hash_mod_filter (r12): an unsalted filter on the
-        # same hash the spread-init seeder buckets with restricts the
-        # seedable buckets to k/gcd(mod, k) — the r11 "collapse"
-        base.filter(
-            F.pmod(
-                F.xxhash64(F.lit("train-slice"), F.col("id")),
-                F.lit(train_sample_mod),
-            )
-            == 0
-        )
-        if train_sample_mod > 1
-        else base
-    )
     cents = kmeans_fit(
-        train, n_clusters, iters, vec_col="__v", id_col="id", init=init
+        _hash_mod_filter(base.select("id", "__v"), "id", train_sample_mod),
+        n_clusters, iters, vec_col="__v", id_col="id", init=init,
     )
-    if n_clusters > _ARROW_ASSIGN_MIN_K:
-        assign = _assign_model(
-            cents.collect(), sc=corpus.sparkSession.sparkContext
-        )
-        assigned = base.withColumn("bkt", assign(F.col("__v")))
-    else:
-        cent_row = cents.agg(
-            F.collect_list(F.struct("cluster_id", "centroid")).alias(
-                "__cents"
-            )
-        )
-        assigned = base.join(F.broadcast(cent_row)).withColumn(
-            "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
-        )
-    assigned = assigned.select(
+    assigned = _assign_buckets(base, cents, n_clusters).select(
         "id", "bkt", F.col("__u").alias("__vn")
     ).localCheckpoint(eager=False)  # cap-count + join sides consume
     if max_cluster_size is not None:
@@ -2208,21 +2141,7 @@ def semantic_dedup_ingest(
     n_cents = centroids.count()
     # unit_col as in semantic_dedup
     base = _with_unit(batch, vec_col, id_col, unit_col)
-    if n_cents > _ARROW_ASSIGN_MIN_K:
-        assign = _assign_model(
-            centroids.collect(), sc=batch.sparkSession.sparkContext
-        )
-        assigned = base.withColumn("bkt", assign(F.col("__v")))
-    else:
-        cent_row = centroids.agg(
-            F.collect_list(F.struct("cluster_id", "centroid")).alias(
-                "__cents"
-            )
-        )
-        assigned = base.join(F.broadcast(cent_row)).withColumn(
-            "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
-        )
-    new_rows = assigned.select(
+    new_rows = _assign_buckets(base, centroids, n_cents).select(
         "id", "bkt", F.col("__u").alias("__vn")
     ).localCheckpoint(eager=False)
     touched = new_rows.select("bkt").distinct()

@@ -768,8 +768,10 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     build step materializes with the same frozen model (ingest against
     an empty index IS the build — one code path, no drift)."""
     from kafka_map_reduce_spark.operators.similarity import (
+        _hash_mod_filter,
         kmeans_fit,
         semantic_dedup_ingest,
+        semantic_model_params,
     )
     from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
@@ -791,17 +793,10 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old = emb.filter(F.col("vec_id") % 10 != 0)
     new = emb.filter(F.col("vec_id") % 10 == 0)
-    n = old.count()
-    from kafka_map_reduce_spark.operators.similarity import (
-        semantic_model_params,
-    )
-    from pyspark.sql import functions as _F
-
-    k, mod, cap = semantic_model_params(n)
-    train = old.filter(_F.pmod(_F.xxhash64("vec_id"), _F.lit(mod)) == 0)
+    k, mod, cap = semantic_model_params(old.count())
     cents = kmeans_fit(
-        train, k, iters=3, vec_col="embedding", id_col="vec_id",
-        init="spread",
+        _hash_mod_filter(old, "vec_id", mod), k, iters=3,
+        vec_col="embedding", id_col="vec_id", init="spread",
     ).localCheckpoint(eager=True)
     empty = spark.createDataFrame([], "id long, bkt int, __vn array<double>")
     _, index = semantic_dedup_ingest(

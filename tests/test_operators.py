@@ -655,9 +655,10 @@ class TestKmeansIVF:
         _nearest assignment), spread init at k=100 (Arrow matmul
         assignment; farthest-first there costs 99 sequential passes,
         ~80 s on 4 cores, for an init path k=8 already covers), and the
-        grouped trainer with both inits. The means differ from the
-        reference only in summation order (Spark's avg), hence allclose
-        rather than bitwise equality."""
+        grouped trainer with both inits at k=8 and spread init at k=100
+        (each group's rows under its own model in one Arrow stage). The
+        means differ from the reference only in summation order (Spark's
+        avg), hence allclose rather than bitwise equality."""
         import numpy as np
 
         from kafka_map_reduce_spark.operators import similarity as S
@@ -688,9 +689,9 @@ class TestKmeansIVF:
                 sorted((r.cluster_id, r.centroid) for r in got.collect()),
                 S._lloyd_local(rows, k, 2, init),
             )
-        for init in ("farthest", "spread"):
+        for init, k in (("farthest", 8), ("spread", 8), ("spread", 100)):
             got = S.kmeans_fit_grouped(
-                data, n_clusters=8, iters=2, vec_col="embedding",
+                data, n_clusters=k, iters=2, vec_col="embedding",
                 id_col="vec_id", init=init,
             ).collect()
             for g in (0, 1):
@@ -701,9 +702,26 @@ class TestKmeansIVF:
                     ),
                     S._lloyd_local(
                         [x for x, r in zip(rows, hashed) if r.subspace == g],
-                        8, 2, init,
+                        k, 2, init,
                     ),
                 )
+
+    def test_train_slice_salt_seeds_every_spread_bucket(self, spark):
+        """Spread init seeds bucket xxhash64(id) % k. A training slice
+        cut on the same unsalted hash % mod reaches only k/gcd(mod, k)
+        of those buckets; _hash_mod_filter's salted slice reaches all
+        of them."""
+        from kafka_map_reduce_spark.operators import similarity as S
+
+        data = spark.createDataFrame(
+            [(i, [float(i % 7), float(i % 11)]) for i in range(2000)],
+            "vec_id long, embedding array<double>",
+        )
+        unsalted = data.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
+        for train, seeded in ((S._hash_mod_filter(data, "vec_id", 2), 20),
+                              (unsalted, 10)):
+            cents = S.kmeans_fit(train, n_clusters=20, iters=0, init="spread")
+            assert cents.count() == seeded
 
 
 class TestMisraGries:

@@ -218,8 +218,8 @@ def test_broadcast_assignment_bit_parity_with_closure(spark, planted):
     assert run(closure) == run(hoisted)
     hoisted._kmr_broadcast.unpersist()
     # unpersist (not destroy) stays re-fetchable: re-running the same
-    # plan after unpersist must still work — the lifecycle kmeans_fit's
-    # per-iteration unpersist relies on
+    # plan after unpersist must still work — the lifecycle the Lloyd
+    # loop's per-iteration unpersist (kmeans_fit_grouped) relies on
     assert run(hoisted) == run(closure)
 
 

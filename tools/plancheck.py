@@ -257,6 +257,13 @@ MAX_EXCHANGES = {
     # Lloyd shuffle or the re-rank join going corpus-sized)
     "q_sim_pq": 7,
     "q_sim_ivfpq": 10,
+    # k-means IVF: training runs on the driver before the plan exists
+    # (the bounded-sample path), so these are the two single-partition
+    # centroid-row aggregates (corpus and probe branch), the two-stage
+    # rank and the presentation sort — 5 at sf0.001, sf0.01 and sf0.1;
+    # a 6th means a Lloyd shuffle or a corpus-sized exchange reached
+    # the probe plan
+    "q_sim_ivf_kmeans": 5,
     # two-stage per-domain rank: (source, input-partition) window + final
     # (source) window over <= cap x partitions rows; a 3rd Exchange means
     # the partial stage stopped pruning or a sort snuck in

@@ -230,6 +230,7 @@ def semantic_ingest_audit(spark, data_dir: str, n_runs: int) -> dict:
     from pyspark.sql import functions as F
 
     from kafka_map_reduce_spark.operators.similarity import (
+        _hash_mod_filter,
         kmeans_fit,
         semantic_dedup_ingest,
         semantic_model_params,
@@ -241,9 +242,7 @@ def semantic_ingest_audit(spark, data_dir: str, n_runs: int) -> dict:
     # production sizing policy (semantic_model_params: ~250/cluster up
     # to the 2^15 k-cap, governor scales with expected cluster size)
     k, mod, cap = semantic_model_params(n)
-    train = standing.filter(
-        F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0
-    )
+    train = _hash_mod_filter(standing, "vec_id", mod)
     t0 = time.time()
     cents = kmeans_fit(
         train, k, iters=3, vec_col="embedding", id_col="vec_id", init="spread"
@@ -343,13 +342,12 @@ def semantic_k_sweep(spark, data_dir: str, cluster_targets=(100, 500)) -> dict:
         # and histogram the buckets; clusters over the cap contribute 0
         # (they route to exact dedup, same as inside semantic_dedup)
         from kafka_map_reduce_spark.operators.similarity import (
+            _hash_mod_filter,
             kmeans_fit,
             semantic_dedup_ingest,
         )
 
-        train = emb.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(max(1, n // (50 * k)))) == 0
-        )
+        train = _hash_mod_filter(emb, "vec_id", max(1, n // (50 * k)))
         cents = kmeans_fit(
             train, k, iters=3, vec_col="embedding", id_col="vec_id",
             init="spread",
@@ -939,14 +937,6 @@ def ensure_relational(spark, out_dir: str, replicas: int) -> None:
         f.write("ok\n")
 
 
-# --- recurring attribution probe (folded from the r14/r16 one-off ----------
-# tools in r17, per the r16 verdict item #7): the wall-vs-host-probe
-# no-intercept fit with per-point leave-one-out residuals — the playbook
-# every excursion adjudication since r14 has run (r14 q_agg_group cpu
-# fit, r16 cpu-axis attribution, r17 q_heavy_hitters par-capacity
-# correlation). Reads the pinned BENCH_r*.json artifacts; no Spark.
-
-
 def host_probe_snapshot() -> dict:
     """One single-thread + one 32-way par sample (bench.cpu_probe /
     cpu_par_probe): the capacity readout the r17 heavy-hitters
@@ -964,106 +954,18 @@ def host_probe_snapshot() -> dict:
     }
 
 
-def attribution_history(query: str, axis_key: str) -> list[dict]:
-    """(file, probe, wall) from every sf0.1 BENCH_r*.json carrying both
-    ``calibration[axis_key]`` and ``queries[query]`` — fit inputs read
-    from artifacts, not remembered."""
-    rows = []
-    for f in sorted(os.listdir(REPO)):
-        if not (f.startswith("BENCH_r") and f.endswith(".json")):
-            continue
-        try:
-            doc = json.load(open(os.path.join(REPO, f)))
-        except (json.JSONDecodeError, OSError):
-            continue
-        parsed = doc.get("parsed", doc)
-        if not isinstance(parsed, dict) or parsed.get("sf") != 0.1:
-            continue
-        cal = parsed.get("calibration") or {}
-        q = parsed.get("queries") or {}
-        if cal.get(axis_key) and query in q:
-            rows.append({"file": f, "probe": cal[axis_key], "wall": q[query]})
-    return rows
-
-
-def fit_no_intercept(points: list) -> dict:
-    """Least-squares slope of wall = slope * probe through the origin,
-    with per-point residuals. Existence checks are explicit (ADVICE r16
-    #2): a 0.0 slope is a real degenerate fit, not a missing one."""
-    sxx = sum(x * x for x, _ in points)
-    sxy = sum(x * y for x, y in points)
-    slope = sxy / sxx if sxx > 0 else None
-    resid = []
-    if slope is not None:
-        resid = [
-            round((y - slope * x) / (slope * x), 4) if slope * x != 0 else None
-            for x, y in points
-        ]
-    return {
-        "slope": round(slope, 4) if slope is not None else None,
-        "residuals": resid,
-    }
-
-
-def loo_residuals(points: list) -> list:
-    """Per-point leave-one-out residuals (ADVICE r16 #1): each point is
-    judged against a fit over the OTHER points only, so an excursion
-    under test cannot inflate the slope and shrink its own residual."""
-    out = []
-    for i, (x, y) in enumerate(points):
-        fit = fit_no_intercept([p for j, p in enumerate(points) if j != i])
-        s = fit["slope"]
-        out.append(
-            round((y - s * x) / (s * x), 4)
-            if s is not None and s * x != 0
-            else None
-        )
-    return out
-
-
-def attribution_fit(query: str, axis_key: str = "cpu_sec") -> dict:
-    """The full probe: history + in-sample fit + LOO residuals. A point
-    whose LOO residual sits far outside the others' band on
-    byte-identical code is a host excursion, not an engine change (the
-    r16 verdict shape); re-run the query idle to confirm."""
-    hist = attribution_history(query, axis_key)
-    pts = [(h["probe"], h["wall"]) for h in hist]
-    fit = fit_no_intercept(pts)
-    loo = loo_residuals(pts)
-    return {
-        "metric": "attribution_fit",
-        "query": query,
-        "axis_key": axis_key,
-        **fit,
-        "loo_residuals": loo,
-        "by_file": {
-            h["file"]: {"in_sample": fit["residuals"][i], "loo": loo[i]}
-            for i, h in enumerate(hist)
-        },
-        "n_points": len(pts),
-    }
-
-
 def main() -> int:
     """Usage: python tools/scale_spot.py [n_runs] [--sections=a,b,...]
-                                         [--attribution=query[:axis_key]]
 
     --sections picks from ALL_SECTIONS; the bare default runs
     DEFAULT_SECTIONS (the recurring ~30 min sf1/sf10 battery). The
     heavy one-off *100 witnesses run only when named, or via
-    --sections=all. --attribution runs ONLY the Spark-free
-    wall-vs-probe fit (axis_key defaults to cpu_sec; cpu_par_sec and
-    scan_sec are the other recorded axes) and exits."""
+    --sections=all."""
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     opts = [a for a in sys.argv[1:] if a.startswith("--")]
     n_runs = int(args[0]) if args else 2
     sections = set(DEFAULT_SECTIONS)
     for o in opts:
-        if o.startswith("--attribution="):
-            spec = o.split("=", 1)[1]
-            query, _, axis_key = spec.partition(":")
-            print(json.dumps(attribution_fit(query, axis_key or "cpu_sec")))
-            return 0
         if o.startswith("--sections="):
             raw = o.split("=", 1)[1]
             if raw == "all":
