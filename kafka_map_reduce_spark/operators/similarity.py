@@ -216,16 +216,11 @@ def _unit(V):
     return V / np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)[:, None]
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance (JVM zip_with + fold, codegen)."""
-    return _fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
-
-
 def _l2sq_sql(a: str, b: str) -> str:
-    """SQL-string face of :func:`_l2sq` (r17 parsed-expr treatment —
-    see minhash_signatures): builds the identical zip_with/aggregate
-    tree in one parser call instead of per-lambda py4j round trips.
-    `0.0D` is the same DoubleType literal as F.lit(0.0)."""
+    """Squared L2 distance of two array<double> SQL expressions: a
+    zip_with + sequential fold (codegen, JVM-side), built in one parser
+    call (r17 parsed-expr treatment — see minhash_signatures). The fold
+    adds dims in ascending order from `0.0D`, a DoubleType zero."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"0.0D, (acc, x) -> acc + x)"
@@ -233,25 +228,34 @@ def _l2sq_sql(a: str, b: str) -> str:
 
 
 def _nearest_sql(vec: str, cents: str) -> str:
-    """SQL-string face of :func:`_nearest` — identical struct(d, cid)
-    argmin tree, parsed in one call."""
+    """struct(d, cid) of the nearest centroid from a broadcast centroid
+    array (see :func:`_centroid_row`) — argmin computed INLINE per row
+    (array_min over k candidates, lowest cid wins a tie), so assignment
+    needs no join, no window, no shuffle."""
     return (
         f"array_min(transform({cents}, c -> "
         f"struct({_l2sq_sql(vec, 'c.centroid')} AS d, c.cluster_id AS cid)))"
     )
 
 
-def _nearest(vec: Column, cents: Column) -> Column:
-    """struct(d, cid) of the nearest centroid from a broadcast centroid
-    array — argmin computed INLINE per row (array_min over k candidates),
-    so assignment needs no join, no window, no shuffle."""
-    return F.array_min(
-        F.transform(
-            cents,
-            lambda c: F.struct(
-                _l2sq(vec, c["centroid"]).alias("d"), c["cluster_id"].alias("cid")
-            ),
-        )
+def _probe_sql(vec: str, nprobe: int) -> str:
+    """The coarse probe: the ``nprobe`` nearest buckets of ``vec`` as
+    struct(d, cid, cent) from the broadcast ``__cents`` row, nearest
+    first. Cluster ids are unique, so ``cent`` never decides the
+    order."""
+    return (
+        f"slice(array_sort(transform(__cents, c -> struct("
+        f"{_l2sq_sql(vec, 'c.centroid')} AS d, c.cluster_id AS cid, "
+        f"c.centroid AS cent))), 1, {nprobe})"
+    )
+
+
+def _centroid_row(cents: DataFrame) -> DataFrame:
+    """One broadcastable row: ``__cents``, the array of (cluster_id,
+    centroid) structs of a coarse model — what :func:`_nearest_sql` and
+    :func:`_probe_sql` read."""
+    return cents.agg(
+        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
     )
 
 
@@ -591,10 +595,16 @@ def train_slice(
     the target — every correctness-gated test SF — where this is a
     bit-no-op (pytest-pinned per caller). Assignment/encoding stay
     full-corpus regardless: only what TRAINING scans is bounded."""
+    return _hash_mod_filter(corpus, id_col, _train_mod(corpus, train_sample_n))
+
+
+def _train_mod(corpus: DataFrame, train_sample_n: int | None) -> int:
+    """The 1-in-mod training-sample rule of :func:`train_slice`: mod =
+    corpus_count // train_sample_n, at least 1; 1 without a target (and
+    then the corpus is not counted)."""
     if not train_sample_n:
-        return corpus
-    mod = max(1, corpus.count() // train_sample_n)
-    return _hash_mod_filter(corpus, id_col, mod)
+        return 1
+    return max(1, corpus.count() // train_sample_n)
 
 
 # r17 (optimization guide §1.2 order-of-operations + §5 driver rules):
@@ -655,8 +665,9 @@ def _lloyd_local(rows, n_clusters: int, iters: int, init: str):
     assignment — so this twin accumulates distances sequentially over
     dims (bit-matching the fold's add order) in that regime and only
     uses the gemm form above it, exactly mirroring the Spark path's own
-    kernel split (_nearest below _ARROW_ASSIGN_MIN_K, Arrow matmul
-    above). Means accumulate members in ascending-id order."""
+    kernel split (the JVM :func:`_nearest_sql` argmin at or below
+    _ARROW_ASSIGN_MIN_K, the Arrow matmul above it). Means accumulate
+    members in ascending-id order."""
     rows = sorted(rows, key=lambda r: r[0])
     vids = np.array([r[0] for r in rows], dtype="int64")
     V = np.array([list(r[1]) for r in rows], dtype="float64")
@@ -667,7 +678,7 @@ def _lloyd_local(rows, n_clusters: int, iters: int, init: str):
             cn = (C * C).sum(axis=1)
             return (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + cn[None, :]
         # sequential fold over dims: acc += (x_t - y_t)^2, t ascending —
-        # the JVM _l2sq add order, reproduced elementwise
+        # _l2sq_sql's add order, reproduced elementwise
         d2 = np.zeros((len(V), len(C)))
         for t in range(V.shape[1]):
             diff = V[:, t, None] - C[None, :, t]
@@ -738,9 +749,11 @@ def ivf_kmeans_topk(
     train_sample_n: int | None = None,
 ) -> DataFrame:
     """IVF ANN with a k-means-trained coarse quantizer: corpus rows live in
-    their nearest-centroid bucket; each probe searches its ``nprobe``
-    nearest buckets (recall knob). One equi-join on bucket id — never an
-    all-pairs product. Same output contract as brute_force_topk.
+    their nearest-centroid bucket (:func:`_assign_buckets`, the semantic
+    family's rule); each probe searches its ``nprobe`` nearest buckets
+    (:func:`_probe_sql`, the recall knob). One equi-join on bucket id —
+    never an all-pairs product. Same output contract as
+    brute_force_topk.
 
     ``centroids`` (a ``kmeans_fit`` result, typically persisted to a
     parquet table) skips training — the production shape: the quantizer
@@ -758,46 +771,24 @@ def ivf_kmeans_topk(
             n_clusters, iters, vec_col, id_col,
         )
     )
-    cent_row = cents.agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
-    )
-    c = (
+    c = _assign_buckets(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
-        )
-        .join(F.broadcast(cent_row))
-        .withColumn("bkt", _nearest(_as_double(F.col("vec")), F.col("__cents"))["cid"])
-        .drop("__cents")
-    )
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("vec"),
+            _as_double(F.col(vec_col)).alias("__v"),
+        ),
+        cents,
+        n_clusters,
+    ).drop("__v", "__cents")
+    probe = _probe_sql("transform(probe_vec, x -> CAST(x AS DOUBLE))", nprobe)
     p = (
         probes.select(
             F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
         )
-        .join(F.broadcast(cent_row))
-        .withColumn(
-            "bkt",
-            F.explode(
-                F.transform(
-                    F.slice(
-                        F.array_sort(
-                            F.transform(
-                                F.col("__cents"),
-                                lambda cc: F.struct(
-                                    _l2sq(
-                                        _as_double(F.col("probe_vec")), cc["centroid"]
-                                    ).alias("d"),
-                                    cc["cluster_id"].alias("cid"),
-                                ),
-                            )
-                        ),
-                        1,
-                        nprobe,
-                    ),
-                    lambda s: s["cid"],
-                )
-            ),
+        .join(F.broadcast(_centroid_row(cents)))
+        .selectExpr(
+            "probe_id", "probe_vec", f"explode(transform({probe}, s -> s.cid)) AS bkt"
         )
-        .drop("__cents")
     )
     scored = c.join(F.broadcast(p), "bkt").withColumn(
         "sim", cosine(F.col("probe_vec"), F.col("vec"))
@@ -911,7 +902,7 @@ def _lloyd(
         # decorrelates seeds from id order, trading farthest-first's
         # k-center guarantee for a k-independent cost. Empty buckets
         # just yield < k clusters, which every consumer tolerates
-        # (codes are keyed by cluster_id — see pq_topk's map lookup).
+        # (codes are keyed by cluster_id — see _adc_scored's map lookup).
         cents = (
             vecs.withColumn(
                 "__h",
@@ -942,11 +933,9 @@ def _lloyd(
                 )
                 .withColumn(
                     "__dmin",
-                    F.array_min(
-                        F.transform(
-                            F.col("__cl"),
-                            lambda c: _l2sq(F.col("__v"), c["centroid"]),
-                        )
+                    F.expr(
+                        "array_min(transform(__cl, c -> "
+                        f"{_l2sq_sql('__v', 'c.centroid')}))"
                     ),
                 )
                 .groupBy("__g")
@@ -980,9 +969,8 @@ def _lloyd(
         else:
             assigned = vecs.join(F.broadcast(books(cents))).withColumn(
                 "__cid",
-                _nearest(
-                    F.col("__v"),
-                    F.element_at(F.col("__books"), F.col("__g") + 1),
+                F.expr(
+                    _nearest_sql("__v", "element_at(__books, __g + 1)")
                 )["cid"],
             )
         cents = (
@@ -1139,9 +1127,10 @@ def sq8_topk(
     fold — one corpus-code scan per probe batch, probes broadcast,
     ranked_topk's two-stage partial rank for the survivors. ``sim`` =
     negative squared L2 like pq_topk, so recall is directly comparable.
-    ``rerank_corpus`` enables the same shortlist + exact re-rank shape
-    as PQ (quantization error then only costs recall when a true
-    neighbor misses the shortlist — pinned in tests/test_sq8.py)."""
+    ``rerank_corpus`` enables the shortlist + exact re-rank tail PQ and
+    IVFADC share (:func:`_rerank_topk`; quantization error then only
+    costs recall when a true neighbor misses the shortlist — pinned in
+    tests/test_sq8.py)."""
     p = probes.select(
         F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__pv")
     )
@@ -1159,9 +1148,24 @@ def sq8_topk(
             ),
         )
         .join(F.broadcast(p))
-        .withColumn("sim", -_l2sq(F.col("__pv"), F.col("__dec")))
+        .withColumn("sim", F.expr("-" + _l2sq_sql("__pv", "__dec")))
         .select("probe_id", "neighbor_id", "sim")
     )
+    return _rerank_topk(
+        scored, probes, rerank_corpus, shortlist, k, vec_col, id_col
+    )
+
+
+def _rerank_topk(
+    scored: DataFrame, probes: DataFrame, rerank_corpus: DataFrame | None,
+    shortlist: int, k: int, vec_col: str, id_col: str,
+) -> DataFrame:
+    """The exact re-rank tail of the quantized top-k operators (Jegou et
+    al. §V): the top ``shortlist`` of the quantized ``scored`` set
+    (probe_id, neighbor_id, sim) per probe fetch their ORIGINAL vectors
+    from ``rerank_corpus`` (a candidate-sized join), and exact ``sim`` =
+    -squared L2 to the probe decides the final top-k. Without
+    ``rerank_corpus`` the quantized scores rank directly."""
     if rerank_corpus is None:
         return ranked_topk(scored, k)
     short = ranked_topk(scored, shortlist).select("probe_id", "neighbor_id")
@@ -1169,10 +1173,13 @@ def sq8_topk(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("__cv"),
     )
+    pvecs = probes.select(
+        F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__pv")
+    )
     exact = (
         short.join(cvecs, "neighbor_id")
-        .join(F.broadcast(p), "probe_id")
-        .withColumn("sim", -_l2sq(F.col("__pv"), F.col("__cv")))
+        .join(F.broadcast(pvecs), "probe_id")
+        .withColumn("sim", F.expr("-" + _l2sq_sql("__pv", "__cv")))
         .select("probe_id", "neighbor_id", "sim")
     )
     return ranked_topk(exact, k)
@@ -1330,19 +1337,19 @@ def pq_topk(
     """Asymmetric-distance top-k: probes stay exact, the corpus is its PQ
     codes. Per probe and subspace, the distance to every centroid is
     precomputed into a lookup table (m x n_codes doubles per probe —
-    built inside the broadcast join, so probe LUTs are broadcast, never
-    shuffled); a corpus row's distance is then m array lookups + a fold,
-    independent of the original dimensionality. One scan of the code
-    table per query batch, TakeOrdered top-k per probe via ranked_topk.
+    :func:`_adc_scored`, shared with ivfpq_topk); a corpus row's
+    distance is then m array lookups + a fold, independent of the
+    original dimensionality. One scan of the code table per query
+    batch, TakeOrdered top-k per probe via ranked_topk.
     Output contract matches brute_force_topk with ``sim`` = negative
     squared L2 (larger is nearer), so recall is comparable directly.
 
     ``rerank_corpus`` enables the standard ADC-shortlist + exact-re-rank
-    pipeline (Jegou et al. §V): the code scan keeps only the top
-    ``shortlist`` per probe, the ORIGINAL vectors are fetched for just
-    those candidates (a candidate-sized semi-join against the corpus
-    table — the "vectors on disk, shortlist fetch" production shape),
-    and exact L2 decides the final top-k. Quantization error then only
+    pipeline (Jegou et al. §V; :func:`_rerank_topk`): the code scan keeps
+    only the top ``shortlist`` per probe, the ORIGINAL vectors are
+    fetched for just those candidates (a candidate-sized semi-join
+    against the corpus table — the "vectors on disk, shortlist fetch"
+    production shape), and exact L2 decides the final top-k. Quantization error then only
     costs recall when a true neighbor falls outside the shortlist, which
     the floor test pins. Measured on the near-random fixture embeddings
     (the PQ-hostile case — no cluster structure for codebooks to
@@ -1351,9 +1358,33 @@ def pq_topk(
     shortlist 25 / 50 / 100. The floor test pins shortlist=100 >= 0.70.
     A fixed few-hundred-row shortlist is a vanishing fraction of a real
     corpus, so the re-rank join stays candidate-sized at any scale."""
+    queries = probes.select(
+        F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__q")
+    )
+    scored = _adc_scored(probes, vec_col, queries, encoded, codebooks, m)
+    return _rerank_topk(
+        scored, probes, rerank_corpus, shortlist, k, vec_col, id_col
+    )
+
+
+def _adc_scored(
+    probes: DataFrame, vec_col: str, queries: DataFrame, encoded: DataFrame,
+    codebooks: DataFrame, m: int, on: tuple[str, ...] = (),
+) -> DataFrame:
+    """ADC scores of PQ ``encoded`` (id, codes[, *on]) against
+    ``queries`` = (probe_id, *on, __q): per query and subspace, the
+    squared distance of ``__q``'s subvector to every centroid goes into
+    a lookup table keyed by cluster_id (built inside the broadcast join,
+    so the LUTs are broadcast, never shuffled), and a code row's ``sim``
+    is minus the sum of its m lookups. Rows pair up on the ``on``
+    columns (IVFADC's bucket), or all with all. Returns (*on,
+    neighbor_id, probe_id, sim).
+
+    d_sub comes from the codebook, and ``probes``' ``vec_col`` must
+    split into m x d_sub (:func:`_check_pq_dim`) — a mismatch raises
+    instead of scoring truncated slices."""
     d_sub = _codebook_d_sub(codebooks)
     _check_pq_dim(probes, vec_col, m, d_sub, "probes")
-    book_row = _codebook_row(codebooks)
     # parsed-expr face (r17) of the per-subspace LUT: keyed by
     # cluster_id, not position — kmeans_fit drops clusters that lose
     # every point, so codes need not be contiguous, and a positional
@@ -1361,20 +1392,15 @@ def pq_topk(
     lut = (
         f"transform(sequence(0, {m - 1}), j -> map_from_entries("
         f"transform(__books[j], c -> struct(c.cluster_id AS k, "
-        f"{_l2sq_sql(f'slice(__pv, j * {d_sub} + 1, {d_sub})', 'c.centroid')}"
+        f"{_l2sq_sql(f'slice(__q, j * {d_sub} + 1, {d_sub})', 'c.centroid')}"
         f" AS v))))"
     )
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"),
-            _as_double(F.col(vec_col)).alias("__pv"),
-        )
-        .join(F.broadcast(book_row))
-        .selectExpr("probe_id", f"{lut} AS __lut")
+    luts = queries.join(F.broadcast(_codebook_row(codebooks))).selectExpr(
+        "probe_id", *on, f"{lut} AS __lut"
     )
-    scored = (
-        encoded.select(F.col("id").alias("neighbor_id"), "codes")
-        .join(F.broadcast(p))
+    return (
+        encoded.select(F.col("id").alias("neighbor_id"), *on, "codes")
+        .join(F.broadcast(luts), list(on) or None)
         .withColumn(
             "sim",
             F.expr(
@@ -1385,23 +1411,6 @@ def pq_topk(
         )
         .drop("codes", "__lut")
     )
-    if rerank_corpus is None:
-        return ranked_topk(scored, k)
-    short = ranked_topk(scored, shortlist).select("probe_id", "neighbor_id")
-    cvecs = rerank_corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__cv"),
-    )
-    pvecs = probes.select(
-        F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__pv")
-    )
-    exact = (
-        short.join(cvecs, "neighbor_id")
-        .join(F.broadcast(pvecs), "probe_id")
-        .withColumn("sim", -_l2sq(F.col("__pv"), F.col("__cv")))
-        .drop("__pv", "__cv")
-    )
-    return ranked_topk(exact, k)
 
 
 # ---- IVFADC: coarse IVF buckets + PQ on residuals --------------------------
@@ -1459,8 +1468,8 @@ def ivfpq_index(
     correctness-gated test SF), where this parameter is numerically a
     no-op (pytest-pinned)."""
     mod = 1
-    if train_sample_n and (centroids is None or codebooks is None):
-        mod = max(1, corpus.count() // train_sample_n)
+    if centroids is None or codebooks is None:
+        mod = _train_mod(corpus, train_sample_n)
 
     cents = (
         centroids
@@ -1470,15 +1479,12 @@ def ivfpq_index(
             n_clusters, iters, vec_col, id_col,
         )
     )
-    cent_row = cents.agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
-    )
     # parsed-expr face (r17): assignment + residual as two selectExpr
     # steps (bkt must be a named column before the residual lookup
     # references it, exactly like the withColumn chain it replaces).
     resid = (
         corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__v"))
-        .join(F.broadcast(cent_row))
+        .join(F.broadcast(_centroid_row(cents)))
         .selectExpr(
             f"{_bq(id_col)}",
             "__v",
@@ -1527,76 +1533,37 @@ def ivfpq_topk(
     rerank_corpus: DataFrame | None = None, shortlist: int = 50,
 ) -> DataFrame:
     """ADC top-k over the IVFADC layout: each probe scans only its
-    ``nprobe`` nearest buckets' codes, scoring residual distances via a
+    ``nprobe`` nearest buckets' codes (:func:`_probe_sql`, the coarse
+    probe of ivf_kmeans_topk), scoring residual distances via a
     per-(probe, bucket) LUT — the probe's residual differs per bucket, so
     the LUT carries the bucket id and the code join is on bkt (bounded
-    candidates, never the corpus). Output contract = pq_topk (sim is
-    negative squared L2 to the reconstruction); ``rerank_corpus`` adds
-    the exact-re-rank tail stage."""
-    cent_row = coarse.agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
-    )
-    book_row = _codebook_row(codebooks)
-    # parsed-expr faces (r17): nprobe nearest coarse buckets, then the
-    # residual vs EACH bucket, then the per-(probe, bucket) LUT — the
-    # identical trees the withColumn/lambda chain built, in 3 parses.
-    cand = (
-        f"slice(array_sort(transform(__cents, c -> struct("
-        f"{_l2sq_sql('__pv', 'c.centroid')} AS d, c.cluster_id AS cid, "
-        f"c.centroid AS cent))), 1, {nprobe})"
-    )
-    dsub_i = f"CAST(FLOOR(size(__presid) / {m}) AS INT)"
-    lut = (
-        f"transform(sequence(0, {m - 1}), j -> map_from_entries("
-        f"transform(__books[j], c -> struct(c.cluster_id AS k, "
-        + _l2sq_sql(
-            f"slice(__presid, j * {dsub_i} + 1, {dsub_i})", "c.centroid"
-        )
-        + " AS v))))"
-    )
-    p = (
+    candidates, never the corpus). Scoring is pq_topk's
+    :func:`_adc_scored`, with its m x d_sub check against the codebooks;
+    output contract = pq_topk (sim is negative squared L2 to the
+    reconstruction); ``rerank_corpus`` adds the shared exact re-rank
+    tail (:func:`_rerank_topk`)."""
+    # the nprobe nearest coarse buckets, then the probe's residual
+    # against EACH bucket: the query side of the per-(probe, bucket) LUT
+    queries = (
         probes.select(
             F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__pv")
         )
-        .join(F.broadcast(cent_row))
-        .selectExpr("probe_id", "__pv", f"explode({cand}) AS __c")
+        .join(F.broadcast(_centroid_row(coarse)))
+        .selectExpr(
+            "probe_id", "__pv", f"explode({_probe_sql('__pv', nprobe)}) AS __c"
+        )
         .selectExpr(
             "probe_id",
             "__c['cid'] AS bkt",
-            "zip_with(__pv, __c['cent'], (a, b) -> a - b) AS __presid",
+            "zip_with(__pv, __c['cent'], (a, b) -> a - b) AS __q",
         )
-        .join(F.broadcast(book_row))
-        .selectExpr("probe_id", "bkt", f"{lut} AS __lut")
     )
-    scored = (
-        encoded.select(F.col("id").alias("neighbor_id"), "bkt", "codes")
-        .join(F.broadcast(p), "bkt")
-        .withColumn(
-            "sim",
-            F.expr(
-                "-aggregate(zip_with(codes, __lut, "
-                "(code, lut) -> element_at(lut, code)), "
-                "0.0D, (acc, x) -> acc + x)"
-            ),
-        )
-        .drop("codes", "__lut")
+    scored = _adc_scored(
+        probes, vec_col, queries, encoded, codebooks, m, on=("bkt",)
     )
-    if rerank_corpus is None:
-        return ranked_topk(scored, k)
-    short = ranked_topk(scored, shortlist).select("probe_id", "neighbor_id")
-    cvecs = rerank_corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cv")
+    return _rerank_topk(
+        scored, probes, rerank_corpus, shortlist, k, vec_col, id_col
     )
-    pvecs = probes.select(
-        F.col(id_col).alias("probe_id"), _as_double(F.col(vec_col)).alias("__pv")
-    )
-    exact = (
-        short.join(cvecs, "neighbor_id")
-        .join(F.broadcast(pvecs), "probe_id")
-        .withColumn("sim", -_l2sq(F.col("__pv"), F.col("__cv")))
-        .drop("__pv", "__cv")
-    )
-    return ranked_topk(exact, k)
 
 
 # ---- Embedding near-dup at scale: random-hyperplane LSH --------------------
@@ -1918,18 +1885,29 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
 
 def _assign_buckets(base: DataFrame, cents: DataFrame, k: int) -> DataFrame:
     """``base`` plus ``bkt``, the nearest of the ``k`` centroids to its
-    ``__v``: the JVM inline argmin at or below _ARROW_ASSIGN_MIN_K,
-    :func:`_assign_model`'s Arrow kernel above it."""
+    ``__v``: the JVM inline argmin (:func:`_nearest_sql`) at or below
+    _ARROW_ASSIGN_MIN_K, :func:`_assign_model`'s Arrow kernel above it.
+    The corpus-assignment rule of ivf_kmeans_topk and the SemDeDup
+    pair."""
     if k > _ARROW_ASSIGN_MIN_K:
         assign = _assign_model(
             cents.collect(), sc=base.sparkSession.sparkContext
         )
         return base.withColumn("bkt", assign(F.col("__v")))
-    cent_row = cents.agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__cents")
+    return base.join(F.broadcast(_centroid_row(cents))).withColumn(
+        "bkt", F.expr(_nearest_sql("__v", "__cents"))["cid"]
     )
-    return base.join(F.broadcast(cent_row)).withColumn(
-        "bkt", _nearest(F.col("__v"), F.col("__cents"))["cid"]
+
+
+def _cap_clusters(rows: DataFrame, max_cluster_size: int | None) -> DataFrame:
+    """The SemDeDup hot-cluster governor: ``rows`` of the clusters
+    (``bkt``) with at most ``max_cluster_size`` rows — over-full ones
+    route to exact dedup. None keeps every cluster."""
+    if max_cluster_size is None:
+        return rows
+    counts = rows.groupBy("bkt").agg(F.count(F.lit(1)).alias("__n"))
+    return rows.join(
+        counts.filter(F.col("__n") <= max_cluster_size).select("bkt"), "bkt"
     )
 
 
@@ -2004,12 +1982,7 @@ def semantic_dedup(
     assigned = _assign_buckets(base, cents, n_clusters).select(
         "id", "bkt", F.col("__u").alias("__vn")
     ).localCheckpoint(eager=False)  # cap-count + join sides consume
-    if max_cluster_size is not None:
-        counts = assigned.groupBy("bkt").agg(F.count(F.lit(1)).alias("__n"))
-        assigned = assigned.join(
-            counts.filter(F.col("__n") <= max_cluster_size).select("bkt"),
-            "bkt",
-        )
+    assigned = _cap_clusters(assigned, max_cluster_size)
     # Pair-stream governor (r10 verdict #5): "auto" sizes the per-
     # cluster emitted-pair cap at 4× the size governor — a size-capped
     # hot cluster's full clique is max_cluster_size²/2 pairs (2M at the
@@ -2151,13 +2124,7 @@ def semantic_dedup_ingest(
     union = new_rows.withColumn("is_new", F.lit(True)).unionByName(
         old_rows.withColumn("is_new", F.lit(False))
     )
-    if max_cluster_size is not None:
-        counts = union.groupBy("bkt").agg(F.count(F.lit(1)).alias("__n"))
-        union = union.join(
-            counts.filter(F.col("__n") <= max_cluster_size).select("bkt"),
-            "bkt",
-        )
-    pairs = union.groupBy("bkt").applyInPandas(
+    pairs = _cap_clusters(union, max_cluster_size).groupBy("bkt").applyInPandas(
         _bucket_pairs_vs_new_fn(threshold),
         "id_a long, id_b long, sim double",
     )

@@ -618,7 +618,7 @@ class TestKmeansIVF:
         )
         assigned = (
             data.join(F.broadcast(cent_row))
-            .withColumn("cid", S._nearest(F.col("embedding"), F.col("__cents"))["cid"])
+            .withColumn("cid", F.expr(S._nearest_sql("embedding", "__cents"))["cid"])
             .groupBy("planted")
             .agg(F.countDistinct("cid").alias("n_learned"))
         )

@@ -438,16 +438,22 @@ def test_ivfpq_sampled_training_recall_floor(spark, emb):
     )
 
 
-def test_pq_dim_mismatch_fails_loudly(spark, emb, books):
+def test_pq_dim_mismatch_fails_loudly(spark, emb, books, ivfpq):
     """Externally-supplied codebooks whose m*d_sub disagrees with the
     vector dim must raise, not silently floor(dim/m) and drop trailing
     dims from codes and probe LUT slices (which skews every ADC
-    distance)."""
+    distance). IVFADC scores through the same ADC helper, so it raises
+    too instead of returning NULL sims."""
+    from kafka_map_reduce_spark.operators.similarity import ivfpq_topk
+
     with pytest.raises(ValueError, match="dim"):
         pq_encode(emb, books, m=M - 1)
     enc = pq_encode(emb, books, m=M)
     with pytest.raises(ValueError, match="dim"):
         pq_topk(emb.limit(2), enc, books, m=M - 1).collect()
+    coarse, ivf_books, ivf_enc = ivfpq
+    with pytest.raises(ValueError, match="dim"):
+        ivfpq_topk(emb.limit(2), coarse, ivf_books, ivf_enc, m=M - 1).collect()
 
 
 def test_pq_fit_train_sample_noop_when_corpus_small(spark, emb, books):

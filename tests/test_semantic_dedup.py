@@ -155,7 +155,7 @@ def test_arrow_assignment_matches_jvm(spark, planted):
     from kafka_map_reduce_spark.operators.similarity import (
         _as_double,
         _assign_arrow,
-        _nearest,
+        _nearest_sql,
         kmeans_fit,
     )
 
@@ -169,9 +169,11 @@ def test_arrow_assignment_matches_jvm(spark, planted):
         for r in e.join(F.broadcast(cent_row))
         .select(
             "vec_id",
-            _nearest(_as_double(F.col("embedding")), F.col("__cents"))[
-                "cid"
-            ].alias("cid"),
+            F.expr(
+                _nearest_sql(
+                    "transform(embedding, x -> CAST(x AS DOUBLE))", "__cents"
+                )
+            )["cid"].alias("cid"),
         )
         .collect()
     }

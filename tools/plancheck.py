@@ -9,6 +9,7 @@ queries viable at 100 TB.
   count (a silent extra shuffle is the costliest regression at 100 TB).
 - Python-stage budgets: the vector/embedding plans must not exceed their
   count of JVM<->Python Arrow stages.
+- No runtime bloom-filter subqueries (``might_contain``) in any plan.
 
 Usage: python tools/plancheck.py [sf_dir]
 """
@@ -334,6 +335,15 @@ MAX_PYTHON_STAGES = {
 }
 _PYTHON_STAGE = r"^\(\d+\) (?:ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas)\b"
 
+# Runtime bloom filters: InjectRuntimeFilter plans a might_contain
+# subquery into a join's consumer when the other side's size estimate
+# looks large. A Project over a parallelize-built model frame (whose
+# size Spark does not know) turns the unknown into ~7.7e18 bytes and
+# sets this off: each filter is one more subquery over the model and
+# its exchanges. No registered plan is designed to carry one, so the
+# budget is 0 for every plan.
+_BLOOM_FILTER = "might_contain("
+
 # Per-round Exchange budgets for the large-star/small-star contraction
 # (operators/dedup.py:star_round) — the registered q_dedup_clusters_star
 # plan is localCheckpoint-truncated, so the shape that actually repeats
@@ -429,6 +439,9 @@ def main() -> int:
                     f"{n_py} Python stages in plan, budget "
                     f"{MAX_PYTHON_STAGES[name]}"
                 )
+        n_bloom = plan.count(_BLOOM_FILTER)
+        if n_bloom:
+            problems.append(f"{n_bloom} runtime bloom-filter predicate(s), budget 0")
         if problems:
             print(f"FAIL {name}: {problems}")
             bad += 1
