@@ -342,7 +342,7 @@ def lsh_candidates_against(
     # it rides inside the plan (raise_error on the projected key, zero
     # extra jobs) and fires only when a colliding id meets itself in a
     # bucket — full enforcement needs an id anti-join, which
-    # incremental_near_dedup performs (check_disjoint=True) because its
+    # incremental_near_dedup performs on every call because its
     # novel/dup split would silently misroute on an undetected overlap.
     guarded_id_a = (
         F.when(
@@ -380,7 +380,6 @@ def incremental_near_dedup(
     min_jaccard: float = 0.5,
     max_bucket_size: int | None = None,
     cache_registry: list | None = None,
-    check_disjoint: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One ingest step of incremental corpus building: detect which docs
     of ``new_docs`` are near-dups of the already-indexed corpus or of
@@ -404,11 +403,10 @@ def incremental_near_dedup(
 
     Id spaces of new batch and corpus must be DISJOINT — the novel/dup
     split discriminates pair sides by id membership, so an overlap would
-    silently drop the wrong document. ``check_disjoint=True`` (default)
-    enforces it with one anti-join against the corpus id column (a
-    single-column scan; cheap next to the batch's own joins — disable
-    only if ids are disjoint by construction, e.g. monotonic ingest
-    counters). ``lsh_candidates_against``'s in-plan guard alone is
+    silently drop the wrong document. Every call enforces it with one
+    id join against the corpus id column (a single-column scan; cheap
+    next to the batch's own joins) and raises ``ValueError`` on an
+    overlap. ``lsh_candidates_against``'s in-plan guard alone is
     best-effort.
 
     ``cache_registry``: pass a list to collect the batch-sized DataFrames
@@ -426,19 +424,18 @@ def incremental_near_dedup(
     # branch re-explodes and re-hashes the batch, and one ingest step
     # costs more than the full self-dedup it is meant to avoid (measured
     # 14.3s -> see bench incremental_ingest for the fixed number).
-    if check_disjoint:
-        overlap = (
-            new_docs.select(F.col(id_col).alias("id"))
-            .join(corpus_docs.select(F.col(id_col).alias("id")), "id")
-            .limit(1)
-            .count()
+    overlap = (
+        new_docs.select(F.col(id_col).alias("id"))
+        .join(corpus_docs.select(F.col(id_col).alias("id")), "id")
+        .limit(1)
+        .count()
+    )
+    if overlap:
+        raise ValueError(
+            "incremental_near_dedup: new-batch and corpus id spaces "
+            "overlap; the novel/dup split would misroute documents — "
+            "assign disjoint ids"
         )
-        if overlap:
-            raise ValueError(
-                "incremental_near_dedup: new-batch and corpus id spaces "
-                "overlap; the novel/dup split would misroute documents — "
-                "assign disjoint ids"
-            )
     shingled_new = word_shingles(new_docs, text_col, id_col, k).persist()
     sigs_new = minhash_signatures(shingled_new, num_perm).persist()
     if cache_registry is not None:
@@ -500,7 +497,6 @@ def jaccard_verify(
     min_jaccard: float,
     prune_to_candidates: bool | None = False,
     corpus_count: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs only (never all pairs).
 
@@ -518,19 +514,14 @@ def jaccard_verify(
     pass over the shingle table. Below ``AUTO_PRUNE_MIN_CORPUS`` docs the
     decision is already OFF and NO other work happens — the small-corpus
     path pays only the corpus lookup. Only at/above the floor are the
-    candidates persisted and counted (candidates are bounded by design —
-    LSH band buckets, optionally capped — so this is the small side, and
-    the persist lets the verification join reuse the materialization);
-    pruning then turns on when ``2 * |pairs|`` (an upper bound on distinct
-    candidate ids) is under ``AUTO_PRUNE_MAX_RATIO`` of the corpus. Both
-    forced paths and auto return identical answers (unit-tested); the
-    knob only moves shuffle volume. Cache lifecycle: with a
-    ``cache_registry`` the persisted candidates are handed to the caller
-    (unpersist after your actions); without one the candidates are
-    localCheckpoint'ed instead — same materialization reuse across the
-    decision count and the verification join, but the blocks are
-    ContextCleaner-reclaimed on garbage collection, so registry-less
-    invocations (driver/bench runs) cannot accumulate pinned cache.
+    candidates localCheckpoint'ed and counted (candidates are bounded by
+    design — LSH band buckets, optionally capped — so this is the small
+    side, and the checkpoint lets the verification join reuse the
+    materialization); pruning then turns on when ``2 * |pairs|`` (an
+    upper bound on distinct candidate ids) is under
+    ``AUTO_PRUNE_MAX_RATIO`` of the corpus. Both forced paths and auto
+    return identical answers (unit-tested); the knob only moves shuffle
+    volume.
 
     If ``candidates`` already carries per-id set sizes as ``na``/``nb``
     (lsh_candidates forwards them from the minhash aggregate), the two
@@ -549,23 +540,15 @@ def jaccard_verify(
         if corpus_est < AUTO_PRUNE_MIN_CORPUS:
             prune_to_candidates = False
         else:
-            if cache_registry is not None:
-                # caller-managed lifecycle: persist, hand over, caller
-                # unpersists after its actions
-                candidates = candidates.persist()
-                cache_registry.append(candidates)
-            else:
-                # No caller-managed lifecycle: localCheckpoint instead of
-                # persist. The materialization is still shared between
-                # the decision count and the verification join (an
-                # unpersist-after-count would recompute the candidate
-                # join at corpus scale — measured 3.7x on the sf1 capped
-                # query), but checkpoint blocks are reclaimed by the
-                # ContextCleaner when the DataFrame is garbage-collected,
-                # unlike CacheManager entries which pin executor memory
-                # until an explicit unpersist — the leak-per-invocation
-                # the advisor flagged in long-lived driver/bench sessions.
-                candidates = candidates.localCheckpoint(eager=True)
+            # localCheckpoint, not persist: the materialization is shared
+            # between the decision count and the verification join (an
+            # unpersist-after-count would recompute the candidate join at
+            # corpus scale — measured 3.7x on the sf1 capped query), and
+            # checkpoint blocks are reclaimed by the ContextCleaner when
+            # the DataFrame is garbage-collected, unlike CacheManager
+            # entries which pin executor memory until an explicit
+            # unpersist — a leak per invocation in long-lived sessions.
+            candidates = candidates.localCheckpoint(eager=True)
             n_pairs = candidates.count()
             prune_to_candidates = 2 * n_pairs <= AUTO_PRUNE_MAX_RATIO * corpus_est
     carried = {"na", "nb"} <= set(candidates.columns)

@@ -30,13 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.queries.scans import _scratch
+from kafka_map_reduce_spark.queries.twins import _LINE_TOKENS
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import load_table
-
-# Line length (tokens) must match q_text_boilerplate's so the two
-# oracles hash identical lines (queries/tierc_corpus.py _LINE_TOKENS).
-_LINE_TOKENS = 20
 
 ORACLE_COMPACT_CLUSTER = """
     SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
@@ -237,19 +235,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LINE_INDEX_INCREMENTAL = f"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(text, '\\s+') AS a FROM documents
-    ),
-    lines AS (
-      SELECT doc_id,
-             md5(array_to_string(
-               list_slice(a, i * {_LINE_TOKENS} + 1,
-                             i * {_LINE_TOKENS} + {_LINE_TOKENS}), ' ')) AS h
-      FROM toks,
-           unnest(range(0, greatest(
-             CAST(ceil(len(a) / {_LINE_TOKENS}.0) AS BIGINT), 1))) AS t(i)
-    ),
-    cnt AS (SELECT h, count(*) AS occ FROM lines GROUP BY h)
+    WITH {twins.line_hashes()}
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_lines,
            CAST(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS BIGINT)

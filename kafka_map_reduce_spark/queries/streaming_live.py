@@ -28,6 +28,7 @@ from kafka_map_reduce_spark.streaming import (
     Pipeline,
     file_replay_stream,
 )
+from kafka_map_reduce_spark.streaming.pipeline import drain_query
 from kafka_map_reduce_spark.streaming.state import stateful_reduce
 
 
@@ -42,15 +43,6 @@ def _work_dir(sf_dir: str, name: str) -> str:
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     return base
-
-
-def _drain(query, timeout: float = 300.0) -> None:
-    """Await an availableNow stream with a hard deadline: errors AND
-    wedges surface (per-query) instead of hanging the whole harness run
-    or silently returning partial output."""
-    from kafka_map_reduce_spark.streaming.pipeline import drain_query
-
-    drain_query(query, timeout)
 
 
 @query("q_stream_watermark", oracle=None, tags=("streaming",))
@@ -81,12 +73,13 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(2)  # hourly windows at test SF: keep the writer fan-out tiny
     )
     out = os.path.join(wd, "out")
-    _drain(
+    drain_query(
         agg.writeStream.outputMode("append")
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(wd, "ckpt"))
         .option("parquet.block.size", str(4 * 1024 * 1024))
-        .start(out)
+        .start(out),
+        300.0,
     )
     return spark.read.parquet(out)
 
@@ -134,7 +127,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, ["user_id"], init, reduce_fn, flush_fn, state_schema, out_schema
     )
     out = os.path.join(wd, "out")
-    _drain(
+    drain_query(
         # parquet rejects update mode; route through foreachBatch (append
         # per emitted update — single input batch => one row per key).
         # coalesce(1): ~150 keys land spread across every post-shuffle
@@ -146,7 +139,8 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(wd, "ckpt"))
-        .start()
+        .start(),
+        300.0,
     )
     return spark.read.parquet(out)
 
@@ -478,11 +472,12 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, batch_id, corpus_path, index_path, pairs_path
         )
 
-    _drain(
+    drain_query(
         stream.writeStream.foreachBatch(ingest)
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(wd, "ckpt"))
-        .start()
+        .start(),
+        300.0,
     )
     return spark.read.parquet(pairs_path).drop("batch").orderBy("id_a", "id_b")
 
@@ -566,7 +561,7 @@ def q_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = gated_ingest_stream(
         stream, weights, accept, reject, os.path.join(wd, "ckpt")
     )
-    _drain(q)
+    drain_query(q, 300.0)
     acc = spark.read.option("basePath", accept).parquet(
         os.path.join(accept, "batch=*")
     ).select("doc_id", F.col("batch").cast("string").alias("batch"))
@@ -636,8 +631,8 @@ def q_stream_mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     stats = os.path.join(wd, "stats")
-    _drain(
-        mixture_monitor_stream(stream, stats, os.path.join(wd, "ckpt"))
+    drain_query(
+        mixture_monitor_stream(stream, stats, os.path.join(wd, "ckpt")), 300.0
     )
     n_domains = docs.select("source").distinct().count()
     targets = (
@@ -654,7 +649,6 @@ def _watermark_dedup_run(spark: SparkSession, sf_dir: str):
     (max_state_rows, n_batches) that the registered face can't put in
     its output schema — tests/test_watermark_dedup.py asserts on it."""
     from kafka_map_reduce_spark.sources import load_table
-    from kafka_map_reduce_spark.streaming.pipeline import drain_query
 
     wd = _work_dir(sf_dir, "wm_dedup")
     ev = load_table(spark, sf_dir, "events").select(

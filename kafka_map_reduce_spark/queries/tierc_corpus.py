@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_map_reduce_spark.operators.ids import running_total
+from kafka_map_reduce_spark.queries import twins
+from kafka_map_reduce_spark.queries.twins import _LINE_TOKENS
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import load_table
 
@@ -201,26 +203,10 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Line length (tokens) for boilerplate scoring; non-overlapping.
-_LINE_TOKENS = 20
-
-
 @query(
     "q_text_boilerplate",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(text, '\\s+') AS a FROM documents
-    ),
-    lines AS (
-      SELECT doc_id,
-             md5(array_to_string(
-               list_slice(a, i * {_LINE_TOKENS} + 1,
-                             i * {_LINE_TOKENS} + {_LINE_TOKENS}), ' ')) AS h
-      FROM toks,
-           unnest(range(0, greatest(
-             CAST(ceil(len(a) / {_LINE_TOKENS}.0) AS BIGINT), 1))) AS t(i)
-    ),
-    cnt AS (SELECT h, count(*) AS occ FROM lines GROUP BY h)
+    WITH {twins.line_hashes()}
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_lines,
            CAST(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -436,31 +422,17 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (partial and final) do real filtering.
 _DOMAIN_CAP = 3
 
-_QUALITY_SQL = """
-        SELECT doc_id, source,
-               floor((least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) * 0.25
-                      + (1.0 - least(CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
-                                     / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0), 1.0)) * 0.25
-                      + least(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                        x -> x IN ('the','a','and','of','to','in','is','on','for','with'))) AS DOUBLE)
-                              / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0) * 5.0, 1.0) * 0.25
-                      + least(((CAST(length(text) AS DOUBLE) - (CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE) - 1))
-                               / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0)) / 10.0, 1.0) * 0.25)
-                     * 10000 + 0.5) / 10000 AS quality
-        FROM documents
-"""
-
 
 @query(
     "q_domain_cap",
     oracle=f"""
-    WITH q AS ({_QUALITY_SQL})
+    WITH {twins.quality()}
     SELECT source, doc_id, quality, CAST(rank AS INTEGER) AS rank
     FROM (
-        SELECT source, doc_id, quality,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY quality DESC, doc_id) AS rank
-        FROM q
+        SELECT d.source, doc_id, q.quality,
+               row_number() OVER (PARTITION BY d.source
+                                  ORDER BY q.quality DESC, doc_id) AS rank
+        FROM q JOIN documents d USING (doc_id)
     ) WHERE rank <= {_DOMAIN_CAP}
     """,
 )

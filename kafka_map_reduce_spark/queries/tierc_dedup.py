@@ -4,9 +4,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from kafka_map_reduce_spark.operators import dedup as D
 from kafka_map_reduce_spark.operators.similarity import cosine
+from kafka_map_reduce_spark.operators.text import (
+    attach_hash_embed_arrow,
+    quality_score,
+)
+from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import fan_out_scan, load_table
 
@@ -58,45 +64,128 @@ def _bounded_subset(df: DataFrame, id_col: str, bound: int, cap: int) -> DataFra
     return sub
 
 
+# doc_id bound of the all-pairs document fixtures and of their twins
+_BOUND = 200
+
+
+def _bounded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``doc_id < _BOUND`` documents every all-pairs document fixture
+    reads."""
+    return _bounded_subset(
+        load_table(spark, sf_dir, "documents"), "doc_id", bound=_BOUND, cap=1000
+    )
+
+
+def _shingle_pairs(docs: DataFrame) -> DataFrame:
+    """``(id_a, id_b, jaccard)``: exact word-3-shingle Jaccard >= 0.2
+    over every pair of the bounded ``docs`` (twins.shingle_pairs)."""
+    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
+    all_pairs = shingled.select(F.col("id").alias("id_a")).distinct().join(
+        shingled.select(F.col("id").alias("id_b")).distinct(),
+        F.col("id_a") < F.col("id_b"),
+    )
+    return D.jaccard_verify(all_pairs, shingled, min_jaccard=0.2)
+
+
+def _keep_best(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """The retention tail (twins.keep_best): connected components of
+    ``pairs`` over ``docs``, then each component keeps its highest-quality
+    member, ties on (quality DESC, doc_id)."""
+    comp = D.connected_components(pairs, docs.select("doc_id")).select(
+        F.col("id").alias("doc_id"), "cluster_id"
+    )
+    q = docs.select(
+        "doc_id",
+        (
+            F.floor(quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
+        ).alias("quality"),
+    )
+    w = Window.partitionBy("cluster_id")
+    joined = (
+        comp.join(q, "doc_id")
+        .withColumn("n_members", F.count(F.lit(1)).over(w))
+        .withColumn(
+            "rk",
+            F.row_number().over(w.orderBy(F.desc("quality"), F.col("doc_id"))),
+        )
+    )
+    return joined.filter(F.col("rk") == 1).select(
+        "cluster_id",
+        F.col("doc_id").alias("keep_id"),
+        "quality",
+        F.col("n_members").cast("long").alias("n_members"),
+    )
+
+
+def _unit_embed(docs: DataFrame) -> DataFrame:
+    """``(vec_id, embedding, __unit)``: the md5 hash embedding and its
+    bit-exact unit vector from one fused Arrow stage (semantic_dedup
+    skips its own normalize stage via ``unit_col``). Checkpointed
+    eagerly: the k probe, training, assignment and both verify sides all
+    read it, and each would otherwise re-run the embed."""
+    return (
+        attach_hash_embed_arrow(docs, "text", dim=32, unit_col="__unit")
+        .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _semantic_pairs(emb: DataFrame, threshold: float) -> DataFrame:
+    """SemDeDup pairs over a ``_unit_embed`` frame, sized by
+    semantic_model_params (r10 verdict #4): k tracks the corpus at ~250
+    vectors/cluster up to the 2^15 cap, then freezes — the SemDeDup
+    paper's LAION practice — so the 50-per-centroid training sample (and
+    with it Lloyd cost) is CONSTANT in N past ~8.2M docs; the
+    hot-cluster governor scales with the expected cluster size in the
+    capped regime (identical 2000 below it). The count is free on the
+    checkpointed table; spread init keeps seeding k-independent."""
+    from kafka_map_reduce_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_model_params,
+    )
+
+    k, mod, cap = semantic_model_params(emb.count())
+    return semantic_dedup(
+        emb,
+        threshold=threshold,
+        n_clusters=k,
+        iters=3,
+        max_cluster_size=cap,
+        init="spread",
+        train_sample_mod=mod,
+        unit_col="__unit",
+    )
+
+
+def _lsh_embed(docs: DataFrame) -> DataFrame:
+    """``(vec_id, embedding, __buckets)``: the embedding-LSH input. One
+    fused Arrow stage (r18, guide §4.1) computes the embedding AND all 8
+    hyperplane signatures (bit-identical to the two-stage embed ->
+    hyperplane_buckets_all composition, parity-pinned);
+    embedding_near_dup consumes the precomputed buckets and skips its
+    own Python signature stage.
+
+    Callers pass the fanned-out scan (r17): the operator's consume-once
+    checkpoints freeze the scan's partitioning, so the one-row-group
+    bench scan pinned the Arrow hash-embed + signature matmuls AND the
+    candidate/verify stages at 1 task (r17 profile: two 1-task
+    1.1-cpu-sec stages); keyed fan-out, corpus-scale no-op by the gate."""
+    return attach_hash_embed_arrow(
+        docs, "text", dim=32, buckets_col="__buckets"
+    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
+
+
 @query(
     "q_dedup_ngram_jaccard",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents WHERE doc_id < 200
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(a) - 1, 1)),
-                                     i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS s
-        FROM toks
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS i
-        FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT id_a, id_b,
-           floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000
-             AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
+    oracle=f"""
+    WITH {twins.shingle_pairs(_BOUND)}
+    SELECT id_a, id_b, floor(j * 10000 + 0.5) / 10000 AS jaccard FROM pairs
     """,
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram (word-shingle) Jaccard near-dup pairs on a doc subset
     — the exact-verification half of the MinHash pipeline, SQL-checkable."""
-    docs = _bounded_subset(
-        load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
-    )
-    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
-    pairs = shingled.select(F.col("id").alias("id_a")).distinct().join(
-        shingled.select(F.col("id").alias("id_b")).distinct(),
-        F.col("id_a") < F.col("id_b"),
-    )
-    return D.jaccard_verify(pairs, shingled, min_jaccard=0.2)
+    return _shingle_pairs(_bounded_docs(spark, sf_dir))
 
 
 @query("q_dedup_near", oracle=None, tags=("approx",))
@@ -246,40 +335,11 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE
-    toks AS (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents WHERE doc_id < 200
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(a) - 1, 1)),
-                                     i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS s
-        FROM toks
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS i
-        FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON id_a = sa.doc_id
-        JOIN sizes sb ON id_b = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents WHERE doc_id < 200
-        UNION
-        SELECT reach.id, edges.dst FROM reach JOIN edges ON reach.r = edges.src
-    )
-    SELECT CAST(id AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY id
+    oracle=f"""
+    WITH RECURSIVE {twins.shingle_pairs(_BOUND)},{twins.closure(_BOUND)}
+    SELECT CAST(doc_id AS BIGINT) AS doc_id,
+           CAST(cluster_id AS BIGINT) AS cluster_id
+    FROM comp
     """,
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,17 +351,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH pair stream (large-star/small-star contraction, O(log n)
     rounds — operators/dedup.py:connected_components; this fixture is
     small enough for the operator's driver-local union-find gate)."""
-    docs = _bounded_subset(
-        load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
-    )
-    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
-    all_pairs = shingled.select(F.col("id").alias("id_a")).distinct().join(
-        shingled.select(F.col("id").alias("id_b")).distinct(),
-        F.col("id_a") < F.col("id_b"),
-    )
-    pairs = D.jaccard_verify(all_pairs, shingled, min_jaccard=0.2).select(
-        "id_a", "id_b"
-    )
+    docs = _bounded_docs(spark, sf_dir)
+    pairs = _shingle_pairs(docs).select("id_a", "id_b")
     comp = D.connected_components(pairs, docs.select("doc_id"))
     return comp.select(F.col("id").alias("doc_id"), "cluster_id")
 
@@ -397,40 +448,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_clusters_star",
-    oracle="""
-    WITH RECURSIVE
-    toks AS (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents WHERE doc_id < 200
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(a) - 1, 1)),
-                                     i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS s
-        FROM toks
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS i
-        FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON id_a = sa.doc_id
-        JOIN sizes sb ON id_b = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents WHERE doc_id < 200
-        UNION
-        SELECT reach.id, edges.dst FROM reach JOIN edges ON reach.r = edges.src
-    )
-    SELECT CAST(id AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY id
+    oracle=f"""
+    WITH RECURSIVE {twins.shingle_pairs(_BOUND)},{twins.closure(_BOUND)}
+    SELECT CAST(doc_id AS BIGINT) AS doc_id,
+           CAST(cluster_id AS BIGINT) AS cluster_id
+    FROM comp
     """,
 )
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -439,17 +461,8 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star loop of operators/dedup.py:connected_components,
     so this row's recursive-CTE transitive-closure oracle checks the
     loop every corpus-scale input takes, not the small-graph shortcut."""
-    docs = _bounded_subset(
-        load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
-    )
-    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
-    all_pairs = shingled.select(F.col("id").alias("id_a")).distinct().join(
-        shingled.select(F.col("id").alias("id_b")).distinct(),
-        F.col("id_a") < F.col("id_b"),
-    )
-    pairs = D.jaccard_verify(all_pairs, shingled, min_jaccard=0.2).select(
-        "id_a", "id_b"
-    )
+    docs = _bounded_docs(spark, sf_dir)
+    pairs = _shingle_pairs(docs).select("id_a", "id_b")
     comp = D.connected_components(pairs, docs.select("doc_id"), local_max_edges=0)
     return comp.select(F.col("id").alias("doc_id"), "cluster_id")
 
@@ -490,65 +503,9 @@ def q_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_keep_best",
-    oracle="""
-    WITH RECURSIVE
-    toks AS (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents WHERE doc_id < 200
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, greatest(len(a) - 1, 1)),
-                                     i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS s
-        FROM toks
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS i
-        FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON id_a = sa.doc_id
-        JOIN sizes sb ON id_b = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents WHERE doc_id < 200
-        UNION
-        SELECT reach.id, edges.dst FROM reach JOIN edges ON reach.r = edges.src
-    ),
-    comp AS (
-        SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-    ),
-    q AS (
-        SELECT doc_id,
-               floor((least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) * 0.25
-                      + (1.0 - least(CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
-                                     / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0), 1.0)) * 0.25
-                      + least(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                        x -> x IN ('the','a','and','of','to','in','is','on','for','with'))) AS DOUBLE)
-                              / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0) * 5.0, 1.0) * 0.25
-                      + least(((CAST(length(text) AS DOUBLE) - (CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE) - 1))
-                               / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS DOUBLE), 1.0)) / 10.0, 1.0) * 0.25)
-                     * 10000 + 0.5) / 10000 AS quality
-        FROM documents WHERE doc_id < 200
-    )
-    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(doc_id AS BIGINT) AS keep_id,
-           quality,
-           CAST(n_members AS BIGINT) AS n_members
-    FROM (
-        SELECT comp.cluster_id, comp.doc_id, q.quality,
-               count(*) OVER (PARTITION BY comp.cluster_id) AS n_members,
-               row_number() OVER (PARTITION BY comp.cluster_id
-                                  ORDER BY q.quality DESC, comp.doc_id) AS rk
-        FROM comp JOIN q USING (doc_id)
-    ) WHERE rk = 1
+    oracle=f"""
+    WITH RECURSIVE {twins.shingle_pairs(_BOUND)},{twins.keep_best(_BOUND)}
+    SELECT * FROM best
     """,
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,44 +523,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation bounds them), so the window key never
     concentrates; ties break on (quality DESC, doc_id) for cross-engine
     determinism."""
-    from pyspark.sql.window import Window
-    from kafka_map_reduce_spark.operators.text import quality_score
-
-    docs = _bounded_subset(
-        load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
-    )
-    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
-    all_pairs = shingled.select(F.col("id").alias("id_a")).distinct().join(
-        shingled.select(F.col("id").alias("id_b")).distinct(),
-        F.col("id_a") < F.col("id_b"),
-    )
-    pairs = D.jaccard_verify(all_pairs, shingled, min_jaccard=0.2).select(
-        "id_a", "id_b"
-    )
-    comp = D.connected_components(pairs, docs.select("doc_id")).select(
-        F.col("id").alias("doc_id"), "cluster_id"
-    )
-    q = docs.select(
-        "doc_id",
-        (
-            F.floor(quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("quality"),
-    )
-    w = Window.partitionBy("cluster_id")
-    joined = (
-        comp.join(q, "doc_id")
-        .withColumn("n_members", F.count(F.lit(1)).over(w))
-        .withColumn(
-            "rk",
-            F.row_number().over(w.orderBy(F.desc("quality"), F.col("doc_id"))),
-        )
-    )
-    return joined.filter(F.col("rk") == 1).select(
-        "cluster_id",
-        F.col("doc_id").alias("keep_id"),
-        "quality",
-        F.col("n_members").cast("long").alias("n_members"),
-    )
+    docs = _bounded_docs(spark, sf_dir)
+    return _keep_best(_shingle_pairs(docs).select("id_a", "id_b"), docs)
 
 
 @query("q_dedup_embedding_lsh", oracle=None, tags=("approx",))
@@ -624,24 +545,10 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared hot-bucket cap, one candidate-sized cosine verify — never
     all-pairs."""
     from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
-    # fanned out (r17): the operator's consume-once checkpoints freeze
-    # the scan's partitioning, so the one-row-group bench scan pinned the
-    # Arrow hash-embed + signature matmuls AND the candidate/verify
-    # stages at 1 task (r17 profile: two 1-task 1.1-cpu-sec stages);
-    # keyed fan-out, corpus-scale no-op by the gate
     d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
-    # fused embed+signature (r18, guide §4.1): one Arrow stage computes
-    # the embedding AND all 8 hyperplane signatures (bit-identical to
-    # the two-stage embed -> hyperplane_buckets_all composition,
-    # parity-pinned); embedding_near_dup consumes the
-    # precomputed buckets and skips its own Python signature stage.
-    emb = attach_hash_embed_arrow(
-        d, "text", dim=32, buckets_col="__buckets"
-    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
     return embedding_near_dup(
-        emb, dim=32, threshold=0.95, buckets_col="__buckets"
+        _lsh_embed(d), dim=32, threshold=0.95, buckets_col="__buckets"
     ).orderBy("id_a", "id_b")
 
 
@@ -658,20 +565,14 @@ def q_dedup_embedding_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy the text-LSH hot-band cap implements (SURVEY §6 r6
     scale-spot analysis)."""
     from kafka_map_reduce_spark.operators.similarity import embedding_near_dup
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
-    # fanned out (r17): the operator's consume-once checkpoints freeze
-    # the scan's partitioning, so the one-row-group bench scan pinned the
-    # Arrow hash-embed + signature matmuls AND the candidate/verify
-    # stages at 1 task (r17 profile: two 1-task 1.1-cpu-sec stages);
-    # keyed fan-out, corpus-scale no-op by the gate
     d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
-    # fused embed+signature (r18): see q_dedup_embedding_lsh
-    emb = attach_hash_embed_arrow(
-        d, "text", dim=32, buckets_col="__buckets"
-    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
     return embedding_near_dup(
-        emb, dim=32, threshold=0.95, max_bucket_size=16, buckets_col="__buckets"
+        _lsh_embed(d),
+        dim=32,
+        threshold=0.95,
+        max_bucket_size=16,
+        buckets_col="__buckets",
     ).orderBy("id_a", "id_b")
 
 
@@ -706,51 +607,14 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     when k scales with the corpus (the paper's regime), and over-full
     clusters drop to exact dedup via max_cluster_size — the same
     governor as every other modality's cap."""
-    from kafka_map_reduce_spark.operators.similarity import semantic_dedup
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
-
-    # fanned out (r17): the eager emb checkpoint below otherwise
-    # freezes the one-row-group scan's single partition into every
-    # consumer (hash-embed, training collect, assignment); no-op at
-    # corpus scale
-    d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
-    # materialize the embedding ONCE: count (the k probe), training,
-    # assignment and both verify sides all consume it — without the
-    # eager checkpoint each would re-run the hash-embed fold.
+    # fanned out (r17): the eager emb checkpoint otherwise freezes the
+    # one-row-group scan's single partition into every consumer
+    # (hash-embed, training collect, assignment); no-op at corpus scale.
     # The fused face (r18) is the md5 Arrow kernel (bit-identical to
     # the JVM fold, tests/test_operators.py; the r9-measured 257.9 s
-    # linear wall at 5M docs drops to 27.0 s, SCALE_SPOT_r10) PLUS the
-    # bit-exact unit vector in the same Arrow stage, so semantic_dedup
-    # skips its separate normalize stage (unit_col below).
-    emb = (
-        attach_hash_embed_arrow(d, "text", dim=32, unit_col="__unit")
-        .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
-        .localCheckpoint(eager=True)
-    )
-    # Sizing via semantic_model_params (r10 verdict #4): k tracks the
-    # corpus at ~250 vectors/cluster up to the 2^15 cap, then freezes —
-    # the SemDeDup paper's LAION practice — so the 50-per-centroid
-    # training sample (and with it Lloyd cost) is CONSTANT in N past
-    # ~8.2M docs; the hot-cluster governor scales with the expected
-    # cluster size in the capped regime (identical 2000 below it). The
-    # count is free on the checkpointed table; spread init keeps
-    # seeding k-independent.
-    from kafka_map_reduce_spark.operators.similarity import (
-        semantic_model_params,
-    )
-
-    n = emb.count()
-    k, mod, cap = semantic_model_params(n)
-    return semantic_dedup(
-        emb,
-        threshold=0.85,
-        n_clusters=k,
-        iters=3,
-        max_cluster_size=cap,
-        init="spread",
-        train_sample_mod=mod,
-        unit_col="__unit",
-    ).orderBy("id_a", "id_b")
+    # linear wall at 5M docs drops to 27.0 s, SCALE_SPOT_r10).
+    d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
+    return _semantic_pairs(_unit_embed(d), threshold=0.85).orderBy("id_a", "id_b")
 
 
 @query("q_dedup_semantic_ingest", oracle=None, tags=("approx", "incremental"))
@@ -773,23 +637,12 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_dedup_ingest,
         semantic_model_params,
     )
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
 
-    emb = (
-        attach_hash_embed_arrow(
-            # fanned out (r17): same single-partition-checkpoint freeze
-            # as q_dedup_semantic; no-op at corpus scale. Fused
-            # embed+unit face (r18): both ingest calls below skip their
-            # Arrow normalize stage via unit_col.
-            fan_out_scan(
-                load_table(spark, sf_dir, "documents"), key=("doc_id",)
-            ),
-            "text",
-            dim=32,
-            unit_col="__unit",
-        )
-        .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
-        .localCheckpoint(eager=True)
+    # fanned out (r17): same single-partition-checkpoint freeze as
+    # q_dedup_semantic; no-op at corpus scale. Both ingest calls below
+    # skip their Arrow normalize stage via unit_col.
+    emb = _unit_embed(
+        fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
     )
     old = emb.filter(F.col("vec_id") % 10 != 0)
     new = emb.filter(F.col("vec_id") % 10 == 0)
@@ -813,76 +666,15 @@ def q_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_semantic_keep_best",
-    oracle=r"""
-    WITH RECURSIVE
-    toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')
-               AS ts
-      FROM documents WHERE doc_id < 200
-    ),
-    hashed AS (
-      SELECT doc_id, list_transform(ts, t -> struct_pack(
-          b := CAST(('0x' || substr(md5(t),1,4)) AS BIGINT) % 32,
-          s := CASE WHEN CAST(('0x' || substr(md5(t),5,1)) AS BIGINT) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END
-      )) AS hs
-      FROM toks
-    ),
-    raw AS (
-      SELECT doc_id, list_transform(range(0, 32), j ->
-         COALESCE(list_sum(list_transform(list_filter(hs, h -> h.b = j),
-                                          h -> h.s)), 0.0)) AS r
-      FROM hashed
-    ),
-    normed AS (
-      SELECT doc_id,
-             list_transform(r, x -> x / greatest(
-               sqrt(list_sum(list_transform(r, v -> v*v))), 1e-12)) AS e
-      FROM raw
-    ),
+    oracle=f"""
+    WITH RECURSIVE {twins.hash_embed(_BOUND)},
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM normed a JOIN normed b ON a.doc_id < b.doc_id
+      FROM emb a JOIN emb b ON a.doc_id < b.doc_id
       WHERE list_sum(list_transform(range(1, 33), i -> a.e[i] * b.e[i]))
             >= 0.95
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents WHERE doc_id < 200
-        UNION
-        SELECT reach.id, edges.dst FROM reach JOIN edges ON reach.r = edges.src
-    ),
-    comp AS (
-        SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-    ),
-    q AS (
-        SELECT doc_id,
-               floor((least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) * 0.25
-                      + (1.0 - least(CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
-                                     / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS DOUBLE), 1.0), 1.0)) * 0.25
-                      + least(CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                        x -> x IN ('the','a','and','of','to','in','is','on','for','with'))) AS DOUBLE)
-                              / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS DOUBLE), 1.0) * 5.0, 1.0) * 0.25
-                      + least(((CAST(length(text) AS DOUBLE) - (CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS DOUBLE) - 1))
-                               / greatest(CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS DOUBLE), 1.0)) / 10.0, 1.0) * 0.25)
-                     * 10000 + 0.5) / 10000 AS quality
-        FROM documents WHERE doc_id < 200
-    )
-    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(doc_id AS BIGINT) AS keep_id,
-           quality,
-           CAST(n_members AS BIGINT) AS n_members
-    FROM (
-        SELECT comp.cluster_id, comp.doc_id, q.quality,
-               count(*) OVER (PARTITION BY comp.cluster_id) AS n_members,
-               row_number() OVER (PARTITION BY comp.cluster_id
-                                  ORDER BY q.quality DESC, comp.doc_id) AS rk
-        FROM comp JOIN q USING (doc_id)
-    ) WHERE rk = 1
+    ),{twins.keep_best(_BOUND)}
+    SELECT * FROM best
     """,
     tags=("retention", "semantic"),
 )
@@ -917,62 +709,10 @@ def q_dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles); the keep-best argmax is
     one row_number window on cluster_id, and semantic clusters are
     bounded by max_cluster_size so the window key cannot concentrate."""
-    from kafka_map_reduce_spark.operators.similarity import semantic_dedup
-    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
-    from kafka_map_reduce_spark.operators.text import quality_score
-    from pyspark.sql.window import Window
-
-    docs = _bounded_subset(
-        load_table(spark, sf_dir, "documents"), "doc_id", bound=200, cap=1000
-    )
+    docs = _bounded_docs(spark, sf_dir)
     # the Arrow md5 face: bit-identical to the JVM md5 fold the DuckDB
-    # oracle below replays (pinned, tests/test_operators.py), so the
-    # hash row cannot move; the r18 fused face adds the bit-exact unit
-    # vector in the same Arrow stage (semantic_dedup skips its
-    # normalize stage via unit_col — sims unchanged, the oracle hash
-    # row still cannot move, re-proved at sf0.01)
-    emb = (
-        attach_hash_embed_arrow(docs, "text", dim=32, unit_col="__unit")
-        .select(F.col("doc_id").alias("vec_id"), "embedding", "__unit")
-        .localCheckpoint(eager=True)
-    )
-    from kafka_map_reduce_spark.operators.similarity import (
-        semantic_model_params,
-    )
-
-    n = emb.count()
-    k, mod, cap = semantic_model_params(n)
-    pairs = semantic_dedup(
-        emb,
-        threshold=0.95,
-        n_clusters=k,
-        iters=3,
-        max_cluster_size=cap,
-        init="spread",
-        train_sample_mod=mod,
-        unit_col="__unit",
-    ).select("id_a", "id_b")
-    comp = D.connected_components(pairs, docs.select("doc_id")).select(
-        F.col("id").alias("doc_id"), "cluster_id"
-    )
-    q = docs.select(
-        "doc_id",
-        (
-            F.floor(quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("quality"),
-    )
-    w = Window.partitionBy("cluster_id")
-    joined = (
-        comp.join(q, "doc_id")
-        .withColumn("n_members", F.count(F.lit(1)).over(w))
-        .withColumn(
-            "rk",
-            F.row_number().over(w.orderBy(F.desc("quality"), F.col("doc_id"))),
-        )
-    )
-    return joined.filter(F.col("rk") == 1).select(
-        "cluster_id",
-        F.col("doc_id").alias("keep_id"),
-        "quality",
-        F.col("n_members").cast("long").alias("n_members"),
-    )
+    # oracle above replays (pinned, tests/test_operators.py), so the
+    # hash row cannot move; the fused unit vector leaves sims unchanged
+    # (re-proved at sf0.01)
+    pairs = _semantic_pairs(_unit_embed(docs), threshold=0.95)
+    return _keep_best(pairs.select("id_a", "id_b"), docs)

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_map_reduce_spark.operators import similarity as S
+from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import load_table
 
@@ -273,33 +274,8 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sim_text_topk",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
-               AS ts
-      FROM documents WHERE doc_id < 120
-    ),
-    hashed AS (
-      SELECT doc_id, list_transform(ts, t -> struct_pack(
-          b := CAST(('0x' || substr(md5(t),1,4)) AS BIGINT) % 32,
-          s := CASE WHEN CAST(('0x' || substr(md5(t),5,1)) AS BIGINT) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END
-      )) AS hs
-      FROM toks
-    ),
-    raw AS (
-      SELECT doc_id, list_transform(range(0, 32), j ->
-         COALESCE(list_sum(list_transform(list_filter(hs, h -> h.b = j),
-                                          h -> h.s)), 0.0)) AS r
-      FROM hashed
-    ),
-    emb AS (
-      SELECT doc_id,
-             list_transform(r, x -> x / greatest(
-               sqrt(list_sum(list_transform(r, v -> v*v))), 1e-12)) AS e
-      FROM raw
-    ),
+    oracle=f"""
+    WITH {twins.hash_embed(120)},
     scored AS (
       SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id,
              list_dot_product(p.e, c.e)

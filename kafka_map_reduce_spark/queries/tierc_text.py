@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kafka_map_reduce_spark.functions import davg4, o_avg4
 from kafka_map_reduce_spark.operators import multimodal as M
 from kafka_map_reduce_spark.operators import text as X
+from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import fan_out_scan, load_table
 
@@ -64,26 +65,9 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_quality",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id,
-               CAST(length(text) AS DOUBLE) AS n_chars,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                    x -> x <> '')) AS DOUBLE) AS n_toks,
-               CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
-                    AS DOUBLE) AS punct,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                    x -> x IN ('the','a','and','of','to','in','is','on','for','with')))
-                    AS DOUBLE) AS stop_hits
-        FROM documents
-    )
-    SELECT doc_id,
-           floor((least(n_chars / 1000.0, 1.0) * 0.25
-                  + (1.0 - least(punct / greatest(n_toks, 1.0), 1.0)) * 0.25
-                  + least(stop_hits / greatest(n_toks, 1.0) * 5.0, 1.0) * 0.25
-                  + least(((n_chars - (n_toks - 1)) / greatest(n_toks, 1.0)) / 10.0, 1.0) * 0.25)
-                 * 10000 + 0.5) / 10000 AS quality
-    FROM t
+    oracle=f"""
+    WITH {twins.quality()}
+    SELECT doc_id, quality FROM q
     """,
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,17 +648,9 @@ def q_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_chunks",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\\s+') AS a FROM documents
-    )
-    SELECT doc_id, CAST(i AS INTEGER) AS chunk_id,
-           array_to_string(list_slice(a, i * 40 + 1, i * 40 + 50), ' ') AS chunk,
-           CAST(len(list_slice(a, i * 40 + 1, i * 40 + 50)) AS INTEGER)
-             AS n_tokens
-    FROM toks,
-         unnest(range(0, greatest(CAST(ceil((len(a) - 10) / 40.0) AS BIGINT), 1)))
-           AS t(i)
+    oracle=f"""
+    WITH {twins.chunks()}
+    SELECT doc_id, chunk_id, chunk, n_tokens FROM chunks
     """,
 )
 def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,18 +701,8 @@ def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                regexp_replace(regexp_replace(text, '{_EMAIL_RE}', '[EMAIL]', 'g'),
                               '{_PHONE_RE}', '[PHONE]', 'g') AS text
         FROM kept
-    ),
-    toks AS (
-        SELECT doc_id, string_split_regex(text, '\\s+') AS a FROM red
-    )
-    SELECT doc_id, CAST(i AS INTEGER) AS chunk_id,
-           md5(array_to_string(list_slice(a, i * 40 + 1, i * 40 + 50), ' '))
-             AS chunk_md5,
-           CAST(len(list_slice(a, i * 40 + 1, i * 40 + 50)) AS INTEGER)
-             AS n_tokens
-    FROM toks,
-         unnest(range(0, greatest(CAST(ceil((len(a) - 10) / 40.0) AS BIGINT), 1)))
-           AS t(i)
+    ),{twins.chunks("red")}
+    SELECT doc_id, chunk_id, md5(chunk) AS chunk_md5, n_tokens FROM chunks
     """,
     tags=("flagship",),
 )
@@ -795,37 +761,12 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_hash_embed",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
-               AS ts
-      FROM documents
-    ),
-    hashed AS (
-      SELECT doc_id, list_transform(ts, t -> struct_pack(
-          b := CAST(('0x' || substr(md5(t),1,4)) AS BIGINT) % 32,
-          s := CASE WHEN CAST(('0x' || substr(md5(t),5,1)) AS BIGINT) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END
-      )) AS hs
-      FROM toks
-    ),
-    raw AS (
-      SELECT doc_id, list_transform(range(0, 32), j ->
-         COALESCE(list_sum(list_transform(list_filter(hs, h -> h.b = j),
-                                          h -> h.s)), 0.0)) AS r
-      FROM hashed
-    ),
-    normed AS (
-      SELECT doc_id,
-             list_transform(r, x -> x / greatest(
-               sqrt(list_sum(list_transform(r, v -> v*v))), 1e-12)) AS e
-      FROM raw
-    )
+    oracle=f"""
+    WITH {twins.hash_embed()}
     SELECT doc_id,
            to_json(list_transform(e,
              x -> CAST(floor(x*10000 + 0.5) AS INTEGER))) AS emb_q_json
-    FROM normed
+    FROM emb
     """,
 )
 def q_text_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:

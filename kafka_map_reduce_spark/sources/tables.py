@@ -155,11 +155,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _SCHEMA_MEMO[path] = (mtime, df.schema)
     else:
         df = spark.read.schema(memo[1]).parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-        )
-    return df
+    return events_ts(df) if name == "events" else df
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` read as raw parquet nanos (bigint) becomes a
+    microsecond TIMESTAMP_NTZ; a frame whose ``ts`` is not bigint passes
+    through unchanged. The batch and file-stream readers share it."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn(
+        "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
+    )
 
 
 class Tables:

@@ -409,7 +409,7 @@ class Pipeline:
             df = st.apply(df)
         return df
 
-    def _split_write(self, sink, dlq, drop_err_col: bool, poison_mode: str = "record"):
+    def _split_write(self, sink, dlq, poison_mode: str = "record"):
         if poison_mode not in ("record", "batch"):
             raise ValueError(f"poison_mode must be 'record' or 'batch', got {poison_mode!r}")
 
@@ -432,9 +432,7 @@ class Pipeline:
                         else batch_df.count()
                     )
                 else:
-                    if drop_err_col:
-                        ok = ok.drop(ERR_COL)
-                    n_ok = sink.write(ok, batch_id)
+                    n_ok = sink.write(ok.drop(ERR_COL), batch_id)
                     n_bad = dlq.write(bad, batch_id) if dlq is not None else bad.count()
                 batch_df.unpersist()
             else:
@@ -446,11 +444,9 @@ class Pipeline:
 
         return write_batch
 
-    def run_batch(
-        self, sink, dlq=None, drop_err_col: bool = True, poison_mode: str = "record"
-    ) -> dict:
+    def run_batch(self, sink, dlq=None, poison_mode: str = "record") -> dict:
         """Bounded execution: one logical 'micro-batch' (batch id 0)."""
-        self._split_write(sink, dlq, drop_err_col, poison_mode)(self._transformed(), 0)
+        self._split_write(sink, dlq, poison_mode)(self._transformed(), 0)
         return self.metrics[0]
 
     def run_stream(
@@ -459,7 +455,6 @@ class Pipeline:
         dlq=None,
         checkpoint_dir: Optional[str] = None,
         trigger: Optional[dict] = None,
-        drop_err_col: bool = True,
         await_termination: bool = True,
         await_timeout: Optional[float] = 600.0,
         poison_mode: str = "record",
@@ -475,7 +470,7 @@ class Pipeline:
         """
         out = self._transformed()
         writer = out.writeStream.foreachBatch(
-            self._split_write(sink, dlq, drop_err_col, poison_mode)
+            self._split_write(sink, dlq, poison_mode)
         )
         if checkpoint_dir:
             writer = writer.option("checkpointLocation", checkpoint_dir)

@@ -16,10 +16,9 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_map_reduce_spark.session import configure
-from kafka_map_reduce_spark.sources import load_table
+from kafka_map_reduce_spark.sources.tables import events_ts, load_table
 
 KAFKA_RECORD_COLUMNS = [
     "key", "value", "topic", "partition", "offset", "timestamp", "timestampType",
@@ -92,8 +91,4 @@ def file_replay_stream(
         .option("maxFilesPerTrigger", str(files_per_trigger))
         .parquet(src_dir)
     )
-    if table == "events" and dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-        )
-    return stream
+    return events_ts(stream) if table == "events" else stream

@@ -1097,6 +1097,28 @@ class TestIncrementalDedup:
         with _pytest.raises(Exception, match="disjoint"):
             D.lsh_candidates_against(banded, banded).count()
 
+    def test_incremental_overlapping_ids_rejected(self, spark):
+        """incremental_near_dedup's driver-side guard: a batch id that is
+        also a corpus id raises before any output is built, even when the
+        two docs share no bucket (so the in-plan guard cannot fire)."""
+        import pytest as _pytest
+
+        from kafka_map_reduce_spark.operators import dedup as D
+
+        corpus = self._corpus(spark)
+        index = D.lsh_banded(
+            D.minhash_signatures(D.word_shingles(corpus, "text", "doc_id"))
+        )
+        new = self._docs(
+            spark,
+            [(3, "entirely novel content with its own vocabulary "
+                 "n1 n2 n3 n4 n5 n6 n7 n8 n9")],
+        )
+        with _pytest.raises(ValueError, match="disjoint"):
+            D.incremental_near_dedup(
+                new, corpus, index, "text", "doc_id", min_jaccard=0.5
+            )
+
 
 def test_exact_dedup_against_index(spark):
     """Incremental exact dedup: cross-index dups, within-batch dups

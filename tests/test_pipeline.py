@@ -50,6 +50,8 @@ def test_par_map_dlq_split(spark):
     )
     ok = {r.event_id for r in sink.rows}
     assert ok.isdisjoint(poisoned) and len(ok) == 1000 - len(poisoned)
+    # OK rows leave the split without the error column
+    assert all("__err" not in r.asDict() for r in sink.rows)
 
 
 def test_sink_batch_cap(spark, tmp_path):
