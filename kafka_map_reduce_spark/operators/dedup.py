@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
+
 
 def normalized(text_col) -> F.Column:
     return F.lower(F.trim(text_col))
@@ -596,9 +598,7 @@ def jaccard_verify(
         .select(
             "id_a",
             "id_b",
-            (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-                "jaccard"
-            ),
+            round4(F.col("jaccard")).alias("jaccard"),
         )
     )
 

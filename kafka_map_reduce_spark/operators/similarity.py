@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
+from kafka_map_reduce_spark.functions import round4
+
 
 def _fold_sum(arr: Column) -> Column:
     """Sequential left-fold sum of array<double> — matches DuckDB's
@@ -71,7 +73,7 @@ def ranked_topk(scored: DataFrame, k: int) -> DataFrame:
         .select(
             "probe_id",
             "neighbor_id",
-            (F.floor(F.col("sim") * 10000 + F.lit(0.5)) / F.lit(10000)).alias("sim"),
+            round4(F.col("sim")).alias("sim"),
             "rank",
         )
     )
@@ -1762,9 +1764,7 @@ def embedding_near_dup(
         .select(
             "id_a",
             "id_b",
-            (F.floor(F.col("sim") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-                "sim"
-            ),
+            round4(F.col("sim")).alias("sim"),
         )
     )
 
@@ -1788,19 +1788,40 @@ def _with_unit(
     return df.select(F.col(id_col).alias("id"), v.alias("__v"), u.alias("__u"))
 
 
-def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
-    """applyInPandas kernel: ALL over-threshold pairs of one cluster via
-    a single U @ U.T BLAS call on the bucket's unit vectors. The reason
-    this exists instead of a bucket self-join + per-pair scorer: a
-    self-join materializes ~c rows PER VECTOR each carrying both
-    256-byte vectors through Arrow — measured at sf10 (62.5M candidate
-    pairs) the transfer, not the math, was the entire verify cost (107 s
-    raw-cosine, 14.5/12.8 s dot-vs-cos at sf1 — i.e. pre-normalizing
-    bought nothing). Grouped, each vector crosses the wire ONCE (one
-    N-row shuffle on bkt) and the c x c similarity matrix is ~2M FLOPs
-    of BLAS per bucket. Memory is c^2 floats for the bucket matrix —
-    bounded by max_cluster_size^2 (the cap is load-bearing here, not
-    just a skew nicety). ids sorted so id_a < id_b deterministically.
+def _bucket_pairs_fn(
+    threshold: float,
+    max_cluster_size: int | None = None,
+    max_pairs: int | None = None,
+):
+    """applyInPandas kernel of both SemDeDup faces: the over-threshold
+    pairs of one cluster's ``(id, bkt, __vn, is_new)`` rows that touch
+    at least one NEW row, each as ``id_a < id_b``. The full build is the
+    all-new case; an ingest probe marks its batch new and the standing
+    index rows of the clusters it touched old, so appending a batch
+    emits exactly the pairs a full rebuild would add. ids are unique
+    within the cluster.
+
+    The reason this exists instead of a bucket self-join + per-pair
+    scorer: a self-join materializes ~c rows PER VECTOR each carrying
+    both 256-byte vectors through Arrow — measured at sf10 (62.5M
+    candidate pairs) the transfer, not the math, was the entire verify
+    cost (107 s raw-cosine, 14.5/12.8 s dot-vs-cos at sf1 — i.e.
+    pre-normalizing bought nothing). Grouped, each vector crosses the
+    wire ONCE (one N-row shuffle on bkt) and the similarity matrix is
+    one BLAS call per cluster: ``U_new @ U_all.T`` (the new side
+    batch-sized), or the plain ``V @ V.T`` when every row is new — the
+    full build keeps its historical float operations, which the
+    hash-pinned keep-best row consumes. Rows are sorted by id, so a
+    pair's position order is its id order and a new–new pair is kept
+    once, from its smaller id's row.
+
+    ``max_cluster_size`` is the hot-cluster governor, the ClusterJoin
+    size check: an over-full cluster (a template blob) emits nothing and
+    routes to exact dedup, decided before any matrix is built — memory
+    is bounded by max_cluster_size² floats (the cap is load-bearing
+    here, not just a skew nicety). An ingest counts the union, so a
+    cluster the corpus already showed to be a blob stays routed to
+    exact dedup mid-ingest.
 
     ``max_pairs`` is the PAIR-STREAM governor (r10 verdict item #5: at
     sf100 the fixture's near-dup density put 129M over-threshold pairs
@@ -1824,9 +1845,9 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
     cap is set below the cluster's node count), every witness edge is
     still emitted and the output exceeds ``max_pairs``. Deliberate:
     dedup-sufficiency is the property downstream connected-components
-    depends on; a hard clamp would silently un-mark duplicates. The
-    "auto" sizing (4 x max_cluster_size ≥ 4 x nodes) can never reach
-    this regime.
+    depends on; a hard clamp would silently un-mark duplicates.
+    semantic_dedup's sizing (4 x max_cluster_size ≥ 4 x nodes) can
+    never reach this regime.
 
     fp32 BLAS: measured and REJECTED (r12 micro-benchmark; the one-off
     tool was retired in r17, the numbers are pinned here).
@@ -1844,18 +1865,26 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
     stays."""
 
     def f(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
+        n = len(pdf)
+        if n < 2 or (max_cluster_size is not None and n > max_cluster_size):
             return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "sim": "float64"}
             )
         order = np.argsort(pdf["id"].to_numpy())
         ids = pdf["id"].to_numpy()[order]
+        new = pdf["is_new"].to_numpy(dtype=bool)[order]
         V = np.array(pdf["__vn"].tolist(), dtype=np.float64)[order]
-        S = V @ V.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        s = S[iu, ju]
-        m = s >= threshold
-        ia, jb, sv = iu[m], ju[m], s[m]
+        if new.all():
+            rows, S = np.arange(n), V @ V.T
+        else:
+            rows = np.flatnonzero(new)
+            S = V[rows] @ V.T
+        # an old partner is always kept; a new one only past the row's
+        # own position, so each new–new pair is emitted once
+        r, c = np.nonzero(
+            (S >= threshold) & (~new | (np.arange(n) > rows[:, None]))
+        )
+        ia, jb, sv = np.minimum(rows[r], c), np.maximum(rows[r], c), S[r, c]
         if max_pairs is not None and len(sv) > max_pairs:
             # witness-first selection: order edges best-sim-first
             # (deterministic tie-break on the id pair), keep the first
@@ -1866,7 +1895,7 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
             # each node's best edge = its first occurrence (as either
             # endpoint) in best-first order — all vectorized, no
             # per-edge Python on the up-to-c²/2 hot-cluster stream
-            first = np.full(len(ids), len(sv), dtype=np.int64)
+            first = np.full(n, len(sv), dtype=np.int64)
             ua, fa = np.unique(ia, return_index=True)
             first[ua] = fa
             ub, fb = np.unique(jb, return_index=True)
@@ -1881,6 +1910,22 @@ def _bucket_pairs_fn(threshold: float, max_pairs: int | None = None):
         return pd.DataFrame({"id_a": ids[ia], "id_b": ids[jb], "sim": sv})
 
     return f
+
+
+def _cluster_pairs(
+    rows: DataFrame,
+    threshold: float,
+    max_cluster_size: int | None,
+    max_pairs: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, sim) over ``rows`` (id, bkt, __vn, is_new): one bkt
+    shuffle, :func:`_bucket_pairs_fn` per cluster, sims rounded to 4
+    decimals."""
+    pairs = rows.groupBy("bkt").applyInPandas(
+        _bucket_pairs_fn(threshold, max_cluster_size, max_pairs),
+        "id_a long, id_b long, sim double",
+    )
+    return pairs.select("id_a", "id_b", round4(F.col("sim")).alias("sim"))
 
 
 def _assign_buckets(base: DataFrame, cents: DataFrame, k: int) -> DataFrame:
@@ -1899,18 +1944,6 @@ def _assign_buckets(base: DataFrame, cents: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _cap_clusters(rows: DataFrame, max_cluster_size: int | None) -> DataFrame:
-    """The SemDeDup hot-cluster governor: ``rows`` of the clusters
-    (``bkt``) with at most ``max_cluster_size`` rows — over-full ones
-    route to exact dedup. None keeps every cluster."""
-    if max_cluster_size is None:
-        return rows
-    counts = rows.groupBy("bkt").agg(F.count(F.lit(1)).alias("__n"))
-    return rows.join(
-        counts.filter(F.col("__n") <= max_cluster_size).select("bkt"), "bkt"
-    )
-
-
 def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.9,
@@ -1921,7 +1954,6 @@ def semantic_dedup(
     max_cluster_size: int | None = None,
     init: str = "farthest",
     train_sample_mod: int = 1,
-    max_pairs_per_cluster: int | None | str = "auto",
     unit_col: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b, sim) pairs with cosine >= threshold, candidates
@@ -1961,9 +1993,11 @@ def semantic_dedup(
     full Arrow-matmul assignment pass covers every vector; vectors are
     L2-normalized in that same pass so the per-pair verify is a bare
     dot product (per-pair norms would redo each vector's sqrt
-    ~cluster-size times); ONE equi-self-join on cluster id bounds the
-    candidates. Iterative training => rows-only declaration, like every
-    trained-model operator here.
+    ~cluster-size times); ONE shuffle on cluster id feeds the
+    per-cluster matmul of :func:`_bucket_pairs_fn` with every row new,
+    which also applies both governors: ``max_cluster_size`` and a
+    pair-stream cap of 4 x max_cluster_size. Iterative training =>
+    rows-only declaration, like every trained-model operator here.
 
     ``unit_col`` (r18): the corpus already carries the L2-normalized
     vector (the ``operators.text.attach_hash_embed_arrow(unit_col=...)``
@@ -1979,72 +2013,23 @@ def semantic_dedup(
         _hash_mod_filter(base.select("id", "__v"), "id", train_sample_mod),
         n_clusters, iters, vec_col="__v", id_col="id", init=init,
     )
+    # checkpointed so the assignment (the 1-row centroid cross join, or
+    # the Arrow argmin above _ARROW_ASSIGN_MIN_K) stays out of the pair
+    # plan, as the ingest face's new_rows does
     assigned = _assign_buckets(base, cents, n_clusters).select(
-        "id", "bkt", F.col("__u").alias("__vn")
-    ).localCheckpoint(eager=False)  # cap-count + join sides consume
-    assigned = _cap_clusters(assigned, max_cluster_size)
-    # Pair-stream governor (r10 verdict #5): "auto" sizes the per-
-    # cluster emitted-pair cap at 4× the size governor — a size-capped
-    # hot cluster's full clique is max_cluster_size²/2 pairs (2M at the
-    # 2000 default, and ~60 such template-blob clusters produced
-    # essentially all of sf100's 129M-pair stream); under the cap it
-    # emits ≤8k witness-first pairs instead. Ordinary clusters near the
-    # TARGET size emit c·dup_density pairs, far below the cap. The
-    # append-vs-rebuild parity with semantic_dedup_ingest is stated at
-    # the uncapped regime (the ingest face never sees a standing
+        "id", "bkt", F.col("__u").alias("__vn"), F.lit(True).alias("is_new")
+    ).localCheckpoint(eager=False)
+    # Pair-stream governor (r10 verdict #5) at 4× the size governor — a
+    # size-capped hot cluster's full clique is max_cluster_size²/2 pairs
+    # (2M at the 2000 default, and ~60 such template-blob clusters
+    # produced essentially all of sf100's 129M-pair stream); under the
+    # cap it emits ≤8k witness-first pairs instead. Ordinary clusters
+    # near the TARGET size emit c·dup_density pairs, far below the cap.
+    # The ingest face runs without it: it never sees a standing
     # cluster's full clique, only batch-vs-cluster rectangles, so its
-    # stream is batch-bounded by construction).
-    if max_pairs_per_cluster == "auto":
-        max_pairs_per_cluster = (
-            4 * max_cluster_size if max_cluster_size else None
-        )
-    pairs = assigned.groupBy("bkt").applyInPandas(
-        _bucket_pairs_fn(threshold, max_pairs=max_pairs_per_cluster),
-        "id_a long, id_b long, sim double",
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (F.floor(F.col("sim") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-            "sim"
-        ),
-    )
-
-
-def _bucket_pairs_vs_new_fn(threshold: float):
-    """applyInPandas kernel for INCREMENTAL semantic dedup: one cluster's
-    over-threshold pairs that involve at least one NEW row, via a
-    rectangular B_new @ U_all.T matmul (cheaper than the full square —
-    the batch side is small). Output pairs are (min_id, max_id) with
-    new-new duplicates dropped, so appending a batch emits exactly the
-    pairs a full rebuild would add."""
-
-    def f(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-        )
-        new = pdf[pdf["is_new"]]
-        if len(new) == 0 or len(pdf) < 2:
-            return empty
-        Vn = np.array(new["__vn"].tolist(), dtype=np.float64)
-        Va = np.array(pdf["__vn"].tolist(), dtype=np.float64)
-        S = Vn @ Va.T
-        ids_n = new["id"].to_numpy()
-        ids_a = pdf["id"].to_numpy()
-        ii, jj = np.where(S >= threshold)
-        if len(ii) == 0:
-            return empty
-        a = ids_n[ii]
-        b = ids_a[jj]
-        keep = a != b
-        a, b, s = a[keep], b[keep], S[ii, jj][keep]
-        lo = np.minimum(a, b)
-        hi = np.maximum(a, b)
-        out = pd.DataFrame({"id_a": lo, "id_b": hi, "sim": s})
-        # a new-new pair appears twice (once from each side's row in Vn)
-        return out.drop_duplicates(subset=["id_a", "id_b"])
-
-    return f
+    # stream is batch-bounded by construction.
+    max_pairs = 4 * max_cluster_size if max_cluster_size else None
+    return _cluster_pairs(assigned, threshold, max_cluster_size, max_pairs)
 
 
 def semantic_dedup_ingest(
@@ -2068,17 +2053,21 @@ def semantic_dedup_ingest(
     pytest-pinned), and new_index_rows are the batch's (id, bkt, __vn)
     rows to append to the persisted index (encoding is per-row
     deterministic under a frozen model, the ivfpq_index incremental
-    contract).
+    contract). Batch ids must be new to the index: the kernel takes ids
+    as unique within a cluster.
 
     Scale shape: the batch assigns against the frozen centroids (Arrow
     matmul above _ARROW_ASSIGN_MIN_K, JVM argmin below); the index is
     SEMI-JOINED down to the clusters the batch actually touched before
-    the per-cluster rectangular matmul (B_new @ U_all.T — the all side
-    is cluster-sized, the new side batch-sized), so cost tracks
-    batch x cluster, not the corpus. ``max_cluster_size`` counts the
-    UNION (index + batch) per touched cluster — a cluster the corpus
-    already showed to be a template blob stays routed to exact dedup
-    even mid-ingest.
+    semantic_dedup's per-cluster kernel (:func:`_bucket_pairs_fn`) runs
+    with the batch new and the index rows old — a rectangular
+    B_new @ U_all.T whose all side is cluster-sized and new side
+    batch-sized — so cost tracks batch x cluster, not the corpus. With
+    an empty index every row is new and the call IS the full build,
+    without semantic_dedup's pair-stream cap. ``max_cluster_size``
+    counts the UNION (index + batch) per touched cluster — a cluster
+    the corpus already showed to be a template blob stays routed to
+    exact dedup even mid-ingest.
 
     Local-mode harness sizing (r14, SCALE_SPOT_r14 heap_cliff_r14):
     the full governed 16M-doc pipeline (embed -> train -> assign+index
@@ -2124,15 +2113,4 @@ def semantic_dedup_ingest(
     union = new_rows.withColumn("is_new", F.lit(True)).unionByName(
         old_rows.withColumn("is_new", F.lit(False))
     )
-    pairs = _cap_clusters(union, max_cluster_size).groupBy("bkt").applyInPandas(
-        _bucket_pairs_vs_new_fn(threshold),
-        "id_a long, id_b long, sim double",
-    )
-    out = pairs.select(
-        "id_a",
-        "id_b",
-        (F.floor(F.col("sim") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-            "sim"
-        ),
-    )
-    return out, new_rows
+    return _cluster_pairs(union, threshold, max_cluster_size), new_rows

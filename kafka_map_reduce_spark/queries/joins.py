@@ -9,7 +9,7 @@ formulation (one shuffle, no range explosion — operators/asof.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_map_reduce_spark.functions import dsum4, o_sum4

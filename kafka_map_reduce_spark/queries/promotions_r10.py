@@ -59,10 +59,7 @@ def q_compact_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB framing: a per-micro-batch sink emits millions of KB files;
     scan cost becomes file-open-bound. Compaction is the merge-tree
     analogue — O(slice) rewrite, amortized across every later scan."""
-    from kafka_map_reduce_spark.operators.maintenance import (
-        cluster_parquet,
-        parquet_file_stats,
-    )
+    from kafka_map_reduce_spark.operators.maintenance import cluster_parquet
 
     path = _scratch(sf_dir, "compact")
     base = load_table(spark, sf_dir, "documents").select(

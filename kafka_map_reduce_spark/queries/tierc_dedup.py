@@ -602,11 +602,12 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-model operator); planted-near-dup recall, the
     cluster-bounded candidate count, and the hot-cluster cap are
     pytest-pinned in tests/test_semantic_dedup.py. Scale shape:
-    broadcast-centroid assignment (shuffle-free), ONE equi-self-join on
-    cluster id, Arrow cosine over candidates; O(sum c_i^2) stays ~N*c
-    when k scales with the corpus (the paper's regime), and over-full
-    clusters drop to exact dedup via max_cluster_size — the same
-    governor as every other modality's cap."""
+    broadcast-centroid assignment (shuffle-free), ONE shuffle on
+    cluster id, one unit-vector matmul per cluster; O(sum c_i^2) stays
+    ~N*c when k scales with the corpus (the paper's regime), and
+    over-full clusters drop to exact dedup via max_cluster_size — a
+    size check inside the per-cluster kernel, the same governor as
+    every other modality's cap."""
     # fanned out (r17): the eager emb checkpoint otherwise freezes the
     # one-row-group scan's single partition into every consumer
     # (hash-embed, training collect, assignment); no-op at corpus scale.

@@ -241,13 +241,12 @@ def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: ntile / percent_rank / cume_dist."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("value", "event_id")
-    r4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / F.lit(10000)  # noqa: E731
     return ev.select(
         "event_id",
         "user_id",
         F.ntile(4).over(w).alias("quartile"),
-        r4(F.percent_rank().over(w)).alias("pct_rank"),
-        r4(F.cume_dist().over(w)).alias("cdist"),
+        round4(F.percent_rank().over(w)).alias("pct_rank"),
+        round4(F.cume_dist().over(w)).alias("cdist"),
     )
 
 

@@ -40,7 +40,7 @@ TABLE_NAMES = (
 FAN_OUT_MIN_BYTES = 262_144
 
 
-def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame:
+def fan_out_scan(df: DataFrame, key: tuple[str, ...]) -> DataFrame:
     """Repartition a SMALL scan to the session's task slots so a
     CPU-heavy narrow pipeline above it (shingle explode + 64 xxhash64
     min-aggregates, regex batteries, decimal partial aggregates) can
@@ -71,13 +71,13 @@ def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame
     see the A/B table in SCALE_SPOT_r11.json.
 
     ``key`` (r17, optimization guide §2.5): column names of a
-    row-unique (or near-unique) key. When given, the fan-out
-    repartitions by ``xxhash64('fan-out', *key)`` instead of
-    round-robin. Round-robin repartition MUST locally sort its input
-    first so retried tasks reproduce the same row-to-partition
-    assignment (SPARK-23207, ``spark.sql.execution.sortBeforeRepartition``)
-    — on the one-row-group bench scan that sort runs on the single scan
-    task, serial. A deterministic hash key needs no such sort (the
+    row-unique (or near-unique) key; the fan-out repartitions by
+    ``xxhash64('fan-out', *key)``, not round-robin. Round-robin
+    repartition MUST locally sort its input first so retried tasks
+    reproduce the same row-to-partition assignment (SPARK-23207,
+    ``spark.sql.execution.sortBeforeRepartition``) — on the
+    one-row-group bench scan that sort runs on the single scan task,
+    serial. A deterministic hash key needs no such sort (the
     assignment is a pure row function) and is also the guide's
     preferred form under retries. Measured on the q_agg_group shape
     (sf0.1, interleaved min-of-5): round-robin 1.195 s, hash on
@@ -87,10 +87,10 @@ def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame
     shuffle budgets. Key cardinality must dwarf the slot count (the
     registered adopters pass table primary keys: 600k/5k/2k distinct
     over <= 32 slots), per the guide's synthetic-partitioning-key rule.
-    Result invariance is the same contract as round-robin: adopters
-    must be partition-layout-invariant (exact decimal aggregates,
-    per-row hashes, two-stage ranks) — re-verified by oracle parity on
-    every adopter after the r17 switch."""
+    Result invariance: adopters must be partition-layout-invariant
+    (exact decimal aggregates, per-row hashes, two-stage ranks) —
+    re-verified by oracle parity on every adopter after the r17
+    switch."""
     if df.isStreaming:
         return df  # streaming plans reject rdd/inputFiles introspection
     sc = df.sparkSession.sparkContext
@@ -110,11 +110,9 @@ def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame
         return df
     if total < FAN_OUT_MIN_BYTES:
         return df
-    if key:
-        return df.repartition(
-            slots, F.xxhash64(F.lit("fan-out"), *[F.col(c) for c in key])
-        )
-    return df.repartition(slots)
+    return df.repartition(
+        slots, F.xxhash64(F.lit("fan-out"), *[F.col(c) for c in key])
+    )
 
 
 # Per-process parquet schema memo (r17, guide §1.2 fixed driver costs):

@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
+
 
 def mixture_stats_batch(
     batch_df: DataFrame,
@@ -87,18 +89,17 @@ def mixture_drift_report(
         F.coalesce(F.col("tgt_frac"), F.lit(0.0)).alias("tgt_frac"),
     )
     grand = joined.agg(F.sum("n_docs").alias("__total"))
-    r4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / F.lit(10000)  # noqa: E731
     return (
         joined.join(F.broadcast(grand))
         .withColumn(
             "obs_frac",
-            r4(
+            round4(
                 F.col("n_docs")
                 / F.greatest(F.col("__total"), F.lit(1)).cast("double")
             ),
         )
-        .withColumn("tgt_frac", r4(F.col("tgt_frac")))
-        .withColumn("drift", r4(F.col("obs_frac") - F.col("tgt_frac")))
+        .withColumn("tgt_frac", round4(F.col("tgt_frac")))
+        .withColumn("drift", round4(F.col("obs_frac") - F.col("tgt_frac")))
         .withColumn(
             "over",
             (F.abs(F.col("obs_frac") - F.col("tgt_frac")) > tolerance)

@@ -27,9 +27,8 @@ and offset commit after sink ack. Spark translation decided in SURVEY §3:
 
 from __future__ import annotations
 
-import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Iterator, Optional
 
 import pandas as pd

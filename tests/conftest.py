@@ -22,14 +22,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.parity import duck_connection
 
-    from kafka_map_reduce_spark.sources import TABLE_NAMES
-
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
+    con = duck_connection(SF_SMOKE)
     yield con
     con.close()

@@ -1859,53 +1859,6 @@ def test_vector_udf_contract(spark, monkeypatch, return_type):
         assert got.isna().tolist() == [False, True]
 
 
-def test_fan_out_scan_gate_and_identity(spark, monkeypatch):
-    """fan_out_scan (r11): (a) no-op when the scan already has >= slot
-    partitions; (b) no-op below the bytes floor (the tiny sf0.001/sf0.01
-    text tables keep their historical plans); (c) when engaged, the
-    MinHash pipeline's verified pairs are bit-identical to the un-fanned
-    run (signatures are per-row xxhash64 — partition-invariant by
-    construction, pinned here against drift); (d) a non-file source
-    reaches the inputFiles fallback (not the partition gate) and is
-    left untouched."""
-    from kafka_map_reduce_spark.operators import dedup as D
-    from kafka_map_reduce_spark.sources import tables as T
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    # (b) sf0.001 is ~0.1 MB < FAN_OUT_MIN_BYTES: untouched plan
-    assert T.fan_out_scan(docs) is docs
-
-    # (a) already-parallel input: untouched even with the floor removed
-    monkeypatch.setattr(T, "FAN_OUT_MIN_BYTES", 0)
-    slots = spark.sparkContext.defaultParallelism
-    wide = docs.repartition(slots)
-    assert T.fan_out_scan(wide) is wide
-
-    # (c) engaged path (floor removed): fanned frame has slot
-    # partitions and the full MinHash-LSH-verify output is identical
-    fanned = T.fan_out_scan(docs)
-    assert fanned is not docs
-    assert fanned.rdd.getNumPartitions() == slots
-
-    def pairs(d):
-        sh = D.word_shingles(d, "text", "doc_id", k=3)
-        sigs = D.minhash_signatures(sh, num_perm=64)
-        cands = D.lsh_candidates(sigs, num_perm=64, bands=16)
-        out = D.jaccard_verify(cands, sh, min_jaccard=0.5)
-        return {(r.id_a, r.id_b, r.jaccard) for r in out.collect()}
-
-    assert pairs(fanned) == pairs(docs)
-
-    # (d) non-file source: coalesce(1) forces it PAST the partition
-    # gate (1 < slots, and the floor is still monkeypatched to 0) so
-    # the empty-inputFiles fallback itself is what returns it untouched
-    mem = spark.range(5).toDF("doc_id").coalesce(1)
-    assert mem.rdd.getNumPartitions() < slots
-    assert not mem.inputFiles()
-    assert T.fan_out_scan(mem) is mem
-
-
 def test_schema_memo_keeps_one_entry_per_table(spark, tmp_path, monkeypatch):
     """load_table's schema memo is keyed by path: a newer table mtime
     replaces the table's entry instead of adding a second one."""
@@ -1925,15 +1878,17 @@ def test_schema_memo_keeps_one_entry_per_table(spark, tmp_path, monkeypatch):
 
 
 def test_fan_out_scan_keyed_path(spark, monkeypatch):
-    """r17: fan_out_scan(key=...) repartitions by the deterministic
-    xxhash64('fan-out', key) instead of round-robin — no
+    """fan_out_scan repartitions by the deterministic
+    xxhash64('fan-out', key), not round-robin — no
     sort-before-repartition on the serial scan task (SPARK-23207), and
     retried tasks reproduce the same assignment by construction. Pins:
-    (a) same gates as the round-robin form (floor / already-parallel /
-    non-file no-ops); (b) the engaged plan carries hashpartitioning on
-    the marker hash, NOT round-robin; (c) the MinHash pipeline output
-    is identical to the un-fanned run (partition-invariance contract,
-    same as the round-robin pin above)."""
+    (a) the gates: no-op below the bytes floor and on an
+    already-parallel input; (b) the engaged plan carries
+    hashpartitioning on the marker hash, NOT round-robin; (c) the
+    MinHash pipeline output is identical to the un-fanned run
+    (signatures are per-row xxhash64, partition-invariant by
+    construction); (d) a non-file source passes the partition gate and
+    reaches the inputFiles fallback, which leaves it untouched."""
     from kafka_map_reduce_spark.operators import dedup as D
     from kafka_map_reduce_spark.sources import tables as T
 
@@ -1962,6 +1917,8 @@ def test_fan_out_scan_keyed_path(spark, monkeypatch):
     assert pairs(fanned) == pairs(docs)
 
     mem = spark.range(5).toDF("doc_id").coalesce(1)
+    assert mem.rdd.getNumPartitions() < slots
+    assert not mem.inputFiles()
     assert T.fan_out_scan(mem, key=("doc_id",)) is mem
 
 

@@ -1,34 +1,12 @@
-"""Differential verification for the r10 promotion registrations
-(queries/promotions_r10.py): each query runs at sf0.001 and is
-hash-compared against its DuckDB oracle with the SAME canonicalizer the
-local driver simulation uses (tools/parity.py). Written in r9 as
-pre-verification for the then-unregistered functions; since r10 they
-are @query-registered, so this is now the ordinary per-query
-differential pin plus a registration-shape guard (the five must head
-the priority window as never-checked rows)."""
+"""Registration guard for the r10 promotion registrations
+(queries/promotions_r10.py): the five are registered with their DuckDB
+oracles attached and, while never driver-checked, head the priority
+window. Their oracle parity runs with every other registration in
+tests/test_queries_parity.py::test_query."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-import sys
-
-import pytest
-
 from kafka_map_reduce_spark.queries.promotions_r10 import R10_REGISTRATIONS
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_SF_DIR = "/root/testdata/sf0.001"
-
-
-def _parity():
-    spec = importlib.util.spec_from_file_location(
-        "kmr_parity_tool", os.path.join(_REPO, "tools", "parity.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("kmr_parity_tool", mod)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def test_promotions_are_registered_at_the_window_head():
@@ -50,16 +28,3 @@ def test_promotions_are_registered_at_the_window_head():
         assert REGISTRY[n].oracle == oracle, f"{n}: oracle mismatch"
     if not set(names) <= checked_queries():
         assert list(_PRIORITY[: len(names)]) == names
-
-
-@pytest.mark.parametrize(
-    "name,fn,oracle", R10_REGISTRATIONS, ids=[n for n, _f, _o in R10_REGISTRATIONS]
-)
-def test_promotion_matches_oracle(spark, name, fn, oracle):
-    parity = _parity()
-    sdf = fn(spark, _SF_DIR).toPandas()
-    assert len(sdf) > 0, f"{name} returned no rows"
-    con = parity.duck_connection(_SF_DIR)
-    ddf = con.execute(oracle).df()
-    problems = parity.compare(sdf, ddf)
-    assert not problems, f"{name}: {problems}"

@@ -128,7 +128,7 @@ def test_bucket_pairs_matmul_matches_bruteforce(n, dim, threshold):
         nv = math.sqrt(sum(x * x for x in v)) or 1.0
         unit.append([x / nv for x in v])
     ids = [100 + 3 * i for i in range(n)]
-    pdf = pd.DataFrame({"id": ids, "__vn": unit})
+    pdf = pd.DataFrame({"id": ids, "__vn": unit, "is_new": True})
     got = _bucket_pairs_fn(threshold)(pdf)
     got_pairs = {
         (int(a), int(b)): s
@@ -144,6 +144,36 @@ def test_bucket_pairs_matmul_matches_bruteforce(n, dim, threshold):
     for k, s in want.items():
         assert abs(got_pairs[k] - s) < 1e-9
     assert all(a < b for a, b in got_pairs)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.integers(min_value=2, max_value=12),
+    st.integers(min_value=2, max_value=6),
+    st.floats(min_value=-1.0, max_value=1.0),
+    st.lists(st.booleans(), min_size=12, max_size=12),
+)
+def test_bucket_pairs_ingest_matches_bruteforce(n, dim, threshold, new):
+    """With some rows old (the ingest probe), the kernel must emit
+    exactly the brute-force pairs that touch a new row, each once with
+    id_a < id_b, whatever order the cluster's rows arrive in."""
+    unit = []
+    for i in range(n):
+        v = [math.cos(0.5 * i + 1.1 * d) for d in range(dim)]
+        nv = math.sqrt(sum(x * x for x in v)) or 1.0
+        unit.append([x / nv for x in v])
+    ids = [50 - 4 * i for i in range(n)]  # descending: arrival != id order
+    pdf = pd.DataFrame({"id": ids, "__vn": unit, "is_new": new[:n]})
+    got = _bucket_pairs_fn(threshold)(pdf)
+    want = set()
+    for i in range(n):
+        for j in range(i + 1, n):
+            s = sum(x * y for x, y in zip(unit[i], unit[j]))
+            if (new[i] or new[j]) and s >= threshold:
+                want.add((min(ids[i], ids[j]), max(ids[i], ids[j])))
+    pairs = list(zip(got["id_a"], got["id_b"]))
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == want
 
 
 @settings(max_examples=100, deadline=None)
@@ -171,7 +201,7 @@ def test_bucket_pairs_governor_invariants(n, dim, threshold, max_pairs):
         nv = math.sqrt(sum(x * x for x in v)) or 1.0
         unit.append([x / nv for x in v])
     ids = [7 + 5 * i for i in range(n)]
-    pdf = pd.DataFrame({"id": ids, "__vn": unit})
+    pdf = pd.DataFrame({"id": ids, "__vn": unit, "is_new": True})
 
     full = _bucket_pairs_fn(threshold)(pdf)
     capped = _bucket_pairs_fn(threshold, max_pairs=max_pairs)(pdf)

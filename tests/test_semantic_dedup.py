@@ -283,8 +283,8 @@ def test_ingest_append_vs_rebuild_parity(spark, planted):
     """The incremental contract: under the SAME frozen centroids, the
     pairs emitted when a batch arrives must equal exactly the pairs a
     full rebuild adds (full-union pairs that touch >= 1 batch id). One
-    code path builds and ingests (ingest against an empty index IS the
-    build), so there is no drift surface."""
+    kernel builds and ingests (semantic_dedup and an ingest against an
+    empty index give the same rows), so there is no drift surface."""
     from kafka_map_reduce_spark.operators.similarity import (
         kmeans_fit,
         semantic_dedup_ingest,
@@ -315,6 +315,24 @@ def test_ingest_append_vs_rebuild_parity(spark, planted):
     assert inc == want
     # and the appended rows cover exactly the batch
     assert {r.id for r in new_rows.collect()} == new_ids
+    # the size cap counts the union, not the batch: each planted cluster
+    # holds 30 rows, of which only the vec_id % 7 == 0 few are new
+    for cap, want_cap in ((29, set()), (30, want)):
+        capped, _ = semantic_dedup_ingest(
+            new, cents, index, threshold=0.85, max_cluster_size=cap
+        )
+        assert _pairs(capped) == want_cap
+
+    # the full build is the all-new ingest: semantic_dedup equals the
+    # ingest against an empty index under the same centroids, sims too
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    cents_e = kmeans_fit(e, n_clusters=4, iters=3)
+    built, _ = semantic_dedup_ingest(e, cents_e, empty, threshold=0.85)
+    assert rows(built) == rows(
+        semantic_dedup(e, threshold=0.85, n_clusters=4, iters=3)
+    )
 
 
 def test_ingest_touches_only_batch_clusters(spark, planted):
@@ -610,7 +628,9 @@ def test_pair_cap_keeps_witness_edges():
     base[75:, 1] = 0.24
     V = base + rng.normal(0, 0.01, base.shape)
     V /= np.linalg.norm(V, axis=1, keepdims=True)
-    pdf = pd.DataFrame({"id": np.arange(150, dtype="int64"), "__vn": list(V)})
+    pdf = pd.DataFrame(
+        {"id": np.arange(150, dtype="int64"), "__vn": list(V), "is_new": True}
+    )
 
     full = _bucket_pairs_fn(0.9)(pdf)
     capped = _bucket_pairs_fn(0.9, max_pairs=400)(pdf)
@@ -631,19 +651,40 @@ def test_pair_cap_keeps_witness_edges():
 
 
 def test_semantic_dedup_pair_cap_noop_at_fixture_scale(spark, planted):
-    """The "auto" pair cap must be invisible at every gated scale: the
-    planted fixture's pair set with the default auto cap equals the
-    explicitly uncapped run bit-for-bit."""
+    """semantic_dedup's pair-stream cap (4 x max_cluster_size) must be
+    invisible at every gated scale: on each of the planted fixture's
+    clusters the kernel emits the same frame with and without
+    ``max_pairs``, and together those clusters give semantic_dedup's
+    pair set."""
+    from kafka_map_reduce_spark.operators.similarity import (
+        _assign_buckets,
+        _bucket_pairs_fn,
+        _with_unit,
+        kmeans_fit,
+    )
+
     e = planted.select("vec_id", "embedding")
-    auto = semantic_dedup(
-        e, threshold=0.85, n_clusters=8, iters=3,
-        max_cluster_size=2000, init="spread",
+    cents = kmeans_fit(e, n_clusters=8, iters=3, init="spread")
+    clusters = (
+        _assign_buckets(_with_unit(e, "embedding", "vec_id", None), cents, 8)
+        .select(
+            "id", "bkt", F.col("__u").alias("__vn"),
+            F.lit(True).alias("is_new"),
+        )
+        .toPandas()
     )
-    uncapped = semantic_dedup(
-        e, threshold=0.85, n_clusters=8, iters=3,
-        max_cluster_size=2000, init="spread", max_pairs_per_cluster=None,
+    got = set()
+    for _, pdf in clusters.groupby("bkt"):
+        free = _bucket_pairs_fn(0.85, 2000)(pdf)
+        capped = _bucket_pairs_fn(0.85, 2000, max_pairs=4 * 2000)(pdf)
+        assert capped.reset_index(drop=True).equals(free.reset_index(drop=True))
+        got |= set(zip(free.id_a, free.id_b))
+    assert got == _pairs(
+        semantic_dedup(
+            e, threshold=0.85, n_clusters=8, iters=3,
+            max_cluster_size=2000, init="spread",
+        )
     )
-    assert _pairs(auto) == _pairs(uncapped)
 
 
 def test_flat_assign_tiled_regime_matches_full_argmin(spark):

@@ -296,15 +296,16 @@ MAX_EXCHANGES = {
     # text round-trip: fixture write is eager; the checked read path is
     # a narrow split/cast projection at scan speed
     "q_scan_text": 0,
-    # semantic dedup tail (train/assign are eager checkpointed jobs):
-    # ONE bkt shuffle feeding the per-cluster matmul + presentation
-    # sort + pairs distinct — a 4th Exchange means the cluster join
-    # stopped reusing the assignment partitioning
-    "q_dedup_semantic": 3,
-    # ingest tail: batch assign + touched-cluster semi-join + bkt
-    # grouping + presentation sort, all batch/candidate-sized; growth
-    # means a corpus-scale shuffle entered the ingest path
-    "q_dedup_semantic_ingest": 5,
+    # semantic dedup tail (train/assign are checkpointed jobs): ONE bkt
+    # shuffle feeding the per-cluster matmul + presentation sort; the
+    # hot-cluster cap is a size check inside the kernel, so a 3rd
+    # Exchange means a count-and-join cap (or another shuffle) crept in
+    "q_dedup_semantic": 2,
+    # ingest tail: touched-cluster distinct + bkt grouping +
+    # presentation sort, all batch/candidate-sized; growth means a
+    # corpus-scale shuffle (or a count-and-join cap) entered the ingest
+    # path
+    "q_dedup_semantic_ingest": 3,
     # retention tail over the checkpoint-backed components: quality
     # join rides a broadcast at the fixture bound, ONE cluster_id
     # window exchange remains
