@@ -1435,12 +1435,9 @@ def main() -> None:
             # unpersisted), and Spark's CacheManager matches subsequent
             # runs' identical logical plans to that cache, so min-of-3
             # measured runs that skipped candidate generation entirely.
-            # The leak is fixed (operators/dedup.py jaccard_verify:
-            # registry-less invocations localCheckpoint instead, blocks
-            # ContextCleaner-reclaimed); every run now pays full cost.
-            # A/B at sf1, same session, min-of-3: checkpoint 5.65 s vs
-            # leak-free persist+unpersist 7.62 s — checkpoint is the
-            # faster honest variant.
+            # jaccard_verify has since lost the auto-prune path and its
+            # candidate materialization, so nothing is cached across
+            # reps and every run pays full cost.
             "notes": {
                 "q_dedup_near_capped": (
                     "not comparable to BENCH_r04 sf1 (3.06s): that number "

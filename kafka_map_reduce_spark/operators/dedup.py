@@ -146,36 +146,6 @@ def minhash_signatures(shingled: DataFrame, num_perm: int = 64) -> DataFrame:
     return shingled.groupBy("id").agg(*aggs, F.expr("count(1) AS n"))
 
 
-def _drop_hot_buckets(
-    df: DataFrame, keys: list[str], max_bucket_size: int
-) -> DataFrame:
-    """Index-side skew guard of ``lsh_candidates_against``: drop rows
-    whose ``keys`` bucket holds more than ``max_bucket_size`` members. A
-    bucket of N near-identical documents emits O(N) candidates for every
-    probing member from one join key. Capped members are template
-    clusters that belong to exact dedup, which finds identical text in
-    one linear shuffle. (The batch-local generators cap inside
-    ``_bucket_pairs`` with a size predicate instead.)"""
-    # Anti-join against the HOT buckets, not inner-join against the small
-    # ones (r12): the two forms are exactly equivalent (every bucket is
-    # on one side of the threshold), but at corpus scale most buckets are
-    # singletons, so the "small" list is nearly the full bucket table —
-    # inner-joining it re-shuffles O(rows) a second time — while the hot
-    # list is bounded by total_rows/max_bucket_size and in practice tiny
-    # (the template clusters), so AQE broadcasts it and the cap costs one
-    # map-side anti probe instead of a corpus-sized shuffle. CAVEAT: the
-    # equivalence requires non-null keys (an inner join drops a null-key
-    # row, an anti join keeps it); the (band, bh) keys are hash values
-    # that cannot be null.
-    hot = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") > max_bucket_size)
-        .drop("__bn")
-    )
-    return df.join(hot, keys, "left_anti")
-
-
 def _bucket_pairs(
     sigs: DataFrame,
     keys: list[str],
@@ -227,8 +197,10 @@ def _bucket_pairs(
 def lsh_banded(
     signatures: DataFrame, num_perm: int = 64, bands: int = 16
 ) -> DataFrame:
-    """Band a minhash signature matrix into (id, [n], band, bh) rows — one
-    row per (document, band), bh = hash of the band's signature slice.
+    """Band a minhash signature matrix into (id, n, band, bh) rows — one
+    row per (document, band), bh = hash of the band's signature slice;
+    the shingle count ``n`` of ``minhash_signatures`` rides along, so
+    verification needs no size lookup.
 
     This IS the persistable LSH index format for incremental corpus
     building: append each ingest batch's banded rows to a parquet table
@@ -250,15 +222,9 @@ def lsh_banded(
         )
         for b in range(bands)
     )
-    carry_n = "n" in signatures.columns
-    n_cols = [F.col("n")] if carry_n else []
     return signatures.select(
-        "id",
-        *n_cols,
-        F.expr(f"explode(array({parts}))").alias("e"),
-    ).select(
-        "id", *n_cols, F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
-    )
+        "id", "n", F.expr(f"explode(array({parts}))").alias("e")
+    ).select("id", "n", F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
 
 
 def lsh_candidates(
@@ -267,7 +233,9 @@ def lsh_candidates(
     bands: int = 16,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signature, bucket-join: candidate pairs (id_a < id_b).
+    """Band the signature, bucket-join: distinct candidate pairs
+    ``(id_a < id_b, na, nb)``, the set sizes carried for
+    ``jaccard_verify``.
 
     ``max_bucket_size`` is the hot-band guard for the 100 TB case: a band
     bucket holding N near-identical documents (boilerplate/template
@@ -277,12 +245,11 @@ def lsh_candidates(
     (their members are template clusters better handled by exact dedup).
     Default None keeps every bucket — required for oracle parity.
     """
-    payload = ["n"] if "n" in signatures.columns else []
     return (
         _bucket_pairs(
             lsh_banded(signatures, num_perm, bands),
             ["band", "bh"],
-            payload,
+            ["n"],
             max_bucket_size,
         )
         .withColumnsRenamed({"n_a": "na", "n_b": "nb"})
@@ -290,55 +257,26 @@ def lsh_candidates(
     )
 
 
-# Auto-prune heuristic constants (jaccard_verify(prune_to_candidates=None)):
-# prune only when the candidate-id upper bound is under this fraction of the
-# estimated corpus size AND the corpus is big enough that the two extra
-# semi-join stages amortize. Measured: ~25% SLOWER at the 500-doc test
-# tables (fixed per-stage overhead dominates), ~10% FASTER at the 50k-doc
-# sf1 bench replicas, widening with corpus size — the floor sits between.
-AUTO_PRUNE_MAX_RATIO = 0.5
-AUTO_PRUNE_MIN_CORPUS = 32768
-
-
 def lsh_candidates_against(
-    banded_new: DataFrame,
-    banded_index: DataFrame,
-    max_bucket_size: int | None = None,
+    banded_new: DataFrame, banded_index: DataFrame
 ) -> DataFrame:
     """Candidate pairs between a NEW batch and a historical LSH index —
     the incremental-ingest form of ``lsh_candidates``. Both inputs are
     ``lsh_banded`` outputs (the index typically read back from its
     parquet table); the join is (band, bh) equi only, so cost scales with
     the new batch and bucket overlap, never the corpus. Returns
-    (id_a = new id, id_b = index id[, na, nb]) distinct pairs; ids must
+    (id_a = new id, id_b = index id, na, nb) distinct pairs; ids must
     not collide across the two sides (disjoint id spaces — enforced).
 
-    ``max_bucket_size`` caps the INDEX side per (band, bh): a template
-    bucket accumulated over months of ingest would otherwise emit
-    O(bucket) candidates for every new member forever. Capped buckets
-    belong to exact dedup, same contract as ``lsh_candidates``. NOTE the
-    cost model: the cap RECOUNTS index bucket sizes with a full-index
-    group-by on every call — O(index) per batch, which re-introduces the
-    corpus term this probe exists to avoid. At standing-index scale,
-    either pre-cap buckets when APPENDING to the index table (drop or
-    flag over-full buckets at write time, so probes need no counting) or
-    maintain a (band, bh, count) sidecar the way the line-hash index
-    keeps its counts (append_line_counts/compact_line_index). No caller
-    in this repo passes the cap here yet; the queries exercise the cap
-    on the batch-local generators.
+    The probe keeps every index bucket. A template bucket accumulated
+    over months of ingest emits O(bucket) candidates for each new
+    member; a cap counted here would re-count the whole index on every
+    call, the corpus term this probe exists to avoid. Where a standing
+    index needs the cap, apply it when APPENDING to the index table
+    (drop or flag over-full buckets at write time), or keep a
+    (band, bh, count) sidecar the way the line-hash index keeps its
+    counts (append_line_counts/compact_line_index).
     """
-    carry_n = {"n"} <= set(banded_new.columns) and {"n"} <= set(
-        banded_index.columns
-    )
-    idx = banded_index
-    if max_bucket_size is not None:
-        idx = _drop_hot_buckets(idx, ["band", "bh"], max_bucket_size)
-    new_cols = [F.col("id").alias("id_a")] + (
-        [F.col("n").alias("na")] if carry_n else []
-    ) + ["band", "bh"]
-    idx_cols = [F.col("id").alias("id_b")] + (
-        [F.col("n").alias("nb")] if carry_n else []
-    ) + [F.col("band").alias("band_b"), F.col("bh").alias("bh_b")]
     # Disjoint id spaces are the caller's contract; a collision would
     # silently alias two different documents. This guard is BEST-EFFORT:
     # it rides inside the plan (raise_error on the projected key, zero
@@ -356,16 +294,20 @@ def lsh_candidates_against(
             )
         ).alias("id_a")
     )
-    out_cols = [guarded_id_a, F.col("id_b")] + (
-        [F.col("na"), F.col("nb")] if carry_n else []
-    )
     return (
-        banded_new.select(*new_cols)
+        banded_new.select(
+            F.col("id").alias("id_a"), F.col("n").alias("na"), "band", "bh"
+        )
         .join(
-            idx.select(*idx_cols),
+            banded_index.select(
+                F.col("id").alias("id_b"),
+                F.col("n").alias("nb"),
+                F.col("band").alias("band_b"),
+                F.col("bh").alias("bh_b"),
+            ),
             (F.col("band") == F.col("band_b")) & (F.col("bh") == F.col("bh_b")),
         )
-        .select(*out_cols)
+        .select(guarded_id_a, "id_b", "na", "nb")
         .distinct()
     )
 
@@ -380,7 +322,6 @@ def incremental_near_dedup(
     num_perm: int = 64,
     bands: int = 16,
     min_jaccard: float = 0.5,
-    max_bucket_size: int | None = None,
     cache_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One ingest step of incremental corpus building: detect which docs
@@ -444,13 +385,9 @@ def incremental_near_dedup(
         cache_registry.extend([shingled_new, sigs_new])
     banded_new = lsh_banded(sigs_new, num_perm, bands)
 
-    within = lsh_candidates(
-        sigs_new, num_perm, bands, max_bucket_size=max_bucket_size
-    )
-    cross = lsh_candidates_against(
-        banded_new, banded_index, max_bucket_size=max_bucket_size
-    )
-    cands = within.unionByName(cross, allowMissingColumns=True)
+    within = lsh_candidates(sigs_new, num_perm, bands)
+    cross = lsh_candidates_against(banded_new, banded_index)
+    cands = within.unionByName(cross)
 
     # verification shingle source: the whole new batch + only the index
     # docs that appear as candidates (left-semi pushdown into the corpus)
@@ -462,11 +399,6 @@ def incremental_near_dedup(
     shingled_all = shingled_new.unionByName(
         word_shingles(cand_index_docs, text_col, id_col, k)
     )
-    # na/nb carry only when BOTH inputs had them; after the union with
-    # allowMissingColumns a missing side yields nulls — drop the columns
-    # unless both carried, so jaccard_verify recomputes sizes correctly.
-    if not ({"na", "nb"} <= set(within.columns) and {"na", "nb"} <= set(cross.columns)):
-        cands = cands.select("id_a", "id_b")
     pairs = jaccard_verify(cands, shingled_all, min_jaccard)
 
     # the duplicate side of a pair: within-batch pairs keep the min id
@@ -494,36 +426,11 @@ def incremental_near_dedup(
 
 
 def jaccard_verify(
-    candidates: DataFrame,
-    shingled: DataFrame,
-    min_jaccard: float,
-    prune_to_candidates: bool | None = False,
-    corpus_count: int | None = None,
+    candidates: DataFrame, shingled: DataFrame, min_jaccard: float
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs only (never all pairs).
-
-    ``prune_to_candidates`` semi-joins the shingle table down to candidate
-    ids before the intersection join. At corpus scale — candidates are a
-    vanishing fraction of documents — this keeps the (id, shingle) shuffle
-    proportional to candidates, not the corpus; at small scale the two
-    extra semi-join stages cost more than they save (measured ~25% slower
-    at the 500-doc test tables), hence default off.
-
-    ``prune_to_candidates=None`` decides adaptively, cheapest check first:
-    the corpus size comes from ``corpus_count`` when the caller has it (a
-    parquet-metadata ``docs.count()`` — effectively free; the registered
-    queries pass it) and otherwise from one ``approx_count_distinct``
-    pass over the shingle table. Below ``AUTO_PRUNE_MIN_CORPUS`` docs the
-    decision is already OFF and NO other work happens — the small-corpus
-    path pays only the corpus lookup. Only at/above the floor are the
-    candidates localCheckpoint'ed and counted (candidates are bounded by
-    design — LSH band buckets, optionally capped — so this is the small
-    side, and the checkpoint lets the verification join reuse the
-    materialization); pruning then turns on when ``2 * |pairs|`` (an
-    upper bound on distinct candidate ids) is under
-    ``AUTO_PRUNE_MAX_RATIO`` of the corpus. Both forced paths and auto
-    return identical answers (unit-tested); the knob only moves shuffle
-    volume.
+    """Exact Jaccard for candidate pairs only (never all pairs): the
+    candidates join the full (id, shingle) table on each side, and the
+    shared shingles are counted per pair. One plan at every corpus size.
 
     If ``candidates`` already carries per-id set sizes as ``na``/``nb``
     (lsh_candidates forwards them from the minhash aggregate), the two
@@ -531,51 +438,7 @@ def jaccard_verify(
     since Catalyst does not share subtrees across join branches — are
     skipped entirely.
     """
-    if prune_to_candidates is None:
-        corpus_est = (
-            corpus_count
-            if corpus_count is not None
-            else shingled.agg(F.approx_count_distinct("id").alias("n")).collect()[
-                0
-            ]["n"]
-        )
-        if corpus_est < AUTO_PRUNE_MIN_CORPUS:
-            prune_to_candidates = False
-        else:
-            # localCheckpoint, not persist: the materialization is shared
-            # between the decision count and the verification join (an
-            # unpersist-after-count would recompute the candidate join at
-            # corpus scale — measured 3.7x on the sf1 capped query), and
-            # checkpoint blocks are reclaimed by the ContextCleaner when
-            # the DataFrame is garbage-collected, unlike CacheManager
-            # entries which pin executor memory until an explicit
-            # unpersist — a leak per invocation in long-lived sessions.
-            candidates = candidates.localCheckpoint(eager=True)
-            n_pairs = candidates.count()
-            prune_to_candidates = 2 * n_pairs <= AUTO_PRUNE_MAX_RATIO * corpus_est
     carried = {"na", "nb"} <= set(candidates.columns)
-    sizes = (
-        None
-        if carried
-        else shingled.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    )
-    if prune_to_candidates:
-        # Candidate-bounded barrier (r18, r17 verdict item #4): the
-        # pruned shingle table feeds BOTH sides of the intersection
-        # join, and Catalyst shares no subtrees across join branches —
-        # without a barrier each side re-runs the semi-joined
-        # tokenize+explode pipeline. The localCheckpoint is bounded by
-        # the candidate id set by construction (the same bound that
-        # justified pruning in the first place), so unlike a full
-        # shingle-table barrier it stays candidate-sized at any scale:
-        # one pruned evaluation, materialized once, read twice.
-        shingled = shingled.join(
-            candidates.select(F.col("id_a").alias("id"))
-            .union(candidates.select(F.col("id_b").alias("id")))
-            .distinct(),
-            "id",
-            "left_semi",
-        ).localCheckpoint(eager=False)
     a = shingled.select(F.col("id").alias("id_a"), "s")
     b = shingled.select(F.col("id").alias("id_b2"), F.col("s").alias("s_b"))
     pair_keys = ["id_a", "id_b"] + (["na", "nb"] if carried else [])
@@ -586,6 +449,7 @@ def jaccard_verify(
         .agg(F.count(F.lit(1)).alias("i"))
     )
     if not carried:
+        sizes = shingled.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
         inter = inter.join(
             sizes.withColumnsRenamed({"id": "id_a", "n": "na"}), "id_a"
         ).join(sizes.withColumnsRenamed({"id": "id_b", "n": "nb"}), "id_b")

@@ -1813,7 +1813,9 @@ def _bucket_pairs_fn(
     full build keeps its historical float operations, which the
     hash-pinned keep-best row consumes. Rows are sorted by id, so a
     pair's position order is its id order and a new–new pair is kept
-    once, from its smaller id's row.
+    once, from its smaller id's row. A cluster that holds an id twice (a
+    batch id already in the index) raises ``ValueError`` after the sort:
+    its pairs would alias one document with itself.
 
     ``max_cluster_size`` is the hot-cluster governor, the ClusterJoin
     size check: an over-full cluster (a template blob) emits nothing and
@@ -1872,6 +1874,12 @@ def _bucket_pairs_fn(
             )
         order = np.argsort(pdf["id"].to_numpy())
         ids = pdf["id"].to_numpy()[order]
+        twice = ids[1:][ids[1:] == ids[:-1]]
+        if len(twice):
+            raise ValueError(
+                f"SemDeDup cluster holds id {twice[0]} twice: batch ids "
+                "must be new to the index"
+            )
         new = pdf["is_new"].to_numpy(dtype=bool)[order]
         V = np.array(pdf["__vn"].tolist(), dtype=np.float64)[order]
         if new.all():
@@ -2053,8 +2061,11 @@ def semantic_dedup_ingest(
     pytest-pinned), and new_index_rows are the batch's (id, bkt, __vn)
     rows to append to the persisted index (encoding is per-row
     deterministic under a frozen model, the ivfpq_index incremental
-    contract). Batch ids must be new to the index: the kernel takes ids
-    as unique within a cluster.
+    contract). Batch ids must be new to the index: a batch id already
+    indexed meets itself in its cluster, and the pair kernel raises
+    ``ValueError`` there (the check rides the kernel's id sort, so it
+    adds no job and no corpus scan; an overlapping id in a cluster the
+    kernel skips as over-full is not seen).
 
     Scale shape: the batch assigns against the frozen centroids (Arrow
     matmul above _ARROW_ASSIGN_MIN_K, JVM argmin below); the index is

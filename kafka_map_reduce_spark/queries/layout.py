@@ -18,11 +18,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.operators import bucketing as B
 from kafka_map_reduce_spark.operators.maintenance import merge_upsert_parquet
-from kafka_map_reduce_spark.queries.scans import _scratch
 from kafka_map_reduce_spark.registry import query
-from kafka_map_reduce_spark.sources import load_table
+from kafka_map_reduce_spark.sources import load_table, scratch_path
 
 
 def _sftag(sf_dir: str) -> str:
@@ -142,7 +142,7 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    path = _scratch(sf_dir, "upsert")
+    path = scratch_path(sf_dir, "upsert")
     base.write.mode("overwrite").parquet(path)
     updates = base.filter(F.col("c_custkey") % 10 == 0).select(
         "c_custkey",
@@ -153,7 +153,5 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path).select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_name").alias("name"),
-        (F.floor(F.col("c_acctbal") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-            "bal"
-        ),
+        round4(F.col("c_acctbal")).alias("bal"),
     )

@@ -30,11 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.queries import twins
-from kafka_map_reduce_spark.queries.scans import _scratch
 from kafka_map_reduce_spark.queries.twins import _LINE_TOKENS
 from kafka_map_reduce_spark.registry import query
-from kafka_map_reduce_spark.sources import load_table
+from kafka_map_reduce_spark.sources import load_table, scratch_path
 
 ORACLE_COMPACT_CLUSTER = """
     SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
@@ -61,7 +61,7 @@ def q_compact_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     analogue — O(slice) rewrite, amortized across every later scan."""
     from kafka_map_reduce_spark.operators.maintenance import cluster_parquet
 
-    path = _scratch(sf_dir, "compact")
+    path = scratch_path(sf_dir, "compact")
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
@@ -103,7 +103,7 @@ def q_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, one range-repartition exchange."""
     from kafka_map_reduce_spark.operators.maintenance import zorder_parquet
 
-    path = _scratch(sf_dir, "zorder")
+    path = scratch_path(sf_dir, "zorder")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -126,9 +126,7 @@ def q_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             "event_type",
-            (F.floor(F.col("value") * 10000 + F.lit(0.5)) / 10000).alias(
-                "value4"
-            ),
+            round4(F.col("value")).alias("value4"),
         )
     )
 
@@ -164,7 +162,7 @@ def q_skipping_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned_read,
     )
 
-    path = _scratch(sf_dir, "skipping")
+    path = scratch_path(sf_dir, "skipping")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -176,9 +174,7 @@ def q_skipping_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "event_id",
         "event_type",
-        (F.floor(F.col("value") * 10000 + F.lit(0.5)) / 10000).alias(
-            "value4"
-        ),
+        round4(F.col("value")).alias("value4"),
     )
 
 
@@ -218,7 +214,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the driver — the manifest is O(shards)."""
     from kafka_map_reduce_spark.operators.shards import write_shards
 
-    out_dir = _scratch(sf_dir, "shards")
+    out_dir = scratch_path(sf_dir, "shards")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     manifest = write_shards(
         d, out_dir, ["doc_id"], rows_per_shard=128, id_col="sample_id"
@@ -268,7 +264,7 @@ def q_line_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         line_hashes,
     )
 
-    index_path = _scratch(sf_dir, "lineidx")
+    index_path = scratch_path(sf_dir, "lineidx")
     d = load_table(spark, sf_dir, "documents")
     lines = line_hashes(
         d, "text", "doc_id", line_tokens=_LINE_TOKENS

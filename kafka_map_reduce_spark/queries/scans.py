@@ -11,8 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.registry import query
-from kafka_map_reduce_spark.sources import load_table
+from kafka_map_reduce_spark.sources import load_table, scratch_path
 
 
 @query(
@@ -61,8 +62,6 @@ def q_scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed arithmetic projections + aliasing — the audit's
     ``(max-min)+1 AS offset_diff`` style (README.md:91-93) generalized."""
-    from kafka_map_reduce_spark.functions import round4
-
     li = load_table(spark, sf_dir, "lineitem")
     net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.select(
@@ -107,21 +106,6 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").select("user_id", "event_type").distinct()
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    import os
-    import shutil
-    import tempfile
-
-    # pid-scoped: two concurrent runs (parity + plancheck, xdist workers)
-    # must never rmtree a directory the other is lazily scanning.
-    out = os.path.join(
-        tempfile.gettempdir(), "kmr_scan", f"pid{os.getpid()}", name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    return out
-
-
 @query(
     "q_scan_csv",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
@@ -137,7 +121,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    out = _scratch(sf_dir, "csv")
+    out = scratch_path(sf_dir, "csv")
     n.coalesce(1).write.option("header", True).csv(out)
     schema = T.StructType(
         [
@@ -174,7 +158,7 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars").cast("string"),
         ).alias("value")
     )
-    out = _scratch(sf_dir, "text")
+    out = scratch_path(sf_dir, "text")
     d.coalesce(1).write.text(out)
     lines = spark.read.text(out)
     parts = F.split(F.col("value"), "\t")
@@ -195,7 +179,7 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source round-trip — the second columnar format (vectorized
     reader, predicate pushdown) so a user isn't parquet-locked."""
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = _scratch(sf_dir, "orc")
+    out = scratch_path(sf_dir, "orc")
     r.coalesce(1).write.orc(out)
     return spark.read.orc(out)
 
@@ -215,12 +199,10 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     must touch ONLY the matching directory (PartitionFilters in the plan,
     asserted by tools/plancheck.py). At 100 TB partition pruning is the
     difference between scanning one partition and scanning the lake."""
-    from kafka_map_reduce_spark.functions import round4
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    out = _scratch(sf_dir, "partitioned")
+    out = scratch_path(sf_dir, "partitioned")
     ev.write.partitionBy("event_type").parquet(out)
     return (
         spark.read.parquet(out)

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from kafka_map_reduce_spark.functions import dsum4, o_sum4
 from kafka_map_reduce_spark.registry import query
-from kafka_map_reduce_spark.sources import load_table
+from kafka_map_reduce_spark.sources import load_table, scratch_path
 
 
 @query(
@@ -140,8 +140,6 @@ def q_group_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``.collect()`` remains anywhere under queries/ (the produce-side
     record-file split rides a row_number over the 36-row slice)."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -151,12 +149,8 @@ def q_group_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         GroupCoordinator,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(), "kmr_group", f"pid{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
+    work = scratch_path(sf_dir, "group")
+    os.makedirs(work)
 
     ev = (
         load_table(spark, sf_dir, "events")

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+import time
 
 import pandas as pd
 
@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.registry import query
+from kafka_map_reduce_spark.sources import load_table, scratch_path
 from kafka_map_reduce_spark.streaming import (
     JsonLinesSink,
     ParquetSink,
@@ -33,16 +34,26 @@ from kafka_map_reduce_spark.streaming.state import stateful_reduce
 
 
 def _work_dir(sf_dir: str, name: str) -> str:
-    """Fresh scratch dir per (query, sf, process) run — pid-scoped so a
-    concurrent harness/parity process can't rmtree a checkpoint or source
-    directory this one's stream is actively reading."""
-    base = os.path.join(
-        tempfile.gettempdir(), "kmr_stream", f"pid{os.getpid()}", name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    return base
+    """A fresh, existing scratch dir for one stream run (checkpoint,
+    source and sink directories live under it)."""
+    path = scratch_path(sf_dir, name)
+    os.makedirs(path)
+    return path
+
+
+def _pin_replay_order(src: str) -> None:
+    """Give the ``part-*`` files of ``src`` strictly increasing mtimes
+    in name order. FileStreamSource admits files oldest-mtime-first, but
+    parallel write tasks finish in arbitrary order; unpinned, the
+    watermark can jump ahead on an out-of-order range and drop whole
+    earlier ranges as late (the SCALE_SPOT_r10 lesson: 56% loss observed
+    at sf10). part-NNNNN names sort with a range partitioning, so the pin
+    reproduces the in-order delivery a real log source (Kafka
+    per-partition order) provides by construction."""
+    parts = sorted(n for n in os.listdir(src) if n.startswith("part-"))
+    t_base = time.time() - 10 * len(parts) - 60
+    for i, name in enumerate(parts):
+        os.utime(os.path.join(src, name), (t_base + i, t_base + i))
 
 
 @query("q_stream_watermark", oracle=None, tags=("streaming",))
@@ -51,13 +62,12 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay — late-data bound + state eviction (append mode: a window only
     emits once its end passes the watermark)."""
     wd = _work_dir(sf_dir, "watermark")
-    # Split events into 2 roughly ts-ordered files so the watermark
-    # actually advances across micro-batches.
-    from kafka_map_reduce_spark.sources import load_table
-
+    # Split events into 2 ts-ordered files, replayed in ts order, so the
+    # watermark actually advances across micro-batches.
     ev = load_table(spark, sf_dir, "events")
     src = os.path.join(wd, "src")
     ev.repartitionByRange(2, "ts").write.parquet(src)
+    _pin_replay_order(src)
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
@@ -177,8 +187,7 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         Pipeline(stream)
         .par_map(parse, T.StructType([T.StructField("k", T.IntegerType())]))
         .map_expr(
-            weighted=F.floor((F.col("value") * F.col("k")) * 10000 + F.lit(0.5))
-            / F.lit(10000)
+            weighted=round4(F.col("value") * F.col("k"))
         )
     )
     main = ParquetSink(os.path.join(wd, "main"), max_batch_rows=128, coalesce=4)
@@ -207,7 +216,7 @@ def q_sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        (F.floor(F.col("value") * 10000 + F.lit(0.5)) / F.lit(10000)).alias("value"),
+        round4(F.col("value")).alias("value"),
     )
     sink = JsonLinesSink(os.path.join(wd, "out"), max_batch_rows=128, coalesce=4)
     Pipeline(stream).run_stream(sink, checkpoint_dir=os.path.join(wd, "ckpt"))
@@ -237,8 +246,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup-join shape for a par_map-style enrichment stage (lib.rs:490-547
     does this per record over the network; here it is a stateless
     broadcast hash join, no watermark, no shuffle of the stream side)."""
-    from kafka_map_reduce_spark.sources import load_table
-
     wd = _work_dir(sf_dir, "enrich")
     stream = file_replay_stream(spark, sf_dir, "events", wd)
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -407,10 +414,7 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 1's NOVEL docs (+300000) — detectable only if the index append
     between batches actually works. Rows-only (minhash seed-dependence);
     the planted-pair contract is pytest-enforced."""
-    import time
-
     from kafka_map_reduce_spark.operators import dedup as D
-    from kafka_map_reduce_spark.sources import load_table
 
     wd = _work_dir(sf_dir, "dedup_ingest")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -498,13 +502,10 @@ def q_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity, conservation and redelivery idempotence are pytest-pinned
     in tests/test_gated_ingest.py. Output = (doc_id, batch, decision)
     for every routed row."""
-    import time
-
     from kafka_map_reduce_spark.operators.classifier import (
         logreg_fit,
         quality_features,
     )
-    from kafka_map_reduce_spark.sources import load_table
     from kafka_map_reduce_spark.streaming.gated import gated_ingest_stream
 
     wd = _work_dir(sf_dir, "gated_ingest")
@@ -615,7 +616,6 @@ def q_stream_mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus size — the same index-tracks-the-batch contract as the
     dedup band index and the HLL sketch table, pytest-pinned for
     conservation and redelivery idempotence in tests/test_monitor.py."""
-    from kafka_map_reduce_spark.sources import load_table
     from kafka_map_reduce_spark.streaming.monitor import (
         mixture_drift_report,
         mixture_monitor_stream,
@@ -648,30 +648,14 @@ def _watermark_dedup_run(spark: SparkSession, sf_dir: str):
     audit) where audit carries the state-boundedness evidence
     (max_state_rows, n_batches) that the registered face can't put in
     its output schema — tests/test_watermark_dedup.py asserts on it."""
-    from kafka_map_reduce_spark.sources import load_table
-
     wd = _work_dir(sf_dir, "wm_dedup")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
     redelivered = ev.unionByName(ev.filter(F.col("event_id") % 10 == 0))
     src = os.path.join(wd, "src")
-    n_files = 4
-    redelivered.repartitionByRange(n_files, "ts").write.parquet(src)
-    # Pin replay order to event-time order (the SCALE_SPOT_r10 lesson:
-    # FileStreamSource admits files oldest-mtime-first, but parallel
-    # write tasks finish in arbitrary order — unpinned, the watermark
-    # can jump ahead on an out-of-order range and drop whole earlier
-    # ranges as late; 56% loss observed at sf10). part-NNNNN names sort
-    # with the range partitioning, so strictly increasing mtimes in
-    # name order reproduce the in-order delivery a real log source
-    # (Kafka per-partition order) provides by construction.
-    import time as _time
-
-    t_base = _time.time() - 10 * n_files - 60
-    for i, name in enumerate(sorted(os.listdir(src))):
-        if name.startswith("part-"):
-            os.utime(os.path.join(src, name), (t_base + i, t_base + i))
+    redelivered.repartitionByRange(4, "ts").write.parquet(src)
+    _pin_replay_order(src)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.operators.ids import running_total
 from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.queries.twins import _LINE_TOKENS
@@ -349,9 +350,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         "n_tokens",
-        (F.floor(F.col("mean_logprob") * 10000 + F.lit(0.5)) / 10000).alias(
-            "mean_logprob"
-        ),
+        round4(F.col("mean_logprob")).alias("mean_logprob"),
     )
 
 
@@ -411,9 +410,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         "n_bigrams",
-        (F.floor(F.col("mean_logprob") * 10000 + F.lit(0.5)) / 10000).alias(
-            "mean_logprob"
-        ),
+        round4(F.col("mean_logprob")).alias("mean_logprob"),
     )
 
 
@@ -457,9 +454,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = d.select(
         "source",
         "doc_id",
-        (
-            F.floor(quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("quality"),
+        round4(quality_score(F.col("text"))).alias("quality"),
     )
     w1 = Window.partitionBy("source", "__p").orderBy(
         F.desc("quality"), F.col("doc_id")
@@ -593,7 +588,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return d.select(
         "doc_id",
-        (F.floor(logit * 10000 + F.lit(0.5)) / F.lit(10000)).alias("logit"),
+        round4(logit).alias("logit"),
         F.when(logit > 0, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("keep"),
     )
 

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.operators import dedup as D
 from kafka_map_reduce_spark.operators.similarity import cosine
 from kafka_map_reduce_spark.operators.text import (
@@ -96,9 +97,7 @@ def _keep_best(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     )
     q = docs.select(
         "doc_id",
-        (
-            F.floor(quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("quality"),
+        round4(quality_score(F.col("text"))).alias("quality"),
     )
     w = Window.partitionBy("cluster_id")
     joined = (
@@ -188,37 +187,47 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shingle_pairs(_bounded_docs(spark, sf_dir))
 
 
-@query("q_dedup_near", oracle=None, tags=("approx",))
-def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + LSH(16 bands) near-dup pairs, exact-Jaccard-verified
-    at 0.5 — the scale path: candidates are paired inside band buckets,
-    never an all-pairs product.
+def _near_pairs(docs: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """The MinHash row both q_dedup_near faces build: MinHash(64) +
+    LSH(16 bands) candidates, paired inside band buckets (never an
+    all-pairs product; ``max_bucket_size`` is the hot-band cap), then
+    exact Jaccard verification at 0.5. One plan at every corpus size;
+    plan build starts no Spark job of its own.
 
-    The scan goes through fan_out_scan (r11): a single-row-group
+    Callers pass the fanned-out scan (r11): unfanned, a single-row-group
     documents file caps the CPU-heavy shingle+64-hash pipeline at the
     scan's split count (1 task on local[32] at bench scale — measured
-    2.977 -> 1.433 s, bit-identical pairs); the gate is a no-op at
-    corpus scale where splits already exceed task slots.
+    2.977 -> 1.433 s uncapped, 4.122 -> 2.036 s capped, bit-identical
+    pairs); the gate is a no-op at corpus scale where splits already
+    exceed task slots.
 
     Shingle barrier (r17, guide §2 consume-once pattern): the
     (id, shingle) explode feeds THREE plan branches — the minhash
     aggregate and both verification sides — and Catalyst shares no
     subtrees across join branches, so without a barrier the
     tokenize+slice+array_distinct pass over the corpus text runs 3x
-    (measured 25-30% of this query's executor CPU at sf0.1:
-    interleaved min-of-4, 12.9 -> 8.8 executor-cpu-sec). This query
-    always verifies against the FULL shingle table (prune off — the
-    oracle-parity form), so the lazy localCheckpoint strictly replaces
-    two full recomputations with one disk-spilling materialization of
-    the same rows the verify join already shuffles; blocks are
-    ContextCleaner-reclaimed on garbage collection."""
-    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
+    (measured 25-30% of the uncapped row's executor CPU at sf0.1:
+    interleaved min-of-4, 12.9 -> 8.8 executor-cpu-sec). Verification
+    reads the FULL shingle table, so the lazy localCheckpoint strictly
+    replaces two full recomputations with one disk-spilling
+    materialization of the same rows the verify join already shuffles;
+    blocks are ContextCleaner-reclaimed on garbage collection."""
     shingled = D.word_shingles(docs, "text", "doc_id", k=3).localCheckpoint(
         eager=False
     )
     sigs = D.minhash_signatures(shingled, num_perm=64)
-    cands = D.lsh_candidates(sigs, num_perm=64, bands=16)
+    cands = D.lsh_candidates(
+        sigs, num_perm=64, bands=16, max_bucket_size=max_bucket_size
+    )
     return D.jaccard_verify(cands, shingled, min_jaccard=0.5).orderBy("id_a", "id_b")
+
+
+@query("q_dedup_near", oracle=None, tags=("approx",))
+def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(64) + LSH(16 bands) near-dup pairs, exact-Jaccard-verified
+    at 0.5 — the scale path, every band bucket kept (``_near_pairs``)."""
+    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
+    return _near_pairs(docs, max_bucket_size=None)
 
 
 @query("q_dedup_near_capped", oracle=None, tags=("approx", "skew-guard"))
@@ -229,39 +238,9 @@ def q_dedup_near_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. Oracle parity stays on the cap-OFF q_dedup_near; this entry
     exists so the skew-guarded plan is benchmarked and driver-run too
     (candidate-count linearity is unit-tested in tests/test_operators.py).
-    Verification runs with the adaptive prune heuristic
-    (prune_to_candidates=None, corpus size from the near-free parquet
-    metadata count): below the auto-prune floor the plan equals the
-    default with zero extra jobs, at corpus scale the shingle table is
-    semi-joined down to candidate ids first. Scan fanned out like
-    q_dedup_near (r11: 4.122 -> 2.036 s at bench scale, identical
-    pairs; corpus-scale no-op by the gate).
-
-    Shingle barrier (r17): same consume-once rationale as q_dedup_near,
-    but gated to the below-prune-floor regime — above the floor the
-    adaptive prune semi-joins the verification sides down to candidate
-    ids, so recompute-and-filter moves less than a full corpus-text
-    materialization would; below it verification reads the full
-    shingle table twice and the barrier strictly replaces those two
-    recomputes (the same corpus-size-adaptive split the prune
-    heuristic itself encodes)."""
-    raw = load_table(spark, sf_dir, "documents")
-    corpus_count = raw.count()  # parquet-metadata count, no exchange
-    docs = fan_out_scan(raw, key=("doc_id",))
-    shingled = D.word_shingles(docs, "text", "doc_id", k=3)
-    if corpus_count < D.AUTO_PRUNE_MIN_CORPUS:
-        shingled = shingled.localCheckpoint(eager=False)
-    sigs = D.minhash_signatures(shingled, num_perm=64)
-    cands = D.lsh_candidates(sigs, num_perm=64, bands=16, max_bucket_size=16)
-    return D.jaccard_verify(
-        cands,
-        shingled,
-        min_jaccard=0.5,
-        prune_to_candidates=None,
-        # counted on the RAW scan (parquet metadata count, no exchange),
-        # not the fanned-out frame
-        corpus_count=corpus_count,
-    ).orderBy("id_a", "id_b")
+    Same plan as q_dedup_near apart from the cap's size predicate."""
+    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
+    return _near_pairs(docs, max_bucket_size=16)
 
 
 @query("q_dedup_simhash", oracle=None, tags=("approx",))
@@ -328,7 +307,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id_a",
             "id_b",
-            (F.floor(F.col("raw_sim") * 10000 + F.lit(0.5)) / F.lit(10000)).alias("sim"),
+            round4(F.col("raw_sim")).alias("sim"),
         )
     )
 

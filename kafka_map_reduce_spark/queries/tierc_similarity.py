@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.operators import similarity as S
 from kafka_map_reduce_spark.queries import twins
 from kafka_map_reduce_spark.registry import query
@@ -37,9 +38,7 @@ def q_sim_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.crossJoin(F.broadcast(p)).select(
         "probe_id",
         "neighbor_id",
-        (
-            F.floor(S.cosine(F.col("pv"), F.col("cv")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("sim"),
+        round4(S.cosine(F.col("pv"), F.col("cv"))).alias("sim"),
     )
 
 
@@ -160,7 +159,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: F.floor(x * F.col("s") + F.lit(0.5)).cast("int"),
             )
         ).alias("q_json"),
-        (F.floor(F.col("s") * 10000 + F.lit(0.5)) / F.lit(10000)).alias("scale"),
+        round4(F.col("s")).alias("scale"),
     )
 
 

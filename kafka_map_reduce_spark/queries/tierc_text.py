@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from kafka_map_reduce_spark.functions import davg4, o_avg4
+from kafka_map_reduce_spark.functions import davg4, o_avg4, round4
 from kafka_map_reduce_spark.operators import multimodal as M
 from kafka_map_reduce_spark.operators import text as X
 from kafka_map_reduce_spark.queries import twins
@@ -79,9 +79,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out_scan(load_table(spark, sf_dir, "documents"), key=("doc_id",))
     return d.select(
         "doc_id",
-        (
-            F.floor(X.quality_score(F.col("text")) * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("quality"),
+        round4(X.quality_score(F.col("text"))).alias("quality"),
     )
 
 
@@ -439,9 +437,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",",
             F.transform(
                 "features",
-                lambda x: (F.floor(x * 10000 + F.lit(0.5)) / F.lit(10000)).cast(
-                    "string"
-                ),
+                lambda x: round4(x).cast("string"),
             ),
         ).alias("features_csv"),
     )
@@ -815,7 +811,5 @@ def q_text_compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("z.n_bytes").alias("n_bytes"),
         F.col("z.n_compressed").alias("n_compressed"),
-        (F.floor(F.col("z.ratio") * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-            "ratio"
-        ),
+        round4(F.col("z.ratio")).alias("ratio"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType
 
+from kafka_map_reduce_spark.functions import round4
 from kafka_map_reduce_spark.registry import query
 from kafka_map_reduce_spark.sources import load_table
 
@@ -51,9 +52,7 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         k.alias("k"),
-        (F.floor((F.col("value") * k) * 10000 + F.lit(0.5)) / F.lit(10000)).alias(
-            "weighted"
-        ),
+        round4(F.col("value") * k).alias("weighted"),
     )
 
 
@@ -96,10 +95,9 @@ def q_udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         "cents_sum",
-        (
-            F.floor((F.col("cents_sum").cast("double") / 100.0 / F.col("n"))
-                    * 10000 + F.lit(0.5)) / F.lit(10000)
-        ).alias("avg_value"),
+        round4(F.col("cents_sum").cast("double") / 100.0 / F.col("n")).alias(
+            "avg_value"
+        ),
     )
 
 

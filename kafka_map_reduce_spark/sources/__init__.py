@@ -4,6 +4,7 @@ from kafka_map_reduce_spark.sources.tables import (
     Tables,
     fan_out_scan,
     load_table,
+    scratch_path,
 )
 
 __all__ = [
@@ -12,4 +13,5 @@ __all__ = [
     "Tables",
     "fan_out_scan",
     "load_table",
+    "scratch_path",
 ]

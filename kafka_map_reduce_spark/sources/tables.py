@@ -8,6 +8,8 @@ the raw ``spark.read.parquet`` DataFrame (no caching/collect in between).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +28,21 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
+
+
+def scratch_path(sf_dir: str, name: str) -> str:
+    """An absent scratch path for one query's fixture files, scoped by
+    process id, ``name`` and the scale directory. Anything left there by
+    an earlier run of this process is removed; callers that need the
+    directory to exist create it (parquet writers want it absent). The
+    pid scope keeps concurrent runs (parity, plancheck, test workers)
+    from removing a directory another run is still reading."""
+    path = os.path.join(
+        tempfile.gettempdir(), "kmr_scratch", f"pid{os.getpid()}", name,
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 # fan_out_scan's engagement floor: below this many input bytes the

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_asof_join_basic(spark):
@@ -429,60 +429,6 @@ def test_resize_media_area_ratio(spark):
         assert out[d] == expect, f"doc {d}"
 
 
-def test_jaccard_verify_prune_equivalence(spark):
-    """Candidate-pruned verification returns exactly the unpruned result
-    (the 100 TB knob changes shuffle volume, never answers)."""
-    from kafka_map_reduce_spark.operators.dedup import (
-        jaccard_verify,
-        lsh_candidates,
-        minhash_signatures,
-        word_shingles,
-    )
-    from kafka_map_reduce_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    sh = word_shingles(docs, "text", "doc_id", k=3)
-    cands = lsh_candidates(minhash_signatures(sh))
-    plain = {tuple(r) for r in jaccard_verify(cands, sh, 0.5).collect()}
-    pruned = {
-        tuple(r)
-        for r in jaccard_verify(cands, sh, 0.5, prune_to_candidates=True).collect()
-    }
-    assert plain == pruned and len(plain) > 0
-
-
-def test_jaccard_verify_auto_prune_agrees_on_both_branches(spark, monkeypatch):
-    """prune_to_candidates=None must resolve to the same answer as both
-    forced paths regardless of which branch the heuristic takes: with the
-    default floor the 500-doc corpus keeps pruning OFF; with the floor
-    monkeypatched to 1 the heuristic turns pruning ON (candidates are a
-    small fraction of docs) — identical results either way."""
-    from kafka_map_reduce_spark.operators import dedup
-    from kafka_map_reduce_spark.operators.dedup import (
-        jaccard_verify,
-        lsh_candidates,
-        minhash_signatures,
-        word_shingles,
-    )
-    from kafka_map_reduce_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    sh = word_shingles(docs, "text", "doc_id", k=3)
-    cands = lsh_candidates(minhash_signatures(sh))
-    plain = {tuple(r) for r in jaccard_verify(cands, sh, 0.5).collect()}
-
-    auto_off = {
-        tuple(r)
-        for r in jaccard_verify(cands, sh, 0.5, prune_to_candidates=None).collect()
-    }
-    monkeypatch.setattr(dedup, "AUTO_PRUNE_MIN_CORPUS", 1)
-    auto_on = {
-        tuple(r)
-        for r in jaccard_verify(cands, sh, 0.5, prune_to_candidates=None).collect()
-    }
-    assert plain == auto_off == auto_on and len(plain) > 0
-
-
 def test_interval_bucket_join_equals_theta(spark):
     """Bucketed interval join == naive range theta join (including rows
     that straddle bucket boundaries), with no duplicate pairs."""
@@ -549,12 +495,32 @@ def test_lsh_scale_smoke(spark):
     t0 = time.time()
     sh = word_shingles(docs, "text", "doc_id", k=3)
     cands = lsh_candidates(minhash_signatures(sh), max_bucket_size=50)
-    pairs = jaccard_verify(cands, sh, 0.5, prune_to_candidates=True).collect()
+    pairs = jaccard_verify(cands, sh, 0.5).collect()
     elapsed = time.time() - t0
 
     expect = {(i, i + 100000) for i in range(0, 20000, 1000)}
     assert {(r.id_a, r.id_b) for r in pairs} == expect
     assert elapsed < 120, f"LSH at 20k docs took {elapsed:.0f}s — plan regressed?"
+
+
+@pytest.mark.parametrize("name", ["q_dedup_near", "q_dedup_near_capped"])
+def test_minhash_rows_warm_build_starts_no_job(spark, name):
+    """Building a MinHash row starts no Spark job once the session is
+    warm: the plan has no size switch, so nothing is counted at build
+    time. The first build warms the session; the second is counted by
+    job group."""
+    from kafka_map_reduce_spark.registry import all_queries
+
+    fn = all_queries()[name].fn
+    fn(spark, SF_CORRECT)
+    sc = spark.sparkContext
+    group = f"warm-build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, SF_CORRECT)
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_connected_components_raises_on_non_convergence(spark):
@@ -1061,30 +1027,6 @@ class TestIncrementalDedup:
         assert {(r.id_a, r.id_b) for r in p2.collect()} == {(300, 200)}
         assert novel2.count() == 0
 
-    def test_index_side_hot_bucket_cap(self, spark):
-        """A template cluster accumulated in the index must not emit
-        O(bucket) candidates for every probing doc when the cap is on."""
-        from kafka_map_reduce_spark.operators import dedup as D
-
-        template = (
-            "terms of service boilerplate all rights reserved governing "
-            "law severability entire agreement every single clause"
-        )
-        corpus = self._docs(spark, [(i, template) for i in range(40)])
-        index = D.lsh_banded(
-            D.minhash_signatures(D.word_shingles(corpus, "text", "doc_id"))
-        )
-        new = self._docs(spark, [(100, template)])
-        banded_new = D.lsh_banded(
-            D.minhash_signatures(D.word_shingles(new, "text", "doc_id"))
-        )
-        uncapped = D.lsh_candidates_against(banded_new, index).count()
-        capped = D.lsh_candidates_against(
-            banded_new, index, max_bucket_size=16
-        ).count()
-        assert uncapped == 40  # every index clone is a candidate
-        assert capped == 0  # capped: template bucket routed to exact dedup
-
     def test_overlapping_id_spaces_rejected(self, spark):
         import pytest as _pytest
 
@@ -1179,7 +1121,6 @@ def test_stream_dedup_ingest_detects_across_microbatches(spark):
     near-dups of BATCH-1 docs are found too — possible only if the
     foreachBatch index append actually landed between triggers."""
     from kafka_map_reduce_spark.registry import all_queries
-    from tests.conftest import SF_CORRECT
 
     rows = (
         all_queries()["q_stream_dedup_ingest"].fn(spark, SF_CORRECT).collect()
@@ -2172,33 +2113,3 @@ def test_bucket_pairs_matches_bruteforce_at_cap_boundary(spark):
     assert _bucket_pairs(sigs, ["k1", "k2"], ["p"], None).columns == [
         "id_a", "id_b", "p_a", "p_b"
     ]
-
-
-def test_drop_hot_buckets_anti_join_equals_small_inner_join(spark):
-    """The r12 cap form (broadcast LEFT ANTI against hot buckets) must
-    keep exactly the rows the original small-bucket INNER join kept —
-    the equivalence that holds because every bucket is on one side of
-    the threshold and the keys are never null. Exercised across cap
-    values that make zero, some, and all buckets hot."""
-    from pyspark.sql import functions as F
-
-    from kafka_map_reduce_spark.operators.dedup import _drop_hot_buckets
-
-    rows = [(i, f"b{i % 5}", i % 3) for i in range(60)]
-    df = spark.createDataFrame(rows, "id long, k1 string, k2 long")
-
-    def old_form(frame, keys, cap):
-        small = (
-            frame.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") <= cap)
-            .drop("__bn")
-        )
-        return frame.join(small, keys)
-
-    for cap in (1, 3, 4, 100):
-        got = sorted(map(str, _drop_hot_buckets(df, ["k1", "k2"], cap).collect()))
-        want = sorted(map(str, old_form(df, ["k1", "k2"], cap).collect()))
-        assert got == want, f"cap={cap}: anti-join form diverged"
-    assert _drop_hot_buckets(df, ["k1", "k2"], 100).count() == 60
-    assert _drop_hot_buckets(df, ["k1", "k2"], 1).count() == 0

@@ -357,6 +357,43 @@ def test_ingest_touches_only_batch_clusters(spark, planted):
     assert ids and ids <= set(range(30))  # center-0 docs only
 
 
+def test_ingest_overlapping_ids_raises(spark):
+    """A batch id that is already indexed meets itself in its cluster,
+    and the pair kernel raises instead of emitting self-pairs and
+    repeated pairs. The case is a 4-row cluster where ids 1 and 2 are
+    new and also indexed; unchecked, the kernel gave (1,1), (1,2) x3
+    and (2,2)."""
+    import numpy as np
+    import pandas as pd
+
+    from kafka_map_reduce_spark.operators.similarity import (
+        _bucket_pairs_fn,
+        kmeans_fit,
+        semantic_dedup_ingest,
+    )
+
+    v1, v2 = [1.0, 0.0, 0.0], [0.99, 0.1, 0.0]
+    u1, u2 = (np.array(v) / np.linalg.norm(v) for v in (v1, v2))
+    pdf = pd.DataFrame(
+        {"id": [1, 2, 1, 2], "__vn": [u1, u2, u1, u2],
+         "is_new": [True, True, False, False]}
+    )
+    with pytest.raises(ValueError, match="id 1 twice"):
+        _bucket_pairs_fn(0.9)(pdf)
+
+    batch = spark.createDataFrame(
+        [(1, v1), (2, v2)], "vec_id long, embedding array<double>"
+    )
+    cents = kmeans_fit(batch, n_clusters=1, iters=1).localCheckpoint(eager=True)
+    empty = spark.createDataFrame([], "id long, bkt int, __vn array<double>")
+    _, index = semantic_dedup_ingest(batch, cents, empty, threshold=0.9)
+    pairs, _ = semantic_dedup_ingest(
+        batch, cents, index.localCheckpoint(eager=True), threshold=0.9
+    )
+    with pytest.raises(Exception, match="id 1 twice"):
+        pairs.collect()
+
+
 def test_keep_best_fixture_pair_set_is_exact(spark):
     """Oracle precondition for q_dedup_semantic_keep_best: on the bounded
     driver fixture (documents doc_id < 200, k=8, spread init, threshold

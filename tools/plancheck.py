@@ -199,9 +199,10 @@ MAX_EXCHANGES = {
     "q_dedup_exact_incremental": 2,
     # The batch-scaling contract of the probe plan as a budget: batch
     # signature agg, within-batch band grouping + distinct, index-probe
-    # band equi-join + distinct, candidate-pruned verification
-    # (corpus re-shingle rides a left-semi pushdown; only candidate-sized
-    # sides shuffle) + intersection agg + presentation sort. Every one of
+    # band equi-join + distinct, verification over the batch shingles
+    # plus the candidate index docs (the corpus re-shingle rides a
+    # left-semi pushdown into the corpus, so only candidate-sized sides
+    # shuffle) + intersection agg + presentation sort. Every one of
     # the 12 moves batch/candidate-sized data — an Exchange beyond this
     # means a corpus-scale shuffle snuck into the ingest path.
     "q_dedup_incremental": 12,
